@@ -26,6 +26,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from osm_spark.kernels.poly import grid_segments, polygon_contains, to_grid, xy_rings
+
 MAX_LEVEL = 28  # 2*28 bits morton + 6 bits level < 63 bits
 
 _FULL_LON = 360.0
@@ -188,22 +190,6 @@ def _seg_intersect_f(p1, p2, p3, p4) -> bool:
     return False
 
 
-def _point_in_float_rings(rings: list[tuple[np.ndarray, np.ndarray]], px: float, py: float) -> bool:
-    """Even-odd PIP over all rings of a polygon (outer + holes)."""
-    inside = False
-    for xs, ys in rings:
-        x1, y1 = xs[:-1], ys[:-1]
-        x2, y2 = xs[1:], ys[1:]
-        straddle = (y1 > py) != (y2 > py)
-        if not straddle.any():
-            continue
-        xint = x1[straddle] + (py - y1[straddle]) * (x2[straddle] - x1[straddle]) / (
-            y2[straddle] - y1[straddle]
-        )
-        inside ^= bool(np.count_nonzero(px < xint) & 1)
-    return inside
-
-
 def cover_polygon(
     coords: list[list[list[float]]],
     min_level: int = 4,
@@ -215,10 +201,8 @@ def cover_polygon(
     polygon (PIP refinement can be skipped for points landing in them);
     boundary cells (at max_level) need exact refinement.
     """
-    rings = [
-        (np.asarray([p[0] for p in ring], dtype=np.float64), np.asarray([p[1] for p in ring], dtype=np.float64))
-        for ring in coords
-    ]
+    rings = xy_rings(coords)
+    grid = grid_segments(rings)
     oxs, oys = rings[0]
     minx, maxx = float(oxs.min()), float(oxs.max())
     miny, maxy = float(oys.min()), float(oys.max())
@@ -233,9 +217,11 @@ def cover_polygon(
         for xs, ys in rings:
             if _ring_intersects_box(xs, ys, lon0, lat0, lon1, lat1):
                 return 0
-        # No edge crosses the box: either fully in/out of the polygon.
-        cx, cy = (lon0 + lon1) / 2, (lat0 + lat1) / 2
-        return 1 if _point_in_float_rings(rings, cx, cy) else 2
+        # No edge crosses the box: either fully in/out of the polygon,
+        # so its centre rounded to the grid (still inside the box)
+        # decides.
+        cx, cy = to_grid([(lon0 + lon1) / 2]), to_grid([(lat0 + lat1) / 2])
+        return 1 if polygon_contains(grid, cx, cy)[0] else 2
 
     def recurse(x: int, y: int, level: int) -> None:
         n = 1 << level

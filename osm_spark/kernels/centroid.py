@@ -12,52 +12,28 @@ Semantics parity with /root/reference/centroid.go:
   PIP validation, else None (the square-with-hole → None case,
   centroid_test.go:74-83 — deliberately NOT "fixed").
 
-GEOS Contains on the polygon-with-holes is replaced by an exact
-crossing-number PIP on the float coordinates (interior only — boundary
-points do not count as contained, matching GEOS Contains).
+GEOS Contains on the polygon-with-holes is the one exact kernel
+(``kernels.poly.polygon_contains``) on the fixed-point grid: the
+candidate point is rounded to degrees x 1e7, the vertices already lie
+on it (interior only — boundary points do not count as contained,
+matching GEOS Contains).
 """
 
 from __future__ import annotations
+
+from osm_spark.kernels.poly import grid_segments, polygon_contains, to_grid, xy_rings
 
 FloatRing = list[list[float]]
 FloatPolygon = list[FloatRing]  # ring 0 = outer, rest = holes
 FloatMultiPolygon = list[FloatPolygon]
 
 
-def _point_in_float_ring(ring: FloatRing, px: float, py: float) -> int:
-    """1=inside, 0=on boundary, -1=outside (crossing number)."""
-    inside = False
-    n = len(ring)
-    j = n - 1
-    for i in range(n):
-        x1, y1 = ring[j]
-        x2, y2 = ring[i]
-        # Boundary: collinear + within segment bbox.
-        cross = (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1)
-        if (
-            cross == 0.0
-            and min(x1, x2) <= px <= max(x1, x2)
-            and min(y1, y2) <= py <= max(y1, y2)
-        ):
-            return 0
-        if (y1 > py) != (y2 > py):
-            xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
-            if px < xint:
-                inside = not inside
-        j = i
-    return 1 if inside else -1
-
-
-def point_in_float_polygon(poly: FloatPolygon, px: float, py: float) -> bool:
-    """GEOS-Contains analog: strictly inside outer, strictly outside holes."""
-    if not poly:
-        return False
-    if _point_in_float_ring(poly[0], px, py) <= 0:
-        return False
-    for hole in poly[1:]:
-        if _point_in_float_ring(hole, px, py) >= 0:
-            return False
-    return True
+def _contains(poly: FloatPolygon, c: tuple[float, float]) -> bool:
+    """GEOS-Contains analog: the candidate point, rounded to the grid,
+    strictly inside the outer ring and outside every hole."""
+    closed = [list(ring) + [ring[0]] for ring in poly]  # a repeated vertex is inert
+    rings = grid_segments(xy_rings(closed))
+    return bool(polygon_contains(rings, to_grid([c[0]]), to_grid([c[1]]))[0])
 
 
 def ring_area(ring: FloatRing) -> float:
@@ -171,11 +147,11 @@ def compute_centroid(coords: FloatMultiPolygon) -> tuple[float, float] | None:
 
     # Cheap attempt with barycenter over outer[1:] (skip closing dup).
     c = compute_barycenter(outer[1:])
-    if point_in_float_polygon(poly, c[0], c[1]):
+    if _contains(poly, c):
         return c
 
     c = compute_simple_polygon_centroid(outer[1:])
     # Works for non-convex polygons but not always with holes.
-    if not point_in_float_polygon(poly, c[0], c[1]):
+    if not _contains(poly, c):
         return None
     return c

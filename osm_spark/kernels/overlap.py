@@ -12,10 +12,10 @@ Classifies a candidate pair (A, B) of multipolygons as one of
 
 All predicates are EXACT: coordinates are the fixed-point integers the
 assembly stage produced (degrees·10⁷ — recovered exactly from the
-stored doubles by rounding), orientation signs are integer cross
-products (Python bigints on the rare re-check path, float64 fast
-path — the poly.point_in_ring pattern), so no epsilon can flip a
-shared-border dept pair into an overlap.
+stored doubles by rounding), and every orientation sign and point
+location comes from the one exact kernel in ``kernels.poly``
+(``orient`` / ``locate``: float64 filter, Python-int recheck), so no
+epsilon can flip a shared-border dept pair into an overlap.
 
 Decision procedure (each step exact; coordinates are doubled once at
 compile time so edge midpoints stay integral):
@@ -53,7 +53,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from osm_spark.kernels.poly import Ring, point_in_ring
+from osm_spark.kernels.poly import Ring, locate, orient
 
 IntMultiPoly = list[list[list[list[int]]]]  # polys -> rings -> pts -> xy
 
@@ -97,47 +97,27 @@ class _MP:
         return frozenset(Counter(r.point_set for r in self.rings()).items())
 
 
-def point_in_multipoly(mp: _MP, px: int, py: int) -> int:
-    """1 = strictly inside the interior, 0 = on any ring, -1 = outside.
-    Holes subtract: strictly inside a hole is outside; on a hole ring
-    is boundary."""
-    on = False
+def point_in_multipoly(mp: _MP, px: np.ndarray, py: np.ndarray) -> np.ndarray:
+    """Per point: 1 = strictly inside the interior, 0 = on any ring,
+    -1 = outside. Holes subtract: strictly inside a hole is outside; on
+    a hole ring is boundary."""
+    strict = np.zeros(len(px), dtype=bool)
+    on = np.zeros(len(px), dtype=bool)
     for poly in mp.polys:
-        r = point_in_ring(poly[0], px, py)
-        if r == 0:
-            on = True
-            continue
-        if r < 0:
-            continue
-        in_hole = False
+        loc = locate(poly[0].segs, px, py)
+        on |= loc == 0
+        ins = loc > 0
         for hole in poly[1:]:
-            h = point_in_ring(hole, px, py)
-            if h == 0:
-                on = True
-                in_hole = True
-                break
-            if h > 0:
-                in_hole = True
-                break
-        if not in_hole:
-            return 1
-    return 0 if on else -1
-
-
-def _orient_exact(ax, ay, bx, by, px, py) -> int:
-    v = (bx - ax) * (py - ay) - (by - ay) * (px - ax)
-    return (v > 0) - (v < 0)
-
-
-# Each orientation value is a difference of two products of ~2^37
-# integer differences: float64 absolute error ≤ ~2^23. Signs are
-# trusted only beyond this slop; anything closer re-checks exactly.
-_FLOAT_SLOP = float(2**24)
+            h = locate(hole.segs, px, py)
+            on |= ins & (h == 0)
+            ins &= h < 0
+        strict |= ins
+    return np.where(strict, 1, np.where(on, 0, -1))
 
 
 def _proper_crossing(a: _MP, b: _MP) -> bool:
-    """Any strict segment crossing between the outlines (exact; the
-    float64 fast path re-checks near-zero signs with Python ints)."""
+    """Any strict segment crossing between the outlines (exact
+    orientation signs from ``kernels.poly.orient``)."""
     bx1, by1, bx2, by2 = b.x1, b.y1, b.x2, b.y2
     bminx, bmaxx = np.minimum(bx1, bx2), np.maximum(bx1, bx2)
     bminy, bmaxy = np.minimum(by1, by2), np.maximum(by1, by2)
@@ -156,32 +136,12 @@ def _proper_crossing(a: _MP, b: _MP) -> bool:
         idx = np.nonzero(cand)[0]
         cx1, cy1, cx2, cy2 = bx1[idx], by1[idx], bx2[idx], by2[idx]
         # orientations of b-endpoints vs segment a, and vice versa
-        d1 = (ax2 - ax1) * (cy1 - ay1) - (ay2 - ay1) * (cx1 - ax1)
-        d2 = (ax2 - ax1) * (cy2 - ay1) - (ay2 - ay1) * (cx2 - ax1)
-        d3 = (cx2 - cx1) * (ay1 - cy1) - (cy2 - cy1) * (ax1 - cx1)
-        d4 = (cx2 - cx1) * (ay2 - cy1) - (cy2 - cy1) * (ax2 - cx1)
-        amb = (
-            (np.abs(d1) <= _FLOAT_SLOP)
-            | (np.abs(d2) <= _FLOAT_SLOP)
-            | (np.abs(d3) <= _FLOAT_SLOP)
-            | (np.abs(d4) <= _FLOAT_SLOP)
-        )
-        strict = ~amb & (d1 * d2 < 0) & (d3 * d4 < 0)
-        if bool(strict.any()):
+        d1 = orient(ax1, ay1, ax2, ay2, cx1, cy1)
+        d2 = orient(ax1, ay1, ax2, ay2, cx2, cy2)
+        d3 = orient(cx1, cy1, cx2, cy2, ax1, ay1)
+        d4 = orient(cx1, cy1, cx2, cy2, ax2, ay2)
+        if bool(((d1 * d2 < 0) & (d3 * d4 < 0)).any()):
             return True
-        # near-zero orientation(s): exact integer re-check
-        if bool(amb.any()):
-            iax1, iay1 = int(ax1), int(ay1)
-            iax2, iay2 = int(ax2), int(ay2)
-            for j in np.nonzero(amb)[0].tolist():
-                jx1, jy1 = int(cx1[j]), int(cy1[j])
-                jx2, jy2 = int(cx2[j]), int(cy2[j])
-                o1 = _orient_exact(iax1, iay1, iax2, iay2, jx1, jy1)
-                o2 = _orient_exact(iax1, iay1, iax2, iay2, jx2, jy2)
-                o3 = _orient_exact(jx1, jy1, jx2, jy2, iax1, iay1)
-                o4 = _orient_exact(jx1, jy1, jx2, jy2, iax2, iay2)
-                if o1 * o2 < 0 and o3 * o4 < 0:
-                    return True
     return False
 
 
@@ -204,15 +164,14 @@ def _collinear_edge_verdict(
     1 / -1, or 0 if only non-collinear q-edges pass through m
     (point-touch — ambiguous here, caller probes another edge)."""
     dpx, dpy = bx - ax, by - ay
-    for pi, poly in enumerate(q.polys):
+    for poly in q.polys:
         for ri, ring in enumerate(poly):
             pts = ring.points
-            for i in range(len(pts) - 1):
+            o = orient(ring.xs[:-1], ring.ys[:-1], ring.xs[1:], ring.ys[1:], float(mx), float(my))
+            # m on segment (c,d)?
+            for i in np.flatnonzero(o == 0).tolist():
                 cx, cy = pts[i]
                 dx, dy = pts[i + 1]
-                # m on segment (c,d)?
-                if _orient_exact(cx, cy, dx, dy, mx, my) != 0:
-                    continue
                 if not (
                     min(cx, dx) <= mx <= max(cx, dx)
                     and min(cy, dy) <= my <= max(cy, dy)
@@ -238,12 +197,9 @@ def _part_verdict(poly: list[Ring], q: _MP) -> int:
     entirely on one side."""
     inside = outside = 0
     for ring in poly:
-        for vx, vy in ring.points[:-1]:
-            r = point_in_multipoly(q, vx, vy)
-            if r > 0:
-                inside += 1
-            elif r < 0:
-                outside += 1
+        r = point_in_multipoly(q, ring.xs[:-1], ring.ys[:-1])
+        inside += int((r > 0).sum())
+        outside += int((r < 0).sum())
         if inside and outside:
             return 2
     if inside:
@@ -255,13 +211,15 @@ def _part_verdict(poly: list[Ring], q: _MP) -> int:
     for ri, ring in enumerate(poly):
         left_p = _interior_left(ring, ri == 0)
         pts = ring.points
+        mid = point_in_multipoly(
+            q, (ring.xs[:-1] + ring.xs[1:]) / 2, (ring.ys[:-1] + ring.ys[1:]) / 2
+        )
         for i in range(len(pts) - 1):
+            if mid[i] != 0:
+                return int(mid[i])
             ax, ay = pts[i]
             bx, by = pts[i + 1]
             mx, my = (ax + bx) // 2, (ay + by) // 2
-            r = point_in_multipoly(q, mx, my)
-            if r != 0:
-                return r
             v = _collinear_edge_verdict(ax, ay, bx, by, left_p, q, mx, my)
             if v != 0:
                 return v
@@ -274,9 +232,8 @@ def _hole_pokes(container: _MP, region: _MP) -> bool:
     region's interior falls into the container's hole.)"""
     for poly in container.polys:
         for hole in poly[1:]:
-            for vx, vy in hole.points[:-1]:
-                if point_in_multipoly(region, vx, vy) > 0:
-                    return True
+            if (point_in_multipoly(region, hole.xs[:-1], hole.ys[:-1]) > 0).any():
+                return True
     return False
 
 

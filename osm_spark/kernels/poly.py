@@ -16,6 +16,15 @@ equal), which matches GEOS on the admin-boundary domain where rings nest
 or are disjoint but never partially overlap (the reference itself assumes
 this — poly.go:237 "TODO: check polygons do not intersect").
 
+This module also holds the engine's ONE point-in-polygon kernel, used by
+every caller (ring nesting here, the PIP index / catalyst / cogroup /
+streaming refinement, centroid validation, covering, polygon overlap):
+``orient`` (orientation sign, float64 filter with Shewchuk's error bound
+plus a Python-int recheck), ``locate`` (inside / on / outside per point
+for one ring, vectorized over points) and ``polygon_contains`` (strict:
+inside the outer ring, outside every hole, on no ring). It works on the
+integer grid, degrees x 1e7.
+
 ``Buffer(0)`` repair (poly.go:160-177) has no pure-python equivalent; the
 engine instead *validates* rings at assembly time (rings.is_valid_ring)
 and passes valid rings through unchanged, which is behavior-identical for
@@ -25,15 +34,17 @@ orientation/start-point normalization, which winding.py re-normalizes).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 
-from osm_spark.kernels.rings import Linestring, Point
+from osm_spark.kernels.rings import Linestring, Point, orient_exact
 
 
 class Ring:
     """A closed ring with cached numpy arrays + shoelace area."""
 
-    __slots__ = ("points", "role", "xs", "ys", "area2", "bbox", "_pset")
+    __slots__ = ("points", "role", "xs", "ys", "area2", "bbox", "_pset", "_segs")
 
     def __init__(self, points: list[Point], role: str = "") -> None:
         if len(points) < 4 or points[0] != points[-1]:
@@ -54,6 +65,13 @@ class Ring:
             int(pts[:, 1].max()),
         )
         self._pset: frozenset | None = None
+        self._segs: Segs | None = None
+
+    @property
+    def segs(self) -> "Segs":
+        if self._segs is None:
+            self._segs = ring_segments(self.xs, self.ys)
+        return self._segs
 
     @property
     def point_set(self) -> frozenset:
@@ -65,55 +83,180 @@ class Ring:
         return abs(self.area2)
 
 
-def point_in_ring(ring: Ring, px: int, py: int) -> int:
-    """Exact crossing-number PIP: 1=inside, 0=on boundary, -1=outside.
+# Fixed-point grid of the exact kernel: degrees x 1e7, the node
+# coordinates' own units. Pages (degrees x 1e6) land on it exactly as
+# lon_u * 10; every grid value is an integer held exactly in float64.
+GRID = 1e7
 
-    Vectorized bbox/coarse pass in float64 (differences are exact),
-    falling back to exact integer orientation only on edges whose
-    x-interval straddles the point (rare).
+# Max elements of any dense (points x segments) intermediate inside
+# ``locate`` -- ~32 MB of float64 per temporary. Bounds executor memory
+# regardless of polygon vertex count or Arrow batch size.
+TILE_ELEMS = 4 * 1024 * 1024
+
+# Shewchuk's orient2d static filter (ccwerrboundA): a float64 orientation
+# whose magnitude exceeds this times (|left product| + |right product|)
+# has the exact sign (https://www.cs.cmu.edu/~quake/robust.html).
+_EPS = 2.0**-53
+_CCW_ERRBOUND_A = (3.0 + 16.0 * _EPS) * _EPS
+
+
+def to_grid(deg) -> np.ndarray:
+    """Degrees -> grid units (float64 holding exact integers)."""
+    return np.rint(np.asarray(deg, dtype=np.float64) * GRID)
+
+
+def orient(ax, ay, bx, by, px, py, errbound=None) -> np.ndarray:
+    """(b - a) x (p - a) over broadcast float64 arrays of grid integers:
+    > 0 when p is left of a->b, 0 on the line. The sign is exact.
+
+    The float64 value is trusted beyond Shewchuk's bound: per entry, or
+    the caller's scalar ``errbound`` (ccwerrboundA times a bound on
+    |left| + |right| that holds for every entry).
+    A scalar bound below 1 settles every entry at once: no integer
+    crosses zero by less than 1, and equal exact products round to
+    equal floats. Inside the bound the float sign is still exact when a
+    product is 0 or the two differ in sign (so axis-aligned edges never
+    leave numpy); the rest are recomputed with Python ints.
     """
-    bx0, by0, bx1, by1 = ring.bbox
-    if px < bx0 or px > bx1 or py < by0 or py > by1:
-        return -1
-    x1, y1 = ring.xs[:-1], ring.ys[:-1]
-    x2, y2 = ring.xs[1:], ring.ys[1:]
-    fx, fy = float(px), float(py)
+    left = (bx - ax) * (py - ay)
+    right = (by - ay) * (px - ax)
+    det = left - right
+    if errbound is None:
+        errbound = _CCW_ERRBOUND_A * (np.abs(left) + np.abs(right))
+    elif errbound < 1.0:
+        return det
+    amb = np.abs(det) <= errbound
+    if amb.any():
+        idx = np.nonzero(amb)
+        need = left[idx] * right[idx] > 0
+        if need.any():
+            sel = tuple(i[need] for i in idx)
+            args = [
+                np.broadcast_to(v, det.shape)[sel].astype(np.int64).tolist()
+                for v in (ax, ay, bx, by, px, py)
+            ]
+            det[sel] = [orient_exact(*a) for a in zip(*args)]
+    return det
 
-    # Boundary check: collinear + within bbox of the segment.
-    cross = (x2 - x1) * (fy - y1) - (y2 - y1) * (fx - x1)
-    on = (
-        (cross == 0.0)
-        & (np.minimum(x1, x2) <= fx)
-        & (fx <= np.maximum(x1, x2))
-        & (np.minimum(y1, y2) <= fy)
-        & (fy <= np.maximum(y1, y2))
+
+class Segs(NamedTuple):
+    """Edge table of one closed ring in grid units. ``edges`` rows:
+    x1, y1, x2, y2, then the edge bboxes minx, maxx, miny, maxy (one
+    array, so slicing it is one gather). Plus the ring bbox and the
+    longest edge extent per axis."""
+
+    edges: np.ndarray
+    bbox: tuple[float, float, float, float]
+    dmax: tuple[float, float]
+
+
+def ring_segments(xs: np.ndarray, ys: np.ndarray) -> Segs:
+    """Edge table of a closed ring given as grid-unit vertex arrays."""
+    x1, y1, x2, y2 = xs[:-1], ys[:-1], xs[1:], ys[1:]
+    return Segs(
+        np.stack([
+            x1, y1, x2, y2,
+            np.minimum(x1, x2), np.maximum(x1, x2),
+            np.minimum(y1, y2), np.maximum(y1, y2),
+        ]),
+        (float(xs.min()), float(ys.min()), float(xs.max()), float(ys.max())),
+        (float(np.abs(x2 - x1).max(initial=0.0)), float(np.abs(y2 - y1).max(initial=0.0))),
     )
-    if bool(on.any()):
-        return 0
 
-    # Crossing number with the half-open rule [y1, y2): exact because all
-    # quantities are integers representable in float64 and the products
-    # below stay < 2^53 only for differences; for safety near-zero crosses
-    # were already classified as boundary above, and sign(cross) is exact
-    # whenever |cross| >= 1 in integer arithmetic. Differences are < 2^36
-    # (coords < 2^31), so products < 2^72 CAN lose bits — but only the
-    # SIGN matters and float64 sign of a±2^72 product is wrong only within
-    # ulp of zero, which the exact boundary test above has excluded for
-    # points ON edges; for robustness we re-check near-zero crosses
-    # exactly.
-    straddle = (y1 > fy) != (y2 > fy)
-    if not bool(straddle.any()):
-        return -1
-    idx = np.nonzero(straddle)[0]
-    count = 0
-    for i in idx.tolist():
-        ax, ay = ring.points[i]
-        bx, by = ring.points[i + 1]
-        # Exact integer orientation of (a,b,p).
-        v = (bx - ax) * (py - ay) - (by - ay) * (px - ax)
-        if (v > 0) == (by > ay):
-            count += 1
-    return 1 if (count & 1) else -1
+
+def xy_rings(poly) -> list[tuple[np.ndarray, np.ndarray]]:
+    """Rings as point lists [[x, y], ...] -> [(xs, ys)] float64 arrays."""
+    return [
+        (
+            np.asarray([p[0] for p in ring], dtype=np.float64),
+            np.asarray([p[1] for p in ring], dtype=np.float64),
+        )
+        for ring in poly
+    ]
+
+
+def grid_segments(rings) -> list[Segs]:
+    """Edge tables of a polygon given as degree rings [(xs, ys), ...]."""
+    return [ring_segments(to_grid(xs), to_grid(ys)) for xs, ys in rings]
+
+
+def locate(segs: Segs, px: np.ndarray, py: np.ndarray) -> np.ndarray:
+    """Exact crossing-number PIP of grid points against one ring:
+    int8 per point, 1 = inside, 0 = on the ring, -1 = outside.
+
+    Edges are first SLICED to those that can matter for this point
+    group: a +x ray from p crosses only edges with miny <= py <= maxy
+    and maxx >= px, and an on-edge hit needs the edge bbox to hold p,
+    so edges outside the group's own extent contribute nothing to any
+    of its points. Callers that group points spatially (per covering
+    cell) cut each test to ~the cell's own edges. The remaining dense
+    (points x edges) work is TILED under ``TILE_ELEMS``.
+    """
+    n = len(px)
+    if n == 0:
+        return np.empty(0, dtype=np.int8)
+    if n == 1:  # most calls: one point per covering cell
+        x_lo = x_hi = px[0]
+        y_lo = y_hi = py[0]
+    else:
+        x_lo, x_hi, y_lo, y_hi = px.min(), px.max(), py.min(), py.max()
+    e = segs.edges
+    sel = ((e[6] <= y_hi) & (e[7] >= y_lo) & (e[5] >= x_lo)).nonzero()[0]
+    if len(sel) == 0:
+        return np.full(n, -1, dtype=np.int8)
+    x1, y1, x2, y2, minx, maxx, miny, maxy = e[:, sel]
+    # One bound for the group: |p - a| never exceeds the span of the
+    # group's and the ring's boxes together.
+    bx0, by0, bx1, by1 = segs.bbox
+    errbound = _CCW_ERRBOUND_A * (
+        segs.dmax[0] * (max(y_hi, by1) - min(y_lo, by0))
+        + segs.dmax[1] * (max(x_hi, bx1) - min(x_lo, bx0))
+    )
+    n_s = len(sel)
+    s_tile = min(n_s, TILE_ELEMS)
+    p_tile = max(1, TILE_ELEMS // s_tile)
+    parts = []
+    for i in range(0, n, p_tile):
+        qx = px[i : i + p_tile, None]
+        qy = py[i : i + p_tile, None]
+        crossings, on = 0, []
+        for j in range(0, n_s, s_tile):
+            s = slice(j, j + s_tile)
+            sy1, sy2 = y1[None, s], y2[None, s]
+            det = orient(x1[None, s], sy1, x2[None, s], sy2, qx, qy, errbound)
+            # A straddling edge runs upward iff its end is above p; the
+            # +x ray crosses it iff p is left of it going up, right of
+            # it going down.
+            up = sy2 > qy
+            crossings = crossings + (((sy1 > qy) != up) & ((det > 0) == up)).sum(axis=1)
+            r, c = (det == 0).nonzero()
+            if len(r):
+                c = c + j
+                hx, hy = qx[r, 0], qy[r, 0]
+                hit = (minx[c] <= hx) & (hx <= maxx[c]) & (miny[c] <= hy) & (hy <= maxy[c])
+                on.append(r[hit])
+        part = np.where(crossings & 1, np.int8(1), np.int8(-1))
+        for rows in on:
+            part[rows] = 0
+        parts.append(part)
+    return parts[0] if len(parts) == 1 else np.concatenate(parts)
+
+
+def polygon_contains(rings: list[Segs], px: np.ndarray, py: np.ndarray) -> np.ndarray:
+    """Strict containment (GEOS Contains for a point): inside the outer
+    ring (``rings[0]``), outside every hole, on no ring."""
+    inside = locate(rings[0], px, py) > 0
+    for hole in rings[1:]:
+        cand = inside.nonzero()[0]
+        if len(cand) == 0:
+            break
+        inside[cand] = locate(hole, px[cand], py[cand]) < 0
+    return inside
+
+
+def point_in_ring(ring: Ring, px: int, py: int) -> int:
+    """1 = inside, 0 = on the ring, -1 = outside (``locate`` on one point)."""
+    return int(locate(ring.segs, np.array([float(px)]), np.array([float(py)]))[0])
 
 
 def ring_contains(outer: Ring, inner: Ring) -> bool:
@@ -130,14 +273,8 @@ def ring_contains(outer: Ring, inner: Ring) -> bool:
         return False
     if inner.point_set == outer.point_set:
         return True
-    strict = False
-    for p in inner.points[:-1]:
-        r = point_in_ring(outer, p[0], p[1])
-        if r < 0:
-            return False
-        if r > 0:
-            strict = True
-    return strict
+    loc = locate(outer.segs, inner.xs[:-1], inner.ys[:-1])
+    return bool((loc > 0).any()) and not bool((loc < 0).any())
 
 
 def compute_inclusion(rings: list[Ring]) -> list[list[bool]]:
@@ -279,9 +416,5 @@ def point_in_polygon(poly: Polygon, px: int, py: int) -> bool:
     """Strict GEOS-Contains analog for a point: inside outer, outside all
     holes (boundary counts as not-contained, like GEOS Contains)."""
     outer, holes = poly
-    if point_in_ring(outer, px, py) <= 0:
-        return False
-    for h in holes:
-        if point_in_ring(h, px, py) >= 0:
-            return False
-    return True
+    rings = [outer.segs] + [h.segs for h in holes]
+    return bool(polygon_contains(rings, np.array([float(px)]), np.array([float(py)]))[0])

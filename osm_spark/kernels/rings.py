@@ -88,7 +88,7 @@ def merge_arcs(lines: list[Linestring]) -> list[Linestring]:
 # --- exact integer geometry predicates -------------------------------------
 
 
-def _orient(ax: int, ay: int, bx: int, by: int, cx: int, cy: int) -> int:
+def orient_exact(ax: int, ay: int, bx: int, by: int, cx: int, cy: int) -> int:
     """Sign of the cross product (b-a) x (c-a); exact (Python big ints)."""
     v = (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
     return (v > 0) - (v < 0)
@@ -100,10 +100,10 @@ def _on_segment(ax: int, ay: int, bx: int, by: int, px: int, py: int) -> bool:
 
 
 def _segments_intersect(p1: Point, p2: Point, p3: Point, p4: Point) -> bool:
-    o1 = _orient(*p1, *p2, *p3)
-    o2 = _orient(*p1, *p2, *p4)
-    o3 = _orient(*p3, *p4, *p1)
-    o4 = _orient(*p3, *p4, *p2)
+    o1 = orient_exact(*p1, *p2, *p3)
+    o2 = orient_exact(*p1, *p2, *p4)
+    o3 = orient_exact(*p3, *p4, *p1)
+    o4 = orient_exact(*p3, *p4, *p2)
     if o1 != o2 and o3 != o4:
         return True
     if o1 == 0 and _on_segment(*p1, *p2, *p3):
@@ -129,7 +129,7 @@ def is_simple_ring(points: list[Point]) -> bool:
     # Spike check on adjacent segments: (p,q,r) with r collinear going back.
     for i in range(n):
         p, q, r = points[i], points[i + 1], points[(i + 2) % n if i + 2 > n else i + 2]
-        if _orient(*p, *q, *r) == 0 and (p[0] - q[0]) * (r[0] - q[0]) + (p[1] - q[1]) * (r[1] - q[1]) > 0:
+        if orient_exact(*p, *q, *r) == 0 and (p[0] - q[0]) * (r[0] - q[0]) + (p[1] - q[1]) * (r[1] - q[1]) > 0:
             return False
     if n == 3:
         return True
@@ -223,10 +223,10 @@ def _first_proper_crossing(points: list[Point]):
             if i == 0 and j == n - 1:
                 continue  # closing adjacency
             c, d = points[j], points[j + 1]
-            o1 = _orient(*c, *d, *a)
-            o2 = _orient(*c, *d, *b)
-            o3 = _orient(*a, *b, *c)
-            o4 = _orient(*a, *b, *d)
+            o1 = orient_exact(*c, *d, *a)
+            o2 = orient_exact(*c, *d, *b)
+            o3 = orient_exact(*a, *b, *c)
+            o4 = orient_exact(*a, *b, *d)
             if o1 * o2 < 0 and o3 * o4 < 0:
                 rx, ry = b[0] - a[0], b[1] - a[1]
                 sx_, sy_ = d[0] - c[0], d[1] - c[1]

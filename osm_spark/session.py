@@ -61,7 +61,7 @@ def get_spark(
     except Exception:
         _blas_limiter = None
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         # Match parallelism locally; a real cluster would set this to

@@ -75,8 +75,10 @@ def _hav_lon_cells(b_rad: float, n: int, cos_col: Column) -> Column:
     beyond this many cells in lon is PROVABLY farther than b_rad —
     the frontier-loop / radius-join coverage guarantee. cos_col may be
     approximate (coverage only; never touches output values): a 1e-6
-    haircut keeps it a lower bound of the true cosine."""
-    sinb = math.sin(b_rad)
+    haircut keeps it a lower bound of the true cosine. Caps of 90° or
+    wider reach every longitude, so they take the full ring (sin b
+    falls again past 90°, which would shrink the box)."""
+    sinb = math.sin(min(b_rad, math.pi / 2))
     safe = F.greatest(cos_col - F.lit(1e-6), F.lit(0.0))
     lam_deg = F.degrees(F.asin(F.lit(sinb) / safe))
     return F.when(

@@ -7,8 +7,9 @@ Shape (the heart of the extension, SURVEY.md §2.3 J8):
         ⋈ polygon_cells on cell            (equi-join; AQE skew split
                                             + optional explicit salting)
     interior-cell matches  -> accepted directly (no geometry touched)
-    boundary-cell matches  -> cogrouped exact PIP refinement
-                              (points per (rel, poly) × one geometry row)
+    boundary-cell matches  -> exact PIP refinement with the one kernel
+                              (kernels.poly.polygon_contains), broadcast
+                              or cogrouped per (rel, poly)
 
 Scale properties:
 - the point side (10^12 rows) is touched exactly once per covering
@@ -34,42 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osm_spark.kernels.poly import grid_segments, polygon_contains, to_grid, xy_rings
 from osm_spark.spatial.cells_sql import point_cells_expr
-
-
-def _point_in_float_polygon_np(poly, lons: np.ndarray, lats: np.ndarray) -> np.ndarray:
-    """Vectorized-over-points exact PIP (crossing number; boundary
-    excluded, GEOS-Contains semantics — centroid.go:147-160 analog)."""
-    inside = np.zeros(len(lons), dtype=bool)
-    on_edge = np.zeros(len(lons), dtype=bool)
-    for ring_idx, ring in enumerate(poly):
-        xs = np.asarray([p[0] for p in ring], dtype=np.float64)
-        ys = np.asarray([p[1] for p in ring], dtype=np.float64)
-        x1, y1 = xs[:-1], ys[:-1]
-        x2, y2 = xs[1:], ys[1:]
-        dx = x2 - x1
-        dy = y2 - y1
-        px = lons[:, None]
-        py = lats[:, None]
-        cross = dx[None, :] * (py - y1[None, :]) - dy[None, :] * (px - x1[None, :])
-        on = (
-            (cross == 0.0)
-            & (np.minimum(x1, x2)[None, :] <= px)
-            & (px <= np.maximum(x1, x2)[None, :])
-            & (np.minimum(y1, y2)[None, :] <= py)
-            & (py <= np.maximum(y1, y2)[None, :])
-        )
-        on_edge |= on.any(axis=1)
-        straddle = (y1[None, :] > py) != (y2[None, :] > py)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = x1[None, :] + (py - y1[None, :]) * dx[None, :] / dy[None, :]
-        crossings = (straddle & (px < xint)).sum(axis=1)
-        ring_inside = (crossings & 1).astype(bool)
-        if ring_idx == 0:
-            inside = ring_inside
-        else:  # holes subtract
-            inside &= ~ring_inside
-    return inside & ~on_edge
 
 
 REFINE_SCHEMA = "point_id long, rel_id long, poly_idx int"
@@ -80,10 +47,11 @@ def _refine_cogroup(key, pts: pd.DataFrame, poly: pd.DataFrame) -> pd.DataFrame:
         return pd.DataFrame({"point_id": [], "rel_id": [], "poly_idx": []}).astype(
             {"point_id": "int64", "rel_id": "int64", "poly_idx": "int32"}
         )
-    shape = poly["poly"].iloc[0]
-    lons = pts["lon"].to_numpy(dtype=np.float64)
-    lats = pts["lat"].to_numpy(dtype=np.float64)
-    ok = _point_in_float_polygon_np(shape, lons, lats)
+    ok = polygon_contains(
+        grid_segments(xy_rings(poly["poly"].iloc[0])),
+        to_grid(pts["lon"].to_numpy(dtype=np.float64)),
+        to_grid(pts["lat"].to_numpy(dtype=np.float64)),
+    )
     sel = pts.loc[ok, ["point_id"]].copy()
     sel["rel_id"] = key[0]
     sel["poly_idx"] = key[1]
@@ -97,8 +65,9 @@ def _refine_broadcast(boundary: DataFrame, polygons: DataFrame) -> DataFrame:
     flaw: parallelism capped at polygon count, coastline candidates
     concentrated in one task). Boundary candidates stay in their
     existing partitioning; each Arrow batch groups its rows by polygon
-    and runs the vectorized crossing-number test against the broadcast
-    geometry. Parallelism = input partitions; skew = input skew.
+    and runs the exact kernel (``PipIndex.contains``) against the
+    broadcast geometry. Parallelism = input partitions; skew = input
+    skew.
     """
     from osm_spark.spatial.pip_index import PipIndex, build_pip_index
 

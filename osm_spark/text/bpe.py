@@ -30,17 +30,17 @@ Scale shape (the 100-TB view):
   per-round persist/release so round k reads round k-1's cache, not
   its lineage. K rounds = K small shuffles over the type table —
   independent of corpus size.
-- Encoding uses the same Zipf dedup: encode each DISTINCT word once
-  (the merge folds are literal-specialized Catalyst expressions — no
-  Python in the loop), then broadcast-join the word→pieces dictionary
-  back to the corpus and reassemble per document ordered by word
-  position. Production merge counts (256–32k) apply the folds in
-  CHUNKS over the distinct-word table — ≤8 guarded folds per staged
-  projection (the guard's tree doubles per merge, so chunking bounds
-  the analyzer; its contains() probe is what keeps Zipf-tail words
-  from paying K folds of CPU), lazy lineage truncation between chunks
-  so projections cannot re-collapse — still corpus-size-independent,
-  pinned against the python twin at K=256 (test_bpe).
+- Encoding uses the same Zipf dedup: encode each DISTINCT word once,
+  then broadcast-join the word→pieces dictionary back to the corpus
+  and reassemble per document ordered by word position. Up to
+  ``chunk_size`` (8) merges the dictionary is built by literal-
+  specialized Catalyst folds (no Python in the loop). Production merge
+  counts (256–32k) cannot ride Catalyst (the guarded fold tree doubles
+  per merge), so past that the dictionary is built by an Arrow-batched
+  ``mapInPandas`` kernel over the distinct-word table: the rank-order
+  greedy merge loop with the same contains() guard — still
+  corpus-size-independent, pinned against the python twin at K=256
+  (test_bpe).
 
 No reference analog (pmezard/osm has no text pipeline); SURVEY
 §2-ext X65. Oracles: q101 re-trains the whole merge table in DuckDB
@@ -304,10 +304,10 @@ def _apply_merges(
     But unguarded folds RUN on every word: at K=256 over 2.7M types
     that is ~700M higher-order folds (measured: the encode stage
     crawls), while the guard's substring probe skips ~all of them for
-    Zipf-tail words. So the production path keeps the guard and
-    bounds the tree by CHUNKING at ≤8 merges per staged projection
-    (2⁸·fold ≈ 15k nodes — the analyzer cost the historical K=8
-    single-expression path already paid)."""
+    Zipf-tail words. So the Catalyst path keeps the guard and runs
+    only up to ``bpe_encode``'s ``chunk_size`` merges (2⁸·fold ≈ 15k
+    nodes at 8); larger merge tables go through its Arrow-batched
+    kernel instead."""
     for left, right in merges:
         folded = merge_fold(syms, left, right)
         if guarded:

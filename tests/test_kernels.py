@@ -282,6 +282,34 @@ def test_point_in_polygon_with_hole():
     assert not point_in_polygon(poly, 0, 0)  # on boundary
 
 
+def test_point_in_ring_long_diagonal_edge_exact():
+    """Lattice points whose exact cross product with a long diagonal
+    edge is +-1..+-500 sit on the side that sign says: a float64
+    cross product (~2^61 here) cannot tell them apart from the edge."""
+    from osm_spark.kernels.poly import point_in_ring
+
+    dx, dy = 1_790_000_003, 1_234_567_891
+    ring = Ring([(0, 0), (dx, dy), (0, dy), (0, 0)])  # inside = left of the edge
+
+    def egcd(a, b):
+        if b == 0:
+            return a, 1, 0
+        g, x, y = egcd(b, a % b)
+        return g, y, x - (a // b) * y
+
+    g, u, v = egcd(dx, dy)
+    assert g == 1
+    bad = 0
+    ks = list(range(1, 501, 5)) + list(range(-1, -501, -5))
+    for k in ks:
+        # the one lattice point with dx*y - dy*x == k and 0 <= x < dx
+        m = -((-k * v) // dx)
+        x, y = -k * v + m * dx, k * u + m * dy
+        assert dx * y - dy * x == k and 0 < x < dx and 0 < y < dy
+        bad += point_in_ring(ring, x, y) != (1 if k > 0 else -1)
+    assert len(ks) == 200 and bad == 0
+
+
 def test_split_pinched_ring():
     """G5 — buffer(0) analog for self-touching rings (poly.go:177)."""
     from osm_spark.kernels.rings import is_simple_ring, split_pinched_ring

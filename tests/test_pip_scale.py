@@ -10,6 +10,7 @@ import tracemalloc
 import numpy as np
 import pytest
 
+from osm_spark.kernels import poly
 from osm_spark.spatial import pip_index as P
 
 
@@ -92,6 +93,7 @@ def test_tiny_tile_budget_identical(star_index, monkeypatch):
     base_c = idx.contains(1, 0, lons, lats)
     base_d = idx.edge_distance(1, 0, lons, lats)
     monkeypatch.setattr(P, "TILE_ELEMS", 997)  # prime: ragged tiles
+    monkeypatch.setattr(poly, "TILE_ELEMS", 997)  # the exact kernel's own
     idx2 = P.PipIndex([], {}, idx.geom)
     np.testing.assert_array_equal(idx2.contains(1, 0, lons, lats), base_c)
     np.testing.assert_array_equal(idx2.edge_distance(1, 0, lons, lats), base_d)
@@ -149,3 +151,98 @@ def test_index_pickle_drops_segment_cache(star_index):
     np.testing.assert_array_equal(
         clone.contains(1, 0, lons, lats), idx.contains(1, 0, lons, lats)
     )
+
+
+# Two polygons sharing the diagonal edge (1,2)->(4,3) (degrees).
+_LOWER = [[1.0, 1.0], [4.0, 1.0], [4.0, 3.0], [1.0, 2.0], [1.0, 1.0]]
+_UPPER = [[1.0, 2.0], [4.0, 3.0], [4.0, 4.0], [1.0, 4.0], [1.0, 2.0]]
+
+
+def _edge_lattice(step):
+    """Micro-degree lattice points strictly inside the shared edge:
+    (lon_u, lat_u) = (1e6 + 3t, 2e6 + t)."""
+    t = np.arange(step, 1_000_000, step, dtype=np.int64)
+    return 1_000_000 + 3 * t, 2_000_000 + t
+
+
+def _ring_arrays(ring):
+    a = np.asarray(ring, dtype=np.float64)
+    return a[:, 0], a[:, 1]
+
+
+def test_shared_diagonal_edge_lattice_in_neither_polygon():
+    """Boundary excluded means a page exactly on a shared border
+    belongs to neither side; one micro-degree off it, to exactly one."""
+    idx = P.PipIndex(
+        [], {}, {(1, 0): [_ring_arrays(_LOWER)], (2, 0): [_ring_arrays(_UPPER)]}
+    )
+    lon_u, lat_u = _edge_lattice(1)
+    lons = lon_u / 1e6
+    for rel in (1, 2):
+        assert not idx.contains(rel, 0, lons, lat_u / 1e6).any()
+    above, below = (lat_u + 1) / 1e6, (lat_u - 1) / 1e6
+    assert idx.contains(2, 0, lons, above).all()
+    assert not idx.contains(1, 0, lons, above).any()
+    assert idx.contains(1, 0, lons, below).all()
+    assert not idx.contains(2, 0, lons, below).any()
+
+
+def test_shared_diagonal_edge_every_spark_path(spark, tmp_path):
+    """The same rule through every page-side path: index,
+    index-sharded and catalyst pipelines, the cogroup refinement, and
+    the streaming enrichment."""
+    from pyspark.sql import functions as F
+
+    from osm_spark.plans.spatial_pipeline import run_spatial_pipeline
+    from osm_spark.spatial.pip_join import pip_join
+    from osm_spark.streaming.pages_stream import stream_pip_enrich
+
+    lon_u, lat_u = _edge_lattice(997)
+    rows, expect = [], set()
+    for k, (x, y) in enumerate(zip(lon_u.tolist(), lat_u.tolist())):
+        for dy, rel in ((0, None), (1, 2), (-1, 1)):
+            url = f"https://e.org/{k}/{dy}"
+            rows.append((url, f"geo: {y + dy},{x}"))
+            if rel is not None:
+                expect.add((url, rel))
+    pages = spark.createDataFrame(rows, "url string, text string").select(
+        "url",
+        F.lit(None).cast("timestamp").alias("warc_ts"),
+        F.lit(None).cast("binary").alias("html"),
+        "text",
+        F.lit(None).cast("string").alias("lang"),
+    )
+    locations = spark.createDataFrame(
+        [(1, [[_LOWER]]), (2, [[_UPPER]])],
+        "rel_id long, shape array<array<array<array<double>>>>",
+    )
+    kept = spark.createDataFrame([(1, 8), (2, 8)], "id long, admin_level int")
+
+    def urls(pip, points):
+        return {
+            (r.url, r.rel_id)
+            for r in pip.join(points, "point_id").select("url", "rel_id").collect()
+        }
+
+    for mode in ("index", "index-sharded", "catalyst"):
+        sp = run_spatial_pipeline(
+            spark, pages, locations, kept, max_level=11, mode=mode,
+            index_shards=2 if mode == "index-sharded" else None,
+        )
+        assert urls(sp["pip"], sp["points"]) == expect, mode
+    cogroup = pip_join(
+        sp["points"].select("point_id", "lon", "lat"),
+        sp["polygon_cells"],
+        sp["polygon_geometry"],
+        refine="cogroup",
+    )
+    assert urls(cogroup, sp["points"]) == expect
+
+    src, sink = str(tmp_path / "src"), str(tmp_path / "sink")
+    pages.repartition(3).write.parquet(src)
+    q = stream_pip_enrich(
+        spark, src, locations, sink, str(tmp_path / "ck"), max_level=11
+    )
+    q.awaitTermination(300)
+    streamed = {(r.url, r.rel_id) for r in spark.read.parquet(sink).collect()}
+    assert streamed == expect

@@ -111,3 +111,100 @@ def test_isolines_topology(occ):
             blocks[k] = blocks.get(k, 0) | w
     want = sum(len(MS_TABLE.get(c, [])) for c in blocks.values())
     assert len(segs) == want
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.data())
+def test_pip_tessellation_shared_diagonal_edges(data):
+    """A grid rectangle cut into children by non-crossing diagonal
+    polylines: a point strictly inside the parent and on no edge lands
+    in exactly one child; a point on a shared edge lands in none."""
+    from math import gcd
+
+    from osm_spark.kernels.poly import polygon_contains, ring_segments
+
+    W = H = 64
+    n_cuts = data.draw(st.integers(1, 3))
+    inner = data.draw(st.lists(st.integers(1, W - 1), max_size=4, unique=True))
+    bx = [0] + sorted(inner) + [W]
+    # per breakpoint, sorted distinct heights: cut lines never cross
+    cut_ys = [
+        sorted(data.draw(st.lists(
+            st.integers(1, H - 1), min_size=n_cuts, max_size=n_cuts, unique=True
+        )))
+        for _ in bx
+    ]
+    s = data.draw(st.integers(1, 25_000_000))  # grid units per template unit
+    x0 = data.draw(st.integers(-1_800_000_000, 1_800_000_000 - s * W))
+    y0 = data.draw(st.integers(-900_000_000, 900_000_000 - s * H))
+    # Jitter (< half a template unit, order-preserving) makes the long
+    # diagonal edges primitive, so lattice points crowd them closely.
+    jit = st.integers(0, s // 2)
+    gx = [x0] + [x0 + s * x + data.draw(jit) for x in bx[1:-1]] + [x0 + s * W]
+    gy = [[y0 + s * y + data.draw(jit) for y in ys] for ys in cut_ys]
+
+    def line(c):  # cut line c as grid points, left to right
+        if c < 0:
+            return [(x0, y0), (x0 + s * W, y0)]
+        if c == n_cuts:
+            return [(x0, y0 + s * H), (x0 + s * W, y0 + s * H)]
+        return [(x, ys[c]) for x, ys in zip(gx, gy)]
+
+    children = []
+    for c in range(n_cuts + 1):
+        pts = line(c - 1) + line(c)[::-1]
+        pts.append(pts[0])
+        a = np.asarray(pts, dtype=np.float64)
+        children.append([ring_segments(a[:, 0], a[:, 1])])
+    shared = [
+        (p, q)
+        for c in range(n_cuts)
+        for p, q in zip(line(c)[:-1], line(c)[1:])
+    ]
+
+    def egcd(a, b):  # (u, v) with a*u + b*v == gcd(a, b), a, b >= 0
+        if b == 0:
+            return 1, 0
+        u, v = egcd(b, a % b)
+        return v, u - (a // b) * v
+
+    probes = []
+    for (ax, ay), (qx, qy) in shared:
+        g = gcd(qx - ax, qy - ay)
+        a, b = (qx - ax) // g, (qy - ay) // g  # primitive step, a > 0
+        i = data.draw(st.integers(0, g))
+        ex, ey = ax + i * a, ay + i * b
+        probes += [(ex, ey), (ex, ey + 1), (ex, ey - 1)]
+        # the lattice point near step i whose exact cross product with
+        # the edge is k: float64 alone cannot place it
+        u, v = egcd(a, abs(b))
+        k = data.draw(st.sampled_from([-2, -1, 1, 2]))
+        X, Y = -k * v * (1 if b >= 0 else -1), k * u
+        m = i - X // a
+        probes.append((ax + X + m * a, ay + Y + m * b))
+    probes += data.draw(st.lists(
+        st.tuples(
+            st.integers(x0 + 1, x0 + s * W - 1), st.integers(y0 + 1, y0 + s * H - 1)
+        ),
+        max_size=20,
+    ))
+    probes = [
+        (x, y) for x, y in probes
+        if x0 < x < x0 + s * W and y0 < y < y0 + s * H
+    ]
+    if not probes:
+        return
+
+    def on_shared(x, y):
+        return any(
+            (qx - ax) * (y - ay) == (qy - ay) * (x - ax)
+            and min(ax, qx) <= x <= max(ax, qx)
+            and min(ay, qy) <= y <= max(ay, qy)
+            for (ax, ay), (qx, qy) in shared
+        )
+
+    px = np.asarray([p[0] for p in probes], dtype=np.float64)
+    py = np.asarray([p[1] for p in probes], dtype=np.float64)
+    hits = sum(polygon_contains(rings, px, py).astype(int) for rings in children)
+    for (x, y), h in zip(probes, hits.tolist()):
+        assert h == (0 if on_shared(x, y) else 1), (x, y)

@@ -431,3 +431,45 @@ def test_knn_points_haversine_pole_and_wrap(spark):
         qlon, qlat, np.array([0]), dlon, dlat, np.array([3, 4]), 2
     )
     assert {(r.query_id, r.data_id, r.d2_u, r.rank) for r in got} == exp
+
+
+def test_haversine_caps_wider_than_90_degrees(spark):
+    """Caps of 90 degrees or more reach every longitude: an equatorial
+    query's lon disk must be the full ring, not the asin box, which
+    shrinks again past 90 degrees (sin 120 = sin 60)."""
+    import math
+
+    from osm_spark.spatial.knn_points import SPHERE_SCALE, distance_join
+
+    dlon = np.array([100.0, -100.0, -120.0, 150.0, -170.0, 60.0])
+    dlat = np.array([0.0, 0.0, 5.0, 0.0, 0.0, 40.0])
+    dids = np.arange(len(dlon))
+    qlon, qlat, qids = np.array([0.5]), np.array([0.0]), np.array([0])
+    data = spark.createDataFrame(
+        [(int(i), float(dlon[i]), float(dlat[i])) for i in dids],
+        "data_id long, lon double, lat double",
+    )
+    queries = spark.createDataFrame(
+        [(0, 0.5, 0.0)], "query_id long, lon double, lat double"
+    )
+    # kNN: level 2, radius 3 is a 135-degree cap, one pass.
+    got = {
+        (r.query_id, r.data_id, r.d2_u, r.rank)
+        for r in knn_points_join(
+            queries, data, k=3, level=2, radius=3, metric="haversine"
+        ).collect()
+    }
+    assert got == _brute_knn_hav(qlon, qlat, qids, dlon, dlat, dids, 3)
+    # Radius join at exactly b = 120 degrees.
+    t = 2.0 * SPHERE_SCALE * math.sin(math.radians(120.0) / 2.0) + 4.0
+    qx, qy, qz = _sphere_quant(qlon, qlat)
+    dx, dy, dz = _sphere_quant(dlon, dlat)
+    d2 = (dx - qx[0]) ** 2 + (dy - qy[0]) ** 2 + (dz - qz[0]) ** 2
+    exp = {(0, int(j), int(v)) for j, v in zip(dids, d2) if v <= math.floor(t * t)}
+    got = {
+        (r.query_id, r.data_id, r.d2_u)
+        for r in distance_join(
+            queries, data, 120.0, level=3, metric="haversine"
+        ).collect()
+    }
+    assert got == exp and (0, 1, int(d2[1])) in exp
