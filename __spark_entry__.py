@@ -680,32 +680,6 @@ _def(
 )
 
 
-def _q_pip_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The lon-banded sharded index path (SCALE.md mitigation #3 —
-    index-mode semantics above the broadcast budget), driver-pinned
-    against the SAME oracle as q21/q54: all three PIP modes must
-    produce the identical membership set."""
-    key = ("spatial_sharded", id(spark))
-    if key not in _WORLD_CACHE:
-        from osm_spark.plans.spatial_pipeline import run_spatial_pipeline
-
-        out = _world(spark)
-        _WORLD_CACHE[key] = run_spatial_pipeline(
-            spark, _pages_df(spark), out["locations"], out["kept"],
-            max_level=11, mode="index-sharded", index_shards=3,
-        )
-    sp = _WORLD_CACHE[key]
-    return sp["pip"].join(sp["points"], "point_id").select("url", "rel_id")
-
-
-_def(
-    "q56_pip_sharded",
-    fn=_q_pip_sharded,
-    duck_sql=_pages_oracle_cte()
-    + f"SELECT url, rel_id FROM ({_pip_membership_sql()}) GROUP BY url, rel_id",
-)
-
-
 def _q_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sp = _spatial(spark)
     out = _world(spark)
@@ -6649,7 +6623,7 @@ _def("q130_dataset_card", fn=_q_dataset_card, duck_sql=_q130_oracle_sql())
 # (initial + append), pip_increment runs after each — reading only
 # the appended files the second time — and the final assignment table
 # is hash-checked against the SAME independent membership SQL as
-# q21/q54/q56. Fresh temp dirs per invocation keep the query
+# q21/q54. Fresh temp dirs per invocation keep the query
 # side-effect-free across driver retries.
 def _q_pip_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile

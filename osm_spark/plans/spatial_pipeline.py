@@ -23,7 +23,7 @@ _log = logging.getLogger("osm_spark.spatial")
 
 from osm_spark.spatial.covering import build_polygon_cells, polygon_geometry
 from osm_spark.spatial.geoparse import geoparse_pages
-from osm_spark.spatial.pip_join import pip_join
+from osm_spark.spatial.pip_join import REFINE_SHARDS, pip_join
 from osm_spark.spatial.tiles import tile_assignments
 
 
@@ -35,26 +35,24 @@ def run_spatial_pipeline(
     min_level: int = 4,
     max_level: int = 12,
     tile_level: int = 7,
-    salt: int = 1,
     mode: str = "auto",
     index_max_bytes: int | None = None,
     simplify_tol: float | None = None,
-    index_shards: int | None = None,
 ) -> dict[str, DataFrame]:
     """``mode="index"``: the page side streams through ONE mapInPandas
     pass against a broadcast covering+geometry index — no explode, no
     join, no shuffle on the 10^12-row side (see pip_index.py).
-    ``mode="catalyst"``: anchor-pruned max-level cell equi-join +
-    refinement — the path for polygon sides too large to broadcast as
-    one index. ``mode="index-sharded"``: longitude-banded sub-budget
-    indexes (``index_shards`` bands, or auto-sized from the estimate
-    vs budget) — index-mode semantics above the broadcast budget at
-    the cost of n filtered passes over the page source. ``mode="auto"`` (default) measures the covering + ring
-    sizes (two tiny aggregates over the SMALL side, nothing collected)
-    and picks: index when the estimated broadcast fits
+    ``mode="catalyst"``: anchor-pruned cell equi-join + sharded cogroup
+    refinement (see pip_join.py) — the path for polygon sides too large
+    to broadcast as one index; nothing polygon-sized is broadcast, and
+    AQE's skew-join split is its hot-cell guard (logged, with a warning
+    when it is off). ``mode="auto"`` (default) measures the covering +
+    ring sizes (two tiny aggregates over the SMALL side, nothing
+    collected) and picks: index when the estimated broadcast fits
     ``index_max_bytes`` (default pip_index.INDEX_MAX_BYTES), catalyst
-    otherwise; the decision is logged. All modes produce identical
-    rows (pinned by tests and the q21/q22 oracles).
+    otherwise; the decision is logged. Both modes produce identical
+    rows (pinned by tests, the q21/q54 oracles and
+    ``perfbench/pin.py --check``).
 
     ``simplify_tol`` (degrees): when set, admin rings are
     Douglas-Peucker-simplified at that tolerance BEFORE covering and
@@ -62,6 +60,8 @@ def run_spatial_pipeline(
     mode under the broadcast budget at planet fidelity.  Assignment
     then differs only for points within ``tol`` of a boundary.
     """
+    if mode not in ("auto", "index", "catalyst"):
+        raise ValueError(f"unknown PIP mode {mode!r}")
     if simplify_tol is not None:
         from osm_spark.spatial.simplify import simplify_shapes
 
@@ -113,35 +113,23 @@ def run_spatial_pipeline(
         pip = pip_join_index(
             points.select("point_id", "lon", "lat"), index_bc
         ).select("point_id", "rel_id")
-    elif mode == "index-sharded":
-        # Longitude-banded sub-budget indexes: index-mode semantics when
-        # the whole index exceeds the broadcast budget (SCALE.md
-        # mitigation #3). Each point probes exactly one band.
-        from osm_spark.spatial.pip_index import (
-            INDEX_MAX_BYTES,
-            pip_join_index_sharded,
-        )
-
-        pip = pip_join_index_sharded(
-            spark,
-            points.select("point_id", "lon", "lat"),
-            pcells,
-            pgeom,
-            max_bytes=(
-                INDEX_MAX_BYTES if index_max_bytes is None else index_max_bytes
-            ),
-            n_shards=index_shards,
-        ).select("point_id", "rel_id")
     else:
         # pip_join reads the probe levels + boundary flags from pcells
         # itself (one tiny aggregate over the persisted small side) and
         # probes max_level with NO page-side explode; interior levels
         # explode only (point_id, cell) after the anchor prune.
+        aqe = spark.conf.get("spark.sql.adaptive.enabled", "true").lower()
+        skew = spark.conf.get("spark.sql.adaptive.skewJoin.enabled", "true").lower()
+        # AQE's skew split is the only hot-cell guard on the cell join.
+        _log.log(
+            logging.INFO if aqe == skew == "true" else logging.WARNING,
+            "PIP catalyst: refine cogroup over %d shards per polygon;"
+            " spark.sql.adaptive.skewJoin.enabled=%s,"
+            " spark.sql.adaptive.enabled=%s",
+            REFINE_SHARDS, skew, aqe,
+        )
         pip = pip_join(
-            points.select("point_id", "lon", "lat"),
-            pcells,
-            pgeom,
-            salt=salt,
+            points.select("point_id", "lon", "lat"), pcells, pgeom
         ).select("point_id", "rel_id")
 
     admin_levels = kept.select(

@@ -46,8 +46,8 @@ def get_spark(
     # that matter for task throughput). If the caller imported numpy
     # before get_spark(), the DRIVER's already-started OpenBLAS pool is
     # unaffected; threadpoolctl (if available) clamps that live pool
-    # too. Entry points that do driver-side numpy (bench.py, tools/*)
-    # additionally pin the env before any import.
+    # too. Entry points that do driver-side numpy (tools/*) additionally
+    # pin the env before any import.
     for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS",
                 "MKL_NUM_THREADS", "NUMEXPR_NUM_THREADS"):
         os.environ.setdefault(var, "1")

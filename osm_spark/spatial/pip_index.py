@@ -1,17 +1,9 @@
 """Broadcast covering index — the zero-shuffle PIP scale path.
 
-Round-1 shape (pip_join.py): points explode to one row per covering
-level (9×), broadcast-hash-join on cell id, then exact refinement in a
-cogroup keyed (rel_id, poly_idx).  Two scale flaws (VERDICT r1):
-
-- the 9× explode multiplies the 10^12-row page side before the join;
-- the refinement cogroup's parallelism is capped at the number of
-  polygons, and one coastline-heavy polygon lands in a single task.
-
-This module replaces both with the S2ShapeIndex-style design: the
-covering + exact geometry (the SMALL side — 10^6-10^7 cells for a
-planet admin set) is compiled into a picklable numpy index, broadcast
-once, and the page side streams through ONE ``mapInPandas`` pass:
+S2ShapeIndex-style design: the covering + exact geometry (the SMALL
+side — 10^6-10^7 cells for a planet admin set) is compiled into a
+picklable numpy index, broadcast once, and the page side streams
+through ONE ``mapInPandas`` pass:
 
     per Arrow batch (vectorized numpy, no per-row Python):
       morton at max covering level          (one encode per point)
@@ -34,10 +26,11 @@ Input hint sanction: "pyspark.sql DataFrame + vectorized pandas/Arrow
 UDFs (no per-row Python) throughout" — every step above is a whole-
 batch numpy operation.
 
-When the admin geometry is too large to broadcast, use
-``pip_join(..., broadcast_cells=False, refine="cogroup", refine_salt=S)``
-(shuffle cell join + salted cogroup refinement) — equality of the two
-paths is pinned by tests.
+When the index would exceed the broadcast budget,
+``run_spatial_pipeline(mode="auto")`` falls back to ``pip_join``
+(catalyst mode: cell equi-join + sharded cogroup refinement, nothing
+polygon-sized broadcast) — equality of the two paths is pinned by
+tests and by ``perfbench/pin.py --check``.
 """
 
 from __future__ import annotations
@@ -47,7 +40,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from osm_spark.kernels.cells import cell_parent, point_to_cell
 from osm_spark.kernels.poly import (
@@ -264,8 +256,8 @@ def build_pip_index(
     (planet admin covering ≈ 10^6-10^7 cells, far under executor
     memory); the 10^12-row page side never appears here.
 
-    ``polygon_cells=None`` builds a geometry-only index (for refinement
-    stages that already have their candidates).
+    ``polygon_cells=None`` builds a geometry-only index (for stages
+    that already have their candidates, such as kNN edge distances).
 
     ``max_bytes``: guard against an unexpectedly large polygon side
     OOMing the driver/executors via broadcast — a warning is emitted
@@ -297,12 +289,6 @@ def build_pip_index(
             ResourceWarning,
             stacklevel=2,
         )
-    return _compile_index(pc, geom)
-
-
-def _compile_index(pc: pd.DataFrame, geom: dict) -> PipIndex:
-    """Compile covering rows (pandas) + geometry dict into a PipIndex
-    (shared by the whole-index and per-shard builders)."""
     cells = pc["cell"].to_numpy(np.int64)
     levels = np.sort(np.unique(cells & 0x3F)).tolist()
     per_level = {}
@@ -378,189 +364,6 @@ def pip_join_index(points: DataFrame, index_bc, keep: tuple = ()) -> DataFrame:
             yield pd.DataFrame(out)
 
     return points.select("point_id", "lon", "lat", *keep).mapInPandas(run, schema)
-
-
-def plan_shard_boxes(
-    ext: list,
-    cells_of: dict,
-    max_bytes: int,
-    n_shards: int,
-    max_total_shards: int = 64,
-) -> list:
-    """2-D shard plan for the sharded index (pure, unit-testable).
-
-    ``ext`` rows: (key=(rel_id, poly_idx), lon_min, lon_max, lat_min,
-    lat_max, ring_points); ``cells_of``: covering-cell count per
-    ``rel_id<<20|poly_idx``. Returns (lon_lo, lon_hi, lat_lo, lat_hi,
-    members) boxes that tile the plane: lon bands partition longitude,
-    and a band whose estimated index is still over ``max_bytes``
-    (lon-degenerate geometry) is sub-split by latitude with the same
-    weighted-quantile rule, spending the remaining shard allowance
-    where the skew actually is. A polygon is a member of every box its
-    extent touches; a point is routed to exactly one box, so results
-    stay duplicate-free.
-    """
-    from math import ceil
-
-    def _band_edges(items, axis_lo: int, axis_hi: int, n_bands: int):
-        # Weighted-quantile band edges over extent centers (weight =
-        # ring points, the broadcast-size driver), so each band's index
-        # lands near total/n_bands. Shared by the lon and lat splits.
-        items = sorted(items, key=lambda e: (e[axis_lo] + e[axis_hi]) / 2)
-        tot = sum(e[5] for e in items)
-        edges = []
-        cum = 0
-        step = tot / n_bands
-        target = step
-        for e in items:
-            cum += e[5]
-            if cum >= target and len(edges) < n_bands - 1:
-                c = (e[axis_lo] + e[axis_hi]) / 2
-                # Dedupe: identical centers (a degenerate stack) would
-                # otherwise emit zero-width bands that hold FULL
-                # membership (their extents straddle the edge) yet can
-                # never receive a point — pure broadcast/scan waste.
-                if not edges or c > edges[-1]:
-                    edges.append(c)
-                target += step
-        return [float("-inf")] + edges + [float("inf")]
-
-    def _members(items, axis_lo: int, axis_hi: int, lo: float, hi: float):
-        return [e for e in items if e[axis_hi] >= lo and e[axis_lo] < hi]
-
-    def _estimate(items) -> int:
-        n_cells = sum(
-            cells_of.get(e[0][0] * (1 << 20) + e[0][1], 0) for e in items
-        )
-        return estimate_index_bytes(n_cells, sum(e[5] for e in items), len(items))
-
-    lon_bounds = _band_edges(ext, 1, 2, n_shards)
-    bands = []
-    for lo, hi in zip(lon_bounds[:-1], lon_bounds[1:]):
-        m = _members(ext, 1, 2, lo, hi)
-        if m:
-            bands.append((lo, hi, m))
-    shards = []
-    budget_left = max_total_shards - len(bands)
-    for lo, hi, m in bands:
-        est = _estimate(m)
-        n_sub = min(ceil(est / max_bytes), budget_left + 1) if est > max_bytes else 1
-        if n_sub <= 1:
-            shards.append((lo, hi, float("-inf"), float("inf"), m))
-            continue
-        budget_left -= n_sub - 1
-        lat_bounds = _band_edges(m, 3, 4, n_sub)
-        for blo, bhi in zip(lat_bounds[:-1], lat_bounds[1:]):
-            sm = _members(m, 3, 4, blo, bhi)
-            if sm:
-                shards.append((lo, hi, blo, bhi, sm))
-    return shards
-
-
-def pip_join_index_sharded(
-    spark,
-    points: DataFrame,
-    polygon_cells: DataFrame,
-    polygons: DataFrame,
-    max_bytes: int = INDEX_MAX_BYTES,
-    n_shards: int | None = None,
-    keep: tuple = (),
-    max_total_shards: int = 64,
-) -> DataFrame:
-    """Index-mode PIP when the WHOLE index exceeds the broadcast budget:
-    shard the polygon side into longitude bands — and, when a band is
-    still over budget (lon-degenerate geometry: one giant country, all
-    polygons stacked at one longitude), sub-split that band by LATITUDE
-    with the same weighted-quantile rule (VERDICT r3 missing #3) —
-    broadcast one sub-budget index per shard, and route each point to
-    exactly ONE shard by its own (lon, lat) box (SCALE.md mitigation #3).
-
-    Memory: each broadcast is ≤ ~max_bytes (bands are weighted by ring
-    points, the dominant term), so executor Python-heap residency is
-    bounded regardless of total geometry size.  The driver still holds
-    the full small side transiently while slicing (pandas) — the same
-    footprint build_pip_index already has; what sharding removes is
-    the RESIDENT per-executor copy.
-
-    Cost model: points partition exactly (bands are disjoint,
-    [lo, hi)), so the page side is still touched once overall — but as
-    ``n_shards`` filtered passes over the source.  On a lon-clustered
-    layout those filters prune to ~1/n of the files each; on an
-    unclustered 10^12-row table prefer catalyst mode unless index-mode
-    latency is worth n_shards scans.  Polygons whose lon extent spans
-    a band edge are compiled into every band they touch — output rows
-    stay unique because each POINT probes one band only.
-
-    A point outside every band (lon outside all polygon extents) can
-    be inside no polygon; band filters drop it — same empty result the
-    unsharded index produces.  Antimeridian-crossing polygons are not
-    split specially (neither does the reference); their extent simply
-    spans most bands.
-
-    ``max_total_shards`` caps the TOTAL shard fan-out (lon bands × lat
-    sub-bands): each shard is one filtered pass over the page source,
-    so a degenerate budget (or a unit-test max_bytes=1) must not
-    request thousands of scans; at the cap a shard may exceed the
-    budget, which the per-shard build warning surfaces, and catalyst
-    mode is the better tool.
-    """
-    from functools import reduce as _reduce
-    from math import ceil
-
-    pc = polygon_cells.select("cell", "rel_id", "poly_idx", "interior").toPandas()
-    geom = {}
-    ext = []  # (key, lon_min, lon_max, lat_min, lat_max, ring_points)
-    for row in polygons.select("rel_id", "poly_idx", "poly").toPandas().itertuples():
-        key = (int(row.rel_id), int(row.poly_idx))
-        geom[key] = rings = xy_rings(row.poly)
-        n_pts = sum(len(xs) for xs, _ys in rings)
-        ext.append(
-            (
-                key,
-                min(float(xs.min()) for xs, _ys in rings),
-                max(float(xs.max()) for xs, _ys in rings),
-                min(float(ys.min()) for _xs, ys in rings),
-                max(float(ys.max()) for _xs, ys in rings),
-                n_pts,
-            )
-        )
-    total_pts = sum(e[5] for e in ext)
-    if n_shards is None:
-        est = estimate_index_bytes(len(pc), total_pts, len(geom))
-        n_shards = max(1, ceil(est / max_bytes))
-    n_shards = min(n_shards, max_total_shards)
-    if n_shards <= 1 or not ext:
-        bc = spark.sparkContext.broadcast(_compile_index(pc, geom))
-        return pip_join_index(points, bc, keep=keep)
-
-    pc_key = pc["rel_id"].to_numpy(np.int64) * np.int64(1 << 20) + pc[
-        "poly_idx"
-    ].to_numpy(np.int64)
-    # Per-key covering-cell counts, for sub-budget estimation per shard.
-    uniq, cnt = np.unique(pc_key, return_counts=True)
-    cells_of = dict(zip((int(u) for u in uniq), (int(c) for c in cnt)))
-
-    shards = plan_shard_boxes(ext, cells_of, max_bytes, n_shards, max_total_shards)
-
-    outs = []
-    for lo, hi, blo, bhi, members in shards:
-        shard_keys = [e[0] for e in members]
-        want = np.asarray(
-            [r * (1 << 20) + p for r, p in shard_keys], dtype=np.int64
-        )
-        shard_pc = pc[np.isin(pc_key, want)]
-        idx = _compile_index(shard_pc, {k: geom[k] for k in shard_keys})
-        bc = spark.sparkContext.broadcast(idx)
-        cond = (F.col("lon") >= F.lit(lo)) & (F.col("lon") < F.lit(hi))
-        if blo != float("-inf") or bhi != float("inf"):
-            cond = cond & (F.col("lat") >= F.lit(blo)) & (F.col("lat") < F.lit(bhi))
-        outs.append(pip_join_index(points.filter(cond), bc, keep=keep))
-    if not outs:
-        return pip_join_index(
-            points.limit(0), spark.sparkContext.broadcast(_compile_index(pc, {})),
-            keep=keep,
-        )
-    return _reduce(DataFrame.unionByName, outs)
 
 
 KNN_SCHEMA = "point_id long, rel_id long, poly_idx int, dist double"

@@ -29,8 +29,7 @@ from osm_spark.text.analysis import MD5_LONG_SQL, TOKENS_SQL
 # Round-2 re-tune (VERDICT r1 #3/#4): K=8 with 2 bands × 4 rows made
 # 35% of ALL pairs candidates on the template-similar test corpus
 # (median pairwise Jaccard 0.63) — near-quadratic candidate growth.
-# K=128 with 4 bands × 32 rows measures 2.5% on sf0.1 (see BENCH.md;
-# bench.py reports lsh_candidate_ratio so regressions stay visible).
+# K=128 with 4 bands × 32 rows measures 2.5% on sf0.1 (see BENCH.md).
 # Per-band collision probability is j^32: tight enough that only
 # true near-duplicates (j ≳ 0.95) collide at meaningful rates.
 MINHASH_K = 128

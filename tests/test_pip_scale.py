@@ -188,13 +188,12 @@ def test_shared_diagonal_edge_lattice_in_neither_polygon():
 
 
 def test_shared_diagonal_edge_every_spark_path(spark, tmp_path):
-    """The same rule through every page-side path: index,
-    index-sharded and catalyst pipelines, the cogroup refinement, and
-    the streaming enrichment."""
+    """The same rule through every page-side path: the index and
+    catalyst (cogroup refinement) pipelines, and the streaming
+    enrichment."""
     from pyspark.sql import functions as F
 
     from osm_spark.plans.spatial_pipeline import run_spatial_pipeline
-    from osm_spark.spatial.pip_join import pip_join
     from osm_spark.streaming.pages_stream import stream_pip_enrich
 
     lon_u, lat_u = _edge_lattice(997)
@@ -224,19 +223,11 @@ def test_shared_diagonal_edge_every_spark_path(spark, tmp_path):
             for r in pip.join(points, "point_id").select("url", "rel_id").collect()
         }
 
-    for mode in ("index", "index-sharded", "catalyst"):
+    for mode in ("index", "catalyst"):
         sp = run_spatial_pipeline(
-            spark, pages, locations, kept, max_level=11, mode=mode,
-            index_shards=2 if mode == "index-sharded" else None,
+            spark, pages, locations, kept, max_level=11, mode=mode
         )
         assert urls(sp["pip"], sp["points"]) == expect, mode
-    cogroup = pip_join(
-        sp["points"].select("point_id", "lon", "lat"),
-        sp["polygon_cells"],
-        sp["polygon_geometry"],
-        refine="cogroup",
-    )
-    assert urls(cogroup, sp["points"]) == expect
 
     src, sink = str(tmp_path / "src"), str(tmp_path / "sink")
     pages.repartition(3).write.parquet(src)

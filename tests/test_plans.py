@@ -91,31 +91,6 @@ def test_simplify_plan_is_single_python_pass(spark):
         assert forbidden not in plan, forbidden
 
 
-def test_sharded_pip_plan_no_page_shuffle(spark, world):
-    """index-sharded mode: the page side is a union of
-    filter → project → MapInPandas branches — still no Exchange/Join/
-    Generate anywhere on the 10^12-row side."""
-    from osm_spark.data.pages import PagesSpec, pages_df
-    from osm_spark.plans.spatial_pipeline import run_spatial_pipeline
-    from explain_audit import formatted_plan
-
-    sp = run_spatial_pipeline(
-        spark,
-        pages_df(spark, PagesSpec(n_pages=100, n_countries=1)),
-        world["locations"],
-        world["kept"],
-        max_level=11,
-        mode="index-sharded",
-        index_shards=3,
-    )
-    plan = formatted_plan(sp["pip"])
-    n_passes = plan.count(") MapInPandas")  # one per physical node
-    assert n_passes >= 1
-    assert ("Union" in plan) == (n_passes > 1)
-    for forbidden in ("Exchange", "Join", "Generate"):
-        assert forbidden not in plan, forbidden
-
-
 def test_pip_index_plan_is_single_python_pass(spark, world):
     """The fused PIP path's whole plan is: scan → project → ONE
     MapInPandas — no join, no exchange on the page side."""

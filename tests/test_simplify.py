@@ -168,11 +168,11 @@ def test_pipeline_zero_tol_assignments_identical(spark, world, pages):
     a = {(r["point_id"], r["rel_id"]) for r in base["pip"].collect()}
     b = {(r["point_id"], r["rel_id"]) for r in simp["pip"].collect()}
     assert a == b and len(a) > 0
-    # Composition: simplification + sharded index together still
+    # Composition: simplification + the catalyst join together still
     # reproduce the plain index path bit-for-bit at tol→0.
     both = run_spatial_pipeline(
         spark, pages, world["locations"], world["kept"],
-        mode="index-sharded", index_shards=2, simplify_tol=1e-9,
+        mode="catalyst", simplify_tol=1e-9,
     )
     c = {(r["point_id"], r["rel_id"]) for r in both["pip"].collect()}
     assert c == a

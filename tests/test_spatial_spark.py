@@ -80,60 +80,55 @@ def test_pip_join_exact(spatial):
     assert got == _expected_pairs(pts)
 
 
-def test_pip_join_salted_identical(spark, world, spatial, pages):
-    from osm_spark.spatial.pip_join import pip_join
-
-    base = {(r.point_id, r.rel_id) for r in spatial["pip"].collect()}
-    salted = pip_join(
-        spatial["points"].select("point_id", "lon", "lat"),
-        spatial["polygon_cells"],
-        spatial["polygon_geometry"],
-        salt=4,
-    ).select("point_id", "rel_id").distinct()
-    assert {(r.point_id, r.rel_id) for r in salted.collect()} == base
-
-
 def test_pip_join_shuffle_path_identical(spark, world, spatial, pages):
-    """broadcast_cells=False exercises the shuffle-join path (the mode
-    where salting actually matters at scale) — identical output."""
+    """The catalyst join (cell equi-join + sharded cogroup refinement)
+    produces the fused broadcast-index row set exactly."""
     from osm_spark.spatial.pip_join import pip_join
 
     base = {(r.point_id, r.rel_id) for r in spatial["pip"].collect()}
-    shuffled = pip_join(
+    got = pip_join(
         spatial["points"].select("point_id", "lon", "lat"),
         spatial["polygon_cells"],
         spatial["polygon_geometry"],
-        salt=4,
-        broadcast_cells=False,
-    ).select("point_id", "rel_id").distinct()
-    assert {(r.point_id, r.rel_id) for r in shuffled.collect()} == base
+    ).select("point_id", "rel_id")
+    rows = [(r.point_id, r.rel_id) for r in got.collect()]
+    assert len(rows) == len(set(rows))
+    assert set(rows) == base
 
 
 def test_pip_refine_modes_identical(spark, world, spatial, pages):
-    """All four PIP execution paths produce the same row set: fused
-    broadcast-index (the spatial-pipeline default), catalyst join +
-    broadcast-mapInPandas refine, plain cogroup refine, and sharded
-    cogroup refine (refine_salt replicating geometry per shard)."""
+    """Every PIP execution path produces the same row set: the fused
+    broadcast index (the spatial-pipeline default) called directly and
+    through mode="index", and the catalyst cell join with its cogroup
+    refinement called directly and through mode="catalyst"."""
+    from osm_spark.plans.spatial_pipeline import run_spatial_pipeline
+    from osm_spark.spatial.pip_index import build_pip_index, pip_join_index
     from osm_spark.spatial.pip_join import pip_join
 
     base = {(r.point_id, r.rel_id) for r in spatial["pip"].collect()}
     pts = spatial["points"].select("point_id", "lon", "lat")
-    for kwargs in (
-        {"refine": "broadcast"},
-        {"refine": "cogroup"},
-        {"refine": "cogroup", "refine_salt": 4},
-    ):
-        got = (
-            pip_join(pts, spatial["polygon_cells"], spatial["polygon_geometry"], **kwargs)
-            .select("point_id", "rel_id")
-            .distinct()
-        )
-        assert {(r.point_id, r.rel_id) for r in got.collect()} == base, kwargs
+    bc = spark.sparkContext.broadcast(
+        build_pip_index(spatial["polygon_cells"], spatial["polygon_geometry"])
+    )
+    paths = {
+        "index": pip_join_index(pts, bc),
+        "catalyst": pip_join(
+            pts, spatial["polygon_cells"], spatial["polygon_geometry"]
+        ),
+    }
+    for mode in ("index", "catalyst"):
+        paths[f"pipeline-{mode}"] = run_spatial_pipeline(
+            spark, pages, world["locations"], world["kept"], max_level=11,
+            mode=mode,
+        )["pip"]
+    for name, df in paths.items():
+        got = {(r.point_id, r.rel_id) for r in df.select("point_id", "rel_id").collect()}
+        assert got == base, name
 
 
 def test_pip_refine_parallelism_exceeds_polygon_count(spark, world, spatial):
     """The r1 scale flaw: refinement parallelism was capped at the
-    polygon count. The broadcast refine must run as many tasks as the
+    polygon count. The fused index join must run as many tasks as the
     candidate side has partitions, regardless of polygon count."""
     from osm_spark.spatial.pip_index import build_pip_index, pip_join_index
 
@@ -166,29 +161,102 @@ def test_auto_mode_selects_and_matches(spark, world, pages, spatial):
     assert {(r.point_id, r.rel_id) for r in sp_cat["pip"].collect()} == base
 
 
-def test_sharded_index_identical(spark, world, pages, spatial):
-    """mode="index-sharded" (lon-banded sub-budget indexes, SCALE.md
-    mitigation #3) matches the unsharded index row set exactly — both
-    with a forced shard count and with auto-sizing from a budget small
-    enough to force multiple bands."""
+def _broadcast_outputs(df) -> list[list[str]]:
+    """Output columns of every BroadcastExchange in ``df``'s executed
+    plan (AQE final plan, through query stages; cached relations are
+    leaves, so their own lineage is not walked)."""
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            stack.append(node.plan())
+            continue
+        if name == "BroadcastExchange":
+            attrs = node.output()
+            out.append([attrs.apply(i).name() for i in range(attrs.size())])
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_over_budget_broadcasts_nothing_polygon_sized(
+    spark, world, pages, spatial, monkeypatch, caplog
+):
+    """Above the broadcast budget, auto mode neither builds a PipIndex
+    nor broadcasts the polygon cells: with Spark's own broadcast
+    threshold off, the only broadcast left in the executed plan is the
+    anchor set, and the rows equal the index path's."""
+    import logging
+
     from osm_spark.plans.spatial_pipeline import run_spatial_pipeline
+    from osm_spark.spatial import pip_index
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("build_pip_index called above the budget")
 
     base = {(r.point_id, r.rel_id) for r in spatial["pip"].collect()}
-    sp3 = run_spatial_pipeline(
-        spark, pages, world["locations"], world["kept"], max_level=11,
-        mode="index-sharded", index_shards=3,
+    monkeypatch.setattr(pip_index, "build_pip_index", refuse)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        with caplog.at_level(logging.INFO, logger="osm_spark.spatial"):
+            sp = run_spatial_pipeline(
+                spark, pages, world["locations"], world["kept"],
+                max_level=11, mode="auto", index_max_bytes=1,
+            )
+            got = {(r.point_id, r.rel_id) for r in sp["pip"].collect()}
+        broadcasts = _broadcast_outputs(sp["pip"])
+    finally:
+        spark.conf.set(key, old)
+    assert got == base
+    assert broadcasts
+    assert all(cols == ["anchor"] for cols in broadcasts), broadcasts
+    assert any(
+        "PIP catalyst" in r.getMessage() and r.levelno == logging.INFO
+        for r in caplog.records
     )
-    assert {(r.point_id, r.rel_id) for r in sp3["pip"].collect()} == base
-    # Auto shard count: ~1/4 of the estimated index per band.
-    from osm_spark.spatial.pip_index import estimate_index_bytes
 
-    n_cells = spatial["polygon_cells"].count()
-    est = estimate_index_bytes(n_cells, 1, 1)
-    sp_auto = run_spatial_pipeline(
-        spark, pages, world["locations"], world["kept"], max_level=11,
-        mode="index-sharded", index_max_bytes=max(1, est // 4),
+
+def test_empty_polygon_side_every_mode(spark, world, pages):
+    """Zero locations: both PIP modes return empty pip and tiles."""
+    from osm_spark.plans.spatial_pipeline import run_spatial_pipeline
+
+    locations = world["locations"].limit(0)
+    for mode in ("index", "catalyst"):
+        sp = run_spatial_pipeline(
+            spark, pages, locations, world["kept"], max_level=11, mode=mode
+        )
+        assert sp["pip"].count() == 0, mode
+        assert sp["tiles"].count() == 0, mode
+
+
+def test_catalyst_warns_without_skew_join(spark, world, pages, caplog):
+    """AQE's skew split is catalyst's only hot-cell guard: running it
+    with skew join off logs a WARNING."""
+    import logging
+
+    from osm_spark.plans.spatial_pipeline import run_spatial_pipeline
+
+    key = "spark.sql.adaptive.skewJoin.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        with caplog.at_level(logging.INFO, logger="osm_spark.spatial"):
+            run_spatial_pipeline(
+                spark, pages, world["locations"].limit(0), world["kept"],
+                max_level=11, mode="catalyst",
+            )
+    finally:
+        spark.conf.set(key, old)
+    assert any(
+        "PIP catalyst" in r.getMessage() and r.levelno == logging.WARNING
+        for r in caplog.records
     )
-    assert {(r.point_id, r.rel_id) for r in sp_auto["pip"].collect()} == base
 
 
 def test_build_index_size_guard(spark, world, spatial, recwarn):
@@ -658,104 +726,6 @@ def test_mvt_boundary_tiles(spark, world, spatial):
     assert rows == rows2
 
 
-def test_plan_shard_boxes_lon_degenerate():
-    """VERDICT r3 missing #3: every polygon stacked at ONE longitude —
-    lon banding alone cannot subdivide the index, so the 2-D planner
-    must sub-split the over-budget band(s) by LATITUDE, each resulting
-    shard estimating under the budget, the boxes tiling the plane with
-    no zero-width waste bands."""
-    from osm_spark.spatial.pip_index import (
-        estimate_index_bytes, plan_shard_boxes,
-    )
-
-    # 16 polygons, identical lon extent [10, 11], stacked in latitude.
-    ext = [
-        ((100 + i, 0), 10.0, 11.0, float(i), float(i) + 0.9, 1000)
-        for i in range(16)
-    ]
-    cells_of = {(100 + i) * (1 << 20): 500 for i in range(16)}
-    total = estimate_index_bytes(500 * 16, 1000 * 16, 16)
-    max_bytes = total // 8
-    shards = plan_shard_boxes(ext, cells_of, max_bytes, n_shards=8)
-    assert len(shards) >= 8
-    for lo, hi, blo, bhi, members in shards:
-        assert lo < hi and blo < bhi, "zero-width shard box"
-        assert members
-        est = estimate_index_bytes(
-            sum(cells_of[m[0][0] * (1 << 20) + m[0][1]] for m in members),
-            sum(m[5] for m in members),
-            len(members),
-        )
-        # Per-shard estimate lands under (or within one polygon of)
-        # the budget — quantile splits cannot cut a single polygon.
-        assert est <= max_bytes + estimate_index_bytes(500, 1000, 1)
-    # The boxes tile the plane: any probe point falls in EXACTLY one.
-    for plon, plat in [(-170.0, -80.0), (10.5, 3.3), (10.5, 15.1), (179.9, 0.0)]:
-        owners = [
-            s for s in shards
-            if s[0] <= plon < s[1] and s[2] <= plat < s[3]
-        ]
-        assert len(owners) == 1
-    # Membership is complete: a polygon belongs to every box its
-    # extent touches, so the box owning any interior point has it.
-    for key, lmin, lmax, bmin, bmax, _w in ext:
-        mid = ((lmin + lmax) / 2, (bmin + bmax) / 2)
-        owner = next(
-            s for s in shards
-            if s[0] <= mid[0] < s[1] and s[2] <= mid[1] < s[3]
-        )
-        assert key in {m[0] for m in owner[4]}
-
-
-def test_sharded_index_lat_subsplit_identical(spark):
-    """End-to-end lon-degenerate world through pip_join_index_sharded:
-    the lat sub-split path returns exactly the unsharded row set."""
-    from osm_spark.spatial.covering import build_polygon_cells, polygon_geometry
-    from osm_spark.spatial.pip_index import (
-        build_pip_index, estimate_index_bytes, pip_join_index,
-        pip_join_index_sharded,
-    )
-
-    # 8 squares, one longitude column, stacked in latitude.
-    locations = spark.createDataFrame(
-        [
-            (
-                100 + i,
-                [[[
-                    [10.0, float(i)], [11.0, float(i)],
-                    [11.0, i + 0.9], [10.0, i + 0.9], [10.0, float(i)],
-                ]]],
-            )
-            for i in range(8)
-        ],
-        "rel_id long, shape array<array<array<array<double>>>>",
-    )
-    pcells = build_polygon_cells(locations, 4, 9).persist()
-    pgeom = polygon_geometry(locations)
-    pts = spark.range(3000).select(
-        F.col("id").alias("point_id"),
-        (9.4 + (F.col("id") % 180) * 0.01).alias("lon"),
-        (-0.6 + (F.col("id") % 430) * 0.02).alias("lat"),
-    )
-    bc = spark.sparkContext.broadcast(build_pip_index(pcells, pgeom))
-    base = {
-        (r.point_id, r.rel_id)
-        for r in pip_join_index(pts, bc).collect()
-    }
-    assert base, "degenerate world produced no PIP hits"
-    n_cells = pcells.count()
-    est = estimate_index_bytes(n_cells, 8 * 5, 8)
-    got = {
-        (r.point_id, r.rel_id)
-        for r in pip_join_index_sharded(
-            spark, pts, pcells, pgeom, max_bytes=max(1, est // 6)
-        ).collect()
-    }
-    assert got == base
-    pcells.unpersist()
-    bc.destroy()
-
-
 def test_knn_geodesic_metric(spark):
     """VERDICT r3 missing #5: planar ranking is distorted across
     latitudes. Probe at (0°E, 60°N); polygon A's nearest edge is 1.0°
@@ -803,29 +773,3 @@ def test_knn_geodesic_metric(spark):
     assert orders[("equirectangular", "broadcast")] == [1, 2]
     assert orders[("equirectangular", "cogroup")] == [1, 2]
     pcells.unpersist()
-
-
-def test_choose_salt_and_auto(spark, world, spatial, pages):
-    """choose_salt: the deliberately hot city cell (30% of pages) drives
-    the estimate; a tight per-task target yields salt > 1, a loose one
-    yields 1, and pip_join(salt="auto") stays output-identical."""
-    from osm_spark.spatial.pip_join import choose_salt, pip_join
-
-    pts = spatial["points"].select("point_id", "lon", "lat")
-    n_pts = pts.count()
-    tight = choose_salt(
-        spatial["points"], spatial["polygon_cells"],
-        target_rows_per_task=max(1, n_pts // 20), sample_mod=1,
-    )
-    assert tight > 1
-    loose = choose_salt(
-        spatial["points"], spatial["polygon_cells"],
-        target_rows_per_task=10 * n_pts, sample_mod=1,
-    )
-    assert loose == 1
-    base = {(r.point_id, r.rel_id) for r in spatial["pip"].collect()}
-    auto = pip_join(
-        pts, spatial["polygon_cells"], spatial["polygon_geometry"],
-        salt="auto", broadcast_cells=False,
-    ).select("point_id", "rel_id").distinct()
-    assert {(r.point_id, r.rel_id) for r in auto.collect()} == base

@@ -1,8 +1,8 @@
 """Engineered-skew demo for the SEGMENT-CROSSING join (VERDICT r4 next
 #8): the crossings/triangles/hausdorff candidate joins inherit the
 covering-grid skew story ("AQE splits hot cells" — SCALE.md) but that
-claim was never MEASURED under adversarial co-location. This does for
-`crossing_join` what tools/skew_demo.py does for the PIP join.
+claim was never MEASURED under adversarial co-location. This measures
+it for `crossing_join`.
 
 Corpus: ``n_traj`` synthetic trajectories, ``pts_per_traj`` steps each.
 A ``hot_frac`` fraction of trajectories is co-located inside ONE tiny
@@ -39,8 +39,8 @@ def stage_task_stats(spark):
     """(max_task_ms, median_task_ms, stage_id, n_tasks) of the
     shuffle-consuming stage with the LONGEST max task. Expansion skew
     burns CPU in the join stage while its shuffle READ stays small, so
-    the largest-read heuristic (tools/skew_demo.py) would grab the
-    distinct stage instead; max-task picks the straggler's stage."""
+    a largest-read heuristic would grab the distinct stage instead;
+    max-task picks the straggler's stage."""
     base = spark.sparkContext.uiWebUrl
     app = spark.sparkContext.applicationId
     with urllib.request.urlopen(
@@ -81,8 +81,8 @@ def run_leg(
         extra_conf={
             "spark.ui.enabled": "true",
             "spark.ui.port": "4056",
-            # same apples-to-apples controls as tools/skew_demo.py:
-            # fixed reduce-task count so max/median is comparable
+            # apples-to-apples controls: fixed reduce-task count so
+            # max/median is comparable
             "spark.sql.autoBroadcastJoinThreshold": "-1",
             "spark.sql.adaptive.coalescePartitions.enabled": "false",
         },
