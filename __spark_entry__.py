@@ -6650,12 +6650,7 @@ def _q_pip_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     pip_increment(spark, src, f"{root}/assign", index_bc)
 
     out = ManifestTable(spark, f"{root}/assign")
-    return (
-        out.read()
-        .where(F.col("url") != "")
-        .select("url", "rel_id")
-        .localCheckpoint(eager=True)
-    )
+    return out.read().select("url", "rel_id").localCheckpoint(eager=True)
 
 
 _def(

@@ -11,15 +11,14 @@ module is the spatial counterpart of text/dedup.dedup_increment
         FILE-diff first, so only the appended files are ever read;
     assignments = geoparse → broadcast-index PIP (the X3 zero-shuffle
         path) over just those rows;
-    commit = ONE ManifestTable append of (assignments + a marker row
-        recording the applied source version) — atomic via the VERSION
-        swap, so the marker and its rows commit together or not at
-        all, and a crash-retry re-run is a no-op (the marker says the
-        source version is already applied).
+    commit = ONE ManifestTable append of the assignments with snapshot
+        summary property applied_source_version = current — atomic via
+        the VERSION swap, so the version and its rows commit together
+        or not at all, and a crash-retry re-run is a no-op.
 
-Markers: url = "" (page urls are never empty), rel_id = applied
-source version; the latest applied version is max(rel_id) over marker
-rows (markers accumulate one per increment — metadata-scale).
+The applied version and the total row count are read from the snapshot
+JSON, so no Spark job scans the table's history; the table holds only
+(url, rel_id) rows.
 """
 
 from __future__ import annotations
@@ -27,20 +26,22 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-_MARKER_URL = ""
+_APPLIED = "applied_source_version"
 
 
 def applied_source_version(out) -> int | None:
-    """Last pages-table version applied to the assignment table."""
+    """Last pages-table version applied to the assignment table ``out``
+    (None before its first commit). A table whose summary lacks it (the
+    older marker-row format) raises: re-applying would duplicate rows."""
     if not out.exists():
         return None
-    row = (
-        out.read()
-        .where(F.col("url") == _MARKER_URL)
-        .agg(F.max("rel_id").alias("v"))
-        .first()
-    )
-    return None if row is None or row["v"] is None else int(row["v"])
+    applied = out.snapshot()["summary"].get(_APPLIED)
+    if applied is None:
+        raise ValueError(
+            f"assignment table {out.path} records no {_APPLIED} in its "
+            "snapshot summary; rebuild the assignment table"
+        )
+    return applied
 
 
 def pip_increment(
@@ -53,8 +54,8 @@ def pip_increment(
     ``assign_path`` up to date with the append-only ``pages_table``
     (a ManifestTable of the input_hint page schema). Returns
     {"applied_from", "applied_to", "total_rows"} (total assignment
-    rows AFTER the commit — one cheap post-commit count); a no-op
-    re-run leaves the table untouched (applied_from == applied_to).
+    rows after the call, from the snapshot summary); a no-op re-run
+    leaves the table untouched (applied_from == applied_to).
     """
     from osm_spark.sources.manifest_table import ManifestTable
     from osm_spark.spatial.geoparse import geoparse_pages
@@ -69,7 +70,7 @@ def pip_increment(
         return {
             "applied_from": applied,
             "applied_to": applied,
-            "total_rows": None,
+            "total_rows": out.snapshot()["summary"]["total_rows"],
         }
 
     if applied is None:
@@ -94,16 +95,13 @@ def pip_increment(
     assigns = pip_join_index(
         pts.select("point_id", "lon", "lat", "url"), index_bc, keep=("url",)
     ).select("url", F.col("rel_id").cast("long"))
-    marker = spark.createDataFrame(
-        [(_MARKER_URL, cur)], "url string, rel_id long"
-    )
     out.write(
-        assigns.unionByName(marker),
+        assigns,
         mode="append" if out.exists() else "overwrite",
+        props={_APPLIED: cur},
     )
-    n = (
-        out.read()
-        .where(F.col("url") != _MARKER_URL)
-        .count()
-    )
-    return {"applied_from": applied, "applied_to": cur, "total_rows": n}
+    return {
+        "applied_from": applied,
+        "applied_to": cur,
+        "total_rows": out.snapshot()["summary"]["total_rows"],
+    }

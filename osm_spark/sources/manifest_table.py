@@ -41,6 +41,11 @@ Guarantees (each pinned by a test):
 - **Explicit file lists**: readers never glob the directory — orphaned
   files from failed commits are invisible until ``vacuum()`` removes
   them.
+- **Summary properties**: ``write(props=...)`` merges caller properties
+  into the snapshot ``summary`` beside its row/file totals (Iceberg's
+  snapshot summary), committed by the same VERSION swap as the rows —
+  e.g. the source version an incremental job applied, read back with
+  no data scan. ``append``/``merge``/``compact`` carry them forward.
 
 Scale notes: snapshots are driver-side JSON of O(files) entries — the
 small side (a 10^12-row table at 512 MB/file is ~10^5 entries, a few MB
@@ -215,6 +220,7 @@ class ManifestTable:
         df: DataFrame,
         mode: str = "overwrite",
         stats_cols: list[str] | None = None,
+        props: dict | None = None,
     ) -> None:
         """Commit ``df`` as a new snapshot (``overwrite`` or ``append``).
 
@@ -230,10 +236,26 @@ class ManifestTable:
         the data (e.g. ``df.repartitionByRange(n, col)`` or the Morton
         sort of sources/clustered.py) — unclustered files all span the
         full range and nothing prunes.
+
+        ``props``: JSON-serialisable summary properties, merged over
+        those an append inherits (the row/file totals always win).
         """
         if mode not in ("overwrite", "append"):
             raise ValueError(f"mode must be overwrite|append, got {mode!r}")
         base_version = self.current_version()
+        entries = self._write_files(df, stats_cols)
+        if mode == "append" and base_version is not None:
+            parent = self.snapshot(base_version)
+            entries = parent["files"] + entries
+            schema_json = parent["schema"]
+            props = {**parent["summary"], **(props or {})}
+        else:
+            schema_json = json.loads(df.schema.json())
+        self._commit_snapshot(entries, schema_json, mode, base_version, props)
+
+    def _write_files(self, df: DataFrame, stats_cols: list[str] | None) -> list[dict]:
+        """Stages (1)-(2) of a commit: ``df`` into a fresh commit dir,
+        then the lineage entries of exactly the files written."""
         commit_dir = os.path.join(self.path, "data", f"c{uuid.uuid4().hex}")
         df.write.parquet(commit_dir)
         new_files = sorted(
@@ -242,16 +264,8 @@ class ManifestTable:
             if f.endswith(".parquet")
         )
         if stats_cols:
-            entries = _file_lineage(self.spark, new_files, stats_cols)
-        else:
-            entries = _file_lineage(self.spark, new_files)
-        if mode == "append" and base_version is not None:
-            parent = self.snapshot(base_version)
-            entries = parent["files"] + entries
-            schema_json = parent["schema"]
-        else:
-            schema_json = json.loads(df.schema.json())
-        self._commit_snapshot(entries, schema_json, mode, base_version)
+            return _file_lineage(self.spark, new_files, stats_cols)
+        return _file_lineage(self.spark, new_files)
 
     def _commit_snapshot(
         self,
@@ -259,6 +273,7 @@ class ManifestTable:
         schema_json: dict,
         operation: str,
         base_version: int | None,
+        props: dict | None,
     ) -> int:
         """Shared commit tail: snapshot json assembly, O_EXCL claim,
         VERSION swap — the atomicity/optimistic-concurrency contract
@@ -272,6 +287,7 @@ class ManifestTable:
             "schema": schema_json,
             "files": entries,
             "summary": {
+                **(props or {}),
                 "total_rows": sum(e["rows"] for e in entries),
                 "total_files": len(entries),
                 # xor-of-per-file-hashes: order-insensitive whole-table
@@ -279,6 +295,7 @@ class ManifestTable:
                 "content_hash": _xor([e["content_hash"] for e in entries]),
             },
         }
+        payload = json.dumps(snap)  # unencodable props fail before the claim
         os.makedirs(os.path.join(self.path, "snapshots"), exist_ok=True)
         # Optimistic concurrency: CLAIMING the snapshot path is the atomic
         # step. O_EXCL create means two writers racing from the same base
@@ -299,7 +316,7 @@ class ManifestTable:
                 f"concurrent writer (base was {base_version})"
             ) from None
         with fh:
-            json.dump(snap, fh)
+            fh.write(payload)
         # Belt-and-braces re-check (covers a concurrent writer that won a
         # DIFFERENT version number, e.g. overwrite racing append). Release
         # the claimed manifest so the version number stays claimable.
@@ -382,31 +399,18 @@ class ManifestTable:
                 for e in parent["files"]
                 if os.path.basename(e["path"]) not in hit_names
             ]
-            aff_paths = [e["path"] for e in affected]
-            if aff_paths:
-                old_rows = self.spark.read.schema(schema).parquet(*aff_paths)
-                kept_rows = old_rows.join(F.broadcast(src_keys), on, "left_anti")
-            else:
-                kept_rows = self.spark.createDataFrame([], schema)
+            old_rows = self._scan(schema, [e["path"] for e in affected])
+            kept_rows = old_rows.join(F.broadcast(src_keys), on, "left_anti")
             if when_matched == "update":
                 new_data = kept_rows.unionByName(source)
             else:
                 new_data = kept_rows
-            commit_dir = os.path.join(
-                self.path, "data", f"c{uuid.uuid4().hex}"
-            )
-            new_data.write.parquet(commit_dir)
-            new_files = sorted(
-                os.path.join(commit_dir, f)
-                for f in os.listdir(commit_dir)
-                if f.endswith(".parquet")
-            )
-            new_entries = _file_lineage(self.spark, new_files, stats_cols)
+            new_entries = self._write_files(new_data, stats_cols)
         finally:
             src_keys.unpersist(blocking=False)
         entries = carried + new_entries
         version = self._commit_snapshot(
-            entries, parent["schema"], "merge", base_version
+            entries, parent["schema"], "merge", base_version, parent["summary"]
         )
         return {
             "version": version,
@@ -431,6 +435,10 @@ class ManifestTable:
         row appears as its old row deleted and its new row inserted,
         the standard COW changelog shape.
 
+        An append-only diff (no file removed) skips the net pass: the
+        added files tagged ``insert``, duplicates included — what the
+        anti-joins against an empty side return, with no join or shuffle.
+
         Cancellation is SET-based (anti-join on the full row): if an
         identical row exists with different multiplicities on the two
         sides, the surplus copies are not reported. Merge-keyed tables
@@ -444,15 +452,11 @@ class ManifestTable:
         t_paths = {e["path"] for e in t_snap["files"]}
         added = sorted(t_paths - f_paths)
         removed = sorted(f_paths - t_paths)
-
-        def _read(paths: list[str]) -> DataFrame:
-            if not paths:
-                return self.spark.createDataFrame([], schema)
-            return self.spark.read.schema(schema).parquet(*paths)
-
+        ins = self._scan(schema, added)
+        if not removed:
+            return ins.withColumn("_change_type", F.lit("insert"))
         cols = [f.name for f in schema.fields]
-        ins = _read(added)
-        del_ = _read(removed)
+        del_ = self._scan(schema, removed)
         net_ins = ins.join(del_, cols, "left_anti").withColumn(
             "_change_type", F.lit("insert")
         )
@@ -468,7 +472,10 @@ class ManifestTable:
         directory glob — uncommitted/orphaned files are invisible)."""
         snap = self.snapshot(version)
         schema = StructType.fromJson(snap["schema"])
-        files = [e["path"] for e in snap["files"]]
+        return self._scan(schema, [e["path"] for e in snap["files"]])
+
+    def _scan(self, schema: StructType, files: list[str]) -> DataFrame:
+        """DataFrame over exactly ``files`` (empty for none)."""
         if not files:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(*files)
@@ -511,11 +518,7 @@ class ManifestTable:
         snap = self.snapshot(version)
         schema = StructType.fromJson(snap["schema"])
         kept, _total = self.plan_files(bounds, version)
-        files = [e["path"] for e in kept]
-        if not files:
-            df = self.spark.createDataFrame([], schema)
-        else:
-            df = self.spark.read.schema(schema).parquet(*files)
+        df = self._scan(schema, [e["path"] for e in kept])
         for c, (lo, hi) in bounds.items():
             if lo is not None:
                 df = df.where(F.col(c) >= F.lit(lo))
@@ -560,19 +563,10 @@ class ManifestTable:
         schema = StructType.fromJson(parent["schema"])
         total = sum(e["rows"] for e in small)
         n_out = max(1, -(-total // target_file_rows))
-        commit_dir = os.path.join(self.path, "data", f"c{uuid.uuid4().hex}")
-        (
-            self.spark.read.schema(schema)
-            .parquet(*[e["path"] for e in small])
-            .repartition(n_out)
-            .write.parquet(commit_dir)
+        new_entries = self._write_files(
+            self._scan(schema, [e["path"] for e in small]).repartition(n_out),
+            stats_cols,
         )
-        new_files = sorted(
-            os.path.join(commit_dir, f)
-            for f in os.listdir(commit_dir)
-            if f.endswith(".parquet")
-        )
-        new_entries = _file_lineage(self.spark, new_files, stats_cols)
         # Partition-INVARIANT equality check: per-file sums (recovered
         # as content_hash ^ rows) add across any file grouping, unlike
         # the summary's xor-of-files fingerprint which identifies a
@@ -586,7 +580,11 @@ class ManifestTable:
                 "orphan files will be removed by vacuum()"
             )
         version = self._commit_snapshot(
-            large + new_entries, parent["schema"], "compact", base_version
+            large + new_entries,
+            parent["schema"],
+            "compact",
+            base_version,
+            parent["summary"],
         )
         return {
             "version": version,

@@ -421,9 +421,63 @@ def test_changes_net_rows_suppress_carried(spark, tmp_path):
 def test_changes_append_only_is_pure_inserts(spark, tmp_path):
     t = ManifestTable(spark, str(tmp_path / "t"))
     t.write(_kv(spark, [(1, "a")]))
-    t.write(_kv(spark, [(2, "b")]), mode="append")
-    ch = [(r["_change_type"], r["k"]) for r in t.changes(1, 2).collect()]
-    assert ch == [("insert", 2)]
+    t.write(_kv(spark, [(2, "b"), (2, "b"), (3, "c")]), mode="append")
+    ch = t.changes(1, 2)
+    got = sorted((r["_change_type"], r["k"], r["v"]) for r in ch.collect())
+    assert got == [("insert", 2, "b"), ("insert", 2, "b"), ("insert", 3, "c")]
+    # the same rows, duplicates included, as the net pass's anti-join
+    # against an empty delete side
+    schema = t.read().schema
+    added = sorted({e["path"] for e in t.lineage(2)} - {e["path"] for e in t.lineage(1)})
+    net = spark.read.schema(schema).parquet(*added).join(
+        spark.createDataFrame([], schema), ["k", "v"], "left_anti"
+    )
+    assert got == sorted(("insert", r["k"], r["v"]) for r in net.collect())
+    # ... read with no join and no shuffle
+    plan = ch._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "Exchange" not in plan, plan
+    # a delete probe on the literal change type reads nothing
+    assert ch.where(F.col("_change_type") == "delete").count() == 0
+
+
+def test_changes_compact_then_append_cancels(spark, tmp_path):
+    t = ManifestTable(spark, str(tmp_path / "t"))
+    t.write(_kv(spark, [(i, f"v{i}") for i in range(8)]).repartition(4))
+    assert t.compact(small_file_rows=1000, target_file_rows=1000)["compacted"] >= 2
+    t.write(_kv(spark, [(9, "i")]), mode="append")
+    # the compaction's rewritten rows cancel against the files it removed
+    assert t.changes(1, 2).count() == 0
+    ch = {(r["_change_type"], r["k"], r["v"]) for r in t.changes(1, 3).collect()}
+    assert ch == {("insert", 9, "i")}
+
+
+def test_summary_props_commit_and_carry_forward(spark, tmp_path):
+    t = ManifestTable(spark, str(tmp_path / "t"))
+
+    def prop():
+        return t.snapshot()["summary"].get("applied")
+
+    t.write(_kv(spark, [(1, "a"), (2, "b")]).repartition(2), props={"applied": 1})
+    assert prop() == 1 and t.snapshot()["summary"]["total_rows"] == 2
+    t.write(_kv(spark, [(3, "c")]), mode="append")
+    assert prop() == 1
+    t.write(_kv(spark, [(4, "d")]), mode="append", props={"applied": 2})
+    assert prop() == 2
+    assert t.compact(small_file_rows=1000, target_file_rows=1000)["compacted"] >= 2
+    assert prop() == 2
+    t.merge(_kv(spark, [(1, "A")]), on=["k"])
+    assert prop() == 2 and t.snapshot()["operation"] == "merge"
+    # the table totals always win over a property of the same name
+    t.write(_kv(spark, [(5, "e")]), mode="append", props={"total_rows": 0})
+    assert t.snapshot()["summary"]["total_rows"] == t.read().count() == 5
+    # a value json cannot encode fails before the snapshot is claimed:
+    # the table is not wedged
+    v = t.current_version()
+    with pytest.raises(TypeError):
+        t.write(_kv(spark, [(5, "e")]), mode="append", props={"applied": object()})
+    assert t.current_version() == v and t.recover() == "clean"
+    t.write(_kv(spark, [(6, "f")]))
+    assert prop() is None and t.current_version() == v + 1
 
 
 def test_compact_binpacks_and_preserves_content(spark, tmp_path):
