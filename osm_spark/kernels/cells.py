@@ -73,6 +73,13 @@ def cell_xy(cell: int) -> tuple[int, int, int]:
     return x, y, level
 
 
+def cells_xy(cells: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Column and row arrays of int64 cell ids (vectorized ``cell_xy``)."""
+    m = np.asarray(cells, dtype=np.int64) >> 6
+    y = _compact_bits(m >> 1)
+    return _compact_bits(m), y
+
+
 def _compact_bits(v: int) -> int:
     v &= 0x5555555555555555
     v = (v | (v >> 1)) & 0x3333333333333333

@@ -20,8 +20,9 @@ This module also holds the engine's ONE point-in-polygon kernel, used by
 every caller (ring nesting here, the PIP index / catalyst / cogroup /
 streaming refinement, centroid validation, covering, polygon overlap):
 ``orient`` (orientation sign, float64 filter with Shewchuk's error bound
-plus a Python-int recheck), ``locate`` (inside / on / outside per point
-for one ring, vectorized over points) and ``polygon_contains`` (strict:
+plus a Python-int recheck), ``edge_hits`` (the per (point, edge) crossing
+and on-edge rule), ``locate`` (inside / on / outside per point for one
+ring, vectorized over points) and ``polygon_contains`` (strict:
 inside the outer ring, outside every hole, on no ring). It works on the
 integer grid, degrees x 1e7.
 
@@ -180,22 +181,49 @@ def grid_segments(rings) -> list[Segs]:
     return [ring_segments(to_grid(xs), to_grid(ys)) for xs, ys in rings]
 
 
+def edge_hits(e, px, py, errbound=None) -> tuple[np.ndarray, np.ndarray]:
+    """The crossing-number rule for (point, edge) pairs: ``e`` holds
+    the eight ``Segs.edges`` rows, broadcast against the grid points
+    ``px``, ``py`` (a dense points x edges tile, or flat aligned
+    pairs). Returns two bool arrays of the broadcast shape: the +x ray
+    from p crosses the edge (half-open in y, so a vertex is counted
+    once), and p lies on the edge.
+
+    An edge yields neither unless ``miny <= py <= maxy`` and
+    ``maxx >= px``, so a caller may hand in any superset of the edges
+    that can matter. ``errbound`` forwards to ``orient``.
+    """
+    x1, y1, x2, y2, minx, maxx, miny, maxy = e
+    det = orient(x1, y1, x2, y2, px, py, errbound)
+    # A straddling edge runs upward iff its end is above p; the +x ray
+    # crosses it iff p is left of it going up, right of it going down.
+    up = y2 > py
+    crosses = ((y1 > py) != up) & ((det > 0) == up)
+    on = det == 0
+    idx = on.nonzero()
+    if len(idx[0]):
+        hx, hy, lx, hix, ly, hiy = (
+            np.broadcast_to(v, det.shape)[idx] for v in (px, py, minx, maxx, miny, maxy)
+        )
+        on[idx] = (lx <= hx) & (hx <= hix) & (ly <= hy) & (hy <= hiy)
+    return crosses, on
+
+
 def locate(segs: Segs, px: np.ndarray, py: np.ndarray) -> np.ndarray:
     """Exact crossing-number PIP of grid points against one ring:
     int8 per point, 1 = inside, 0 = on the ring, -1 = outside.
 
-    Edges are first SLICED to those that can matter for this point
-    group: a +x ray from p crosses only edges with miny <= py <= maxy
-    and maxx >= px, and an on-edge hit needs the edge bbox to hold p,
-    so edges outside the group's own extent contribute nothing to any
-    of its points. Callers that group points spatially (per covering
-    cell) cut each test to ~the cell's own edges. The remaining dense
-    (points x edges) work is TILED under ``TILE_ELEMS``.
+    Edges are first SLICED to the point group's extent (``edge_hits``:
+    the others contribute nothing to any of its points), then the
+    dense (points x edges) work is TILED under ``TILE_ELEMS``. The
+    PIP index refines its boundary candidates through ``edge_hits`` on
+    flat (point, edge) pairs instead, with per-cell edge slices built
+    ahead of time (``spatial.pip_index``).
     """
     n = len(px)
     if n == 0:
         return np.empty(0, dtype=np.int8)
-    if n == 1:  # most calls: one point per covering cell
+    if n == 1:  # single-point callers: covering centre test, centroids
         x_lo = x_hi = px[0]
         y_lo = y_hi = py[0]
     else:
@@ -204,7 +232,7 @@ def locate(segs: Segs, px: np.ndarray, py: np.ndarray) -> np.ndarray:
     sel = ((e[6] <= y_hi) & (e[7] >= y_lo) & (e[5] >= x_lo)).nonzero()[0]
     if len(sel) == 0:
         return np.full(n, -1, dtype=np.int8)
-    x1, y1, x2, y2, minx, maxx, miny, maxy = e[:, sel]
+    e = e[:, sel]
     # One bound for the group: |p - a| never exceeds the span of the
     # group's and the ring's boxes together.
     bx0, by0, bx1, by1 = segs.bbox
@@ -215,31 +243,17 @@ def locate(segs: Segs, px: np.ndarray, py: np.ndarray) -> np.ndarray:
     n_s = len(sel)
     s_tile = min(n_s, TILE_ELEMS)
     p_tile = max(1, TILE_ELEMS // s_tile)
-    parts = []
+    out = np.empty(n, dtype=np.int8)
     for i in range(0, n, p_tile):
         qx = px[i : i + p_tile, None]
         qy = py[i : i + p_tile, None]
-        crossings, on = 0, []
+        crossings, on = 0, False
         for j in range(0, n_s, s_tile):
-            s = slice(j, j + s_tile)
-            sy1, sy2 = y1[None, s], y2[None, s]
-            det = orient(x1[None, s], sy1, x2[None, s], sy2, qx, qy, errbound)
-            # A straddling edge runs upward iff its end is above p; the
-            # +x ray crosses it iff p is left of it going up, right of
-            # it going down.
-            up = sy2 > qy
-            crossings = crossings + (((sy1 > qy) != up) & ((det > 0) == up)).sum(axis=1)
-            r, c = (det == 0).nonzero()
-            if len(r):
-                c = c + j
-                hx, hy = qx[r, 0], qy[r, 0]
-                hit = (minx[c] <= hx) & (hx <= maxx[c]) & (miny[c] <= hy) & (hy <= maxy[c])
-                on.append(r[hit])
-        part = np.where(crossings & 1, np.int8(1), np.int8(-1))
-        for rows in on:
-            part[rows] = 0
-        parts.append(part)
-    return parts[0] if len(parts) == 1 else np.concatenate(parts)
+            c, o = edge_hits(e[:, None, j : j + s_tile], qx, qy, errbound)
+            crossings = crossings + c.sum(axis=1)
+            on = on | o.any(axis=1)
+        out[i : i + p_tile] = np.where(on, np.int8(0), np.where(crossings & 1, np.int8(1), np.int8(-1)))
+    return out
 
 
 def polygon_contains(rings: list[Segs], px: np.ndarray, py: np.ndarray) -> np.ndarray:

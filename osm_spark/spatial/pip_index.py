@@ -10,10 +10,12 @@ through ONE ``mapInPandas`` pass:
       per covering level: ancestor by shift + np.searchsorted into the
         level's sorted cell array           (candidate gather)
       interior-cell hits -> accepted, no geometry touched
-      boundary-cell hits -> the one exact PIP kernel
-        (kernels.poly.polygon_contains, integer grid, boundary
-        excluded) against the index's geometry, grouped by polygon
-        and covering cell WITHIN the batch
+      boundary-cell hits -> ONE flat gather of (candidate, edge) pairs
+        over each hit cell's precomputed edge slice (``EdgeSlices``),
+        through the exact kernel's per-pair rule
+        (kernels.poly.edge_hits, integer grid, boundary excluded);
+        crossing parity and on-edge hits reduced per (candidate,
+        ring) with bincount
 
     => zero shuffles, zero joins on the page side; parallelism equals
        the input partitioning; skew equals input skew (a hot city cell
@@ -36,19 +38,63 @@ tests and by ``perfbench/pin.py --check``.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from osm_spark.kernels.cells import cell_parent, point_to_cell
+from osm_spark.kernels.cells import cell_parent, cells_xy, point_to_cell
 from osm_spark.kernels.poly import (
+    GRID,
     TILE_ELEMS,
+    edge_hits,
     grid_segments,
     polygon_contains,
     to_grid,
     xy_rings,
 )
+
+
+class EdgeSlices(NamedTuple):
+    """Per covering row, the edges ``kernels.poly.locate`` would keep
+    for a point in that cell: ``miny <= cell.ymax``, ``maxy >=
+    cell.ymin`` and ``maxx >= cell.xmin`` (cell bounds padded by
+    ``_SLICE_PAD`` grid units), split per ring.
+
+    ``edges``: (8, n) ``Segs.edges`` rows of every polygon's rings.
+    ``refs``: edge ids in bands, one band per (polygon, level, cell
+        row, ring), each sorted by ``maxx`` descending, so a cell's
+        slice of a band is a prefix of it.
+    ``unit_ptr``: covering row r owns units ``unit_ptr[r]:unit_ptr[r+1]``
+        (interior rows own none).
+    ``unit_ring``, ``unit_start``, ``unit_len``: per unit, the ring
+        number (0 = outer) and its slice ``refs[start:start + len]``.
+    """
+
+    edges: np.ndarray
+    refs: np.ndarray
+    unit_ptr: np.ndarray
+    unit_ring: np.ndarray
+    unit_start: np.ndarray
+    unit_len: np.ndarray
+
+
+# Grid units added around a cell before slicing its edges: a point that
+# ``point_to_cell`` puts in a cell lies within half a grid unit of it
+# (rint onto the grid), and extra edges change no result.
+_SLICE_PAD = 2.0
+_GRID_LON = 180.0 * GRID
+_GRID_LAT = 90.0 * GRID
+
+
+def _expand(lo: np.ndarray, cnt: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Flatten the ranges ``lo[i] .. lo[i] + cnt[i] - 1``: (owner i,
+    position) per element."""
+    total = int(cnt.sum())
+    owner = np.repeat(np.arange(len(cnt), dtype=np.int64), cnt)
+    pos = np.arange(total, dtype=np.int64) + np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)
+    return owner, pos
 
 
 class PipIndex:
@@ -58,6 +104,7 @@ class PipIndex:
     ``levels``: covering levels present, ascending.
     ``per_level``: level -> (cells_sorted, rel, poly, interior) arrays
         (cells may repeat: adjacent polygons share boundary cells).
+        Concatenated in level order they number the covering rows.
     ``geom``: (rel_id, poly_idx) -> list of rings, each (xs, ys)
         float64 arrays (outer first, then holes).
     """
@@ -66,15 +113,35 @@ class PipIndex:
         self.levels = levels
         self.per_level = per_level
         self.geom = geom
-        # Per-polygon grid-unit edge tables for the exact kernel, built
-        # lazily per process (derived data — excluded from the broadcast
-        # pickle so the shipped index stays geometry-sized).
+        # Derived data for the exact kernel, built lazily per process
+        # and left out of the broadcast pickle so the shipped index
+        # stays geometry-sized: per-polygon grid-unit edge tables
+        # (``contains``) and the per-cell edge slices (``join``).
         self._segs: dict = {}
+        self._slices: EdgeSlices | None = None
+
+    @classmethod
+    def from_cells(cls, cells, rel, poly, interior, geom) -> "PipIndex":
+        """Index over aligned covering rows (cell, rel, poly, interior)
+        and ``geom``: the rows split per level, each sorted by cell."""
+        lvl = cells & 0x3F
+        levels = np.unique(lvl).tolist()
+        per_level = {}
+        for lv in levels:
+            m = (lvl == lv).nonzero()[0]
+            m = m[np.argsort(cells[m], kind="stable")]
+            per_level[lv] = (cells[m], rel[m], poly[m], interior[m])
+        return cls(levels, per_level, geom)
 
     def __getstate__(self):
         d = self.__dict__.copy()
         d["_segs"] = {}
+        del d["_slices"]
         return d
+
+    def __setstate__(self, state):
+        self.__dict__.update(state)
+        self._slices = None
 
     def _ring_segs(self, rel: int, poly: int):
         """Per-ring grid-unit edge tables for the exact kernel (cached)."""
@@ -86,62 +153,184 @@ class PipIndex:
 
     # -- candidate gather (vectorized) ------------------------------------
 
-    def candidates(self, lons: np.ndarray, lats: np.ndarray):
-        """All (point_idx, rel, poly, interior, cell) covering hits.
-
-        Returns five aligned arrays. A point hits at most one covering
-        cell per polygon (quadtree cells of one covering are disjoint),
-        so hits are unique per (point, rel, poly) by construction. The
-        hit cell id lets callers group boundary refinement per cell —
-        the tight grouping that makes ``contains``'s segment slice
-        effective.
-        """
-        if not self.levels:
-            z = np.empty(0, dtype=np.int64)
-            return z, z, z.copy(), np.empty(0, dtype=bool), z.copy()
-        base = point_to_cell(lons, lats, self.levels[-1])
-        out_pt, out_rel, out_poly, out_int, out_cell = [], [], [], [], []
+    def _gather(self, lons: np.ndarray, lats: np.ndarray):
+        """(point_idx, rel, poly, interior, cell, covering row) per
+        covering hit: one ``searchsorted`` pair per level."""
+        z = np.empty(0, dtype=np.int64)
+        out = [[z], [z], [z], [z.astype(bool)], [z], [z]]
+        if self.levels:
+            base = point_to_cell(lons, lats, self.levels[-1])
+        first = 0
         for lv in self.levels:
             cells_sorted, rel, poly, interior = self.per_level[lv]
             q = base if lv == self.levels[-1] else cell_parent(base, lv)
             lo = np.searchsorted(cells_sorted, q, side="left")
             hi = np.searchsorted(cells_sorted, q, side="right")
-            cnt = hi - lo
-            total = int(cnt.sum())
-            if total == 0:
-                continue
-            pt_idx = np.repeat(np.arange(len(q), dtype=np.int64), cnt)
-            # Flat positions lo[i] .. hi[i]-1 for each hit point.
-            starts = np.repeat(lo, cnt)
-            offs = np.arange(total, dtype=np.int64) - np.repeat(
-                np.cumsum(cnt) - cnt, cnt
-            )
-            pos = starts + offs
-            out_pt.append(pt_idx)
-            out_rel.append(rel[pos])
-            out_poly.append(poly[pos])
-            out_int.append(interior[pos])
-            out_cell.append(cells_sorted[pos])
-        if not out_pt:
-            z = np.empty(0, dtype=np.int64)
-            return z, z, z.copy(), np.empty(0, dtype=bool), z.copy()
-        return (
-            np.concatenate(out_pt),
-            np.concatenate(out_rel),
-            np.concatenate(out_poly),
-            np.concatenate(out_int),
-            np.concatenate(out_cell),
-        )
+            pt, pos = _expand(lo, hi - lo)
+            hit = (pt, rel[pos], poly[pos], interior[pos], cells_sorted[pos], pos + first)
+            for acc, v in zip(out, hit):
+                acc.append(v)
+            first += len(cells_sorted)
+        return tuple(np.concatenate(acc) for acc in out)
+
+    def candidates(self, lons: np.ndarray, lats: np.ndarray):
+        """All (point_idx, rel, poly, interior, cell) covering hits.
+
+        Returns five aligned arrays. A point hits at most one covering
+        cell per polygon (quadtree cells of one covering are disjoint),
+        so hits are unique per (point, rel, poly) by construction.
+        ``join`` uses the same gather, plus each hit's covering row,
+        which keys its edge slice.
+        """
+        return self._gather(lons, lats)[:5]
 
     # -- exact geometry ----------------------------------------------------
 
+    def join(self, lons: np.ndarray, lats: np.ndarray):
+        """(point_idx, rel, poly) for every polygon that strictly
+        contains a point: interior-cell hits are accepted as they are,
+        boundary-cell hits are refined all at once by ``_refine``.
+        """
+        pt, rel, poly, keep, _cell, row = self._gather(lons, lats)
+        b = (~keep).nonzero()[0]
+        if len(b):
+            keep[b] = self._refine(row[b], to_grid(lons[pt[b]]), to_grid(lats[pt[b]]))
+        return pt[keep], rel[keep], poly[keep]
+
+    def _refine(self, rows: np.ndarray, px: np.ndarray, py: np.ndarray) -> np.ndarray:
+        """Strict containment of grid points in the polygons of their
+        boundary covering rows, in one flat pass: the (point, edge)
+        pairs of every (candidate, ring) unit go through
+        ``kernels.poly.edge_hits`` in chunks whose gathered edge block
+        stays under ``TILE_ELEMS`` elements; crossing parity and
+        on-edge hits are summed per unit with ``bincount``, carried
+        across chunks. Inside = odd parity on the outer ring, even on
+        every hole, on no ring (``polygon_contains``'s rule, and its
+        rows: the slices only drop edges that cannot matter).
+        Missing geometry owns no units, so its candidates are dropped.
+        """
+        sl = self._edge_slices()
+        ptr = sl.unit_ptr
+        cand, u = _expand(ptr[rows], ptr[rows + 1] - ptr[rows])
+        ulen = sl.unit_len[u]
+        ends = np.cumsum(ulen)
+        starts = ends - ulen
+        ref0 = sl.unit_start[u] - starts  # pair p of unit i reads refs[ref0[i] + p]
+        cross = np.zeros(len(u), dtype=np.int64)
+        on = np.zeros(len(u), dtype=bool)
+        step = max(1, TILE_ELEMS // len(sl.edges))  # pairs per (8, step) edge block
+        total = int(ends[-1]) if len(u) else 0
+        for p0 in range(0, total, step):
+            p1 = min(p0 + step, total)
+            u0 = int(np.searchsorted(ends, p0, side="right"))
+            u1 = int(np.searchsorted(starts, p1, side="left"))
+            pu = np.repeat(
+                np.arange(u0, u1),
+                np.minimum(ends[u0:u1], p1) - np.maximum(starts[u0:u1], p0),
+            )
+            k = cand[pu]
+            c, o = edge_hits(sl.edges[:, sl.refs[ref0[pu] + np.arange(p0, p1)]], px[k], py[k])
+            cross[u0:u1] += np.bincount(pu[c] - u0, minlength=u1 - u0)
+            on[u0:u1] |= np.bincount(pu[o] - u0, minlength=u1 - u0) > 0
+        odd = (cross & 1).astype(bool)
+        outer = sl.unit_ring[u] == 0
+        n = len(rows)
+        inside = np.bincount(cand[odd & outer], minlength=n) > 0
+        out = np.bincount(cand[(odd & ~outer) | on], minlength=n) > 0
+        return inside & ~out
+
+    def _edge_slices(self) -> EdgeSlices:
+        """Build ``EdgeSlices`` once per process: vectorized per
+        polygon (its edge table) and per covering level (band
+        membership, sort, per-cell prefix lengths), never per cell."""
+        if self._slices is not None:
+            return self._slices
+        keys = list(self.geom)
+        gid_of = {k: i for i, k in enumerate(keys)}
+        tables = [
+            (gid, ring, segs.edges)
+            for gid, k in enumerate(keys)
+            for ring, segs in enumerate(grid_segments(self.geom[k]))
+        ]
+        edges = np.concatenate([t[2] for t in tables], axis=1) if tables else np.empty((8, 0))
+        sizes = [t[2].shape[1] for t in tables]
+        e_gid = np.repeat(np.array([t[0] for t in tables], dtype=np.int64), sizes)
+        e_ring = np.repeat(np.array([t[1] for t in tables], dtype=np.int64), sizes)
+        # maxx as an int64 sort key, descending: grid values are exact
+        # integers, and clipping to int32 keeps every >= comparison
+        # against an in-range cell bound.
+        e_desc = (2**31 - 1) - np.clip(edges[5], -(2**31), 2**31 - 1).astype(np.int64)
+
+        refs, unit_row, unit_ring, unit_start, unit_len = [], [], [], [], []
+        n_refs = first = 0
+        for lv in self.levels:
+            cells, rel, poly, interior = self.per_level[lv]
+            offset, first = first, first + len(cells)
+            rows = (~interior).nonzero()[0]
+            if len(rows):
+                pairs, inv = np.unique(
+                    np.stack([rel[rows], poly[rows]], axis=1), axis=0, return_inverse=True
+                )
+                pair_gid = np.array([gid_of.get((int(r), int(p)), -1) for r, p in pairs], dtype=np.int64)
+                gid = pair_gid[inv.reshape(-1)]
+                rows = rows[gid >= 0]
+                gid = gid[gid >= 0]
+            if len(rows) == 0 or len(edges[0]) == 0:
+                continue
+            n = 1 << lv
+            cx, cy = cells_xy(cells[rows])
+            # Bands: (polygon, cell row) pairs that hold a boundary cell.
+            bands = np.unique(gid * n + cy)
+            h = 2 * _GRID_LAT / n
+            r0, r1 = (
+                np.clip(np.floor((v + _GRID_LAT) / h), 0, n - 1).astype(np.int64)
+                for v in (edges[6] - _SLICE_PAD, edges[7] + _SLICE_PAD)
+            )
+            lo = np.searchsorted(bands, e_gid * n + r0, side="left")
+            hi = np.searchsorted(bands, e_gid * n + r1, side="right")
+            edge, band = _expand(lo, hi - lo)
+            order = np.lexsort((e_desc[edge], e_ring[edge], band))
+            edge, band = edge[order], band[order]
+            ring = e_ring[edge]
+            # Units: runs of one (band, ring); their refs are contiguous.
+            new = np.ones(len(edge), dtype=bool)
+            new[1:] = (band[1:] != band[:-1]) | (ring[1:] != ring[:-1])
+            u_first = new.nonzero()[0]
+            u_band = band[u_first]
+            u_key = np.arange(len(u_first), dtype=np.int64) << 32
+            ref_key = np.repeat(u_key, np.diff(np.append(u_first, len(edge)))) | e_desc[edge]
+            # Each boundary row takes every unit of its band, cut to the
+            # prefix with maxx >= the cell's padded west bound (none at
+            # column 0, which also holds points clipped from beyond it).
+            b = np.searchsorted(bands, gid * n + cy)
+            ulo = np.searchsorted(u_band, b, side="left")
+            uhi = np.searchsorted(u_band, b, side="right")
+            row_k, unit = _expand(ulo, uhi - ulo)
+            xmin = (cx * (2 * _GRID_LON / n) - _GRID_LON - _SLICE_PAD)[row_k]
+            xmin[cx[row_k] == 0] = -np.inf
+            q = (2**31 - 1) - np.clip(np.floor(xmin), -(2**31), 2**31 - 1).astype(np.int64)
+            cnt = np.searchsorted(ref_key, u_key[unit] | q, side="right") - u_first[unit]
+            keep = cnt > 0
+            refs.append(edge)
+            unit_row.append(offset + rows[row_k[keep]])
+            unit_ring.append(ring[u_first[unit[keep]]])
+            unit_start.append(n_refs + u_first[unit[keep]])
+            unit_len.append(cnt[keep])
+            n_refs += len(edge)
+        refs, unit_row, unit_ring, unit_start, unit_len = (
+            np.concatenate([np.empty(0, dtype=np.int64), *parts])
+            for parts in (refs, unit_row, unit_ring, unit_start, unit_len)
+        )
+        ptr = np.zeros(first + 1, dtype=np.int64)
+        np.cumsum(np.bincount(unit_row, minlength=first), out=ptr[1:])
+        self._slices = EdgeSlices(edges, refs, ptr, unit_ring, unit_start, unit_len)
+        return self._slices
+
     def contains(self, rel: int, poly: int, lons: np.ndarray, lats: np.ndarray):
-        """Exact PIP, boundary excluded: ``kernels.poly.polygon_contains``
-        on the grid (degrees x 1e7; page degrees round back to
-        lon_u * 10 exactly). The kernel slices edges to the point
-        group's extent and tiles under ``TILE_ELEMS``, so callers that
-        group points per covering cell (pip_join_index) test each group
-        against ~the cell's own edges.
+        """Exact PIP of points against ONE polygon, boundary excluded:
+        ``kernels.poly.polygon_contains`` on the grid (degrees x 1e7;
+        page degrees round back to lon_u * 10 exactly). ``join`` gives
+        the same rows for a batch of points against the whole index.
 
         Missing geometry (inconsistent candidate input) matches the
         historical cogroup drop semantics: no rows, not a task failure.
@@ -289,20 +478,13 @@ def build_pip_index(
             ResourceWarning,
             stacklevel=2,
         )
-    cells = pc["cell"].to_numpy(np.int64)
-    levels = np.sort(np.unique(cells & 0x3F)).tolist()
-    per_level = {}
-    for lv in levels:
-        m = (cells & 0x3F) == lv
-        c = cells[m]
-        order = np.argsort(c, kind="stable")
-        per_level[int(lv)] = (
-            c[order],
-            pc["rel_id"].to_numpy(np.int64)[m][order],
-            pc["poly_idx"].to_numpy(np.int64)[m][order],
-            pc["interior"].to_numpy(bool)[m][order],
-        )
-    return PipIndex([int(lv) for lv in levels], per_level, geom)
+    return PipIndex.from_cells(
+        pc["cell"].to_numpy(np.int64),
+        pc["rel_id"].to_numpy(np.int64),
+        pc["poly_idx"].to_numpy(np.int64),
+        pc["interior"].to_numpy(bool),
+        geom,
+    )
 
 
 PIP_SCHEMA = "point_id long, rel_id long, poly_idx int"
@@ -328,36 +510,13 @@ def pip_join_index(points: DataFrame, index_bc, keep: tuple = ()) -> DataFrame:
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         idx: PipIndex = index_bc.value
         for pdf in it:
-            lons = pdf["lon"].to_numpy(np.float64)
-            lats = pdf["lat"].to_numpy(np.float64)
-            pids = pdf["point_id"].to_numpy(np.int64)
-            pt, rel, poly, interior, cell = idx.candidates(lons, lats)
-            # (point-row-index, rel, poly) pieces; point indices kept so
-            # passthrough columns gather once at the end.
-            acc = [(pt[interior], rel[interior], poly[interior])]
-            b = ~interior
-            bpt, brel, bpoly, bcell = pt[b], rel[b], poly[b], cell[b]
-            if len(bpt):
-                # Group boundary candidates by (polygon, covering cell):
-                # per-cell point groups are spatially tight, so the
-                # exact kernel's segment slice reduces each test to
-                # ~the cell's own edges instead of the whole ring.
-                key = brel * np.int64(1 << 20) + bpoly
-                order = np.lexsort((bcell, key))
-                bpt, brel, bpoly = bpt[order], brel[order], bpoly[order]
-                key, bcell = key[order], bcell[order]
-                bounds = np.flatnonzero(
-                    (np.diff(key) != 0) | (np.diff(bcell) != 0)
-                ) + 1
-                for seg in np.split(np.arange(len(key)), bounds):
-                    r, p = int(brel[seg[0]]), int(bpoly[seg[0]])
-                    sel = idx.contains(r, p, lons[bpt[seg]], lats[bpt[seg]])
-                    acc.append((bpt[seg][sel], brel[seg][sel], bpoly[seg][sel]))
-            rows = np.concatenate([a[0] for a in acc])
+            rows, rel, poly = idx.join(
+                pdf["lon"].to_numpy(np.float64), pdf["lat"].to_numpy(np.float64)
+            )
             out = {
-                "point_id": pids[rows],
-                "rel_id": np.concatenate([a[1] for a in acc]),
-                "poly_idx": np.concatenate([a[2] for a in acc]).astype(np.int32),
+                "point_id": pdf["point_id"].to_numpy(np.int64)[rows],
+                "rel_id": rel,
+                "poly_idx": poly.astype(np.int32),
             }
             for c in keep:
                 out[c] = pdf[c].to_numpy()[rows]

@@ -17,9 +17,12 @@ Extension delay — the APNG-video sibling.
 
 Decoder: GIF87a/89a, global + local color tables, interlaced and
 non-interlaced frames, multi-frame animations (frame rects composited
-onto the logical screen per the no-dispose model), extensions skipped
-per spec framing. Deferred-clear streams (dictionary parked at 4096)
-are handled. Returns uint8 (H, W) grey when every palette entry is
+onto the logical screen, which starts as the background colour; a
+graphic-control extension's transparent index leaves the pixels
+beneath it showing, and a disposal method other than none/keep before
+a later frame raises ``ValueError``), other extensions skipped per
+spec framing. Deferred-clear streams (dictionary parked at 4096) are
+handled. Returns uint8 (H, W) grey when every palette entry is
 r==g==b, else (H, W, 3) RGB.
 
 Validated against real third-party encoder output in
@@ -223,12 +226,18 @@ def _deinterlace(idx: np.ndarray, h: int, w: int) -> np.ndarray:
 
 def decode_gif(data: bytes) -> tuple[list[np.ndarray], dict]:
     """GIF bytes → (frames, meta). Each frame is the full logical
-    screen after compositing (no-dispose model); greyscale (H, W) when
-    every used palette is grey, else (H, W, 3) RGB. Meta: {width,
-    height, codec: "gif", n_frames, version}."""
+    screen after compositing; greyscale (H, W) when every used palette
+    is grey, else (H, W, 3) RGB. Meta: {width, height, codec: "gif",
+    n_frames, version}.
+
+    Transparent pixels keep what lies beneath them (the background
+    colour, or earlier frames). Disposal methods 2 (restore to
+    background) and 3 (restore to previous) raise ``ValueError`` when
+    a later frame would be drawn over the disposed one, so callers fall
+    back rather than get pixels composited under the wrong model."""
     if len(data) < 13 or data[:6] not in (GIF87A, GIF89A):
         raise ValueError("gif: bad signature")
-    w, h, flags, _bg, _ar = struct.unpack("<HHBBB", data[6:13])
+    w, h, flags, bg, _ar = struct.unpack("<HHBBB", data[6:13])
     pos = 13
     gct = None
     if flags & 0x80:
@@ -240,20 +249,30 @@ def decode_gif(data: bytes) -> tuple[list[np.ndarray], dict]:
     frames: list[np.ndarray] = []
     screen = np.zeros((h, w, 3), dtype=np.uint8)
     if gct is not None:
-        screen[:, :] = gct[0]
+        screen[:, :] = gct[bg if bg < len(gct) else 0]
+    # Graphic control of the next image (transparent index, disposal)
+    # and the disposal method of the last image drawn.
+    transparent, disposal, last_disposal = None, 0, 0
     while pos < len(data):
         b = data[pos]
         pos += 1
         if b == 0x3B:  # trailer
             break
         if b == 0x21:  # extension: label + sub-blocks
-            pos += 1
-            _, pos = _read_sub_blocks(data, pos)
+            label = data[pos] if pos < len(data) else None
+            body, pos = _read_sub_blocks(data, pos + 1)
+            if label == 0xF9 and len(body) >= 4:
+                disposal = (body[0] >> 2) & 7
+                transparent = body[3] if body[0] & 1 else None
             continue
         if b != 0x2C:
             raise ValueError(f"gif: unexpected block 0x{b:02x}")
+        if last_disposal >= 2:
+            raise ValueError(f"gif: disposal method {last_disposal} is not supported")
         fx, fy, fw, fh, iflags = struct.unpack("<HHHHB", data[pos : pos + 9])
         pos += 9
+        if fx + fw > w or fy + fh > h:
+            raise ValueError("gif: frame outside the logical screen")
         pal = gct
         if iflags & 0x80:
             n = 2 << (iflags & 7)
@@ -273,8 +292,14 @@ def decode_gif(data: bytes) -> tuple[list[np.ndarray], dict]:
             rect_idx = idx.reshape(fh, fw)
         if rect_idx.max(initial=0) >= len(pal):
             raise ValueError("gif: palette index out of range")
-        screen[fy : fy + fh, fx : fx + fw] = pal[rect_idx]
+        region = screen[fy : fy + fh, fx : fx + fw]
+        if transparent is None:
+            region[...] = pal[rect_idx]
+        else:
+            shown = rect_idx != transparent
+            region[shown] = pal[rect_idx[shown]]
         frames.append(screen.copy())
+        transparent, disposal, last_disposal = None, 0, disposal
     if not frames:
         raise ValueError("gif: no image data")
     meta = {

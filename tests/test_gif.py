@@ -12,6 +12,7 @@ import pytest
 
 from osm_spark.text.gif import (
     _LZWEncoder,
+    _read_sub_blocks,
     _sub_blocks,
     decode_gif,
     encode_gif,
@@ -125,3 +126,66 @@ def test_decode_image_sniffs_gif():
     assert feats[0] == pytest.approx(blk.sum() / 63 / 255.0)
     _, meta2 = decode_image(b"RIFFnotgif", dim=4)
     assert meta2 is None
+
+
+def _with_gce(gif: bytes, frame: int, packed: int, tidx: int = 0) -> bytes:
+    """``gif`` with the graphic-control extension of image ``frame``
+    set to ``packed`` / transparent index ``tidx`` (inserted before the
+    image descriptor when the frame has none)."""
+    gce = b"\x21\xf9\x04" + bytes([packed]) + b"\x00\x00" + bytes([tidx]) + b"\x00"
+    pos, seen = 13 + 3 * 256, -1
+    while True:
+        if gif[pos] == 0x21:
+            if gif[pos + 1] == 0xF9 and seen + 1 == frame:
+                return gif[:pos] + gce + gif[pos + 8 :]
+            _, pos = _read_sub_blocks(gif, pos + 2)
+            continue
+        assert gif[pos] == 0x2C
+        seen += 1
+        if seen == frame:
+            return gif[:pos] + gce + gif[pos:]
+        pos += 11  # separator, descriptor, LZW code size
+        _, pos = _read_sub_blocks(gif, pos)
+
+
+def test_transparent_index_shows_what_lies_beneath():
+    """A transparent pixel keeps the screen under it: the background
+    colour on the first frame, the earlier frame's pixel later."""
+    a = np.full((6, 5), 40, np.uint8)
+    b = np.arange(30, dtype=np.uint8).reshape(6, 5) % 4 + 100  # 100..103
+    anim = _with_gce(encode_gif([a, b]), 1, 0x01, tidx=101)
+    frames, meta = decode_gif(anim)
+    assert meta["n_frames"] == 2
+    np.testing.assert_array_equal(frames[0], a)
+    np.testing.assert_array_equal(frames[1], np.where(b == 101, a, b))
+    # first frame over the logical screen's background colour (index 7)
+    one = bytearray(_with_gce(encode_gif(b), 0, 0x01, tidx=102))
+    one[11] = 7
+    (frame,), _ = decode_gif(bytes(one))
+    np.testing.assert_array_equal(frame, np.where(b == 102, 7, b))
+    # a transparent index the frame never uses changes nothing
+    (frame,), _ = decode_gif(_with_gce(encode_gif(b), 0, 0x01, tidx=9))
+    np.testing.assert_array_equal(frame, b)
+    # a frame rect past the logical screen is malformed input
+    small = bytearray(one)
+    small[6] = 4  # screen width 4 < the frame's 5
+    with pytest.raises(ValueError, match="outside"):
+        decode_gif(bytes(small))
+
+
+@pytest.mark.parametrize("disposal", [2, 3])
+def test_disposal_before_a_later_frame_is_rejected(disposal):
+    """Restore-to-background/previous would change what the next
+    frame is drawn over: the decoder refuses rather than composite it
+    opaque, and the multimodal path falls back to the stub."""
+    from osm_spark.text.multimodal import decode_image
+
+    a = np.full((4, 4), 10, np.uint8)
+    anim = _with_gce(encode_gif([a, a + 1]), 0, disposal << 2)
+    with pytest.raises(ValueError, match="disposal"):
+        decode_gif(anim)
+    feats, meta = decode_image(anim, dim=4)
+    assert meta is None and feats.shape == (4,)
+    # on the last frame it disposes nothing that is drawn
+    (frame,), _ = decode_gif(_with_gce(encode_gif(a), 0, disposal << 2))
+    np.testing.assert_array_equal(frame, a)

@@ -2,15 +2,20 @@
 memory-bounded tiling + bbox segment slicing must be bit-identical to
 the unbounded dense kernel, and a high-vertex (coastline-class) polygon
 must refine under a fixed memory budget instead of materializing
-(points × all-segments) matrices.
+(points × all-segments) matrices. The index's batch path
+(``PipIndex.join``: flat (point, edge) pairs over per-cell edge slices)
+must give the per-polygon kernel's rows exactly.
 """
 
 import tracemalloc
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from osm_spark.kernels import poly
+from osm_spark.kernels.cells import cells_xy, cover_polygon, point_to_cell, xy_to_cell
 from osm_spark.spatial import pip_index as P
 
 
@@ -65,6 +70,58 @@ def _brute_dist(rings, lons, lats):
     return best
 
 
+def _box_cells(x0, y0, x1, y1, level):
+    """Every cell at ``level`` that overlaps the degree box."""
+    lo = point_to_cell(np.array([x0]), np.array([y0]), level)
+    hi = point_to_cell(np.array([x1]), np.array([y1]), level)
+    (ax,), (ay,) = cells_xy(lo)
+    (bx,), (by,) = cells_xy(hi)
+    gx, gy = np.meshgrid(np.arange(ax, bx + 1), np.arange(ay, by + 1))
+    return xy_to_cell(gx.ravel(), gy.ravel(), level)
+
+
+def _index(geom, cover):
+    """PipIndex over ``geom`` with each polygon's covering rows from
+    ``cover(rings) -> (cells, interior)``."""
+    parts = []
+    for (rel, pi), rings in geom.items():
+        cells, interior = cover(rings)
+        cells = np.asarray(cells, dtype=np.int64)
+        n = len(cells)
+        parts.append((cells, np.full(n, rel), np.full(n, pi), np.asarray(interior, dtype=bool)))
+    return P.PipIndex.from_cells(*(np.concatenate([p[i] for p in parts]) for i in range(4)), geom)
+
+
+def _all_boundary(level):
+    """Covering that refines everything: every cell of the polygon's
+    bbox at ``level``, none interior."""
+    def cover(rings):
+        xs, ys = rings[0]
+        cells = _box_cells(xs.min(), ys.min(), xs.max(), ys.max(), level)
+        return cells, np.zeros(len(cells), dtype=bool)
+    return cover
+
+
+def _quadtree(max_level):
+    """The production covering (``cover_polygon``)."""
+    def cover(rings):
+        coords = [[[x, y] for x, y in zip(xs, ys)] for xs, ys in rings]
+        return cover_polygon(coords, 4, max_level)
+    return cover
+
+
+def _join_rows(idx, lons, lats):
+    return set(zip(*(a.tolist() for a in idx.join(lons, lats))))
+
+
+def _contains_rows(idx, lons, lats):
+    return {
+        (i, rel, pi)
+        for rel, pi in idx.geom
+        for i in idx.contains(rel, pi, lons, lats).nonzero()[0].tolist()
+    }
+
+
 @pytest.fixture()
 def star_index():
     rings = [_star_ring(401, 8.0, 10.0), _star_ring(101, 2.0, 3.0)]
@@ -97,6 +154,15 @@ def test_tiny_tile_budget_identical(star_index, monkeypatch):
     idx2 = P.PipIndex([], {}, idx.geom)
     np.testing.assert_array_equal(idx2.contains(1, 0, lons, lats), base_c)
     np.testing.assert_array_equal(idx2.edge_distance(1, 0, lons, lats), base_d)
+    # The batch path chunks its flat pairs under the same budget and
+    # carries the per-ring parity across chunks.
+    monkeypatch.undo()
+    flat = _index(idx.geom, _all_boundary(5))
+    base_j = _join_rows(flat, lons, lats)
+    assert base_j == {(i, 1, 0) for i in base_c.nonzero()[0].tolist()}
+    monkeypatch.setattr(P, "TILE_ELEMS", 997)
+    flat2 = _index(idx.geom, _all_boundary(5))
+    assert _join_rows(flat2, lons, lats) == base_j
 
 
 def test_high_vertex_polygon_memory_bound():
@@ -122,10 +188,157 @@ def test_high_vertex_polygon_memory_bound():
     sel = np.arange(0, 2000, 10)
     np.testing.assert_array_equal(got[sel], _brute_contains(big, lons[sel], lats[sel]))
     np.testing.assert_array_equal(d, _brute_dist(big, lons[:200], lats[:200]))
-    # The banded path (per covering cell grouping) is the hot-path
-    # shape: a tight group must not touch most segments.
+    # Points in a thin band: the slice by the group's extent keeps
+    # only the edges that can matter to them.
     band = np.abs(lats) < 0.02
     np.testing.assert_array_equal(got[band], _brute_contains(big, lons[band], lats[band]))
+
+
+def test_high_vertex_polygon_batch_path_memory_bound():
+    """The same coastline-class polygon behind coarse (level-4, 22.5°)
+    boundary cells: each cell's edge slice holds ~half the ring, and
+    the flat pass still stays ~TILE_ELEMS-sized."""
+    big = [_star_ring(60001, 9.0, 10.0)]
+    idx = _index({(2, 0): big}, _all_boundary(4))
+    rng = np.random.default_rng(5)
+    lons = rng.uniform(-11, 11, 600)
+    lats = rng.uniform(-11, 11, 600)
+    idx._edge_slices()  # build the derived table outside the measurement
+    assert idx._slices.unit_len.max() > 20000
+    tracemalloc.start()
+    pt, _rel, _poly = idx.join(lons, lats)
+    _, peak = tracemalloc.get_traced_memory()
+    tracemalloc.stop()
+    assert peak < 300e6, f"peak {peak/1e6:.0f} MB"
+    want = _brute_contains(big, lons, lats)
+    np.testing.assert_array_equal(np.isin(np.arange(600), pt), want)
+
+
+def test_join_empty_and_partial_batches(star_index):
+    """Empty batch; a batch with no boundary candidates; candidates
+    whose polygon has no geometry (dropped, the rest kept)."""
+    _idx, rings = star_index
+    geom = {(1, 0): rings, (3, 0): [_star_ring(31, 3.0, 4.0, cx=30.0)]}
+    idx = _index(geom, _quadtree(8))
+    empty = np.empty(0)
+    assert all(len(a) == 0 for a in idx.join(empty, empty))
+    assert all(len(a) == 0 for a in P.PipIndex([], {}, geom).join(np.ones(3), np.ones(3)))
+    # interior cells only (near the ring's centre, inside the hole's
+    # complement band) and points outside every covering
+    lons = np.array([5.5, -5.5, 0.0, 100.0])
+    lats = np.array([0.0, 0.0, 5.5, 50.0])
+    pt, rel, pi, interior, _cell = idx.candidates(lons, lats)
+    assert interior.all() and set(pt.tolist()) == {0, 1, 2}
+    assert _join_rows(idx, lons, lats) == {(0, 1, 0), (1, 1, 0), (2, 1, 0)}
+    # drop polygon 3's geometry: its boundary candidates yield no rows,
+    # its interior-cell hits (no geometry needed) stay
+    rng = np.random.default_rng(2)
+    lons = np.concatenate([rng.uniform(-12, 12, 500), rng.uniform(25, 35, 500)])
+    lats = rng.uniform(-12, 12, 1000) * np.r_[np.ones(500), np.full(500, 0.4)]
+    full = _join_rows(idx, lons, lats)
+    pt, rel, _pi, interior, _cell = idx.candidates(lons, lats)
+    assert ((rel == 3) & interior).any() and ((rel == 3) & ~interior).any()
+    idx.geom = {(1, 0): rings}
+    idx._slices = None
+    assert _join_rows(idx, lons, lats) == {r for r in full if r[1] == 1} | {
+        (i, 3, 0) for i in pt[(rel == 3) & interior].tolist()
+    }
+
+
+def test_join_matches_contains_on_vertices_and_edges(star_index):
+    """The production covering (interior cells accepted, boundary
+    cells refined) against the per-polygon kernel, on random points
+    and on every vertex and edge midpoint and their ±1 micro-degree
+    neighbours."""
+    _idx, rings = star_index
+    geom = {
+        (1, 0): [tuple(np.round(a, 6) for a in r) for r in rings],
+        (2, 0): [tuple(np.round(a, 6) for a in _star_ring(31, 3.0, 5.0, 12.0, 3.0))],
+    }
+    idx = _index(geom, _quadtree(9))
+    rng = np.random.default_rng(4)
+    lons = np.round(rng.uniform(-12, 18, 20000), 6)
+    lats = np.round(rng.uniform(-12, 12, 20000), 6)
+    assert _join_rows(idx, lons, lats) == _contains_rows(idx, lons, lats)
+    pts = np.concatenate([
+        np.stack(r, axis=1) for rs in geom.values() for xs, ys in rs
+        for r in ((xs, ys), ((xs[:-1] + xs[1:]) / 2, (ys[:-1] + ys[1:]) / 2))
+    ])
+    for dx in (-1e-6, 0.0, 1e-6):
+        for dy in (-1e-6, 0.0, 1e-6):
+            lo, la = np.round(pts[:, 0] + dx, 6), np.round(pts[:, 1] + dy, 6)
+            assert _join_rows(idx, lo, la) == _contains_rows(idx, lo, la), (dx, dy)
+
+
+def test_join_points_clipped_into_edge_cells():
+    """Points beyond the world's edge land in its first/last cell
+    column or row (``point_to_cell`` clips them); their slices keep
+    the edges beyond it too."""
+    geom = {(1, 0): [_ring_arrays([[-185.0, -95.0], [-175.0, -92.0], [-178.0, -85.0],
+                                   [-186.0, -88.0], [-185.0, -95.0]])]}
+    idx = _index(geom, _all_boundary(6))
+    gx, gy = np.meshgrid(np.linspace(-187, -174, 61), np.linspace(-96, -84, 53))
+    lons, lats = gx.ravel(), gy.ravel()
+    got = _join_rows(idx, lons, lats)
+    assert got == _contains_rows(idx, lons, lats)
+    assert any(lons[i] < -180 and lats[i] < -90 for i, _, _ in got)
+
+
+def _radial_ring(cx, cy, radii, phase):
+    """Star-shaped ring on the micro-degree lattice (degrees)."""
+    n = len(radii)
+    th = 2 * np.pi * (np.arange(n) + phase) / n
+    xs = np.rint(cx + np.asarray(radii) * np.cos(th)) / 1e6
+    ys = np.rint(cy + np.asarray(radii) * np.sin(th)) / 1e6
+    return np.append(xs, xs[0]), np.append(ys, ys[0])
+
+
+@st.composite
+def _polygons(draw):
+    """1-3 star-shaped polygons (micro-degree vertices) with 0-2
+    holes each, possibly overlapping one another."""
+    geom = {}
+    for rel in range(1, draw(st.integers(1, 3)) + 1):
+        r = draw(st.integers(100_000, 3_000_000))
+        cx = draw(st.integers(-170_000_000, 170_000_000))
+        cy = draw(st.integers(-80_000_000, 80_000_000))
+        n = draw(st.integers(3, 12))
+        radii = draw(st.lists(st.integers(r // 2, r), min_size=n, max_size=n))
+        rings = [_radial_ring(cx, cy, radii, draw(st.floats(0, 1)))]
+        n_holes = draw(st.integers(0, 2))
+        for k in range(n_holes):
+            off = 0 if n_holes == 1 else (r // 4 if k == 0 else -(r // 4))
+            m = draw(st.integers(3, 8))
+            hr = draw(st.lists(st.integers(r // 32, r // 8), min_size=m, max_size=m))
+            rings.append(_radial_ring(cx + off, cy, hr, draw(st.floats(0, 1))))
+        geom[(rel, 0)] = rings
+    return geom
+
+
+@settings(max_examples=60, deadline=None)
+@given(_polygons(), st.integers(5, 10), st.integers(0, 2**32 - 1))
+def test_join_matches_polygon_contains_property(geom, level, seed):
+    """Random polygons with holes: the batch path (every covering cell
+    refined through the flat pairs) gives exactly the per-polygon
+    kernel's rows on lattice points, vertices, edge midpoints and
+    their ±1 micro-degree neighbours."""
+    idx = _index(geom, _all_boundary(level))
+    rings = [r for rs in geom.values() for r in rs]
+    x0 = min(xs.min() for xs, _ in rings)
+    x1 = max(xs.max() for xs, _ in rings)
+    y0 = min(ys.min() for _, ys in rings)
+    y1 = max(ys.max() for _, ys in rings)
+    gx, gy = np.meshgrid(np.linspace(x0, x1, 23), np.linspace(y0, y1, 19))
+    pts = [np.stack([gx.ravel(), gy.ravel()], axis=1)]
+    for xs, ys in rings:
+        pts.append(np.stack([xs, ys], axis=1))
+        pts.append(np.stack([(xs[:-1] + xs[1:]) / 2, (ys[:-1] + ys[1:]) / 2], axis=1))
+    pts = np.concatenate(pts)
+    pts = pts[np.random.default_rng(seed).permutation(len(pts))]
+    for dx in (-1e-6, 0.0, 1e-6):
+        for dy in (-1e-6, 0.0, 1e-6):
+            lo, la = np.round(pts[:, 0] + dx, 6), np.round(pts[:, 1] + dy, 6)
+            assert _join_rows(idx, lo, la) == _contains_rows(idx, lo, la)
 
 
 def test_missing_geometry_is_dropped_not_fatal(star_index):
@@ -146,6 +359,14 @@ def test_index_pickle_drops_segment_cache(star_index):
     assert idx._segs
     clone = pickle.loads(pickle.dumps(idx))
     assert clone._segs == {}
+    # The per-cell edge slices are derived too: the pickle is the same
+    # size before and after they are built.
+    flat = _index(idx.geom, _all_boundary(5))
+    size = len(pickle.dumps(flat))
+    flat._edge_slices()
+    assert flat._slices is not None
+    assert len(pickle.dumps(flat)) == size
+    assert pickle.loads(pickle.dumps(flat))._slices is None
     lons = np.array([0.0, 5.0, 11.0])
     lats = np.array([0.0, 5.0, 11.0])
     np.testing.assert_array_equal(

@@ -121,7 +121,9 @@ def test_pip_tessellation_shared_diagonal_edges(data):
     in exactly one child; a point on a shared edge lands in none."""
     from math import gcd
 
-    from osm_spark.kernels.poly import polygon_contains, ring_segments
+    from osm_spark.kernels.cells import cells_xy, point_to_cell, xy_to_cell
+    from osm_spark.kernels.poly import GRID, polygon_contains, ring_segments
+    from osm_spark.spatial.pip_index import PipIndex
 
     W = H = 64
     n_cuts = data.draw(st.integers(1, 3))
@@ -150,12 +152,13 @@ def test_pip_tessellation_shared_diagonal_edges(data):
             return [(x0, y0 + s * H), (x0 + s * W, y0 + s * H)]
         return [(x, ys[c]) for x, ys in zip(gx, gy)]
 
-    children = []
+    children, geom = [], {}
     for c in range(n_cuts + 1):
         pts = line(c - 1) + line(c)[::-1]
         pts.append(pts[0])
         a = np.asarray(pts, dtype=np.float64)
         children.append([ring_segments(a[:, 0], a[:, 1])])
+        geom[(c, 0)] = [(a[:, 0] / GRID, a[:, 1] / GRID)]
     shared = [
         (p, q)
         for c in range(n_cuts)
@@ -205,6 +208,26 @@ def test_pip_tessellation_shared_diagonal_edges(data):
 
     px = np.asarray([p[0] for p in probes], dtype=np.float64)
     py = np.asarray([p[1] for p in probes], dtype=np.float64)
-    hits = sum(polygon_contains(rings, px, py).astype(int) for rings in children)
+    inside = np.stack([polygon_contains(rings, px, py) for rings in children])
+    hits = inside.sum(axis=0)
     for (x, y), h in zip(probes, hits.tolist()):
         assert h == (0 if on_shared(x, y) else 1), (x, y)
+
+    # The same probes through the PIP index's batch path, every cell of
+    # the parent's box refined, at a level drawn per example (at most
+    # ~32 cells across the box).
+    level = min(data.draw(st.integers(2, 12)), int(np.log2(32 * 3.6e9 / (s * W))))
+    lo = point_to_cell(np.array([x0 / GRID]), np.array([y0 / GRID]), level)
+    hi = point_to_cell(np.array([(x0 + s * W) / GRID]), np.array([(y0 + s * H) / GRID]), level)
+    (ax, bx), (ay, by) = cells_xy(np.concatenate([lo, hi]))
+    cx, cy = np.meshgrid(np.arange(ax, bx + 1), np.arange(ay, by + 1))
+    box = xy_to_cell(cx.ravel(), cy.ravel(), level)
+    k = len(box)
+    idx = PipIndex.from_cells(
+        np.tile(box, len(geom)), np.repeat(np.arange(len(geom)), k),
+        np.zeros(k * len(geom), dtype=np.int64), np.zeros(k * len(geom), dtype=bool), geom,
+    )
+    pt, rel, _poly = idx.join(px / GRID, py / GRID)
+    joined = np.zeros_like(inside)
+    joined[rel, pt] = True
+    np.testing.assert_array_equal(joined, inside)
