@@ -33,15 +33,7 @@ def applied_source_version(out) -> int | None:
     """Last pages-table version applied to the assignment table ``out``
     (None before its first commit). A table whose summary lacks it (the
     older marker-row format) raises: re-applying would duplicate rows."""
-    if not out.exists():
-        return None
-    applied = out.snapshot()["summary"].get(_APPLIED)
-    if applied is None:
-        raise ValueError(
-            f"assignment table {out.path} records no {_APPLIED} in its "
-            "snapshot summary; rebuild the assignment table"
-        )
-    return applied
+    return out.summary_prop(_APPLIED)
 
 
 def pip_increment(

@@ -15,8 +15,10 @@ north rule depends on — atomic commits, append isolation for the J6
 resume anti-join, time travel, per-file lineage — without the Iceberg
 runtime. Every stage appends a row to the metrics table
 (stage, rows, content_hash) — the north rule's per-stage row-count/hash
-lineage; the hash is an order-insensitive xor-of-row-hashes computed
-JVM-side.
+lineage; the hash is an order-insensitive sum of row hashes. The
+manifest format takes these rows from the commit's file entries, which
+the writing job itself counted and hashed; other formats re-read the
+stage.
 """
 
 from __future__ import annotations
@@ -122,33 +124,36 @@ class Checkpointer:
             t = self._table(name)
             t.write(df, mode=mode)
             out = t.read()
-        else:
-            p = self.path(name)
-            df.write.format(self.fmt).mode(mode).save(p)
-            out = self.spark.read.format(self.fmt).load(p)
+            if self.collect_metrics:
+                # the commit's own file entries: no re-read of the stage
+                parts = [
+                    {"partition": i, "rows": e["rows"],
+                     "content_hash": e["content_hash"] ^ e["rows"]}
+                    for i, e in enumerate(t.lineage())
+                ]
+                self._record_lineage(name, parts, t.table_hash())
+            return out
+        p = self.path(name)
+        df.write.format(self.fmt).mode(mode).save(p)
+        out = self.spark.read.format(self.fmt).load(p)
         if self.collect_metrics:
-            parts = partition_lineage(out)
-            self.metrics.append(
-                {
-                    "stage": name,
-                    "partition": -1,  # whole-table row
-                    "rows": sum(p_["rows"] for p_ in parts),
-                    "content_hash": content_hash(out),
-                    "ts": time.time(),
-                }
-            )
-            now = time.time()
-            for p_ in parts:
-                self.metrics.append(
-                    {
-                        "stage": name,
-                        "partition": p_["partition"],
-                        "rows": p_["rows"],
-                        "content_hash": p_["content_hash"],
-                        "ts": now,
-                    }
-                )
+            self._record_lineage(name, partition_lineage(out), content_hash(out))
         return out
+
+    def _record_lineage(self, name: str, parts: list[dict], table_hash: int) -> None:
+        """One whole-table metrics row (partition -1) plus one row per
+        partition of the materialized stage."""
+        now = time.time()
+        self.metrics.append(
+            {
+                "stage": name,
+                "partition": -1,
+                "rows": sum(p_["rows"] for p_ in parts),
+                "content_hash": table_hash,
+                "ts": now,
+            }
+        )
+        self.metrics.extend({"stage": name, **p_, "ts": now} for p_ in parts)
 
     def read(self, name: str) -> DataFrame:
         if self.fmt == "manifest":

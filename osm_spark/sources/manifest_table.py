@@ -20,8 +20,9 @@ Design (a deliberately minimal subset of the Iceberg spec):
                               schema, and the EXPLICIT data-file list
                               with per-file row counts + content hashes
                               (per-partition lineage at file granularity)
-      data/c<uuid>/part-*.parquet   one directory per commit; files are
-                              immutable once written, never rewritten
+      data/c<uuid>/part-<task>-<attempt>-<uuid>.parquet
+                              one directory per commit, one file per
+                              non-empty task; immutable once written
 
 Guarantees (each pinned by a test):
 
@@ -49,13 +50,16 @@ Guarantees (each pinned by a test):
 
 Scale notes: snapshots are driver-side JSON of O(files) entries — the
 small side (a 10^12-row table at 512 MB/file is ~10^5 entries, a few MB
-of manifest). Per-file lineage is computed in ONE distributed pass over
-the just-written files (groupBy input_file_name, map-side combined);
-the data path stays whatever Spark wrote — no extra copy, no rewrite.
+of manifest). Per-file lineage comes out of the job that writes the
+files, as Iceberg writers collect data-file metrics while writing: each
+task streams its Arrow batches into one parquet file and returns that
+file's row count and hash, and the commit only lists them. Nothing is
+read back, and a task with no rows writes no file.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import time
@@ -63,7 +67,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 
 class CommitConflict(RuntimeError):
@@ -80,68 +84,61 @@ def _json_scalar(v):
     return str(v)
 
 
-def _file_lineage(
-    spark: SparkSession, files: list[str], stats_cols: list[str] | None = None
-) -> list[dict]:
-    """Per-file (rows, content_hash[, column min/max stats]) in one
-    distributed pass.
+_H = "__row_hash"
 
-    Hash formula matches plans.pipeline.content_hash per file:
-    sum(xxhash64(cols) % 2^31) xor row-count — order-insensitive, and
-    per-file sums add up to the whole-table sum so table-level hashes
-    are derivable from the manifest without re-reading data.
 
-    ``stats_cols`` adds per-file min/max for those columns to the same
-    aggregation (no extra pass) — the manifest-level pruning statistics
-    Iceberg keeps in its data-file entries.
-    """
-    if not files:
-        return []
-    df = spark.read.parquet(*files)
-    cols = [F.col(c).cast("string") for c in df.columns]
-    aggs = [
-        F.count("*").alias("rows"),
-        F.coalesce(F.sum(F.col("h") % F.lit(2**31)), F.lit(0)).alias("s"),
-    ]
-    for c in stats_cols or []:
-        aggs.append(F.min(c).alias(f"__min_{c}"))
-        aggs.append(F.max(c).alias(f"__max_{c}"))
-    rows = (
-        df.select(
-            F.input_file_name().alias("f"),
-            F.xxhash64(*cols).alias("h"),
-            *(stats_cols or []),
+def _file_writer(commit_dir: str, stats_cols: list[str]):
+    """The ``mapInArrow`` body of a commit's one writing job: each task
+    streams its Arrow batches into one parquet file and yields that
+    file's lineage row ``(path, rows, s[, min/max per stats column])``,
+    where ``s`` sums the rows' ``fmod(xxhash64, 2^31)`` — the term
+    plans.pipeline.content_hash sums (Spark's ``%`` keeps the dividend's
+    sign, as ``np.fmod`` does). A task with no rows writes nothing."""
+
+    def write(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        path = os.path.join(
+            commit_dir,
+            f"part-{ctx.partitionId():05d}-{ctx.attemptNumber()}-"
+            f"{uuid.uuid4().hex}.parquet",
         )
-        .groupBy("f")
-        .agg(*aggs)
-        .collect()
-    )
-    by_name = {}
-    for r in rows:
-        # input_file_name is a file:/ URI; key by basename-within-commit
-        # (commit dirs are unique, basenames unique within one).
-        by_name[os.path.basename(r["f"])] = r
-    out = []
-    for f in files:
-        r = by_name.get(os.path.basename(f))
-        if r is None:  # zero-row part file: no rows reached the agg
-            entry = {"path": f, "rows": 0, "content_hash": 0}
-        else:
-            entry = {
-                "path": f,
-                "rows": int(r["rows"]),
-                "content_hash": int(r["s"]) ^ int(r["rows"]),
-            }
-            if stats_cols:
-                entry["stats"] = {
-                    c: [
-                        _json_scalar(r[f"__min_{c}"]),
-                        _json_scalar(r[f"__max_{c}"]),
-                    ]
-                    for c in stats_cols
-                }
-        out.append(entry)
-    return out
+        batches = (b for b in batches if b.num_rows)
+        first = next(batches, None)
+        if first is None:
+            return
+        rows = s = 0
+        stat_chunks = {c: [] for c in stats_cols}
+        buf, buf_bytes = [], 0
+        os.makedirs(commit_dir, exist_ok=True)
+        with pq.ParquetWriter(path, first.drop_columns([_H]).schema) as writer:
+            for b in itertools.chain([first], batches):
+                rows += b.num_rows
+                s += int(np.fmod(b.column(_H).to_numpy(), 2**31).sum())
+                b = b.drop_columns([_H])
+                for c in stats_cols:
+                    stat_chunks[c].append(b.column(c))
+                buf.append(b)
+                buf_bytes += b.nbytes
+                if buf_bytes >= 64 << 20:  # ~64 MB row groups, not one per batch
+                    writer.write_table(pa.Table.from_batches(buf))
+                    buf, buf_bytes = [], 0
+            if buf:
+                writer.write_table(pa.Table.from_batches(buf))
+        cols = {"path": pa.array([path]), "rows": pa.array([rows], pa.int64()),
+                "s": pa.array([s], pa.int64())}
+        for c, chunks in stat_chunks.items():
+            mm = pc.min_max(pa.chunked_array(chunks))
+            cols[f"__min_{c}"] = pa.array([mm["min"].as_py()], chunks[0].type)
+            cols[f"__max_{c}"] = pa.array([mm["max"].as_py()], chunks[0].type)
+        yield pa.RecordBatch.from_pydict(cols)
+
+    return write
 
 
 class ManifestTable:
@@ -198,6 +195,21 @@ class ManifestTable:
             )
         return out
 
+    def summary_prop(self, key: str):
+        """Summary property ``key`` of the current snapshot (None before
+        the first commit). A committed table without it raises: it was
+        written by an older format (e.g. state kept in marker rows) whose
+        state this reader cannot see, so using it would re-apply work."""
+        if not self.exists():
+            return None
+        value = self.snapshot()["summary"].get(key)
+        if value is None:
+            raise ValueError(
+                f"table {self.path} records no {key} in its snapshot "
+                "summary; rebuild the table"
+            )
+        return value
+
     def lineage(self, version: int | None = None) -> list[dict]:
         """Per-file lineage entries of a snapshot (path, rows, hash)."""
         return self.snapshot(version)["files"]
@@ -224,11 +236,11 @@ class ManifestTable:
     ) -> None:
         """Commit ``df`` as a new snapshot (``overwrite`` or ``append``).
 
-        Stage order is the atomicity contract: (1) data files into a
-        fresh commit dir, (2) one lineage pass over exactly those
-        files, (3) snapshot json, (4) atomic VERSION swap. Failure
-        before (4) leaves the table at its previous snapshot with only
-        unreferenced orphans on disk.
+        Stage order is the atomicity contract: (1) one Spark job
+        writes the data files into a fresh commit dir and returns their
+        lineage entries, (2) snapshot json, (3) atomic VERSION swap.
+        Failure before (3) leaves the table at its previous snapshot
+        with only unreferenced orphans on disk.
 
         ``stats_cols``: record per-file min/max of these columns in the
         manifest (Iceberg data-file stats) so ``read_where`` can prune
@@ -254,18 +266,52 @@ class ManifestTable:
         self._commit_snapshot(entries, schema_json, mode, base_version, props)
 
     def _write_files(self, df: DataFrame, stats_cols: list[str] | None) -> list[dict]:
-        """Stages (1)-(2) of a commit: ``df`` into a fresh commit dir,
-        then the lineage entries of exactly the files written."""
+        """Stage (1) of a commit: ``df`` into a fresh commit dir as ONE
+        Spark job whose tasks each write a parquet file and return its
+        lineage entry (rows, content_hash[, stats]).
+
+        Names carry partition id, attempt number and a uuid, and only
+        the files of successful attempts reach the entries, so a failed
+        or speculative attempt leaves an unreferenced orphan (removed by
+        ``vacuum()``), never a duplicate.
+
+        ``stats_cols`` adds the per-file min/max of those columns (the
+        manifest-level pruning statistics Iceberg keeps in its data-file
+        entries), ordered as pyarrow's ``min_max`` orders them."""
         commit_dir = os.path.join(self.path, "data", f"c{uuid.uuid4().hex}")
-        df.write.parquet(commit_dir)
-        new_files = sorted(
-            os.path.join(commit_dir, f)
-            for f in os.listdir(commit_dir)
-            if f.endswith(".parquet")
+        stats_cols = list(stats_cols or [])
+        out_schema = StructType(
+            [
+                StructField("path", StringType()),
+                StructField("rows", LongType()),
+                StructField("s", LongType()),
+            ]
+            + [
+                StructField(f"__{agg}_{c}", df.schema[c].dataType)
+                for c in stats_cols
+                for agg in ("min", "max")
+            ]
         )
-        if stats_cols:
-            return _file_lineage(self.spark, new_files, stats_cols)
-        return _file_lineage(self.spark, new_files)
+        hashed = df.withColumn(
+            _H, F.xxhash64(*[F.col(c).cast("string") for c in df.columns])
+        )
+        results = hashed.mapInArrow(
+            _file_writer(commit_dir, stats_cols), out_schema
+        ).collect()
+        entries = []
+        for r in sorted(results, key=lambda r: r["path"]):
+            entry = {
+                "path": r["path"],
+                "rows": r["rows"],
+                "content_hash": r["s"] ^ r["rows"],
+            }
+            if stats_cols:
+                entry["stats"] = {
+                    c: [_json_scalar(r[f"__min_{c}"]), _json_scalar(r[f"__max_{c}"])]
+                    for c in stats_cols
+                }
+            entries.append(entry)
+        return entries
 
     def _commit_snapshot(
         self,
@@ -545,9 +591,9 @@ class ManifestTable:
         plan), rewrites them as ceil(total_rows / target) files, and
         commits a ``compact`` snapshot carrying every large file
         untouched. Data is bit-identical by construction; the
-        order-insensitive ``content_hash`` in the new snapshot summary
-        must equal the parent's, and the commit VERIFIES that before
-        publishing (a corrupted rewrite can never become current).
+        partition-invariant ``table_hash`` must equal the parent's, and
+        the commit VERIFIES that against the rewritten files on disk
+        before publishing (a corrupted rewrite can never become current).
 
         Returns a summary dict; no-op (returns with ``compacted: 0``,
         no new snapshot) when fewer than two small files exist.
@@ -567,13 +613,17 @@ class ManifestTable:
             self._scan(schema, [e["path"] for e in small]).repartition(n_out),
             stats_cols,
         )
-        # Partition-INVARIANT equality check: per-file sums (recovered
-        # as content_hash ^ rows) add across any file grouping, unlike
-        # the summary's xor-of-files fingerprint which identifies a
-        # specific file layout.
-        if _entry_sum(new_entries) != _entry_sum(small) or sum(
+        # Partition-INVARIANT equality check, read back from disk: the
+        # rewritten files' row-hash sum must equal the small files'
+        # per-file sums (content_hash ^ rows), which add across any file
+        # grouping — and so must the new entries' own sums.
+        from osm_spark.plans.pipeline import content_hash
+
+        want = _entry_sum(small) ^ total
+        written = self._scan(schema, [e["path"] for e in new_entries])
+        if content_hash(written) != want or _entry_sum(new_entries) ^ sum(
             e["rows"] for e in new_entries
-        ) != total:
+        ) != want:
             raise RuntimeError(
                 f"{self.path}: compaction rewrite does not match its "
                 "inputs (hash/rowcount drift) — aborting before commit; "

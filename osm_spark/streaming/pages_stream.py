@@ -29,6 +29,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+# Snapshot summary property of the SUM/KMV-merged sinks: the last
+# micro-batch id applied, committed by the same VERSION swap as the rows.
+_APPLIED_BATCH = "applied_batch_id"
+
 
 def stream_pip_enrich(
     spark: SparkSession,
@@ -262,12 +266,13 @@ def stream_hotspot_maintenance(
     Delivery semantics: unlike HLL's max-merge, count SUM-merge is
     NOT idempotent — an at-least-once replay after a crash between
     the table commit and the checkpoint advance would double-count.
-    The table therefore carries a marker row (cell = -1, n_points =
-    last applied batch_id; real cell ids are ≥ 0 by construction) and
+    Each commit therefore records the last applied batch id as the
+    snapshot summary property ``applied_batch_id``, and
     ``process_batch`` skips any batch whose id is already applied —
     the standard foreachBatch transactional-sink pattern, made atomic
-    by ManifestTable's VERSION swap (marker and counts commit
-    together or not at all)."""
+    by ManifestTable's VERSION swap (the id and the counts commit
+    together or not at all). A table without the property raises a
+    "rebuild" ValueError."""
     from osm_spark.sources.manifest_table import ManifestTable
     from osm_spark.spatial.geoparse import geoparse_pages
     from osm_spark.spatial.hotspots import cell_counts
@@ -281,33 +286,26 @@ def stream_hotspot_maintenance(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         t = ManifestTable(spark, table_path)
+        applied = t.summary_prop(_APPLIED_BATCH)
+        if applied is not None and applied >= batch_id:
+            return  # replay of an already-applied batch: no-op
         counts = cell_counts(geoparse_pages(batch_df), level)
-        if t.exists():
-            cur = t.read()
-            marker = (
-                cur.where(F.col("cell") == -1)
-                .select("n_points")
-                .first()
-            )
-            if marker is not None and marker["n_points"] >= batch_id:
-                return  # replay of an already-applied batch: no-op
+        if applied is not None:
             counts = (
-                cur.where(F.col("cell") >= 0)
+                t.read()
                 .unionByName(counts)
                 .groupBy("cell", "x", "y")
                 .agg(F.sum("n_points").alias("n_points"))
             )
-        marker_row = spark.createDataFrame(
-            [(-1, -1, -1, batch_id)], "cell long, x long, y long, n_points long"
-        )
         t.write(
             counts.select(
                 F.col("cell").cast("long"),
                 F.col("x").cast("long"),
                 F.col("y").cast("long"),
                 F.col("n_points").cast("long"),
-            ).unionByName(marker_row),
+            ),
             mode="overwrite",
+            props={_APPLIED_BATCH: batch_id},
         )
 
     writer = (
@@ -339,8 +337,8 @@ def stream_hist_maintenance(
     ``hist_quantiles(table.read(version), ...)`` with no page rescan.
 
     Same transactional-sink pattern as stream_hotspot_maintenance:
-    SUM-merge is not idempotent, so the table carries a marker row
-    (bin = -1, n = last applied batch id; real bins are ≥ 0) and
+    SUM-merge is not idempotent, so each commit records the last
+    applied batch id as the summary property ``applied_batch_id`` and
     replayed batches are skipped — atomic via the VERSION swap."""
     from osm_spark.operators.sketch import hist_sketch
     from osm_spark.sources.manifest_table import ManifestTable
@@ -354,29 +352,24 @@ def stream_hist_maintenance(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         t = ManifestTable(spark, table_path)
+        applied = t.summary_prop(_APPLIED_BATCH)
+        if applied is not None and applied >= batch_id:
+            return  # replay of an already-applied batch: no-op
         vals = batch_df.select(
             F.expr(value_expr).cast("long").alias("v")
         )
         counts = hist_sketch(vals, "v", lo, hi, n_bins)
-        if t.exists():
-            cur = t.read()
-            marker = cur.where(F.col("bin") == -1).select("n").first()
-            if marker is not None and marker["n"] >= batch_id:
-                return  # replay of an already-applied batch: no-op
+        if applied is not None:
             counts = (
-                cur.where(F.col("bin") >= 0)
+                t.read()
                 .unionByName(counts)
                 .groupBy("bin")
                 .agg(F.sum("n").alias("n"))
             )
-        marker_row = spark.createDataFrame(
-            [(-1, batch_id)], "bin int, n long"
-        )
         t.write(
-            counts.select(
-                F.col("bin").cast("int"), F.col("n").cast("long")
-            ).unionByName(marker_row),
+            counts.select(F.col("bin").cast("int"), F.col("n").cast("long")),
             mode="overwrite",
+            props={_APPLIED_BATCH: batch_id},
         )
 
     writer = (
@@ -513,11 +506,10 @@ def stream_kmv_maintenance(
     exactly what makes this maintenance EXACT: the maintained table
     is bit-identical to re-sketching the whole corpus from scratch
     (pinned by test_stream_kmv_maintenance), unlike the histogram's
-    bounded-error bins. Idempotent replay via the same marker
-    convention (group = None row carries the last applied batch id);
-    null groups are DROPPED at ingest so a null-``group_expr`` page
-    can never collide with the marker row, and the marker read also
-    requires ``applied IS NOT NULL``."""
+    bounded-error bins. Idempotent replay via the same
+    ``applied_batch_id`` summary property as the hotspot sink; null
+    groups are DROPPED at ingest, so the table holds one (g, hs) row
+    per non-null group."""
     from osm_spark.operators.sketch import _kmv_combine, kmv_sketch
     from osm_spark.sources.manifest_table import ManifestTable
 
@@ -530,24 +522,16 @@ def stream_kmv_maintenance(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         t = ManifestTable(spark, table_path)
+        applied = t.summary_prop(_APPLIED_BATCH)
+        if applied is not None and applied >= batch_id:
+            return  # replayed batch: no-op
         base = batch_df.select(
             F.expr(group_expr).alias("g"), F.expr(key_expr).alias("key")
         ).where(F.expr(group_expr).isNotNull())
         sk = kmv_sketch(base, "key", ["g"], k=k, kernel="combiner")
-        if t.exists():
-            cur = t.read()
-            marker = (
-                cur.where(
-                    F.col("g").isNull() & F.col("applied").isNotNull()
-                )
-                .select("applied")
-                .first()
-            )
-            if marker is not None and marker["applied"] >= batch_id:
-                return  # replayed batch: no-op
+        if applied is not None:
             sk = (
-                cur.where(F.col("g").isNotNull())
-                .select("g", "hs")
+                t.read()
                 .unionByName(sk)
                 .groupBy("g")
                 .agg(
@@ -556,15 +540,11 @@ def stream_kmv_maintenance(
                     ).alias("hs")
                 )
             )
-        out = sk.select(
-            "g", "hs", F.lit(None).cast("long").alias("applied")
-        ).unionByName(
-            spark.createDataFrame(
-                [(None, None, batch_id)],
-                "g string, hs array<long>, applied long",
-            )
+        t.write(
+            sk.select("g", "hs"),
+            mode="overwrite",
+            props={_APPLIED_BATCH: batch_id},
         )
-        t.write(out, mode="overwrite")
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

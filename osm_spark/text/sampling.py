@@ -95,7 +95,7 @@ def write_split_tables(
     splits, and any historical train/val/test state is reproducible by
     reading the split tables at matching versions. Per-split row
     counts and content hashes live in each table's snapshot summary
-    (one lineage pass per split commit).
+    (counted by the job that writes each split commit).
 
     Returns {split_name: ManifestTable}.
     """

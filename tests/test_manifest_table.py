@@ -10,11 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from osm_spark.sources.manifest_table import (
-    CommitConflict,
-    ManifestTable,
-    _file_lineage,
-)
+from osm_spark.sources.manifest_table import CommitConflict, ManifestTable
 
 
 def _df(spark, lo, hi):
@@ -87,16 +83,17 @@ def test_commit_conflict_detected(spark, tmp_path, monkeypatch):
     t = ManifestTable(spark, str(tmp_path / "t"))
     t.write(_df(spark, 0, 10))
 
-    real = mt._file_lineage
+    real = mt.ManifestTable._write_files
 
-    def racing_lineage(s, files):
+    def racing_write(self, df, stats_cols):
         # Another writer advances the table inside our load->commit
         # window (simulated by bumping VERSION directly).
+        out = real(self, df, stats_cols)
         with open(t._version_file(), "w") as fh:
             fh.write("7")
-        return real(s, files)
+        return out
 
-    monkeypatch.setattr(mt, "_file_lineage", racing_lineage)
+    monkeypatch.setattr(mt.ManifestTable, "_write_files", racing_write)
     with pytest.raises(CommitConflict):
         t.write(_df(spark, 0, 5))
     assert t.current_version() == 7  # the "other writer" won
@@ -112,20 +109,20 @@ def test_commit_conflict_same_version_never_clobbers_winner(spark, tmp_path, mon
     t = ManifestTable(spark, str(tmp_path / "t"))
     t.write(_df(spark, 0, 10))  # v1, base for both racers
 
-    real = mt._file_lineage
+    real = mt.ManifestTable._write_files
     winner = ManifestTable(spark, str(tmp_path / "t"))
 
     state = {"fired": False}
 
-    def racing_lineage(s, files):
-        out = real(s, files)
+    def racing_write(self, df, stats_cols):
+        out = real(self, df, stats_cols)
         if not state["fired"]:
             state["fired"] = True  # the winner commits v2 inside our window
-            monkeypatch.setattr(mt, "_file_lineage", real)
+            monkeypatch.setattr(mt.ManifestTable, "_write_files", real)
             winner.write(_df(spark, 100, 150), mode="append")
         return out
 
-    monkeypatch.setattr(mt, "_file_lineage", racing_lineage)
+    monkeypatch.setattr(mt.ManifestTable, "_write_files", racing_write)
     with pytest.raises(CommitConflict):
         t.write(_df(spark, 0, 5), mode="append")
     # The winner's commit is intact: v2 readable, rows preserved.
@@ -375,8 +372,9 @@ def test_merge_upsert_updates_and_inserts(spark, tmp_path):
 def test_merge_rewrites_only_affected_files(spark, tmp_path):
     t = ManifestTable(spark, str(tmp_path / "t"))
     # 4 files, one key each — a 1-key merge must carry 3 untouched
-    t.write(_kv(spark, [(i, f"v{i}") for i in range(4)]).repartition(4, "k"))
+    t.write(_kv(spark, [(i, f"v{i}") for i in range(4)]).repartitionByRange(4, "k"))
     before = {e["path"] for e in t.lineage()}
+    assert [e["rows"] for e in t.lineage()] == [1, 1, 1, 1]
     res = t.merge(_kv(spark, [(2, "NEW")]), on=["k"])
     after = {e["path"] for e in t.lineage()}
     assert res["files_carried"] >= 2

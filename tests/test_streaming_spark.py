@@ -302,8 +302,9 @@ def test_stream_hotspot_maintenance(spark, tmp_path):
     maintained counts equal the batch cell_counts of ALL pages;
     hotspot clusters derived from the table equal grid_clusters on
     the full point set; an intermediate version is a valid partial
-    count table; replaying an applied batch is a no-op (marker-row
-    transactional dedup — SUM-merge is not idempotent by itself)."""
+    count table; replaying an applied batch is a no-op (the snapshot
+    summary's applied_batch_id — SUM-merge is not idempotent by
+    itself)."""
     from osm_spark.data.pages import PagesSpec, pages_df
     from osm_spark.sources.manifest_table import ManifestTable
     from osm_spark.spatial.geoparse import geoparse_pages
@@ -359,18 +360,19 @@ def test_stream_hotspot_maintenance(spark, tmp_path):
     assert from_table == from_points and from_table
 
     # replay dedup: same checkpoint + no new files commits nothing
-    marker = t.read().where(F.col("cell") == -1).collect()[0]
+    applied = t.snapshot()["summary"]["applied_batch_id"]
+    assert t.read().where(F.col("cell") < 0).count() == 0
     before_version = t.current_version()
     q2 = stream_hotspot_maintenance(
         spark, src, tbl, level, ck, max_files_per_trigger=2
     )
     q2.awaitTermination(300)
     assert t.current_version() == before_version
-    assert marker["n_points"] >= 0
+    assert applied >= 0
 
-    # marker-row dedup proper: a FRESH checkpoint re-delivers every
+    # applied-id dedup proper: a FRESH checkpoint re-delivers every
     # batch (ids restart at 0 — the at-least-once replay shape); the
-    # marker says those ids are already applied, so every batch is a
+    # summary says those ids are already applied, so every batch is a
     # no-op and neither the version nor the counts move.
     ck2 = str(tmp_path / "cells_ck_replay")
     q3 = stream_hotspot_maintenance(
@@ -389,7 +391,7 @@ def test_stream_hist_maintenance(spark, tmp_path):
     after the stream drains the maintained bins equal the batch
     hist_sketch of ALL pages; quantiles derived from the table equal
     batch quantiles; an intermediate version is a valid partial
-    count table; a fresh-checkpoint full replay is a marker-row no-op."""
+    count table; a fresh-checkpoint full replay is a no-op."""
     from osm_spark.data.pages import PagesSpec, pages_df
     from osm_spark.operators.sketch import hist_quantiles, hist_sketch
     from osm_spark.sources.manifest_table import ManifestTable
@@ -440,8 +442,8 @@ def test_stream_hist_maintenance(spark, tmp_path):
     final = dict(got)
     assert mid and all(final[b] >= n for b, n in mid.items())
 
-    # fresh-checkpoint full replay: batch ids restart at 0, the marker
-    # says they are applied — version and counts must not move.
+    # fresh-checkpoint full replay: batch ids restart at 0, the
+    # summary says they are applied — version and counts must not move.
     before_version = t.current_version()
     ck2 = str(tmp_path / "hist_ck_replay")
     q2 = stream_hist_maintenance(
@@ -454,11 +456,34 @@ def test_stream_hist_maintenance(spark, tmp_path):
     ) == got
 
 
+def test_stream_hist_maintenance_refuses_marker_table(spark, tmp_path):
+    """A table committed without the applied_batch_id summary property
+    (the older marker-row format) is refused with "rebuild", never
+    SUM-merged into."""
+    from pyspark.errors import StreamingQueryException
+
+    from osm_spark.data.pages import PagesSpec, pages_df
+    from osm_spark.sources.manifest_table import ManifestTable
+    from osm_spark.streaming.pages_stream import stream_hist_maintenance
+
+    src = str(tmp_path / "pages_src_old")
+    pages_df(spark, PagesSpec(n_pages=100, n_countries=1)).write.parquet(src)
+    tbl = str(tmp_path / "hist_tbl_old")
+    old = ManifestTable(spark, tbl)
+    old.write(spark.createDataFrame([(-1, 5), (3, 7)], "bin int, n long"))
+    q = stream_hist_maintenance(
+        spark, src, tbl, str(tmp_path / "hist_ck_old"), 0, 2048, 64
+    )
+    with pytest.raises(StreamingQueryException, match="rebuild"):
+        q.awaitTermination(300)
+    assert old.current_version() == 1
+
+
 def test_stream_kmv_maintenance(spark, tmp_path):
     """Streamed KMV maintenance: the maintained sketch table is
     BIT-IDENTICAL to re-sketching the full corpus batch-side (the
     mergeable-sketch exactness claim), estimates agree, and a
-    fresh-checkpoint replay is a marker no-op."""
+    fresh-checkpoint replay is a no-op."""
     from osm_spark.data.pages import PagesSpec, pages_df
     from osm_spark.operators.sketch import kmv_estimate, kmv_sketch
     from osm_spark.sources.manifest_table import ManifestTable
@@ -501,7 +526,7 @@ def test_stream_kmv_maintenance(spark, tmp_path):
     }
     assert est == est_batch
 
-    # fresh-checkpoint replay: marker says applied — no version bump
+    # fresh-checkpoint replay: summary says applied — no version bump
     before = t.current_version()
     ck2 = str(tmp_path / "kmv_ck_replay")
     q2 = stream_kmv_maintenance(
@@ -513,9 +538,8 @@ def test_stream_kmv_maintenance(spark, tmp_path):
 
 
 def test_stream_kmv_null_group_no_marker_collision(spark, tmp_path):
-    """A null-``group_expr`` page must NOT collide with the g-IS-NULL
-    marker row: null groups are dropped at ingest, the marker read
-    requires applied IS NOT NULL, replay stays a no-op, and the
+    """A null-``group_expr`` page must NOT land in the table: null
+    groups are dropped at ingest, replay stays a no-op, and the
     maintained table equals the batch sketch over non-null groups."""
     from osm_spark.data.pages import PagesSpec, pages_df
     from osm_spark.operators.sketch import kmv_sketch
@@ -554,9 +578,9 @@ def test_stream_kmv_null_group_no_marker_collision(spark, tmp_path):
     want = {r["lang"]: r["hs"] for r in batch.collect()}
     got = {r["g"]: r["hs"] for r in live.collect()}
     assert got == want
-    # exactly one marker row, and it carries a real batch id
-    markers = t.read().where(F.col("g").isNull()).collect()
-    assert len(markers) == 1 and markers[0]["applied"] is not None
+    # no null-group row; the applied batch id rides the summary
+    assert t.read().where(F.col("g").isNull()).count() == 0
+    assert t.snapshot()["summary"]["applied_batch_id"] is not None
 
     before = t.current_version()
     ck2 = str(tmp_path / "kmv_ck_null_replay")
