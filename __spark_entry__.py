@@ -7322,7 +7322,6 @@ def _q_kmeans_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         model.read()
-        .where(F.col("cid") >= 0)
         .select(
             F.col("cid").cast("int").alias("cluster_id"),
             F.col("n").alias("n_points"),

@@ -17,8 +17,9 @@ or are disjoint but never partially overlap (the reference itself assumes
 this — poly.go:237 "TODO: check polygons do not intersect").
 
 This module also holds the engine's ONE point-in-polygon kernel, used by
-every caller (ring nesting here, the PIP index / catalyst / cogroup /
-streaming refinement, centroid validation, covering, polygon overlap):
+every caller (ring nesting here, the one PIP boundary refine that the
+index, catalyst and streaming paths share, centroid validation,
+covering, polygon overlap):
 ``orient`` (orientation sign, float64 filter with Shewchuk's error bound
 plus a Python-int recheck), ``edge_hits`` (the per (point, edge) crossing
 and on-edge rule), ``locate`` (inside / on / outside per point for one
@@ -215,10 +216,10 @@ def locate(segs: Segs, px: np.ndarray, py: np.ndarray) -> np.ndarray:
 
     Edges are first SLICED to the point group's extent (``edge_hits``:
     the others contribute nothing to any of its points), then the
-    dense (points x edges) work is TILED under ``TILE_ELEMS``. The
-    PIP index refines its boundary candidates through ``edge_hits`` on
+    dense (points x edges) work is TILED under ``TILE_ELEMS``. Both PIP
+    paths refine their boundary candidates through ``edge_hits`` on
     flat (point, edge) pairs instead, with per-cell edge slices built
-    ahead of time (``spatial.pip_index``).
+    ahead of time (``spatial.pip_index.refine``).
     """
     n = len(px)
     if n == 0:

@@ -23,7 +23,7 @@ _log = logging.getLogger("osm_spark.spatial")
 
 from osm_spark.spatial.covering import build_polygon_cells, polygon_geometry
 from osm_spark.spatial.geoparse import geoparse_pages
-from osm_spark.spatial.pip_join import REFINE_SHARDS, pip_join
+from osm_spark.spatial.pip_join import pip_join
 from osm_spark.spatial.tiles import tile_assignments
 
 
@@ -42,11 +42,12 @@ def run_spatial_pipeline(
     """``mode="index"``: the page side streams through ONE mapInPandas
     pass against a broadcast covering+geometry index — no explode, no
     join, no shuffle on the 10^12-row side (see pip_index.py).
-    ``mode="catalyst"``: anchor-pruned cell equi-join + sharded cogroup
-    refinement (see pip_join.py) — the path for polygon sides too large
-    to broadcast as one index; nothing polygon-sized is broadcast, and
-    AQE's skew-join split is its hot-cell guard (logged, with a warning
-    when it is off). ``mode="auto"`` (default) measures the covering +
+    ``mode="catalyst"``: anchor-pruned cell equi-join whose boundary
+    matches carry their cell's edge slice and are refined row-locally
+    by the index's own refine (see pip_join.py) — the path for polygon
+    sides too large to broadcast as one index; nothing polygon-sized is
+    broadcast, and AQE's skew-join split is its hot-cell guard (logged,
+    with a warning when it is off). ``mode="auto"`` (default) measures the covering +
     ring sizes (two tiny aggregates over the SMALL side, nothing
     collected) and picks: index when the estimated broadcast fits
     ``index_max_bytes`` (default pip_index.INDEX_MAX_BYTES), catalyst
@@ -123,13 +124,12 @@ def run_spatial_pipeline(
         # AQE's skew split is the only hot-cell guard on the cell join.
         _log.log(
             logging.INFO if aqe == skew == "true" else logging.WARNING,
-            "PIP catalyst: refine cogroup over %d shards per polygon;"
-            " spark.sql.adaptive.skewJoin.enabled=%s,"
+            "PIP catalyst: spark.sql.adaptive.skewJoin.enabled=%s,"
             " spark.sql.adaptive.enabled=%s",
-            REFINE_SHARDS, skew, aqe,
+            skew, aqe,
         )
         pip = pip_join(
-            points.select("point_id", "lon", "lat"), pcells, pgeom
+            points.select("point_id", "lon", "lat"), pcells
         ).select("point_id", "rel_id")
 
     admin_levels = kept.select(

@@ -9,27 +9,33 @@ decomposition; the quadtree kernel is osm_spark.kernels.cells
 
 Runs as mapInPandas over the locations checkpoint: one covering per
 polygon, Arrow-batched. Output is the cell↔polygon table — the small,
-explode-once side of the PIP join.
+explode-once side of the PIP join. Each boundary row also carries its
+cell's edge slice (``edges``: the polygon edges exact PIP needs for a
+point in that cell, ``pip_index.edges_column``), so the catalyst join
+brings every boundary candidate the geometry it is refined against.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_spark.kernels.cells import cover_polygon
+from osm_spark.kernels.poly import xy_rings
+from osm_spark.spatial.pip_index import edges_column
 
-CELLS_SCHEMA = "rel_id long, poly_idx int, cell long, interior boolean"
+CELLS_SCHEMA = "rel_id long, poly_idx int, cell long, interior boolean, edges array<long>"
 
 
 def build_polygon_cells(
     locations: DataFrame, min_level: int = 4, max_level: int = 12
 ) -> DataFrame:
-    """(rel_id, poly_idx, cell, interior) covering of every polygon of
-    every relation's multipolygon."""
+    """(rel_id, poly_idx, cell, interior, edges) covering of every
+    polygon of every relation's multipolygon."""
 
     # Spread polygons across tasks: the source table has few rows, and
     # covering cost varies per polygon — round-robin repartition keeps
@@ -41,21 +47,28 @@ def build_polygon_cells(
 
     def cover(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out_rel, out_idx, out_cell, out_int = [], [], [], []
+            out_rel, out_idx, out_cell, out_int, geom = [], [], [], [], {}
             for row in pdf.itertuples():
                 cells, interior = cover_polygon(
                     row.poly, min_level=min_level, max_level=max_level
                 )
-                out_rel.extend([int(row.rel_id)] * len(cells))
-                out_idx.extend([int(row.poly_idx)] * len(cells))
+                key = (int(row.rel_id), int(row.poly_idx))
+                geom[key] = xy_rings(row.poly)
+                out_rel.extend([key[0]] * len(cells))
+                out_idx.extend([key[1]] * len(cells))
                 out_cell.extend(cells)
                 out_int.extend(interior)
+            cells = np.asarray(out_cell, dtype=np.int64)
+            rel = np.asarray(out_rel, dtype=np.int64)
+            idx = np.asarray(out_idx, dtype=np.int64)
+            interior = np.asarray(out_int, dtype=bool)
             yield pd.DataFrame(
                 {
-                    "rel_id": out_rel,
-                    "poly_idx": out_idx,
-                    "cell": out_cell,
-                    "interior": out_int,
+                    "rel_id": rel,
+                    "poly_idx": idx.astype(np.int32),
+                    "cell": cells,
+                    "interior": interior,
+                    "edges": edges_column(cells, rel, idx, interior, geom),
                 }
             )
 

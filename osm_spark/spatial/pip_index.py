@@ -30,9 +30,12 @@ batch numpy operation.
 
 When the index would exceed the broadcast budget,
 ``run_spatial_pipeline(mode="auto")`` falls back to ``pip_join``
-(catalyst mode: cell equi-join + sharded cogroup refinement, nothing
-polygon-sized broadcast) — equality of the two paths is pinned by
-tests and by ``perfbench/pin.py --check``.
+(catalyst mode: cell equi-join, nothing polygon-sized broadcast). Both
+paths refine with the same two functions here: ``edge_slices`` builds
+the per-cell slices (for the index lazily per process; for catalyst in
+the covering pass, stored per boundary row as the ``edges`` column of
+``polygon_cells``, see ``edges_column`` / ``column_slices``), and
+``refine`` runs the flat (candidate, edge) parity pass over them.
 """
 
 from __future__ import annotations
@@ -50,7 +53,6 @@ from osm_spark.kernels.poly import (
     TILE_ELEMS,
     edge_hits,
     grid_segments,
-    polygon_contains,
     to_grid,
     xy_rings,
 )
@@ -97,6 +99,181 @@ def _expand(lo: np.ndarray, cnt: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return owner, pos
 
 
+def edge_slices(cells, rel, poly, interior, geom) -> EdgeSlices:
+    """``EdgeSlices`` of aligned covering rows (cell, rel, poly,
+    interior) over ``geom``: (rel, poly) -> degree rings. Built
+    vectorized per polygon (its edge table) and per covering level
+    (band membership, sort, per-cell prefix lengths), never per cell.
+    Interior rows, and rows whose polygon has no geometry, own no
+    units."""
+    keys = list(geom)
+    gid_of = {k: i for i, k in enumerate(keys)}
+    tables = [
+        (gid, ring, segs.edges)
+        for gid, k in enumerate(keys)
+        for ring, segs in enumerate(grid_segments(geom[k]))
+    ]
+    edges = np.concatenate([t[2] for t in tables], axis=1) if tables else np.empty((8, 0))
+    sizes = [t[2].shape[1] for t in tables]
+    e_gid = np.repeat(np.array([t[0] for t in tables], dtype=np.int64), sizes)
+    e_ring = np.repeat(np.array([t[1] for t in tables], dtype=np.int64), sizes)
+    # maxx as an int64 sort key, descending: grid values are exact
+    # integers, and clipping to int32 keeps every >= comparison
+    # against an in-range cell bound.
+    e_desc = (2**31 - 1) - np.clip(edges[5], -(2**31), 2**31 - 1).astype(np.int64)
+
+    lvl = cells & 0x3F
+    refs, unit_row, unit_ring, unit_start, unit_len = [], [], [], [], []
+    n_refs = 0
+    for lv in np.unique(lvl[~interior]).tolist():
+        rows = ((lvl == lv) & ~interior).nonzero()[0]
+        pairs, inv = np.unique(
+            np.stack([rel[rows], poly[rows]], axis=1), axis=0, return_inverse=True
+        )
+        pair_gid = np.array([gid_of.get((int(r), int(p)), -1) for r, p in pairs], dtype=np.int64)
+        gid = pair_gid[inv.reshape(-1)]
+        rows = rows[gid >= 0]
+        gid = gid[gid >= 0]
+        if len(rows) == 0 or len(edges[0]) == 0:
+            continue
+        n = 1 << lv
+        cx, cy = cells_xy(cells[rows])
+        # Bands: (polygon, cell row) pairs that hold a boundary cell.
+        bands = np.unique(gid * n + cy)
+        h = 2 * _GRID_LAT / n
+        r0, r1 = (
+            np.clip(np.floor((v + _GRID_LAT) / h), 0, n - 1).astype(np.int64)
+            for v in (edges[6] - _SLICE_PAD, edges[7] + _SLICE_PAD)
+        )
+        lo = np.searchsorted(bands, e_gid * n + r0, side="left")
+        hi = np.searchsorted(bands, e_gid * n + r1, side="right")
+        edge, band = _expand(lo, hi - lo)
+        order = np.lexsort((e_desc[edge], e_ring[edge], band))
+        edge, band = edge[order], band[order]
+        ring = e_ring[edge]
+        # Units: runs of one (band, ring); their refs are contiguous.
+        new = np.ones(len(edge), dtype=bool)
+        new[1:] = (band[1:] != band[:-1]) | (ring[1:] != ring[:-1])
+        u_first = new.nonzero()[0]
+        u_band = band[u_first]
+        u_key = np.arange(len(u_first), dtype=np.int64) << 32
+        ref_key = np.repeat(u_key, np.diff(np.append(u_first, len(edge)))) | e_desc[edge]
+        # Each boundary row takes every unit of its band, cut to the
+        # prefix with maxx >= the cell's padded west bound (none at
+        # column 0, which also holds points clipped from beyond it).
+        b = np.searchsorted(bands, gid * n + cy)
+        ulo = np.searchsorted(u_band, b, side="left")
+        uhi = np.searchsorted(u_band, b, side="right")
+        row_k, unit = _expand(ulo, uhi - ulo)
+        xmin = (cx * (2 * _GRID_LON / n) - _GRID_LON - _SLICE_PAD)[row_k]
+        xmin[cx[row_k] == 0] = -np.inf
+        q = (2**31 - 1) - np.clip(np.floor(xmin), -(2**31), 2**31 - 1).astype(np.int64)
+        cnt = np.searchsorted(ref_key, u_key[unit] | q, side="right") - u_first[unit]
+        keep = cnt > 0
+        refs.append(edge)
+        unit_row.append(rows[row_k[keep]])
+        unit_ring.append(ring[u_first[unit[keep]]])
+        unit_start.append(n_refs + u_first[unit[keep]])
+        unit_len.append(cnt[keep])
+        n_refs += len(edge)
+    refs, unit_row, unit_ring, unit_start, unit_len = (
+        np.concatenate([np.empty(0, dtype=np.int64), *parts])
+        for parts in (refs, unit_row, unit_ring, unit_start, unit_len)
+    )
+    # Units grouped by row (each row's stay in ring order).
+    order = np.argsort(unit_row, kind="stable")
+    ptr = np.zeros(len(cells) + 1, dtype=np.int64)
+    np.cumsum(np.bincount(unit_row, minlength=len(cells)), out=ptr[1:])
+    return EdgeSlices(edges, refs, ptr, unit_ring[order], unit_start[order], unit_len[order])
+
+
+def refine(sl: EdgeSlices, rows: np.ndarray, px: np.ndarray, py: np.ndarray) -> np.ndarray:
+    """Strict containment of grid points in the polygons of their
+    boundary covering rows (``sl``'s row ``rows[i]`` for point i), in
+    one flat pass: the (point, edge) pairs of every (candidate, ring)
+    unit go through ``kernels.poly.edge_hits`` in chunks whose gathered
+    edge block stays under ``TILE_ELEMS`` elements; crossing parity and
+    on-edge hits are summed per unit with ``bincount``, carried across
+    chunks. Inside = odd parity on the outer ring, even on every hole,
+    on no ring (``polygon_contains``'s rule, and its rows: the slices
+    only drop edges that cannot matter). A row that owns no units
+    (missing geometry) contains nothing.
+    """
+    ptr = sl.unit_ptr
+    cand, u = _expand(ptr[rows], ptr[rows + 1] - ptr[rows])
+    ulen = sl.unit_len[u]
+    ends = np.cumsum(ulen)
+    starts = ends - ulen
+    ref0 = sl.unit_start[u] - starts  # pair p of unit i reads refs[ref0[i] + p]
+    cross = np.zeros(len(u), dtype=np.int64)
+    on = np.zeros(len(u), dtype=bool)
+    step = max(1, TILE_ELEMS // len(sl.edges))  # pairs per (8, step) edge block
+    total = int(ends[-1]) if len(u) else 0
+    for p0 in range(0, total, step):
+        p1 = min(p0 + step, total)
+        u0 = int(np.searchsorted(ends, p0, side="right"))
+        u1 = int(np.searchsorted(starts, p1, side="left"))
+        pu = np.repeat(
+            np.arange(u0, u1),
+            np.minimum(ends[u0:u1], p1) - np.maximum(starts[u0:u1], p0),
+        )
+        k = cand[pu]
+        c, o = edge_hits(sl.edges[:, sl.refs[ref0[pu] + np.arange(p0, p1)]], px[k], py[k])
+        cross[u0:u1] += np.bincount(pu[c] - u0, minlength=u1 - u0)
+        on[u0:u1] |= np.bincount(pu[o] - u0, minlength=u1 - u0) > 0
+    odd = (cross & 1).astype(bool)
+    outer = sl.unit_ring[u] == 0
+    n = len(rows)
+    inside = np.bincount(cand[odd & outer], minlength=n) > 0
+    out = np.bincount(cand[(odd & ~outer) | on], minlength=n) > 0
+    return inside & ~out
+
+
+def edges_column(cells, rel, poly, interior, geom) -> list:
+    """The ``edges`` column of aligned covering rows over ``geom`` (see
+    ``edge_slices``): each boundary row's slice as one flat int64 array
+    of five values per edge, its ring number then the grid-unit
+    endpoints x1, y1, x2, y2; None on interior rows.
+    ``column_slices`` reads it back."""
+    sl = edge_slices(cells, rel, poly, interior, geom)
+    u, pos = _expand(sl.unit_start, sl.unit_len)
+    flat = np.vstack([sl.unit_ring[u], sl.edges[:4, sl.refs[pos]]]).T.astype(np.int64).ravel()
+    owner = np.repeat(np.arange(len(cells)), np.diff(sl.unit_ptr))
+    end = 5 * np.cumsum(np.bincount(owner, weights=sl.unit_len, minlength=len(cells)).astype(np.int64))
+    start = np.append(0, end[:-1])
+    return [
+        None if i else flat[a:b]
+        for i, a, b in zip(interior.tolist(), start.tolist(), end.tolist())
+    ]
+
+
+def column_slices(values) -> EdgeSlices:
+    """``EdgeSlices`` with one covering row per ``edges_column`` value
+    (None: the row owns no units). A row's units are its runs of one
+    ring; the bbox rows of ``edges`` are derived here."""
+    lens = np.fromiter((0 if v is None else len(v) // 5 for v in values), np.int64, len(values))
+    flat = np.concatenate(
+        [np.empty(0, dtype=np.int64), *(v for v in values if v is not None)]
+    ).reshape(-1, 5)
+    ring = flat[:, 0]
+    x1, y1, x2, y2 = flat[:, 1:].T.astype(np.float64)
+    edges = np.stack([
+        x1, y1, x2, y2,
+        np.minimum(x1, x2), np.maximum(x1, x2),
+        np.minimum(y1, y2), np.maximum(y1, y2),
+    ])
+    row = np.repeat(np.arange(len(values)), lens)
+    new = np.ones(len(ring), dtype=bool)
+    new[1:] = (row[1:] != row[:-1]) | (ring[1:] != ring[:-1])
+    start = new.nonzero()[0]
+    ptr = np.zeros(len(values) + 1, dtype=np.int64)
+    np.cumsum(np.bincount(row[start], minlength=len(values)), out=ptr[1:])
+    return EdgeSlices(
+        edges, np.arange(len(ring)), ptr, ring[start], start,
+        np.diff(np.append(start, len(ring))),
+    )
+
+
 class PipIndex:
     """Picklable covering + geometry index (built driver-side from the
     small polygon side, broadcast to executors).
@@ -113,11 +290,9 @@ class PipIndex:
         self.levels = levels
         self.per_level = per_level
         self.geom = geom
-        # Derived data for the exact kernel, built lazily per process
-        # and left out of the broadcast pickle so the shipped index
-        # stays geometry-sized: per-polygon grid-unit edge tables
-        # (``contains``) and the per-cell edge slices (``join``).
-        self._segs: dict = {}
+        # The covering rows' edge slices (``join``): built lazily per
+        # process and left out of the broadcast pickle, so the shipped
+        # index stays geometry-sized.
         self._slices: EdgeSlices | None = None
 
     @classmethod
@@ -135,21 +310,12 @@ class PipIndex:
 
     def __getstate__(self):
         d = self.__dict__.copy()
-        d["_segs"] = {}
         del d["_slices"]
         return d
 
     def __setstate__(self, state):
         self.__dict__.update(state)
         self._slices = None
-
-    def _ring_segs(self, rel: int, poly: int):
-        """Per-ring grid-unit edge tables for the exact kernel (cached)."""
-        key = (rel, poly)
-        cached = self._segs.get(key)
-        if cached is None:
-            cached = self._segs[key] = grid_segments(self.geom[key])
-        return cached
 
     # -- candidate gather (vectorized) ------------------------------------
 
@@ -189,157 +355,24 @@ class PipIndex:
     def join(self, lons: np.ndarray, lats: np.ndarray):
         """(point_idx, rel, poly) for every polygon that strictly
         contains a point: interior-cell hits are accepted as they are,
-        boundary-cell hits are refined all at once by ``_refine``.
+        boundary-cell hits are refined all at once by ``refine``.
         """
         pt, rel, poly, keep, _cell, row = self._gather(lons, lats)
         b = (~keep).nonzero()[0]
         if len(b):
-            keep[b] = self._refine(row[b], to_grid(lons[pt[b]]), to_grid(lats[pt[b]]))
+            keep[b] = refine(self.slices(), row[b], to_grid(lons[pt[b]]), to_grid(lats[pt[b]]))
         return pt[keep], rel[keep], poly[keep]
 
-    def _refine(self, rows: np.ndarray, px: np.ndarray, py: np.ndarray) -> np.ndarray:
-        """Strict containment of grid points in the polygons of their
-        boundary covering rows, in one flat pass: the (point, edge)
-        pairs of every (candidate, ring) unit go through
-        ``kernels.poly.edge_hits`` in chunks whose gathered edge block
-        stays under ``TILE_ELEMS`` elements; crossing parity and
-        on-edge hits are summed per unit with ``bincount``, carried
-        across chunks. Inside = odd parity on the outer ring, even on
-        every hole, on no ring (``polygon_contains``'s rule, and its
-        rows: the slices only drop edges that cannot matter).
-        Missing geometry owns no units, so its candidates are dropped.
-        """
-        sl = self._edge_slices()
-        ptr = sl.unit_ptr
-        cand, u = _expand(ptr[rows], ptr[rows + 1] - ptr[rows])
-        ulen = sl.unit_len[u]
-        ends = np.cumsum(ulen)
-        starts = ends - ulen
-        ref0 = sl.unit_start[u] - starts  # pair p of unit i reads refs[ref0[i] + p]
-        cross = np.zeros(len(u), dtype=np.int64)
-        on = np.zeros(len(u), dtype=bool)
-        step = max(1, TILE_ELEMS // len(sl.edges))  # pairs per (8, step) edge block
-        total = int(ends[-1]) if len(u) else 0
-        for p0 in range(0, total, step):
-            p1 = min(p0 + step, total)
-            u0 = int(np.searchsorted(ends, p0, side="right"))
-            u1 = int(np.searchsorted(starts, p1, side="left"))
-            pu = np.repeat(
-                np.arange(u0, u1),
-                np.minimum(ends[u0:u1], p1) - np.maximum(starts[u0:u1], p0),
-            )
-            k = cand[pu]
-            c, o = edge_hits(sl.edges[:, sl.refs[ref0[pu] + np.arange(p0, p1)]], px[k], py[k])
-            cross[u0:u1] += np.bincount(pu[c] - u0, minlength=u1 - u0)
-            on[u0:u1] |= np.bincount(pu[o] - u0, minlength=u1 - u0) > 0
-        odd = (cross & 1).astype(bool)
-        outer = sl.unit_ring[u] == 0
-        n = len(rows)
-        inside = np.bincount(cand[odd & outer], minlength=n) > 0
-        out = np.bincount(cand[(odd & ~outer) | on], minlength=n) > 0
-        return inside & ~out
-
-    def _edge_slices(self) -> EdgeSlices:
-        """Build ``EdgeSlices`` once per process: vectorized per
-        polygon (its edge table) and per covering level (band
-        membership, sort, per-cell prefix lengths), never per cell."""
-        if self._slices is not None:
-            return self._slices
-        keys = list(self.geom)
-        gid_of = {k: i for i, k in enumerate(keys)}
-        tables = [
-            (gid, ring, segs.edges)
-            for gid, k in enumerate(keys)
-            for ring, segs in enumerate(grid_segments(self.geom[k]))
-        ]
-        edges = np.concatenate([t[2] for t in tables], axis=1) if tables else np.empty((8, 0))
-        sizes = [t[2].shape[1] for t in tables]
-        e_gid = np.repeat(np.array([t[0] for t in tables], dtype=np.int64), sizes)
-        e_ring = np.repeat(np.array([t[1] for t in tables], dtype=np.int64), sizes)
-        # maxx as an int64 sort key, descending: grid values are exact
-        # integers, and clipping to int32 keeps every >= comparison
-        # against an in-range cell bound.
-        e_desc = (2**31 - 1) - np.clip(edges[5], -(2**31), 2**31 - 1).astype(np.int64)
-
-        refs, unit_row, unit_ring, unit_start, unit_len = [], [], [], [], []
-        n_refs = first = 0
-        for lv in self.levels:
-            cells, rel, poly, interior = self.per_level[lv]
-            offset, first = first, first + len(cells)
-            rows = (~interior).nonzero()[0]
-            if len(rows):
-                pairs, inv = np.unique(
-                    np.stack([rel[rows], poly[rows]], axis=1), axis=0, return_inverse=True
-                )
-                pair_gid = np.array([gid_of.get((int(r), int(p)), -1) for r, p in pairs], dtype=np.int64)
-                gid = pair_gid[inv.reshape(-1)]
-                rows = rows[gid >= 0]
-                gid = gid[gid >= 0]
-            if len(rows) == 0 or len(edges[0]) == 0:
-                continue
-            n = 1 << lv
-            cx, cy = cells_xy(cells[rows])
-            # Bands: (polygon, cell row) pairs that hold a boundary cell.
-            bands = np.unique(gid * n + cy)
-            h = 2 * _GRID_LAT / n
-            r0, r1 = (
-                np.clip(np.floor((v + _GRID_LAT) / h), 0, n - 1).astype(np.int64)
-                for v in (edges[6] - _SLICE_PAD, edges[7] + _SLICE_PAD)
-            )
-            lo = np.searchsorted(bands, e_gid * n + r0, side="left")
-            hi = np.searchsorted(bands, e_gid * n + r1, side="right")
-            edge, band = _expand(lo, hi - lo)
-            order = np.lexsort((e_desc[edge], e_ring[edge], band))
-            edge, band = edge[order], band[order]
-            ring = e_ring[edge]
-            # Units: runs of one (band, ring); their refs are contiguous.
-            new = np.ones(len(edge), dtype=bool)
-            new[1:] = (band[1:] != band[:-1]) | (ring[1:] != ring[:-1])
-            u_first = new.nonzero()[0]
-            u_band = band[u_first]
-            u_key = np.arange(len(u_first), dtype=np.int64) << 32
-            ref_key = np.repeat(u_key, np.diff(np.append(u_first, len(edge)))) | e_desc[edge]
-            # Each boundary row takes every unit of its band, cut to the
-            # prefix with maxx >= the cell's padded west bound (none at
-            # column 0, which also holds points clipped from beyond it).
-            b = np.searchsorted(bands, gid * n + cy)
-            ulo = np.searchsorted(u_band, b, side="left")
-            uhi = np.searchsorted(u_band, b, side="right")
-            row_k, unit = _expand(ulo, uhi - ulo)
-            xmin = (cx * (2 * _GRID_LON / n) - _GRID_LON - _SLICE_PAD)[row_k]
-            xmin[cx[row_k] == 0] = -np.inf
-            q = (2**31 - 1) - np.clip(np.floor(xmin), -(2**31), 2**31 - 1).astype(np.int64)
-            cnt = np.searchsorted(ref_key, u_key[unit] | q, side="right") - u_first[unit]
-            keep = cnt > 0
-            refs.append(edge)
-            unit_row.append(offset + rows[row_k[keep]])
-            unit_ring.append(ring[u_first[unit[keep]]])
-            unit_start.append(n_refs + u_first[unit[keep]])
-            unit_len.append(cnt[keep])
-            n_refs += len(edge)
-        refs, unit_row, unit_ring, unit_start, unit_len = (
-            np.concatenate([np.empty(0, dtype=np.int64), *parts])
-            for parts in (refs, unit_row, unit_ring, unit_start, unit_len)
-        )
-        ptr = np.zeros(first + 1, dtype=np.int64)
-        np.cumsum(np.bincount(unit_row, minlength=first), out=ptr[1:])
-        self._slices = EdgeSlices(edges, refs, ptr, unit_ring, unit_start, unit_len)
+    def slices(self) -> EdgeSlices:
+        """``edge_slices`` of the covering rows, built once per process."""
+        if self._slices is None:
+            z = (np.empty(0, dtype=np.int64),) * 3 + (np.empty(0, dtype=bool),)
+            rows = [
+                np.concatenate([z[i], *(self.per_level[lv][i] for lv in self.levels)])
+                for i in range(4)
+            ]
+            self._slices = edge_slices(*rows, self.geom)
         return self._slices
-
-    def contains(self, rel: int, poly: int, lons: np.ndarray, lats: np.ndarray):
-        """Exact PIP of points against ONE polygon, boundary excluded:
-        ``kernels.poly.polygon_contains`` on the grid (degrees x 1e7;
-        page degrees round back to lon_u * 10 exactly). ``join`` gives
-        the same rows for a batch of points against the whole index.
-
-        Missing geometry (inconsistent candidate input) matches the
-        historical cogroup drop semantics: no rows, not a task failure.
-        """
-        if len(lons) == 0 or (rel, poly) not in self.geom:
-            return np.zeros(len(lons), dtype=bool)
-        return polygon_contains(
-            self._ring_segs(rel, poly), to_grid(lons), to_grid(lats)
-        )
 
     def edge_distance(
         self,
@@ -360,10 +393,10 @@ class PipIndex:
         lat-degree-equivalent (× 111.195 km if physical units are
         wanted); at one latitude the two metrics rank identically.
 
-        Tiled under the same element budget as ``contains``; no bbox
-        slice (the nearest edge can lie anywhere). Missing geometry →
-        +inf distances (dropped by the caller's top-k), matching the
-        cogroup path's silent-drop semantics on inconsistent input.
+        Tiled under the exact kernel's element budget; no bbox slice
+        (the nearest edge can lie anywhere). Missing geometry → +inf
+        distances (dropped by the caller's top-k), matching ``refine``,
+        which drops candidates without geometry.
         """
         best = np.full(len(lons), np.inf)
         if (rel, poly) not in self.geom:

@@ -5,7 +5,8 @@ embedding corpus grows by snapshot appends, and the cluster model
 (centroids + per-cluster census) must follow WITHOUT re-scanning the
 rows already absorbed. The model is a snapshot-versioned ManifestTable
 of k rows — time-travelable, atomically committed, crash-retry
-idempotent via an applied-source-version marker row.
+idempotent via the applied source version, a snapshot summary property
+committed in the same VERSION swap as the rows.
 
 Update rule (deterministic, append-order-defined):
 
@@ -46,19 +47,15 @@ from osm_spark.text.kmeans import (
     quantize_vectors,
 )
 
-_MARKER_CID = -1
+_APPLIED = "applied_source_version"
 
 
 def read_model(model) -> tuple[list[list[int]], list[int], list[list[int]], int]:
-    """(centroids, counts, sums, applied_version) from a model table."""
-    rows = model.read().collect()
-    applied = None
-    state = {}
-    for r in rows:
-        if r["cid"] == _MARKER_CID:
-            applied = int(r["n"])
-        else:
-            state[int(r["cid"])] = r
+    """(centroids, counts, sums, applied_version) from a model table. A
+    table whose summary lacks the applied version (the older marker-row
+    format) raises a "rebuild" ``ValueError``."""
+    applied = int(model.summary_prop(_APPLIED))
+    state = {int(r["cid"]): r for r in model.read().collect()}
     k = len(state)
     cents = [list(state[j]["centroid"]) for j in range(k)]
     counts = [int(state[j]["n"]) for j in range(k)]
@@ -91,15 +88,12 @@ def _batch_sums(df, cents: list[list[int]], vec_col: str, scale: int):
 
 
 def _write_model(spark, model, cents, counts, sums, applied: int) -> None:
-    dim = len(cents[0])
-    rows = [
-        (j, counts[j], sums[j], cents[j]) for j in range(len(cents))
-    ] + [(_MARKER_CID, applied, [0] * dim, [0] * dim)]
+    rows = [(j, counts[j], sums[j], cents[j]) for j in range(len(cents))]
     df = spark.createDataFrame(
         rows,
         "cid int, n long, sums array<long>, centroid array<long>",
     )
-    model.write(df, mode="overwrite")
+    model.write(df, mode="overwrite", props={_APPLIED: applied})
 
 
 def kmeans_increment(

@@ -125,3 +125,25 @@ def test_empty_cluster_keeps_centroid(spark):
     assert len(moved) == 1 and len(kept) == 1
     assert c2[kept[0]] == c1[kept[0]] and s2[kept[0]] == s1[kept[0]]
     assert n2[moved[0]] == n1[moved[0]] + 1
+
+def test_marker_row_model_refused(spark, src):
+    """A model table in the older format (the applied source version in
+    a cid = -1 marker row, not in the snapshot summary) is refused with
+    "rebuild" instead of being read as a model without one."""
+    rows, df, t, mp = src
+    kmeans_increment(spark, t, mp, k=3, n_iters=1)
+    m = ManifestTable(spark, mp)
+    assert m.snapshot()["summary"]["applied_source_version"] == 1
+    assert sorted(r["cid"] for r in m.read().collect()) == [0, 1, 2]
+    old = m.read().unionByName(
+        spark.createDataFrame(
+            [(-1, 1, [0, 0], [0, 0])],
+            "cid int, n long, sums array<long>, centroid array<long>",
+        ).select(*m.read().columns)
+    )
+    m.write(old.localCheckpoint(eager=True), mode="overwrite")
+    t.write(df.where(F.col("vec_id") % 2 == 1), mode="append")
+    with pytest.raises(ValueError, match="rebuild"):
+        read_model(m)
+    with pytest.raises(ValueError, match="rebuild"):
+        kmeans_increment(spark, t, mp, k=3, n_iters=1)

@@ -4,12 +4,15 @@ the unbounded dense kernel, and a high-vertex (coastline-class) polygon
 must refine under a fixed memory budget instead of materializing
 (points × all-segments) matrices. The index's batch path
 (``PipIndex.join``: flat (point, edge) pairs over per-cell edge slices)
-must give the per-polygon kernel's rows exactly.
+and the catalyst path's row-local refine (each candidate row on the
+slice the covering pass stored for its cell) must give the per-polygon
+kernel's rows exactly.
 """
 
 import tracemalloc
 
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -17,6 +20,7 @@ from hypothesis import strategies as st
 from osm_spark.kernels import poly
 from osm_spark.kernels.cells import cells_xy, cover_polygon, point_to_cell, xy_to_cell
 from osm_spark.spatial import pip_index as P
+from osm_spark.spatial.pip_join import refine_candidates
 
 
 def _star_ring(n, r0, r1, cx=0.0, cy=0.0):
@@ -80,16 +84,22 @@ def _box_cells(x0, y0, x1, y1, level):
     return xy_to_cell(gx.ravel(), gy.ravel(), level)
 
 
-def _index(geom, cover):
-    """PipIndex over ``geom`` with each polygon's covering rows from
-    ``cover(rings) -> (cells, interior)``."""
+def _rows(geom, cover):
+    """Aligned covering rows (cell, rel, poly, interior) of ``geom``,
+    each polygon's from ``cover(rings) -> (cells, interior)``."""
     parts = []
     for (rel, pi), rings in geom.items():
         cells, interior = cover(rings)
         cells = np.asarray(cells, dtype=np.int64)
         n = len(cells)
         parts.append((cells, np.full(n, rel), np.full(n, pi), np.asarray(interior, dtype=bool)))
-    return P.PipIndex.from_cells(*(np.concatenate([p[i] for p in parts]) for i in range(4)), geom)
+    return [np.concatenate([p[i] for p in parts]) for i in range(4)]
+
+
+def _index(geom, cover):
+    """PipIndex over ``geom`` with each polygon's covering rows from
+    ``cover``."""
+    return P.PipIndex.from_cells(*_rows(geom, cover), geom)
 
 
 def _all_boundary(level):
@@ -114,12 +124,40 @@ def _join_rows(idx, lons, lats):
     return set(zip(*(a.tolist() for a in idx.join(lons, lats))))
 
 
-def _contains_rows(idx, lons, lats):
+def _contains(rings, lons, lats):
+    """The per-polygon exact kernel on degree points."""
+    return poly.polygon_contains(poly.grid_segments(rings), poly.to_grid(lons), poly.to_grid(lats))
+
+
+def _contains_rows(geom, lons, lats):
     return {
         (i, rel, pi)
-        for rel, pi in idx.geom
-        for i in idx.contains(rel, pi, lons, lats).nonzero()[0].tolist()
+        for (rel, pi), rings in geom.items()
+        for i in _contains(rings, lons, lats).nonzero()[0].tolist()
     }
+
+
+def _catalyst_rows(geom, cover, lons, lats):
+    """The catalyst path without Spark: the covering pass's rows and
+    ``edges`` column, the cell join's matches (the index's candidate
+    gather over the same rows), interior matches accepted and boundary
+    matches through ``refine_candidates`` in one batch."""
+    cells, rel, pi, interior = rows = _rows(geom, cover)
+    slice_of = dict(zip(zip(cells.tolist(), rel.tolist(), pi.tolist()), P.edges_column(*rows, geom)))
+    pt, c_rel, c_pi, c_int, c_cell = P.PipIndex.from_cells(*rows, geom).candidates(lons, lats)
+    b = ~c_int
+    batch = pd.DataFrame({
+        "point_id": pt[b],
+        "lon": lons[pt[b]],
+        "lat": lats[pt[b]],
+        "rel_id": c_rel[b],
+        "poly_idx": c_pi[b].astype(np.int32),
+        "edges": [slice_of[k] for k in zip(c_cell[b].tolist(), c_rel[b].tolist(), c_pi[b].tolist())],
+    })
+    out = refine_candidates(batch)
+    return set(zip(pt[c_int].tolist(), c_rel[c_int].tolist(), c_pi[c_int].tolist())) | set(
+        zip(out["point_id"].tolist(), out["rel_id"].tolist(), out["poly_idx"].tolist())
+    )
 
 
 @pytest.fixture()
@@ -134,7 +172,7 @@ def test_contains_and_distance_bit_identical(star_index):
     lons = rng.uniform(-12, 12, 4000)
     lats = rng.uniform(-12, 12, 4000)
     np.testing.assert_array_equal(
-        idx.contains(1, 0, lons, lats), _brute_contains(rings, lons, lats)
+        _contains(rings, lons, lats), _brute_contains(rings, lons, lats)
     )
     np.testing.assert_array_equal(
         idx.edge_distance(1, 0, lons, lats), _brute_dist(rings, lons, lats)
@@ -147,12 +185,12 @@ def test_tiny_tile_budget_identical(star_index, monkeypatch):
     rng = np.random.default_rng(11)
     lons = rng.uniform(-12, 12, 1500)
     lats = rng.uniform(-12, 12, 1500)
-    base_c = idx.contains(1, 0, lons, lats)
+    base_c = _contains(rings, lons, lats)
     base_d = idx.edge_distance(1, 0, lons, lats)
     monkeypatch.setattr(P, "TILE_ELEMS", 997)  # prime: ragged tiles
     monkeypatch.setattr(poly, "TILE_ELEMS", 997)  # the exact kernel's own
     idx2 = P.PipIndex([], {}, idx.geom)
-    np.testing.assert_array_equal(idx2.contains(1, 0, lons, lats), base_c)
+    np.testing.assert_array_equal(_contains(rings, lons, lats), base_c)
     np.testing.assert_array_equal(idx2.edge_distance(1, 0, lons, lats), base_d)
     # The batch path chunks its flat pairs under the same budget and
     # carries the per-ring parity across chunks.
@@ -175,9 +213,8 @@ def test_high_vertex_polygon_memory_bound():
     rng = np.random.default_rng(3)
     lons = rng.uniform(-11, 11, 2000)
     lats = rng.uniform(-11, 11, 2000)
-    idx._ring_segs(2, 0)  # build the cache outside the measurement
     tracemalloc.start()
-    got = idx.contains(2, 0, lons, lats)
+    got = _contains(big, lons, lats)
     d = idx.edge_distance(2, 0, lons[:200], lats[:200])
     _, peak = tracemalloc.get_traced_memory()
     tracemalloc.stop()
@@ -203,7 +240,7 @@ def test_high_vertex_polygon_batch_path_memory_bound():
     rng = np.random.default_rng(5)
     lons = rng.uniform(-11, 11, 600)
     lats = rng.uniform(-11, 11, 600)
-    idx._edge_slices()  # build the derived table outside the measurement
+    idx.slices()  # build the derived table outside the measurement
     assert idx._slices.unit_len.max() > 20000
     tracemalloc.start()
     pt, _rel, _poly = idx.join(lons, lats)
@@ -259,7 +296,7 @@ def test_join_matches_contains_on_vertices_and_edges(star_index):
     rng = np.random.default_rng(4)
     lons = np.round(rng.uniform(-12, 18, 20000), 6)
     lats = np.round(rng.uniform(-12, 12, 20000), 6)
-    assert _join_rows(idx, lons, lats) == _contains_rows(idx, lons, lats)
+    assert _join_rows(idx, lons, lats) == _contains_rows(geom, lons, lats)
     pts = np.concatenate([
         np.stack(r, axis=1) for rs in geom.values() for xs, ys in rs
         for r in ((xs, ys), ((xs[:-1] + xs[1:]) / 2, (ys[:-1] + ys[1:]) / 2))
@@ -267,7 +304,7 @@ def test_join_matches_contains_on_vertices_and_edges(star_index):
     for dx in (-1e-6, 0.0, 1e-6):
         for dy in (-1e-6, 0.0, 1e-6):
             lo, la = np.round(pts[:, 0] + dx, 6), np.round(pts[:, 1] + dy, 6)
-            assert _join_rows(idx, lo, la) == _contains_rows(idx, lo, la), (dx, dy)
+            assert _join_rows(idx, lo, la) == _contains_rows(geom, lo, la), (dx, dy)
 
 
 def test_join_points_clipped_into_edge_cells():
@@ -280,7 +317,7 @@ def test_join_points_clipped_into_edge_cells():
     gx, gy = np.meshgrid(np.linspace(-187, -174, 61), np.linspace(-96, -84, 53))
     lons, lats = gx.ravel(), gy.ravel()
     got = _join_rows(idx, lons, lats)
-    assert got == _contains_rows(idx, lons, lats)
+    assert got == _contains_rows(geom, lons, lats)
     assert any(lons[i] < -180 and lats[i] < -90 for i, _, _ in got)
 
 
@@ -296,11 +333,16 @@ def _radial_ring(cx, cy, radii, phase):
 @st.composite
 def _polygons(draw):
     """1-3 star-shaped polygons (micro-degree vertices) with 0-2
-    holes each, possibly overlapping one another."""
+    holes each, possibly overlapping one another; some straddle the
+    world's west or east edge (lon ±180)."""
     geom = {}
     for rel in range(1, draw(st.integers(1, 3)) + 1):
         r = draw(st.integers(100_000, 3_000_000))
-        cx = draw(st.integers(-170_000_000, 170_000_000))
+        side = draw(st.sampled_from([0, 0, -1, 1]))
+        if side:
+            cx = side * draw(st.integers(178_000_000, 181_000_000))
+        else:
+            cx = draw(st.integers(-170_000_000, 170_000_000))
         cy = draw(st.integers(-80_000_000, 80_000_000))
         n = draw(st.integers(3, 12))
         radii = draw(st.lists(st.integers(r // 2, r), min_size=n, max_size=n))
@@ -318,11 +360,15 @@ def _polygons(draw):
 @settings(max_examples=60, deadline=None)
 @given(_polygons(), st.integers(5, 10), st.integers(0, 2**32 - 1))
 def test_join_matches_polygon_contains_property(geom, level, seed):
-    """Random polygons with holes: the batch path (every covering cell
-    refined through the flat pairs) gives exactly the per-polygon
-    kernel's rows on lattice points, vertices, edge midpoints and
-    their ±1 micro-degree neighbours."""
-    idx = _index(geom, _all_boundary(level))
+    """Random polygons with holes: the index's batch path (every
+    covering cell refined through the flat pairs) and the catalyst
+    path (each candidate row refined on the slice the covering pass
+    stored for its cell) give exactly the per-polygon kernel's rows on
+    lattice points, vertices, edge midpoints, points in cell column 0
+    and beyond ±180 (clipped into the edge cells), and their ±1
+    micro-degree neighbours."""
+    cover = _all_boundary(level)
+    idx = _index(geom, cover)
     rings = [r for rs in geom.values() for r in rs]
     x0 = min(xs.min() for xs, _ in rings)
     x1 = max(xs.max() for xs, _ in rings)
@@ -330,6 +376,10 @@ def test_join_matches_polygon_contains_property(geom, level, seed):
     y1 = max(ys.max() for _, ys in rings)
     gx, gy = np.meshgrid(np.linspace(x0, x1, 23), np.linspace(y0, y1, 19))
     pts = [np.stack([gx.ravel(), gy.ravel()], axis=1)]
+    w = 360.0 / (1 << level)
+    for x in (-182.0, -180.5, -180.0, -180.0 + w / 2, -180.0 + w):
+        for lon in (x, -x):
+            pts.append(np.stack([np.full(19, lon), gy[:, 0]], axis=1))
     for xs, ys in rings:
         pts.append(np.stack([xs, ys], axis=1))
         pts.append(np.stack([(xs[:-1] + xs[1:]) / 2, (ys[:-1] + ys[1:]) / 2], axis=1))
@@ -338,16 +388,31 @@ def test_join_matches_polygon_contains_property(geom, level, seed):
     for dx in (-1e-6, 0.0, 1e-6):
         for dy in (-1e-6, 0.0, 1e-6):
             lo, la = np.round(pts[:, 0] + dx, 6), np.round(pts[:, 1] + dy, 6)
-            assert _join_rows(idx, lo, la) == _contains_rows(idx, lo, la)
+            want = _contains_rows(geom, lo, la)
+            assert _join_rows(idx, lo, la) == want
+            assert _catalyst_rows(geom, cover, lo, la) == want
 
 
 def test_missing_geometry_is_dropped_not_fatal(star_index):
-    """Broadcast refinement mirrors the cogroup path's silent-drop
-    semantics for candidates with no geometry entry (ADVICE r2)."""
+    """Candidates with no geometry yield no rows, not a task failure,
+    on both refine paths: an index boundary row whose polygon has no
+    geometry entry, and a catalyst candidate row with a null slice
+    (ADVICE r2). Edge distances to missing geometry are +inf."""
     idx, _ = star_index
     lons = np.array([0.0, 1.0])
     lats = np.array([0.0, 1.0])
-    assert not idx.contains(99, 7, lons, lats).any()
+    cells = np.unique(point_to_cell(lons, lats, 6))
+    n = len(cells)
+    orphan = P.PipIndex.from_cells(
+        cells, np.full(n, 99), np.full(n, 7), np.zeros(n, dtype=bool), idx.geom
+    )
+    assert len(orphan.candidates(lons, lats)[0]) == 2
+    assert all(len(a) == 0 for a in orphan.join(lons, lats))
+    batch = pd.DataFrame({
+        "point_id": [1, 2], "lon": lons, "lat": lats, "rel_id": [99, 99],
+        "poly_idx": np.full(2, 7, dtype=np.int32), "edges": [None, None],
+    })
+    assert len(refine_candidates(batch)) == 0
     assert np.isinf(idx.edge_distance(99, 7, lons, lats)).all()
 
 
@@ -355,23 +420,18 @@ def test_index_pickle_drops_segment_cache(star_index):
     import pickle
 
     idx, _ = star_index
-    idx._ring_segs(1, 0)
-    assert idx._segs
-    clone = pickle.loads(pickle.dumps(idx))
-    assert clone._segs == {}
-    # The per-cell edge slices are derived too: the pickle is the same
-    # size before and after they are built.
+    # The per-cell edge slices are derived: the pickle is the same size
+    # before and after they are built.
     flat = _index(idx.geom, _all_boundary(5))
     size = len(pickle.dumps(flat))
-    flat._edge_slices()
+    flat.slices()
     assert flat._slices is not None
     assert len(pickle.dumps(flat)) == size
-    assert pickle.loads(pickle.dumps(flat))._slices is None
+    clone = pickle.loads(pickle.dumps(flat))
+    assert clone._slices is None
     lons = np.array([0.0, 5.0, 11.0])
     lats = np.array([0.0, 5.0, 11.0])
-    np.testing.assert_array_equal(
-        clone.contains(1, 0, lons, lats), idx.contains(1, 0, lons, lats)
-    )
+    assert _join_rows(clone, lons, lats) == _join_rows(flat, lons, lats) == {(1, 1, 0)}
 
 
 # Two polygons sharing the diagonal edge (1,2)->(4,3) (degrees).
@@ -394,24 +454,22 @@ def _ring_arrays(ring):
 def test_shared_diagonal_edge_lattice_in_neither_polygon():
     """Boundary excluded means a page exactly on a shared border
     belongs to neither side; one micro-degree off it, to exactly one."""
-    idx = P.PipIndex(
-        [], {}, {(1, 0): [_ring_arrays(_LOWER)], (2, 0): [_ring_arrays(_UPPER)]}
-    )
+    lower, upper = [_ring_arrays(_LOWER)], [_ring_arrays(_UPPER)]
     lon_u, lat_u = _edge_lattice(1)
     lons = lon_u / 1e6
-    for rel in (1, 2):
-        assert not idx.contains(rel, 0, lons, lat_u / 1e6).any()
+    for rings in (lower, upper):
+        assert not _contains(rings, lons, lat_u / 1e6).any()
     above, below = (lat_u + 1) / 1e6, (lat_u - 1) / 1e6
-    assert idx.contains(2, 0, lons, above).all()
-    assert not idx.contains(1, 0, lons, above).any()
-    assert idx.contains(1, 0, lons, below).all()
-    assert not idx.contains(2, 0, lons, below).any()
+    assert _contains(upper, lons, above).all()
+    assert not _contains(lower, lons, above).any()
+    assert _contains(lower, lons, below).all()
+    assert not _contains(upper, lons, below).any()
 
 
 def test_shared_diagonal_edge_every_spark_path(spark, tmp_path):
     """The same rule through every page-side path: the index and
-    catalyst (cogroup refinement) pipelines, and the streaming
-    enrichment."""
+    catalyst (row-local refine on the cell join's edge slices)
+    pipelines, and the streaming enrichment."""
     from pyspark.sql import functions as F
 
     from osm_spark.plans.spatial_pipeline import run_spatial_pipeline

@@ -80,27 +80,89 @@ def test_pip_join_exact(spatial):
     assert got == _expected_pairs(pts)
 
 
+def _plan_nodes(df, root=None) -> list:
+    """Every node of ``df``'s executed plan, or of its subtree ``root``
+    (AQE final plan, through query stages and reused exchanges; cached
+    relations are leaves)."""
+    out, stack = [], [root or df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            stack.append(node.plan())
+            continue
+        if name == "ReusedExchange":
+            stack.append(node.child())
+            continue
+        out.append(node)
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def _output_names(node) -> list[str]:
+    attrs = node.output()
+    return [attrs.apply(i).name() for i in range(attrs.size())]
+
+
 def test_pip_join_shuffle_path_identical(spark, world, spatial, pages):
-    """The catalyst join (cell equi-join + sharded cogroup refinement)
-    produces the fused broadcast-index row set exactly."""
+    """The catalyst join (cell equi-join, boundary matches refined
+    row-locally on the edge slices the join brings them) produces the
+    fused broadcast-index row set exactly. Its executed plan has no
+    cogroup and no Generate over the geometry, and with Spark's
+    broadcast threshold off its only shuffles are the cell join's and
+    the anchor set's distinct (over the covering, below the one
+    broadcast)."""
+    from collections import Counter
+
     from osm_spark.spatial.pip_join import pip_join
 
     base = {(r.point_id, r.rel_id) for r in spatial["pip"].collect()}
-    got = pip_join(
-        spatial["points"].select("point_id", "lon", "lat"),
-        spatial["polygon_cells"],
-        spatial["polygon_geometry"],
-    ).select("point_id", "rel_id")
-    rows = [(r.point_id, r.rel_id) for r in got.collect()]
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        got = pip_join(
+            spatial["points"].select("point_id", "lon", "lat"),
+            spatial["polygon_cells"],
+        ).select("point_id", "rel_id")
+        rows = [(r.point_id, r.rel_id) for r in got.collect()]
+        nodes = _plan_nodes(got)
+    finally:
+        spark.conf.set(key, old)
     assert len(rows) == len(set(rows))
     assert set(rows) == base
+    names = [n.nodeName() for n in nodes]
+    assert "FlatMapCoGroupsInPandas" not in names
+    assert "MapInPandas" in names
+    for n in nodes:
+        if n.nodeName() == "Generate":
+            kids = n.children()
+            assert "poly" not in _output_names(kids.apply(0)), n.toString()
+    # Shuffles: the cell join's, plus the anchor set's distinct, which
+    # runs over the covering below the anchor broadcast.
+    def shuffles(ns):
+        return Counter(
+            n.outputPartitioning().toString() for n in ns if n.nodeName() == "Exchange"
+        )
+
+    anchor = Counter()
+    for b in (n for n in nodes if n.nodeName() == "BroadcastExchange"):
+        assert _output_names(b) == ["anchor"]
+        anchor += shuffles(_plan_nodes(got, b))
+    join = shuffles(nodes) - anchor
+    assert all(p.startswith("hashpartitioning(anchor#") for p in anchor), anchor
+    assert join and all(p.startswith("hashpartitioning(cell#") for p in join), join
 
 
 def test_pip_refine_modes_identical(spark, world, spatial, pages):
     """Every PIP execution path produces the same row set: the fused
     broadcast index (the spatial-pipeline default) called directly and
-    through mode="index", and the catalyst cell join with its cogroup
-    refinement called directly and through mode="catalyst"."""
+    through mode="index", and the catalyst cell join with its row-local
+    edge-slice refinement called directly and through mode="catalyst"."""
     from osm_spark.plans.spatial_pipeline import run_spatial_pipeline
     from osm_spark.spatial.pip_index import build_pip_index, pip_join_index
     from osm_spark.spatial.pip_join import pip_join
@@ -112,9 +174,7 @@ def test_pip_refine_modes_identical(spark, world, spatial, pages):
     )
     paths = {
         "index": pip_join_index(pts, bc),
-        "catalyst": pip_join(
-            pts, spatial["polygon_cells"], spatial["polygon_geometry"]
-        ),
+        "catalyst": pip_join(pts, spatial["polygon_cells"]),
     }
     for mode in ("index", "catalyst"):
         paths[f"pipeline-{mode}"] = run_spatial_pipeline(
@@ -163,24 +223,8 @@ def test_auto_mode_selects_and_matches(spark, world, pages, spatial):
 
 def _broadcast_outputs(df) -> list[list[str]]:
     """Output columns of every BroadcastExchange in ``df``'s executed
-    plan (AQE final plan, through query stages; cached relations are
-    leaves, so their own lineage is not walked)."""
-    out, stack = [], [df._jdf.queryExecution().executedPlan()]
-    while stack:
-        node = stack.pop()
-        name = node.nodeName()
-        if name == "AdaptiveSparkPlan":
-            stack.append(node.executedPlan())
-            continue
-        if name.endswith("QueryStage"):
-            stack.append(node.plan())
-            continue
-        if name == "BroadcastExchange":
-            attrs = node.output()
-            out.append([attrs.apply(i).name() for i in range(attrs.size())])
-        kids = node.children()
-        stack.extend(kids.apply(i) for i in range(kids.size()))
-    return out
+    plan."""
+    return [_output_names(n) for n in _plan_nodes(df) if n.nodeName() == "BroadcastExchange"]
 
 
 def test_over_budget_broadcasts_nothing_polygon_sized(
