@@ -18,7 +18,8 @@ module is the spatial counterpart of text/dedup.dedup_increment
 
 The applied version and the total row count are read from the snapshot
 JSON, so no Spark job scans the table's history; the table holds only
-(url, rel_id) rows.
+(url, rel_id) rows. An append-only file diff cannot hold deletes and is
+not probed for them, so an increment runs one Spark job (the write).
 """
 
 from __future__ import annotations
@@ -69,10 +70,13 @@ def pip_increment(
         fresh = pages_table.read()
     else:
         ch = pages_table.changes(applied, cur)
-        deletes = ch.where(F.col("_change_type") == "delete")
         # append-only contract: a delete in the diff means the source
-        # was rewritten under us — incremental append would be wrong
-        if deletes.limit(1).count():
+        # was rewritten under us — incremental append would be wrong.
+        # Only a diff that removed files (a rewrite or a compaction)
+        # can hold deletes, so only then is it probed with a job.
+        _, removed = pages_table.file_diff(applied, cur)
+        deletes = ch.where(F.col("_change_type") == "delete")
+        if removed and deletes.limit(1).count():
             raise ValueError(
                 "pages table saw deletes/rewrites between versions "
                 f"{applied}..{cur}; rebuild the assignment table"

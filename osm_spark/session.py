@@ -24,6 +24,15 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The engine's tuned session (see the module docstring).
+
+    Python workers start from ``osm_spark.pyworker``
+    (``spark.python.daemon.module``), which keeps CPython < 3.13 workers
+    from re-reading ``pyspark.zip`` and the spark-core jar in every task
+    (0.1-0.2 s each). It must be importable on executors, as every
+    osm_spark UDF already requires; the ``PYTHONPATH`` exported below
+    provides that.
+    """
     # Python workers inherit the driver process env, not driver sys.path;
     # export the package root so UDFs can import osm_spark anywhere.
     _pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -82,6 +91,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "osm_spark.pyworker")
         # Make the package importable on executor python workers even
         # when the driver is launched from another cwd.
         .config(

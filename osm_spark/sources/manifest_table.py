@@ -466,10 +466,20 @@ class ManifestTable:
             "rows_after": sum(e["rows"] for e in entries),
         }
 
+    def file_diff(
+        self, from_version: int, to_version: int
+    ) -> tuple[list[str], list[str]]:
+        """(added, removed): sorted data-file paths in ``to`` but not
+        ``from``, and the reverse. Manifest-only, no data read; an empty
+        ``removed`` means the diff is append-only."""
+        f_paths = {e["path"] for e in self.snapshot(from_version)["files"]}
+        t_paths = {e["path"] for e in self.snapshot(to_version)["files"]}
+        return sorted(t_paths - f_paths), sorted(f_paths - t_paths)
+
     def changes(self, from_version: int, to_version: int) -> DataFrame:
         """NET row-level changes between two snapshots (CDC read).
 
-        File-diff first (manifest-only, driver-side): files present in
+        File-diff first (``file_diff``, manifest-only): files present in
         ``to`` but not ``from`` are candidate inserts, the reverse are
         candidate deletes — identical carried files never get read.
         Because copy-on-write rewrites WHOLE files, rows carried
@@ -491,13 +501,8 @@ class ManifestTable:
         are key-unique so this never triggers there; for multiset-
         exact diffs, aggregate a count per row first.
         """
-        f_snap = self.snapshot(from_version)
-        t_snap = self.snapshot(to_version)
-        schema = StructType.fromJson(t_snap["schema"])
-        f_paths = {e["path"] for e in f_snap["files"]}
-        t_paths = {e["path"] for e in t_snap["files"]}
-        added = sorted(t_paths - f_paths)
-        removed = sorted(f_paths - t_paths)
+        added, removed = self.file_diff(from_version, to_version)
+        schema = StructType.fromJson(self.snapshot(to_version)["schema"])
         ins = self._scan(schema, added)
         if not removed:
             return ins.withColumn("_change_type", F.lit("insert"))

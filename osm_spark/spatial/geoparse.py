@@ -17,14 +17,11 @@ GEO_RE = r"geo: (-?\d+),(-?\d+)"
 
 def geoparse_pages(pages: DataFrame) -> DataFrame:
     """(url, warc_ts, lang, text, lat, lon) — rows without a coordinate
-    mention are dropped (no geo signal). lat/lon in degrees (double)."""
-    lat_s = F.regexp_extract("text", GEO_RE, 1)
-    lon_s = F.regexp_extract("text", GEO_RE, 2)
-    return (
-        pages.withColumn("lat_u", F.nullif(lat_s, F.lit("")).cast("long"))
-        .withColumn("lon_u", F.nullif(lon_s, F.lit("")).cast("long"))
-        .where(F.col("lat_u").isNotNull() & F.col("lon_u").isNotNull())
-        .withColumn("lat", F.col("lat_u") / 1e6)
-        .withColumn("lon", F.col("lon_u") / 1e6)
-        .drop("lat_u", "lon_u")
-    )
+    mention are dropped (no geo signal), and so are rows whose mention
+    does not fit a long (``try_cast``: ANSI ``cast`` would fail the
+    whole job on one such page). lat/lon in degrees (double)."""
+    lat_u = F.regexp_extract("text", GEO_RE, 1).try_cast("long")
+    lon_u = F.regexp_extract("text", GEO_RE, 2).try_cast("long")
+    return pages.select(
+        "*", (lat_u / 1e6).alias("lat"), (lon_u / 1e6).alias("lon")
+    ).where(F.col("lat").isNotNull() & F.col("lon").isNotNull())

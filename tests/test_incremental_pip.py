@@ -134,6 +134,31 @@ def test_pip_increment_rejects_rewrites(spark, tmp_path, index_bc):
         pip_increment(spark, src, out_path, index_bc)
 
 
+def test_pip_increment_after_compaction(spark, tmp_path, index_bc):
+    """A compaction between increments removes files but no rows: the
+    file diff is not append-only, so the delete probe runs, finds the
+    rewritten rows cancelled, and the increment applies only the rows
+    appended since."""
+    from osm_spark.plans.incremental import pip_increment
+    from osm_spark.sources.manifest_table import ManifestTable
+
+    src = ManifestTable(spark, str(tmp_path / "pages_cmp"))
+    src.write(_pages(spark, 0, 20), mode="overwrite")
+    out_path = str(tmp_path / "assign_cmp")
+    pip_increment(spark, src, out_path, index_bc)
+    src.write(_pages(spark, 20, 20), mode="append")
+    assert src.compact()["compacted"] >= 2
+    src.write(_pages(spark, 40, 20), mode="append")
+    _, removed = src.file_diff(1, 4)
+    assert removed
+
+    r = pip_increment(spark, src, out_path, index_bc)
+    assert (r["applied_from"], r["applied_to"]) == (1, 4)
+    got = _rows(ManifestTable(spark, out_path))
+    assert got == _full_expected(spark, index_bc, 60)
+    assert r["total_rows"] == len(got)
+
+
 def test_pip_increment_refuses_table_without_applied_version(
     spark, tmp_path, index_bc
 ):
@@ -220,9 +245,9 @@ def test_pip_increment_over_empty_slice(spark, tmp_path, index_bc):
 
 def test_pip_increment_jobs_flat_in_history(spark, tmp_path, index_bc):
     """Each increment runs the same number of Spark jobs however many
-    snapshots the tables hold: nothing scans the table's history. Two
-    jobs: the file diff's delete probe and the one job that writes the
-    assignments and returns their lineage (no read-back).
+    snapshots the tables hold: nothing scans the table's history. One
+    job: the write of the assignments, which returns their lineage (no
+    read-back); an append-only file diff runs no delete probe.
 
     A scan over more files than the parallel-discovery threshold lists
     them with a Spark job of its own; the threshold is lowered from 32
@@ -250,7 +275,7 @@ def test_pip_increment_jobs_flat_in_history(spark, tmp_path, index_bc):
             jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
     finally:
         spark.conf.set(conf, saved)
-    assert jobs[1] == jobs[5] <= 2, jobs
+    assert jobs[1] == jobs[5] <= 1, jobs
     assert _rows(ManifestTable(spark, out_path)) == _full_expected(
         spark, index_bc, 180
     )

@@ -583,6 +583,28 @@ def test_text_passthrough_binary_identical(spark, world, pages):
     assert diff.count() == 0
 
 
+def test_geoparse_drops_unparseable_mentions(spark):
+    """A mention whose digits overflow a long drops its page, like a
+    page without a mention, instead of failing the job under ANSI
+    casts; the output keeps the page columns, then lat, lon."""
+    from osm_spark.spatial.geoparse import geoparse_pages
+
+    pages = spark.createDataFrame(
+        [
+            ("a", 1, "en", "x geo: 1500000,-2250000 y"),
+            ("b", 2, "fr", "no mention"),
+            ("c", 3, "de", "geo: 99999999999999999999,1"),
+            ("d", 4, "it", "geo: 1,-99999999999999999999"),
+        ],
+        "url string, warc_ts long, lang string, text string",
+    )
+    geo = geoparse_pages(pages)
+    assert geo.columns == ["url", "warc_ts", "lang", "text", "lat", "lon"]
+    assert [tuple(r) for r in geo.collect()] == [
+        ("a", 1, "en", "x geo: 1500000,-2250000 y", 1.5, -2.25)
+    ]
+
+
 def test_geojson_tiles_deterministic(spark, world, spatial):
     from osm_spark.spatial.tiles import geojson_tiles, tile_assignments
 
