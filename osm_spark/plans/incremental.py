@@ -69,21 +69,7 @@ def pip_increment(
     if applied is None:
         fresh = pages_table.read()
     else:
-        ch = pages_table.changes(applied, cur)
-        # append-only contract: a delete in the diff means the source
-        # was rewritten under us — incremental append would be wrong.
-        # Only a diff that removed files (a rewrite or a compaction)
-        # can hold deletes, so only then is it probed with a job.
-        _, removed = pages_table.file_diff(applied, cur)
-        deletes = ch.where(F.col("_change_type") == "delete")
-        if removed and deletes.limit(1).count():
-            raise ValueError(
-                "pages table saw deletes/rewrites between versions "
-                f"{applied}..{cur}; rebuild the assignment table"
-            )
-        fresh = ch.where(F.col("_change_type") == "insert").drop(
-            "_change_type"
-        )
+        fresh = pages_table.inserts(applied, cur, "the assignment table")
 
     pts = geoparse_pages(fresh).withColumn(
         "point_id", F.xxhash64("url")

@@ -6,26 +6,23 @@ batch job reading the previous checkpoint. ``resume`` reproduces the
 HasLocation anti-join (J6, main.go:153-159): relations whose location is
 already checkpointed are skipped.
 
-Checkpoint format is parquet in-sandbox; the writer goes through
-``_write``/``_read`` so an Iceberg catalog (``format="iceberg"``,
-``spark.sql.catalog...`` configured) is a config change, not a code
-change. ``fmt="manifest"`` selects the in-repo snapshot/manifest format
-(sources/manifest_table.py) which provides the Iceberg *semantics* the
-north rule depends on — atomic commits, append isolation for the J6
-resume anti-join, time travel, per-file lineage — without the Iceberg
-runtime. Every stage appends a row to the metrics table
-(stage, rows, content_hash) — the north rule's per-stage row-count/hash
-lineage; the hash is an order-insensitive sum of row hashes. The
-manifest format takes these rows from the commit's file entries, which
-the writing job itself counted and hashed; other formats re-read the
-stage.
+Every stage commits as a ``ManifestTable`` (sources/manifest_table.py):
+an overwrite, or for the J6 resume of ``locations`` an append that
+never rewrites the files the resume anti-join is reading. A commit is
+atomic (one VERSION swap), so a run that dies mid-stage leaves the
+previous snapshot readable. Every stage appends rows to the metrics
+table, itself a ``ManifestTable``: one whole-table row (stage, rows,
+content_hash) and one row per data file. They come from the commit's
+file entries, which the writing job counted and hashed, so no stage is
+read back to measure it; the hash is an order-insensitive sum of row
+hashes, equal to ``content_hash`` of the committed table.
 """
 
 from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,6 +36,7 @@ from osm_spark.operators import (
     resolve_members,
     split_kept_relations,
 )
+from osm_spark.sources.manifest_table import ManifestTable
 
 
 def content_hash(df: DataFrame) -> int:
@@ -55,60 +53,20 @@ def content_hash(df: DataFrame) -> int:
     return int(agg["s"]) ^ int(agg["n"])
 
 
-def partition_lineage(df: DataFrame) -> list[dict]:
-    """Per-partition lineage rows (north rule): for each physical
-    partition of the materialized table — row count + order-insensitive
-    content hash. One pass, map-side aggregated by partition id."""
-    cols = [F.col(c).cast("string") for c in df.columns]
-    rows = (
-        df.select(
-            F.spark_partition_id().alias("pid"),
-            F.xxhash64(*cols).alias("h"),
-        )
-        .groupBy("pid")
-        .agg(
-            F.count("*").alias("rows"),
-            (F.sum(F.col("h") % F.lit(2**31))).alias("s"),
-        )
-        .collect()
-    )
-    return [
-        {"partition": int(r["pid"]), "rows": int(r["rows"]), "content_hash": int(r["s"])}
-        for r in rows
-    ]
-
-
 @dataclass
 class Checkpointer:
     spark: SparkSession
     root: str | None
-    fmt: str = "parquet"
-    collect_metrics: bool = True
-    metrics: list | None = None
+    metrics: list = field(default_factory=list, init=False)
 
-    def __post_init__(self) -> None:
-        self.metrics = []
-
-    def path(self, name: str) -> str:
-        return os.path.join(self.root, name)
-
-    def _table(self, name: str):
-        from osm_spark.sources.manifest_table import ManifestTable
-
-        return ManifestTable(self.spark, self.path(name))
+    def _table(self, name: str) -> ManifestTable:
+        return ManifestTable(self.spark, os.path.join(self.root, name))
 
     def exists(self, name: str) -> bool:
-        if self.root is None:
-            return False
-        if self.fmt == "manifest":
-            return self._table(name).exists()
-        p = self.path(name)
-        return os.path.exists(p) and (
-            os.path.exists(os.path.join(p, "_SUCCESS")) or self.fmt != "parquet"
-        )
+        return self.root is not None and self._table(name).exists()
 
     def write(self, name: str, df: DataFrame, mode: str = "overwrite") -> DataFrame:
-        """Materialize a stage; returns the re-read (columnar) table.
+        """Commit a stage; returns the committed (columnar) table.
 
         ``mode="append"`` is the incremental-checkpoint path (resume):
         only new rows are written, never rewriting files a concurrent
@@ -120,45 +78,24 @@ class Checkpointer:
         an action needs them."""
         if self.root is None:
             return df.persist()
-        if self.fmt == "manifest":
-            t = self._table(name)
-            t.write(df, mode=mode)
-            out = t.read()
-            if self.collect_metrics:
-                # the commit's own file entries: no re-read of the stage
-                parts = [
-                    {"partition": i, "rows": e["rows"],
-                     "content_hash": e["content_hash"] ^ e["rows"]}
-                    for i, e in enumerate(t.lineage())
-                ]
-                self._record_lineage(name, parts, t.table_hash())
-            return out
-        p = self.path(name)
-        df.write.format(self.fmt).mode(mode).save(p)
-        out = self.spark.read.format(self.fmt).load(p)
-        if self.collect_metrics:
-            self._record_lineage(name, partition_lineage(out), content_hash(out))
-        return out
-
-    def _record_lineage(self, name: str, parts: list[dict], table_hash: int) -> None:
-        """One whole-table metrics row (partition -1) plus one row per
-        partition of the materialized stage."""
+        t = self._table(name)
+        t.write(df, mode=mode)
+        entries = t.lineage()
         now = time.time()
-        self.metrics.append(
-            {
-                "stage": name,
-                "partition": -1,
-                "rows": sum(p_["rows"] for p_ in parts),
-                "content_hash": table_hash,
-                "ts": now,
-            }
+        self.metrics.append({
+            "stage": name, "partition": -1,
+            "rows": sum(e["rows"] for e in entries),
+            "content_hash": t.table_hash(), "ts": now,
+        })
+        self.metrics.extend(
+            {"stage": name, "partition": i, "rows": e["rows"],
+             "content_hash": e["content_hash"] ^ e["rows"], "ts": now}
+            for i, e in enumerate(entries)
         )
-        self.metrics.extend({"stage": name, **p_, "ts": now} for p_ in parts)
+        return t.read()
 
     def read(self, name: str) -> DataFrame:
-        if self.fmt == "manifest":
-            return self._table(name).read()
-        return self.spark.read.format(self.fmt).load(self.path(name))
+        return self._table(name).read()
 
     def flush_metrics(self) -> None:
         if self.root is None or not self.metrics:
@@ -170,10 +107,8 @@ class Checkpointer:
             ],
             "stage string, partition int, rows long, content_hash long, ts double",
         )
-        if self.fmt == "manifest":
-            self._table("metrics").write(mdf, mode="append")
-        else:
-            mdf.write.format(self.fmt).mode("append").save(self.path("metrics"))
+        # a few rows per stage: one file per flush, not one per task
+        self._table("metrics").write(mdf.coalesce(1), mode="append")
 
 
 def run_boundaries_pipeline(
@@ -184,20 +119,21 @@ def run_boundaries_pipeline(
     cfg: EngineConfig,
     checkpoint_dir: str | None = None,
     resume: bool = False,
-    checkpoint_format: str = "parquet",
 ) -> dict[str, DataFrame]:
     """Full reference pipeline: indexways → indexrelations(filter) →
     indexlocations → indexcenters → geojson-projection.
 
-    ``checkpoint_format="manifest"`` checkpoints through the snapshot/
-    manifest table format (atomic commits, append isolation, time
-    travel — see sources/manifest_table.py); ``"parquet"`` writes plain
-    directories.
+    With ``checkpoint_dir`` each stage commits as a ``ManifestTable``
+    under it (atomic commits, append isolation, time travel — see
+    sources/manifest_table.py) and the run appends its lineage rows to
+    the ``metrics`` table there; without it stages are persisted in
+    memory. ``resume=True`` reads the committed ``ways_geom`` and
+    ``locations`` and assembles only relations with no location yet.
 
     Returns dict with: ways_geom, kept, locations, centroids, boundaries,
     errors (union of all per-relation error side-outputs).
     """
-    ck = Checkpointer(spark, checkpoint_dir, fmt=checkpoint_format)
+    ck = Checkpointer(spark, checkpoint_dir)
 
     if resume and ck.exists("ways_geom"):
         ways_geom = ck.read("ways_geom")

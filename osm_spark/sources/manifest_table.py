@@ -5,10 +5,11 @@ format; the sandbox has no Iceberg runtime (no network, no extra jars),
 so the engine implements the SEMANTICS the north rule actually depends
 on — atomic commits, append isolation, snapshot time travel, manifest-
 tracked file lists with per-file lineage — directly over the parquet
-files Spark already writes. On a cluster with Iceberg available the
-``Checkpointer(fmt="iceberg")`` path is a config change; this module is
-the in-sandbox equivalent AND the documented fallback for object stores
-without a catalog service.
+files Spark already writes. Every checkpoint of the boundary pipeline
+(plans/pipeline.Checkpointer, its metrics table included) and every
+incremental table in the package commits through it. Moving to a real
+Iceberg catalog would mean a new writer behind the same calls, not a
+setting.
 
 Design (a deliberately minimal subset of the Iceberg spec):
 
@@ -515,6 +516,24 @@ class ManifestTable:
             "_change_type", F.lit("delete")
         )
         return net_ins.unionByName(net_del)
+
+    def inserts(self, from_version: int, to_version: int, rebuild: str) -> DataFrame:
+        """Rows inserted between two snapshots of an append-only table.
+
+        Only a diff that removed files (a rewrite or a compaction) can
+        hold deletes, so only then are the ``changes`` probed for one,
+        with a Spark job; a delete means the table was rewritten under
+        its consumer, and a ``ValueError`` asks to rebuild ``rebuild``
+        (the consumer's derived table). An append-only diff is a plain
+        read of the added files."""
+        ch = self.changes(from_version, to_version)
+        _, removed = self.file_diff(from_version, to_version)
+        if removed and ch.where(F.col("_change_type") == "delete").limit(1).count():
+            raise ValueError(
+                f"table {self.path} saw deletes/rewrites between versions "
+                f"{from_version}..{to_version}; rebuild {rebuild}"
+            )
+        return ch.where(F.col("_change_type") == "insert").drop("_change_type")
 
     # -- read -------------------------------------------------------------
 

@@ -134,15 +134,7 @@ def kmeans_increment(
         dim = len(cents[0])
         counts, sums = [0] * k, [[0] * dim for _ in range(k)]
     else:
-        ch = source.changes(applied, cur)
-        if ch.where(F.col("_change_type") == "delete").limit(1).count():
-            raise ValueError(
-                "embeddings table saw deletes/rewrites between versions "
-                f"{applied}..{cur}; rebuild the model"
-            )
-        fresh = ch.where(F.col("_change_type") == "insert").drop(
-            "_change_type"
-        )
+        fresh = source.inserts(applied, cur, "the model")
         dim = len(cents[0])
 
     batch = _batch_sums(fresh, cents, vec_col, scale)

@@ -102,6 +102,52 @@ def test_rewrite_refused(spark, src):
         kmeans_increment(spark, t, mp, k=3, n_iters=1)
 
 
+def _jobs_in(spark, group, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_append_only_increment_runs_no_delete_probe(spark, src, tmp_path):
+    """An append-only file diff cannot hold deletes, so the increment
+    reads the appended files without a probe job: 4 Spark jobs, for the
+    model read, the batch sums and the model write (5 with the probe)."""
+    rows, df, t, mp = src
+    kmeans_increment(spark, t, mp, k=3, n_iters=1)
+    t.write(df.where(F.col("vec_id") % 2 == 1), mode="append")
+    assert t.file_diff(1, 2)[1] == []
+    n = _jobs_in(
+        spark, f"{tmp_path.name}-kmeans_increment",
+        lambda: kmeans_increment(spark, t, mp, k=3, n_iters=1),
+    )
+    assert n <= 4, n
+    assert read_model(ManifestTable(spark, mp))[3] == 2
+
+
+def test_increment_after_compaction(spark, src):
+    """A compaction between increments removes files but no rows: the
+    delete probe runs, finds the rewritten rows cancelled, and the model
+    equals the two-commit flow's."""
+    rows, df, t, mp = src
+    k, it = 4, 2
+    kmeans_increment(spark, t, mp, k=k, n_iters=it)
+    t.write(df.where(F.col("vec_id") % 2 == 1), mode="append")
+    assert t.compact()["compacted"] >= 2
+    assert t.file_diff(1, 3)[1]
+    r = kmeans_increment(spark, t, mp, k=k, n_iters=it)
+    assert (r["applied_from"], r["applied_to"]) == (1, 3)
+    assert r["n_total"] == len(rows)
+    _c1, c2, counts, sums = _twin_flow(rows, k, it)
+    cents, got_counts, got_sums, applied = read_model(ManifestTable(spark, mp))
+    assert cents == c2 and got_counts == counts and got_sums == sums
+    assert applied == 3
+
+
 def test_empty_cluster_keeps_centroid(spark):
     # batch 2 lands entirely in one cluster; the other keeps its
     # previous centroid through the fold

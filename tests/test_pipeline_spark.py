@@ -2,6 +2,8 @@
 (FIXTURES.md §3). One shared pipeline run (conftest ``world``); each
 test pins a semantic branch of the reference."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -172,44 +174,148 @@ def test_iso_check(world):
     assert d2.count() == 0  # only one level-2 relation in 1-country world
 
 
+STAGES = ("ways_geom", "locations", "centroids", "boundaries")
+
+
+def _table(spark, ck, name):
+    from osm_spark.sources.manifest_table import ManifestTable
+
+    return ManifestTable(spark, os.path.join(ck, name))
+
+
 def test_resume_checkpoint(world, spark, tmp_path):
-    from osm_spark.plans.pipeline import run_boundaries_pipeline
+    """A checkpointed run, then a ``resume=True`` re-run over the same
+    checkpoints (J6): same boundaries, one hash per stage across both
+    runs, equal to the content hash of the committed stage, and the
+    locations checkpoint is an overwrite then an append of 0 rows."""
+    from osm_spark.plans.pipeline import content_hash, run_boundaries_pipeline
 
     ck = str(tmp_path / "ck")
-    out1 = run_boundaries_pipeline(
-        spark, world["nodes"], world["ways"], world["relations"], world["cfg"],
-        checkpoint_dir=ck,
-    )
+    args = (spark, world["nodes"], world["ways"], world["relations"], world["cfg"])
+    out1 = run_boundaries_pipeline(*args, checkpoint_dir=ck)
     n1 = sorted(r.id for r in out1["boundaries"].collect())
-    out2 = run_boundaries_pipeline(
-        spark, world["nodes"], world["ways"], world["relations"], world["cfg"],
-        checkpoint_dir=ck, resume=True,
-    )
+    h1 = content_hash(out1["boundaries"])
+    out2 = run_boundaries_pipeline(*args, checkpoint_dir=ck, resume=True)
     n2 = sorted(r.id for r in out2["boundaries"].collect())
     assert n1 == n2
-    metrics = spark.read.parquet(ck + "/metrics")
-    # whole-table rows (partition = -1): identical hash across runs
+    assert content_hash(out2["boundaries"]) == h1
+    hist = _table(spark, ck, "locations").history()
+    assert [h["operation"] for h in hist] == ["overwrite", "append"]
+    # Resume found everything checkpointed: the append added 0 rows.
+    assert hist[-1]["total_rows"] == hist[0]["total_rows"]
+    metrics = _table(spark, ck, "metrics").read()
+    # whole-table rows (partition = -1): identical hash across runs,
+    # and it is the content hash of the committed stage
     per_stage = (
         metrics.where(F.col("partition") == -1)
         .groupBy("stage")
-        .agg(F.countDistinct("content_hash").alias("h"))
+        .agg(F.collect_set("content_hash").alias("h"), F.count("*").alias("n"))
         .collect()
     )
-    assert all(r.h == 1 for r in per_stage)
-    # per-partition lineage present and consistent with table totals
+    assert sorted(r.stage for r in per_stage) == sorted(STAGES)
+    for r in per_stage:
+        assert r.n == (1 if r.stage == "ways_geom" else 2)  # resume reads it
+        assert r.h == [content_hash(_table(spark, ck, r.stage).read())], r.stage
+    # per-partition (per-file) lineage present and consistent with
+    # the whole-table row of the same commit
     sums = (
         metrics.where(F.col("partition") >= 0)
         .groupBy("stage", "ts")
         .agg(F.sum("rows").alias("prows"))
         .join(
             metrics.where(F.col("partition") == -1).select(
-                "stage", F.col("rows").alias("trows")
+                "stage", "ts", F.col("rows").alias("trows")
             ),
-            "stage",
+            ["stage", "ts"],
         )
         .collect()
     )
     assert sums and all(r.prows == r.trows for r in sums)
+
+
+def test_resume_after_crash_in_locations_append(world, spark, tmp_path, monkeypatch):
+    """A resume run killed before the VERSION swap of its locations
+    append leaves the checkpoint at its prior snapshot. The orphan
+    snapshot claim stops a blind retry; after ``recover()`` a resume
+    run gives the boundaries and stage hashes of the clean ``world``
+    run, with one location per relation."""
+    import osm_spark.sources.manifest_table as mt
+    from osm_spark.plans.pipeline import content_hash, run_boundaries_pipeline
+
+    ck = str(tmp_path / "ck")
+    rels = world["relations"]
+    args = (spark, world["nodes"], world["ways"])
+    # a first run that checkpointed only part of the locations
+    run_boundaries_pipeline(
+        *args, rels.where(~F.col("id").isin(K + 2, K + 3)), world["cfg"],
+        checkpoint_dir=ck,
+    )
+    loc = _table(spark, ck, "locations")
+    partial = loc.snapshot()["summary"]["total_rows"]
+    assert loc.current_version() == 1 and partial < world["locations"].count()
+
+    real, fired = mt.os.replace, []
+
+    def crash_once(src_path, dst_path):
+        if dst_path == loc._version_file() and not fired:
+            fired.append(dst_path)
+            raise OSError("killed before the VERSION swap")
+        return real(src_path, dst_path)
+
+    monkeypatch.setattr(mt.os, "replace", crash_once)
+    with pytest.raises(OSError, match="killed"):
+        run_boundaries_pipeline(*args, rels, world["cfg"], checkpoint_dir=ck, resume=True)
+    assert fired and loc.current_version() == 1
+    assert loc.read().count() == partial
+    with pytest.raises(mt.CommitConflict):
+        run_boundaries_pipeline(*args, rels, world["cfg"], checkpoint_dir=ck, resume=True)
+    assert loc.current_version() == 1
+    assert loc.recover() == "rolled_forward"
+
+    out = run_boundaries_pipeline(*args, rels, world["cfg"], checkpoint_dir=ck, resume=True)
+    assert content_hash(out["boundaries"]) == content_hash(world["boundaries"])
+    # each stage's newest whole-table metrics row
+    whole = (
+        _table(spark, ck, "metrics").read()
+        .where(F.col("partition") == -1).orderBy("ts").collect()
+    )
+    assert {r.stage: r.content_hash for r in whole} == {
+        s: content_hash(world[s]) for s in STAGES
+    }
+    got = loc.read()
+    assert got.count() == got.select("rel_id").distinct().count()
+    assert ids(got) == ids(world["locations"])
+
+
+def test_checkpoint_of_empty_stages(world, spark, tmp_path):
+    """No relation kept (every ``name`` tag stripped): a checkpointed
+    run and its resume give 0 boundaries, and every stage's whole-table
+    metrics row is the content hash of the committed stage — 0 rows for
+    each relation stage (the ways do not depend on relation tags)."""
+    from osm_spark.plans.pipeline import content_hash, run_boundaries_pipeline
+
+    ck = str(tmp_path / "ck")
+    rels = world["relations"].withColumn(
+        "tags", F.filter("tags", lambda t: t["key"] != "name")
+    )
+    args = (spark, world["nodes"], world["ways"], rels, world["cfg"])
+    for resume in (False, True):
+        out = run_boundaries_pipeline(*args, checkpoint_dir=ck, resume=resume)
+        assert out["kept"].count() == 0
+        assert out["boundaries"].count() == 0
+    assert [h["operation"] for h in _table(spark, ck, "locations").history()] == [
+        "overwrite", "append"
+    ]
+    whole = (
+        _table(spark, ck, "metrics").read().where(F.col("partition") == -1).collect()
+    )
+    # the resume run reads ways_geom and commits the other three again
+    assert sorted(r.stage for r in whole) == sorted(STAGES + STAGES[1:])
+    for r in whole:
+        stage = _table(spark, ck, r.stage).read()
+        assert r.content_hash == content_hash(stage), r.stage
+        assert r.rows == stage.count()
+        assert (r.rows == 0) == (r.stage != "ways_geom"), (r.stage, r.rows)
 
 
 def test_member_role_error(world, spark):
