@@ -1,8 +1,8 @@
 """Snapshot/manifest table format (sources/manifest_table.py): the
 guarantees the north rule's checkpoint-resume + lineage story rests on —
-atomic commits, append isolation, time travel, per-file lineage. The
-boundaries pipeline's checkpoints through the format are tested in
-test_pipeline_spark.
+atomic commits, append isolation, time travel, per-file lineage, and
+the full boundaries pipeline checkpointing/resuming through the format
+(test_pipeline_spark pins the per-stage hashes of a resume).
 """
 
 import json
@@ -180,6 +180,38 @@ def test_vacuum_drops_expired_and_orphans(spark, tmp_path):
     assert t.read().count() == 20
     with pytest.raises(FileNotFoundError):
         t.read(version=1)
+
+
+def test_pipeline_checkpoints_and_resumes_via_manifest(spark, tmp_path):
+    """The boundaries pipeline on a freshly generated one-country world,
+    checkpointed and then resumed: every stage and the metrics are
+    ManifestTable commits."""
+    from osm_spark.data.worldgen import WorldSpec, world_dataframes
+    from osm_spark.plans.pipeline import content_hash, run_boundaries_pipeline
+
+    nodes, ways, rels, cfg = world_dataframes(spark, WorldSpec(n_countries=1))
+    root = str(tmp_path / "ck")
+    out1 = run_boundaries_pipeline(
+        spark, nodes, ways, rels, cfg, checkpoint_dir=root,
+    )
+    b1, h1 = out1["boundaries"].count(), content_hash(out1["boundaries"])
+    out2 = run_boundaries_pipeline(
+        spark, nodes, ways, rels, cfg, checkpoint_dir=root, resume=True,
+    )
+    assert out2["boundaries"].count() == b1
+    assert content_hash(out2["boundaries"]) == h1
+    loc = ManifestTable(spark, os.path.join(root, "locations"))
+    ops = [s["operation"] for s in loc.history()]
+    assert ops[0] == "overwrite" and "append" in ops
+    # Resume found everything checkpointed: the append added 0 rows.
+    hist = loc.history()
+    assert hist[-1]["total_rows"] == hist[0]["total_rows"]
+    # Metrics flow through the manifest format too, with per-partition
+    # lineage rows (partition >= 0) under each whole-table row (-1).
+    metrics = ManifestTable(spark, os.path.join(root, "metrics")).read()
+    stages = {r["stage"] for r in metrics.collect()}
+    assert {"ways_geom", "locations", "centroids", "boundaries"} <= stages
+    assert metrics.where(F.col("partition") >= 0).count() > 0
 
 
 def test_split_tables_stable_across_appends(spark, tmp_path):
