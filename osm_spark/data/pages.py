@@ -166,234 +166,3 @@ def pages_duckdb_sql(spec: PagesSpec, columns: str = "url, warc_ts, text, lang")
     return (
         f"SELECT {cols} FROM generate_series(0, {spec.n_pages - 1}) AS t(i)"
     )
-
-
-PNG_W, PNG_H = 12, 20  # 240 px: NOT a multiple of 256, so per-page
-# seeds change the pixel-sum invariant (a 256-multiple would average
-# every seed to the same mean and the q52 oracle would prove nothing).
-
-
-def pages_png_sql_exprs(i: str) -> dict[str, str]:
-    """Closed-form SQL for the synthetic image's pixel stream — shared
-    by the q52 DuckDB oracle. Pixel p (row-major, p in [0, W*H)) of
-    page ``i`` is ``(seed + p) % 256`` with ``seed = (i*2654435761) %
-    256``; valid in both Spark SQL and DuckDB."""
-    return {
-        "seed": f"(({i} * 2654435761) % 256)",
-        "n_px": str(PNG_W * PNG_H),
-        "width": str(PNG_W),
-        "height": str(PNG_H),
-    }
-
-
-def pages_png_df(spark: SparkSession, spec: PagesSpec) -> DataFrame:
-    """(url, payload) — one REAL tiny PNG per page (pure-python encoder,
-    osm_spark/text/png.py), pixels the deterministic pattern of
-    ``pages_png_sql_exprs`` so a SQL oracle can reproduce any
-    pixel-derived feature. Generated DISTRIBUTED (one Arrow pass over
-    spark.range); kept separate from ``pages_df`` so the geo hot path
-    stays pure Catalyst."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from osm_spark.text.png import encode_png
-
-    w, h = PNG_W, PNG_H
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ramp = np.arange(w * h, dtype=np.int64)
-        for pdf in it:
-            ids = pdf["id"].to_numpy(np.int64)
-            payloads = []
-            for i in ids:
-                seed = (int(i) * 2654435761) % 256
-                px = ((seed + ramp) % 256).astype(np.uint8).reshape(h, w)
-                payloads.append(encode_png(px))
-            yield pd.DataFrame(
-                {
-                    "url": "https://example.org/page/" + pd.Series(ids).astype(str),
-                    "payload": payloads,
-                }
-            )
-
-    return spark.range(spec.n_pages).mapInPandas(
-        gen, "url string, payload binary"
-    )
-
-
-JPEG_W, JPEG_H = 16, 24  # multiples of 8: 2×3 = 6 JPEG blocks; each
-# block is CONSTANT-valued so the lossy encode→decode round-trip has a
-# CLOSED FORM the q163 oracle can replay (quantize_dc_closed_form:
-# only the DC coefficient survives, and the luma DC quant step at
-# quality 50 is 16 — a multiple of 8, so reconstruction is integral).
-
-
-def pages_jpeg_sql_exprs(i: str, b: str) -> dict[str, str]:
-    """Closed-form SQL for the synthetic JPEG's DECODED pixels —
-    shared by the q163 DuckDB oracle. Block ``b`` (row-major block
-    index in [0, 6)) of page ``i`` has source value ``c = (seed +
-    37·b) % 256`` with ``seed = (i*2654435761) % 256``; the decoded
-    value is the DC closed form at q00=16:
-        dc = 8c − 1024;  k = round_half_away(dc / 16)
-        v  = clamp(2k + 128, 0, 255)
-    Valid in both Spark SQL and DuckDB (integer ops only)."""
-    seed = f"(({i} * 2654435761) % 256)"
-    c = f"(({seed} + 37 * {b}) % 256)"
-    dc = f"(8 * {c} - 1024)"
-    k = (
-        f"(CASE WHEN {dc} >= 0 THEN ({dc} + 8) // 16 "
-        f"ELSE -((-({dc}) + 8) // 16) END)"
-    )
-    return {
-        "seed": seed,
-        "c": c,
-        "v": f"LEAST(255, GREATEST(0, 2 * {k} + 128))",
-        "width": str(JPEG_W),
-        "height": str(JPEG_H),
-        "n_blocks_x": str(JPEG_W // 8),
-    }
-
-
-def pages_jpeg_df(spark: SparkSession, spec: PagesSpec) -> DataFrame:
-    """(url, payload) — one REAL tiny baseline JPEG per page
-    (pure-python encoder, osm_spark/text/jpeg.py), 8×8-block-constant
-    pixels per ``pages_jpeg_sql_exprs`` so a SQL oracle can reproduce
-    every DECODED pixel through the lossy round-trip's DC closed form.
-    Generated DISTRIBUTED (one Arrow pass over spark.range); the
-    pages_png_df shape."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from osm_spark.text.jpeg import encode_jpeg
-
-    w, h = JPEG_W, JPEG_H
-    bw, bh = w // 8, h // 8
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bidx = np.arange(bw * bh, dtype=np.int64)
-        for pdf in it:
-            ids = pdf["id"].to_numpy(np.int64)
-            payloads = []
-            for i in ids:
-                seed = (int(i) * 2654435761) % 256
-                blocks = ((seed + 37 * bidx) % 256).reshape(bh, bw)
-                px = np.repeat(
-                    np.repeat(blocks, 8, axis=0), 8, axis=1
-                ).astype(np.uint8)
-                payloads.append(encode_jpeg(px, quality=50))
-            yield pd.DataFrame(
-                {
-                    "url": "https://example.org/page/" + pd.Series(ids).astype(str),
-                    "payload": payloads,
-                }
-            )
-
-    return spark.range(spec.n_pages).mapInPandas(
-        gen, "url string, payload binary"
-    )
-
-
-GIF_W, GIF_H = 14, 18  # 252 px: not a 256 multiple (the q61 argument —
-# per-page seeds must change the pixel-sum invariant)
-
-
-def pages_gif_sql_exprs(i: str) -> dict[str, str]:
-    """Closed-form SQL for the synthetic GIF's pixel stream — shared
-    by the q169 DuckDB oracle. GIF is LOSSLESS, so the decoded pixels
-    ARE the source formula (the q61 PNG contract): pixel p of page
-    ``i`` is ``(seed + 3*p) % 256``, seed = (i*2654435761) % 256."""
-    return {
-        "seed": f"(({i} * 2654435761) % 256)",
-        "n_px": str(GIF_W * GIF_H),
-        "width": str(GIF_W),
-        "height": str(GIF_H),
-    }
-
-
-def pages_gif_df(spark: SparkSession, spec: PagesSpec) -> DataFrame:
-    """(url, payload) — one REAL tiny GIF per page (pure-python LZW
-    encoder, osm_spark/text/gif.py), pixels the deterministic pattern
-    of ``pages_gif_sql_exprs``. The pages_png_df shape."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from osm_spark.text.gif import encode_gif
-
-    w, h = GIF_W, GIF_H
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ramp = np.arange(w * h, dtype=np.int64)
-        for pdf in it:
-            ids = pdf["id"].to_numpy(np.int64)
-            payloads = []
-            for i in ids:
-                seed = (int(i) * 2654435761) % 256
-                px = ((seed + 3 * ramp) % 256).astype(np.uint8).reshape(h, w)
-                payloads.append(encode_gif(px))
-            yield pd.DataFrame(
-                {
-                    "url": "https://example.org/page/" + pd.Series(ids).astype(str),
-                    "payload": payloads,
-                }
-            )
-
-    return spark.range(spec.n_pages).mapInPandas(
-        gen, "url string, payload binary"
-    )
-
-
-WAV_N, WAV_RATE = 250, 8000  # 250 samples: NOT a multiple of 65536's
-# cycle or of the 37 stride, so per-page streams genuinely differ.
-
-
-def pages_wav_sql_exprs(i: str) -> dict[str, str]:
-    """Closed-form SQL for the synthetic PCM stream — shared by the
-    q90 DuckDB oracle. Sample p (p in [0, WAV_N)) of page ``i`` is
-    ``((seed + p*37) % 65536) - 32768`` with ``seed = (i*2654435761) %
-    65536``; valid in both Spark SQL and DuckDB."""
-    return {
-        "seed": f"(({i} * 2654435761) % 65536)",
-        "n_samples": str(WAV_N),
-        "rate": str(WAV_RATE),
-    }
-
-
-def pages_wav_df(spark: SparkSession, spec: PagesSpec) -> DataFrame:
-    """(url, payload) — one REAL tiny WAV per page (pure-python
-    PCM-16 encoder, osm_spark/text/wav.py), samples the deterministic
-    pattern of ``pages_wav_sql_exprs`` so a SQL oracle can reproduce
-    any sample-derived feature. Generated DISTRIBUTED, one Arrow pass
-    over spark.range (the pages_png_df shape)."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from osm_spark.text.wav import encode_wav
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ramp = np.arange(WAV_N, dtype=np.int64)
-        for pdf in it:
-            ids = pdf["id"].to_numpy(np.int64)
-            payloads = []
-            for i in ids:
-                seed = (int(i) * 2654435761) % 65536
-                s = (((seed + ramp * 37) % 65536) - 32768).astype(np.int16)
-                payloads.append(encode_wav(s, WAV_RATE))
-            yield pd.DataFrame(
-                {
-                    "url": "https://example.org/page/"
-                    + pd.Series(ids).astype(str),
-                    "payload": payloads,
-                }
-            )
-
-    return spark.range(spec.n_pages).mapInPandas(
-        gen, "url string, payload binary"
-    )

@@ -467,15 +467,28 @@ class ManifestTable:
             "rows_after": sum(e["rows"] for e in entries),
         }
 
+    def _diff(
+        self, from_version: int, to_version: int
+    ) -> tuple[list[str], list[str], StructType]:
+        """(added, removed, ``to`` schema) from one read of each
+        snapshot."""
+        f_snap, t_snap = self.snapshot(from_version), self.snapshot(to_version)
+        f_paths = {e["path"] for e in f_snap["files"]}
+        t_paths = {e["path"] for e in t_snap["files"]}
+        return (
+            sorted(t_paths - f_paths),
+            sorted(f_paths - t_paths),
+            StructType.fromJson(t_snap["schema"]),
+        )
+
     def file_diff(
         self, from_version: int, to_version: int
     ) -> tuple[list[str], list[str]]:
         """(added, removed): sorted data-file paths in ``to`` but not
         ``from``, and the reverse. Manifest-only, no data read; an empty
         ``removed`` means the diff is append-only."""
-        f_paths = {e["path"] for e in self.snapshot(from_version)["files"]}
-        t_paths = {e["path"] for e in self.snapshot(to_version)["files"]}
-        return sorted(t_paths - f_paths), sorted(f_paths - t_paths)
+        added, removed, _ = self._diff(from_version, to_version)
+        return added, removed
 
     def changes(self, from_version: int, to_version: int) -> DataFrame:
         """NET row-level changes between two snapshots (CDC read).
@@ -502,8 +515,11 @@ class ManifestTable:
         are key-unique so this never triggers there; for multiset-
         exact diffs, aggregate a count per row first.
         """
-        added, removed = self.file_diff(from_version, to_version)
-        schema = StructType.fromJson(self.snapshot(to_version)["schema"])
+        return self._net_changes(*self._diff(from_version, to_version))
+
+    def _net_changes(
+        self, added: list[str], removed: list[str], schema: StructType
+    ) -> DataFrame:
         ins = self._scan(schema, added)
         if not removed:
             return ins.withColumn("_change_type", F.lit("insert"))
@@ -518,17 +534,21 @@ class ManifestTable:
         return net_ins.unionByName(net_del)
 
     def inserts(self, from_version: int, to_version: int, rebuild: str) -> DataFrame:
-        """Rows inserted between two snapshots of an append-only table.
+        """Rows inserted between two snapshots of an append-only table,
+        from one read of each snapshot.
 
-        Only a diff that removed files (a rewrite or a compaction) can
-        hold deletes, so only then are the ``changes`` probed for one,
-        with a Spark job; a delete means the table was rewritten under
-        its consumer, and a ``ValueError`` asks to rebuild ``rebuild``
-        (the consumer's derived table). An append-only diff is a plain
-        read of the added files."""
-        ch = self.changes(from_version, to_version)
-        _, removed = self.file_diff(from_version, to_version)
-        if removed and ch.where(F.col("_change_type") == "delete").limit(1).count():
+        An append-only diff is a plain read of the added files. Only a
+        diff that removed files (a rewrite or a compaction) can hold
+        deletes, so only then are the net changes probed for one, with
+        a Spark job; a delete means the table was rewritten under its
+        consumer, and a ``ValueError`` asks to rebuild ``rebuild`` (the
+        consumer's derived table, e.g. ``pip_increment``'s assignment
+        table)."""
+        added, removed, schema = self._diff(from_version, to_version)
+        if not removed:
+            return self._scan(schema, added)
+        ch = self._net_changes(added, removed, schema)
+        if ch.where(F.col("_change_type") == "delete").limit(1).count():
             raise ValueError(
                 f"table {self.path} saw deletes/rewrites between versions "
                 f"{from_version}..{to_version}; rebuild {rebuild}"

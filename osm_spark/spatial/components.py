@@ -1,11 +1,9 @@
-"""Distributed connected components and near-duplicate clustering.
+"""Distributed connected components of an undirected edge list.
 
-The missing last stage of every web-scale dedup pipeline: LSH gives
-candidate PAIRS (dedup.lsh_candidate_pairs), Jaccard verification
-keeps the true near-dups (dedup.unigram_jaccard_pairs) — but a
-training-data filter needs per-document CLUSTER ids so it can keep one
-canonical document per group. Pairs form an undirected graph; the
-cluster id is the component's minimum doc_id.
+``hotspots.clusters_from_cells`` labels dense grid cells with the
+component of their 8-adjacency graph; the cluster id is the
+component's minimum node id, so labels are deterministic and
+parallelism-independent.
 
 Algorithm: alternating large-star / small-star (Kiveris, Lattanzi,
 Mirrokni, Rastogi, Vassilvitskii — "Connected Components in MapReduce
@@ -13,10 +11,9 @@ and Beyond", SoCC'14). Each round is two shuffles (a groupBy-min and a
 join); the edge set provably converges to a forest of min-rooted stars
 in O(log^2 n) rounds regardless of graph shape. We use it instead of
 plain min-label propagation because propagation needs O(diameter)
-rounds — fine for the clique-like LSH graphs, pathological on chain
-topologies (A~B~C~... chains DO occur in near-dup graphs: template
-drift across a crawl) — while star contraction's round count is
-insensitive to diameter.
+rounds — pathological on chain topologies (a coastline chain of dense
+cells) — while star contraction's round count is insensitive to
+diameter.
 
 Scale notes (the 100-TB shape):
 - Every round is DataFrame groupBy/join on the edge list — map-side
@@ -25,19 +22,18 @@ Scale notes (the 100-TB shape):
 - Convergence is detected with a count + two order-insensitive hash
   sums over the edge set (one distributed aggregate per round), never
   a collect of the edges.
-- Skew: a mega-component (a boilerplate page duplicated 10^7 times)
-  makes one star with 10^7 spokes; the groupBy-min over its hub key is
-  a single hot reducer ONLY for the final hub — and min() combines
-  map-side, so the reducer receives one partial per upstream
-  partition, not 10^7 rows.
+- Skew: a mega-component with 10^7 nodes makes one star with 10^7
+  spokes; the groupBy-min over its hub key is a single hot reducer
+  ONLY for the final hub — and min() combines map-side, so the
+  reducer receives one partial per upstream partition, not 10^7 rows.
 
-No reference analog (pmezard/osm has no text pipeline); this extends
+No reference analog (pmezard/osm has no clustering); this extends
 SURVEY §2-ext. Published-algorithm port, not reference code.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -116,7 +112,7 @@ def _driver_components(e: DataFrame) -> DataFrame:
     5.9 s of a 6.5 s operator). Collecting ≤ driver_threshold edges
     is the same driver-compile trade as the PIP index auto mode; the
     distributed contraction remains the path for graphs that grow
-    with the corpus (near-dup pairs at 10^12 docs)."""
+    with the corpus."""
     parent: dict = {}
 
     def find(a):
@@ -169,8 +165,7 @@ def connected_components(
     the identical (node, min-id component) rows (pinned by test).
 
     Raises RuntimeError if the edge set has not converged after
-    ``max_rounds`` large+small-star rounds (theory: O(log^2 n); in
-    practice near-dup graphs converge in < 8).
+    ``max_rounds`` large+small-star rounds (theory: O(log^2 n)).
     """
     # Each round's plan is built ON TOP of the previous round's — an
     # iterative DataFrame algorithm's logical plan grows geometrically
@@ -235,47 +230,3 @@ def label_components(
         F.col(key), "component", "component_size"
     )
 
-
-def near_dup_clusters(
-    docs: DataFrame,
-    text: str = "text",
-    key: str = "doc_id",
-    threshold: float = 0.8,
-) -> DataFrame:
-    """End-to-end near-duplicate clustering over a documents table:
-    MinHash signatures → LSH candidate pairs → exact-Jaccard
-    verification at ``threshold`` → connected components → one row per
-    document: (doc_id, component, cluster_size, keep).
-
-    ``keep`` marks the canonical document (minimum doc_id) of each
-    cluster — the row a dedup filter retains. Singleton documents are
-    their own component with cluster_size 1 and keep=true, so
-    ``where(keep)`` IS the deduplicated corpus.
-    """
-    from osm_spark.text.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-        unigram_jaccard_pairs,
-    )
-
-    pairs = lsh_candidate_pairs(minhash_signatures(docs, text=text, key=key))
-    verified = unigram_jaccard_pairs(
-        docs, pairs, text=text, key=key, threshold=threshold
-    ).select("id_a", "id_b")
-    comp = connected_components(verified, src="id_a", dst="id_b")
-    ids = docs.select(F.col(key))
-    labeled = ids.join(
-        comp.withColumnRenamed("node", key), key, "left"
-    ).select(
-        F.col(key),
-        F.coalesce("component", F.col(key)).alias("component"),
-    )
-    sizes = labeled.groupBy("component").agg(
-        F.count("*").alias("cluster_size")
-    )
-    return labeled.join(sizes, "component").select(
-        F.col(key),
-        "component",
-        "cluster_size",
-        (F.col(key) == F.col("component")).alias("keep"),
-    )

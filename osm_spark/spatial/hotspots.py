@@ -22,7 +22,7 @@ Scale shape (the 100-TB contract):
   fan-out is a projection ×4 (undirected half of the 8 directions),
   the dense⋈dense adjacency an equi-join on the neighbor cell id,
   and components use the large-star/small-star contraction
-  (text/components.py) whose round count is diameter-insensitive —
+  (spatial/components.py) whose round count is diameter-insensitive —
   a coastline megacity chain of cells converges in O(log²) rounds.
 - per-point labels come back via ONE broadcast left join of the
   cells→cluster map (cells-scale, broadcastable by construction) —
@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_spark.spatial.cells_sql import _morton_expr, _xy_expr
-from osm_spark.text.components import label_components
+from osm_spark.spatial.components import label_components
 
 # Undirected half of the 8-neighborhood; _canon symmetrizes.
 _HALF_NEIGHBORS = ((1, -1), (1, 0), (1, 1), (0, 1))

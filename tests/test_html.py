@@ -2,7 +2,7 @@
 byte-identity invariant over the pages table.
 
 The north rule's per-row invariant is "byte-identical extracted text
-per url" (BASELINE.json input_hint); osm_spark.text.html is the
+per url" (BASELINE.json input_hint); osm_spark.sources.html is the
 operator that makes it checkable. Golden cases pin the chosen
 extraction semantics (strip order, entity decode order, documented
 regex limitations) so a future refactor can't silently change the
@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 
 def _extract_one(spark, html: str) -> str:
-    from osm_spark.text.html import extract_text_col
+    from osm_spark.sources.html import extract_text_col
 
     df = spark.createDataFrame([(html.encode(),)], "html binary")
     return df.select(extract_text_col("html").alias("t")).first()["t"]
@@ -60,7 +60,7 @@ def test_pages_byte_identity(spark):
     Common-Crawl-style table — the invariant the whole pipeline
     preserves."""
     from osm_spark.data.pages import PagesSpec, pages_df
-    from osm_spark.text.html import verify_extraction
+    from osm_spark.sources.html import verify_extraction
 
     pages = pages_df(spark, PagesSpec(n_pages=3000, n_countries=2))
     agg = verify_extraction(pages).agg(
@@ -75,7 +75,7 @@ def test_extraction_is_catalyst_only(spark):
     """The extraction chain must stay JVM-side: no Python eval nodes
     in the plan (the 10^12-row scan cannot afford Arrow transfer)."""
     from osm_spark.data.pages import PagesSpec, pages_df
-    from osm_spark.text.html import extract_text
+    from osm_spark.sources.html import extract_text
 
     plan = extract_text(
         pages_df(spark, PagesSpec(n_pages=10))

@@ -655,56 +655,6 @@ def test_boundary_tiles_area_conserved(spark, world, spatial):
         assert abs(got[rel] - exp[rel]) < 1e-6 * max(exp[rel], 1.0), rel
 
 
-def test_multimodal_plumbing(spark, pages):
-    from osm_spark.text.multimodal import attach_media, extract_features
-
-    media = attach_media(pages.limit(100), "html", "image")
-    feats = extract_features(media, dim=8).collect()
-    assert len(feats) == 100
-    assert all(len(r.features) == 8 for r in feats)
-    assert all(r.n_bytes > 0 for r in feats)
-    # deterministic across runs
-    again = extract_features(media, dim=8).collect()
-    assert {r.media_id: tuple(r.features) for r in feats} == {
-        r.media_id: tuple(r.features) for r in again
-    }
-
-
-def test_frame_sampling_fanout(spark, pages):
-    """sample_frames: 1 media row -> min(max_frames, dur//interval+1)
-    frame rows, deterministic stub features, strict mode raises."""
-    import pytest as _pytest
-
-    from osm_spark.text.multimodal import (
-        attach_media,
-        decode_frame_stub,
-        sample_frames,
-    )
-
-    media = attach_media(pages.limit(50), "html", "video").persist()
-    frames = sample_frames(media, interval_ms=100, max_frames=8, dim=8)
-    rows = frames.collect()
-    by_media = {}
-    for r in rows:
-        by_media.setdefault(r.media_id, []).append(r)
-    sizes = {r.media_id: r for r in media.collect()}
-    assert set(by_media) == set(sizes)
-    for mid, frs in by_media.items():
-        expect = min(8, len(sizes[mid].payload) // 100 + 1)
-        assert len(frs) == expect
-        assert sorted(f.frame_idx for f in frs) == list(range(expect))
-        assert all(f.ts_ms == f.frame_idx * 100 for f in frs)
-        assert all(len(f.features) == 8 for f in frs)
-    # frame features differ across frame_idx but are deterministic
-    a = decode_frame_stub(b"xyz", 0, 8)
-    b = decode_frame_stub(b"xyz", 1, 8)
-    assert (a != b).any()
-    assert (decode_frame_stub(b"xyz", 0, 8) == a).all()
-    with _pytest.raises(NotImplementedError):
-        decode_frame_stub(b"xyz", 0, 8, strict=True)
-    media.unpersist()
-
-
 def test_mvt_golden_bytes():
     """Hand-derived protobuf wire bytes for a 1-feature tile (the
     encoder must produce exactly the spec bytes, not just roundtrip)."""
