@@ -5,7 +5,7 @@ OSM mini-world (SURVEY.md §2 — the reference's indexlocations/geojson
 spine re-expressed as DataFrame joins + grouped-map Arrow assembly).
 
 `queries()` / `oracle_sql()`: one entry per implemented operator family
-(SURVEY.md §2 + the spatial extensions). Oracles are DuckDB SQL
+(SURVEY.md §2 + the training-data extensions). Oracles are DuckDB SQL
 engineered for bit-identical results: cross-engine-deterministic
 hashing (md5-prefix→int64, never engine-native hash functions),
 integer micro-degree coordinates, explicit CASTs where DuckDB widens
@@ -941,14 +941,25 @@ WHERE url IN (SELECT url FROM ({_pip_membership_sql()}))
 
 
 # ---------------------------------------------------------------------------
-# Document-table queries (pure SQL over documents)
+# Text / training-data queries (documents table)
 # ---------------------------------------------------------------------------
 
 _TOKENS_SPARK = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
 _TOKENS_DUCK = "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x != '')"
 _MD5_SPARK = "cast(conv(substr(md5({t}), 1, 15), 16, 10) as bigint)"
 _MD5_DUCK = "CAST(('0x' || substr(md5({t}), 1, 15)) AS BIGINT)"
+_MD52_DUCK = "CAST(('0x' || substr(md5({t}), 17, 15)) AS BIGINT)"
+_M = 2147483647
+# MinHash family re-tuned in round 2 (VERDICT r1 #3/#4): K=128 md5-
+# derived constants shared with osm_spark.text.dedup; 4 bands × 32
+# rows => measured 2.5% candidate ratio on sf0.1 (was 35% with the r1
+# 2×4-over-K=8 banding).
+from osm_spark.text.dedup import MINHASH_A as _A  # noqa: E402
+from osm_spark.text.dedup import MINHASH_B as _B  # noqa: E402
 
+_K = 128
+_BANDS = 4
+_ROWS = 32
 
 _def(
     "q30_dedup_exact",
@@ -963,6 +974,141 @@ FROM documents GROUP BY md5(text)
 """,
 )
 
+_mh_spark = ", ".join(
+    f"min(({_A[i]} * h + {_B[i]}) % {_M}) AS mh{i}" for i in range(_K)
+)
+_mh_duck = ", ".join(
+    f"CAST(min(({_A[i]} * h + {_B[i]}) % {_M}) AS BIGINT) AS mh{i}" for i in range(_K)
+)
+
+
+def _band_pairs_duck() -> str:
+    """DuckDB candidate-pairs subquery: UNION of one self-join per band,
+    each on its 32 signature columns (twin of lsh_candidate_pairs)."""
+    parts = []
+    for b in range(_BANDS):
+        cols = " AND ".join(
+            f"a.mh{b * _ROWS + r} = b.mh{b * _ROWS + r}" for r in range(_ROWS)
+        )
+        parts.append(
+            f"SELECT a.doc_id AS id_a, b.doc_id AS id_b FROM sigs a "
+            f"JOIN sigs b ON {cols} AND a.doc_id < b.doc_id"
+        )
+    return " UNION ".join(parts)
+_def(
+    "q31_minhash",
+    spark_sql=f"""
+WITH toks AS (
+  SELECT doc_id, explode(array_distinct({_TOKENS_SPARK})) AS tok FROM documents),
+ hashed AS (SELECT doc_id, {_MD5_SPARK.format(t='tok')} % {_M} AS h FROM toks)
+SELECT doc_id, {_mh_spark} FROM hashed GROUP BY doc_id
+""",
+    duck_sql=f"""
+WITH toks AS (
+  SELECT doc_id, unnest(list_distinct({_TOKENS_DUCK})) AS tok FROM documents),
+ hashed AS (SELECT doc_id, {_MD5_DUCK.format(t='tok')} % {_M} AS h FROM toks)
+SELECT doc_id, {_mh_duck} FROM hashed GROUP BY doc_id
+""",
+)
+
+
+def _q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.dedup import lsh_candidate_pairs, minhash_signatures
+
+    _load(spark, sf_dir)
+    sigs = minhash_signatures(spark.table("documents"))
+    return lsh_candidate_pairs(sigs)
+
+
+_PAIRS_DUCK = f"""
+WITH toks AS (
+  SELECT doc_id, unnest(list_distinct({_TOKENS_DUCK})) AS tok FROM documents),
+ hashed AS (SELECT doc_id, {_MD5_DUCK.format(t='tok')} % {_M} AS h FROM toks),
+ sigs AS (SELECT doc_id, {_mh_duck} FROM hashed GROUP BY doc_id),
+ pairs AS ({_band_pairs_duck()})
+"""
+
+_def(
+    "q32_lsh_pairs",
+    fn=_q_lsh_pairs,
+    duck_sql=_PAIRS_DUCK + "SELECT id_a, id_b FROM pairs",
+)
+
+# 64-bit simhash as four 16-bit words (twin of osm_spark.text.dedup.
+# simhash — r2 upgrade from the 16-bit r1 hash, VERDICT r1 #2/#3).
+# Bits 0-31 vote on h1 (md5 prefix), 32-63 on h2 (md5 chars 17-31).
+def _sim_votes(h1: str, h2: str, cast_bigint: bool) -> str:
+    out = []
+    for i in range(64):
+        src, bit = (h1, i) if i < 32 else (h2, i - 32)
+        e = f"sum((({src} >> {bit}) & 1) * 2 - 1)"
+        if cast_bigint:
+            e = f"CAST({e} AS BIGINT)"
+        out.append(f"{e} AS v{i}")
+    return ", ".join(out)
+
+
+def _sim_words() -> str:
+    words = []
+    for w in range(4):
+        s = " + ".join(
+            f"(CASE WHEN v{w * 16 + b} > 0 THEN {1 << b} ELSE 0 END)"
+            for b in range(16)
+        )
+        words.append(f"CAST({s} AS BIGINT) AS sh{w}")
+    return ", ".join(words)
+
+
+_SIM_DUCK_CTE = f"""
+WITH toks AS (
+  SELECT doc_id, unnest(list_distinct({_TOKENS_DUCK})) AS tok FROM documents),
+ hashed AS (SELECT doc_id, {_MD5_DUCK.format(t='tok')} AS h1,
+                   {_MD52_DUCK.format(t='tok')} AS h2 FROM toks),
+ votes AS (SELECT doc_id, {_sim_votes('h1', 'h2', True)} FROM hashed GROUP BY doc_id),
+ sh AS (SELECT doc_id, {_sim_words()} FROM votes)
+"""
+
+def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.dedup import simhash
+
+    _load(spark, sf_dir)
+    return simhash(spark.table("documents"))
+
+
+_def(
+    "q33_simhash",
+    fn=_q_simhash,
+    duck_sql=_SIM_DUCK_CTE + "SELECT doc_id, sh0, sh1, sh2, sh3 FROM sh",
+)
+
+
+def _q_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.dedup import (
+        lsh_candidate_pairs,
+        minhash_signatures,
+        unigram_jaccard_pairs,
+    )
+
+    _load(spark, sf_dir)
+    docs = spark.table("documents")
+    pairs = lsh_candidate_pairs(minhash_signatures(docs))
+    return unigram_jaccard_pairs(docs, pairs).select(
+        "id_a", "id_b", F.round("jaccard", 9).alias("jaccard")
+    )
+
+
+_def(
+    "q34_jaccard",
+    fn=_q_jaccard,
+    duck_sql=_PAIRS_DUCK
+    + f""",
+ dtoks AS (SELECT doc_id, list_distinct({_TOKENS_DUCK}) AS toks FROM documents)
+SELECT id_a, id_b,
+       round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
+             / len(list_distinct(list_concat(a.toks, b.toks))), 9) AS jaccard
+FROM pairs JOIN dtoks a ON id_a = a.doc_id JOIN dtoks b ON id_b = b.doc_id
+""",
+)
 
 _STOPS = "'the', 'a', 'an', 'and', 'of', 'to', 'in', 'is', 'it'"
 _def(
@@ -1075,6 +1221,521 @@ SELECT doc_id,
        {_MD5_DUCK.format(t=f"array_to_string({_TOKENS_DUCK}, ' ')")} AS fingerprint,
        CAST(length(array_to_string({_TOKENS_DUCK}, ' ')) AS BIGINT) AS norm_len
 FROM documents
+""",
+)
+
+
+def _q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """True token-3-gram shingle Jaccard on LSH candidate pairs."""
+    from osm_spark.text.dedup import (
+        lsh_candidate_pairs,
+        minhash_signatures,
+        ngram_shingles_sql,
+    )
+
+    _load(spark, sf_dir)
+    docs = spark.table("documents")
+    pairs = lsh_candidate_pairs(minhash_signatures(docs))
+    sh = docs.select(
+        "doc_id",
+        F.array_distinct(F.expr(ngram_shingles_sql("text", 3))).alias("sh"),
+    )
+    a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
+    b = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size(F.array_union("sh_a", "sh_b"))
+    return (
+        pairs.join(a, "id_a")
+        .join(b, "id_b")
+        .select(
+            "id_a", "id_b", F.round(inter.cast("double") / union, 9).alias("jaccard3")
+        )
+    )
+
+
+_SHINGLES_DUCK = (
+    f"list_transform(range(1, greatest(len({_TOKENS_DUCK}) - 2, 0) + 1), "
+    f"i -> array_to_string(({_TOKENS_DUCK})[i:i+2], ' '))"
+)
+_def(
+    "q39_ngram_jaccard",
+    fn=_q_ngram_jaccard,
+    duck_sql=_PAIRS_DUCK
+    + f""",
+ sh AS (SELECT doc_id, list_distinct({_SHINGLES_DUCK}) AS s FROM documents)
+SELECT id_a, id_b,
+       round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
+             / len(list_distinct(list_concat(a.s, b.s))), 9) AS jaccard3
+FROM pairs JOIN sh a ON id_a = a.doc_id JOIN sh b ON id_b = b.doc_id
+""",
+)
+
+
+def _q_shingle_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The full shingle→minhash→band→bucket-join chain (word-3-gram
+    shingling — the standard web-dedup configuration; q31/q32 are the
+    cheaper unigram screen)."""
+    from osm_spark.text.dedup import (
+        lsh_candidate_pairs,
+        minhash_signatures,
+        ngram_shingles_sql,
+    )
+
+    _load(spark, sf_dir)
+    docs = spark.table("documents")
+    sigs = minhash_signatures(docs, unit_sql=ngram_shingles_sql("text", 3))
+    return lsh_candidate_pairs(sigs)
+
+
+_def(
+    "q44_shingle_lsh_pairs",
+    fn=_q_shingle_lsh,
+    duck_sql=f"""
+WITH sh AS (
+  SELECT doc_id, unnest(list_distinct({_SHINGLES_DUCK})) AS tok FROM documents),
+ hashed AS (SELECT doc_id, {_MD5_DUCK.format(t='tok')} % {_M} AS h FROM sh),
+ sigs AS (SELECT doc_id, {_mh_duck} FROM hashed GROUP BY doc_id),
+ pairs AS ({_band_pairs_duck()})
+SELECT id_a, id_b FROM pairs
+""",
+)
+
+
+def _q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.dedup import simhash, simhash_near_pairs
+
+    _load(spark, sf_dir)
+    s = simhash(spark.table("documents"))
+    return simhash_near_pairs(s, max_hamming=3).select(
+        "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
+    )
+
+
+# 16-bit-word band blocking (r2): pigeonhole over 4 words of the
+# 64-bit hash — hamming≤3 pairs share at least one exact word.
+_word_joins = " UNION ".join(
+    "SELECT a.doc_id AS id_a, b.doc_id AS id_b, "
+    + ", ".join(f"a.sh{w} AS a{w}, b.sh{w} AS b{w}" for w in range(4))
+    + f" FROM sh a JOIN sh b ON a.sh{i} = b.sh{i} AND a.doc_id < b.doc_id"
+    for i in range(4)
+)
+_ham_duck = " + ".join(f"bit_count(xor(a{w}, b{w}))" for w in range(4))
+_def(
+    "q43_simhash_pairs",
+    spark_sql=None,
+    fn=_q_simhash_pairs,
+    duck_sql=_SIM_DUCK_CTE.rstrip()
+    + f""",
+ cand AS ({_word_joins})
+SELECT id_a, id_b, CAST({_ham_duck} AS BIGINT) AS hamming
+FROM cand WHERE {_ham_duck} <= 3
+""",
+)
+
+
+# ---------------------------------------------------------------------------
+# ANN queries (embeddings table)
+# ---------------------------------------------------------------------------
+
+
+def _q_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.ann import cosine_topk
+
+    _load(spark, sf_dir)
+    emb = spark.table("embeddings")
+    queries = emb.where(F.col("vec_id") % 50 == 0)
+    out = cosine_topk(emb, queries, k=5)
+    return out.select(
+        "query_id", F.col("rank").cast("long").alias("rank"), "neighbor_id"
+    )
+
+
+_def(
+    "q40_ann_topk",
+    fn=_q_ann,
+    duck_sql="""
+WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
+           WHERE vec_id % 50 = 0),
+ e AS (SELECT vec_id AS neighbor_id, embedding AS ev FROM embeddings),
+ sims AS (
+   SELECT query_id, neighbor_id,
+          list_reduce(list_transform(range(1, len(qv) + 1),
+              i -> CAST(qv[i] AS DOUBLE) * CAST(ev[i] AS DOUBLE)), (a, b) -> a + b)
+          / (sqrt(list_reduce(list_transform(range(1, len(qv) + 1),
+                i -> CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE)), (a, b) -> a + b))
+           * sqrt(list_reduce(list_transform(range(1, len(ev) + 1),
+                i -> CAST(ev[i] AS DOUBLE) * CAST(ev[i] AS DOUBLE)), (a, b) -> a + b)))
+          AS sim
+   FROM q CROSS JOIN e WHERE query_id != neighbor_id),
+ ranked AS (SELECT query_id, neighbor_id,
+                   CAST(row_number() OVER (PARTITION BY query_id
+                        ORDER BY sim DESC, neighbor_id) AS BIGINT) AS rank
+            FROM sims)
+SELECT query_id, rank, neighbor_id FROM ranked WHERE rank <= 5
+""",
+)
+
+
+def _q_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH ANN with a fully INDEPENDENT oracle (VERDICT r3 next #4: the
+    duck side used to be a literal `SELECT true`): per query, the
+    approximate top-5 multiset digest, candidate count, hit count vs
+    exact top-5, and recall@5 — and the DuckDB side recomputes ALL of
+    it from scratch: md5-derived hyperplanes, sign-bit buckets,
+    multiprobe expansion, bucket-join candidates, sequential-order
+    cosine re-rank, exact top-5, recall. Nothing Spark computes is
+    taken on faith.
+
+    The sandbox corpus is iid-random — LSH's worst case (nearest
+    neighbors at cosine ~0.35 vs median ~0.01) — so parameters are
+    corpus-calibrated: 6 planes × 8 tables × multiprobe-1 measures
+    mean recall 0.90 at sf0.01. On clustered real embeddings the same
+    shape runs with far more planes (see data/vectors.py and the
+    ann_ivf_scale bench leg for the clustered-regime evidence).
+    """
+    from osm_spark.text.ann import cosine_topk, hyperplane_lsh_topk
+
+    _load(spark, sf_dir)
+    emb = spark.table("embeddings")
+    queries = emb.where(F.col("vec_id") % 50 == 0)
+    exact = cosine_topk(emb, queries, k=5).select("query_id", "neighbor_id")
+    approx = hyperplane_lsh_topk(
+        emb, queries, k=5, n_planes=6, n_tables=8, multiprobe_bits=1
+    ).select("query_id", "neighbor_id", "n_candidates")
+    hits = approx.join(exact, ["query_id", "neighbor_id"], "left_semi")
+    return (
+        approx.groupBy("query_id")
+        .agg(
+            F.max("n_candidates").cast("long").alias("n_candidates"),
+            F.md5(
+                F.concat_ws(
+                    ",",
+                    F.transform(
+                        F.sort_array(F.collect_list("neighbor_id")),
+                        lambda x: x.cast("string"),
+                    ),
+                )
+            ).alias("approx_digest"),
+        )
+        .join(
+            hits.groupBy("query_id").agg(F.count("*").alias("n_hit")),
+            "query_id",
+            "left",
+        )
+        .select(
+            "query_id",
+            "n_candidates",
+            "approx_digest",
+            F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
+            (F.coalesce("n_hit", F.lit(0)).cast("double") / F.lit(5.0)).alias(
+                "recall"
+            ),
+        )
+    )
+
+
+# The independent LSH re-implementation: hyperplane component (t,p,d)
+# = md5("hp-t-p-d") first 8 bytes big-endian / 2^64 * 2 - 1 — exactly
+# ann._hyperplanes. Bucket sign-dots only feed a > 0 comparison, so
+# DuckDB's SUM order vs Spark's sequential aggregate cannot diverge
+# except at |dot| ~ 1e-15 (continuous-valued; negligible). The re-rank
+# cosine uses list_reduce in sequential order — bit-identical to the
+# JVM aggregate(zip_with(...)) by construction (same guarantee q40
+# already relies on).
+_Q41_DUCK = """
+WITH planes AS (
+  SELECT t, p, d,
+         CAST(CAST(('0x' || substr(md5('hp-' || t || '-' || p || '-' || d), 1, 16)) AS UBIGINT) AS DOUBLE)
+           / 18446744073709551616.0 * 2.0 - 1.0 AS w
+  FROM generate_series(0, 7) AS tt(t),
+       generate_series(0, 5) AS pp(p),
+       generate_series(0, 63) AS dd(d)
+),
+dots AS (
+  SELECT e.vec_id, pl.t, pl.p,
+         SUM(CAST(e.embedding[pl.d + 1] AS DOUBLE) * pl.w) AS dot
+  FROM embeddings e, planes pl
+  GROUP BY e.vec_id, pl.t, pl.p
+),
+buckets AS (
+  SELECT vec_id, t,
+         CAST(SUM(CASE WHEN dot > 0 THEN (CAST(1 AS BIGINT) << p) ELSE CAST(0 AS BIGINT) END)
+              + (CAST(t AS BIGINT) << 48) AS BIGINT) AS bucket
+  FROM dots GROUP BY vec_id, t
+),
+masks AS (
+  SELECT CAST(0 AS BIGINT) AS mask
+  UNION ALL
+  SELECT (CAST(1 AS BIGINT) << j) FROM generate_series(0, 5) AS jj(j)
+),
+qprobes AS (
+  SELECT b.vec_id AS query_id, xor(b.bucket, m.mask) AS bucket
+  FROM buckets b, masks m
+  WHERE b.vec_id % 50 = 0
+),
+cand AS (
+  SELECT DISTINCT q.query_id, e.vec_id AS neighbor_id
+  FROM qprobes q JOIN buckets e USING (bucket)
+  WHERE q.query_id != e.vec_id
+),
+v AS (SELECT vec_id, embedding AS ev FROM embeddings),
+sims AS (
+  SELECT c.query_id, c.neighbor_id,
+         list_reduce(list_transform(range(1, len(a.ev) + 1),
+             i -> CAST(a.ev[i] AS DOUBLE) * CAST(b.ev[i] AS DOUBLE)), (x, y) -> x + y)
+         / (sqrt(list_reduce(list_transform(range(1, len(a.ev) + 1),
+               i -> CAST(a.ev[i] AS DOUBLE) * CAST(a.ev[i] AS DOUBLE)), (x, y) -> x + y))
+          * sqrt(list_reduce(list_transform(range(1, len(b.ev) + 1),
+               i -> CAST(b.ev[i] AS DOUBLE) * CAST(b.ev[i] AS DOUBLE)), (x, y) -> x + y)))
+         AS sim
+  FROM cand c JOIN v a ON a.vec_id = c.query_id
+              JOIN v b ON b.vec_id = c.neighbor_id
+),
+ranked AS (
+  SELECT query_id, neighbor_id,
+         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS r,
+         count(*) OVER (PARTITION BY query_id) AS n_candidates
+  FROM sims
+),
+a5 AS (SELECT query_id, neighbor_id, n_candidates FROM ranked WHERE r <= 5),
+esims AS (
+  SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
+         list_reduce(list_transform(range(1, len(q.embedding) + 1),
+             i -> CAST(q.embedding[i] AS DOUBLE) * CAST(b.ev[i] AS DOUBLE)), (x, y) -> x + y)
+         / (sqrt(list_reduce(list_transform(range(1, len(q.embedding) + 1),
+               i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE)), (x, y) -> x + y))
+          * sqrt(list_reduce(list_transform(range(1, len(b.ev) + 1),
+               i -> CAST(b.ev[i] AS DOUBLE) * CAST(b.ev[i] AS DOUBLE)), (x, y) -> x + y)))
+         AS sim
+  FROM embeddings q CROSS JOIN v b
+  WHERE q.vec_id % 50 = 0 AND q.vec_id != b.vec_id
+),
+e5 AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT query_id, neighbor_id,
+           row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS r
+    FROM esims) WHERE r <= 5
+)
+SELECT a.query_id,
+       CAST(MAX(a.n_candidates) AS BIGINT) AS n_candidates,
+       md5(string_agg(CAST(a.neighbor_id AS VARCHAR), ','
+                      ORDER BY a.neighbor_id)) AS approx_digest,
+       CAST(COUNT(e.neighbor_id) AS BIGINT) AS n_hit,
+       CAST(COUNT(e.neighbor_id) AS DOUBLE) / 5.0 AS recall
+FROM a5 a LEFT JOIN e5 e USING (query_id, neighbor_id)
+GROUP BY a.query_id
+"""
+
+_def("q41_lsh_ann", fn=_q_lsh_ann, duck_sql=_Q41_DUCK)
+
+
+_Q45_N_PROBE = 4
+
+
+def _q_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN with an INDEPENDENT oracle (VERDICT r3 next #2 + #4):
+    auto-sized quantizer (n_lists ≈ √corpus — the selective config;
+    the old fixed 16/8 point re-ranked half the corpus), and a DuckDB
+    side that recomputes list assignment, probing, re-rank, exact
+    top-5 and recall from CENTROID LITERALS produced by the same
+    pure-numpy trainer run over the same parquet through pyarrow —
+    Spark's arithmetic is externally checked, not self-certified.
+
+    Output per query: candidate count, approximate-top-5 multiset
+    digest, hits vs exact top-5, recall@5."""
+    from osm_spark.text.ann import cosine_topk, ivf_topk
+
+    _load(spark, sf_dir)
+    emb = spark.table("embeddings")
+    queries = emb.where(F.col("vec_id") % 50 == 0)
+    exact = cosine_topk(emb, queries, k=5).select("query_id", "neighbor_id")
+    approx = ivf_topk(
+        emb, queries, k=5, n_lists=None, n_probe=_Q45_N_PROBE, n_iters=5
+    ).select("query_id", "neighbor_id", "n_candidates")
+    hits = approx.join(exact, ["query_id", "neighbor_id"], "left_semi")
+    return (
+        approx.groupBy("query_id")
+        .agg(
+            F.max("n_candidates").cast("long").alias("n_candidates"),
+            F.md5(
+                F.concat_ws(
+                    ",",
+                    F.transform(
+                        F.sort_array(F.collect_list("neighbor_id")),
+                        lambda x: x.cast("string"),
+                    ),
+                )
+            ).alias("approx_digest"),
+        )
+        .join(
+            hits.groupBy("query_id").agg(F.count("*").alias("n_hit")),
+            "query_id",
+            "left",
+        )
+        .select(
+            "query_id",
+            "n_candidates",
+            "approx_digest",
+            F.coalesce("n_hit", F.lit(0)).cast("long").alias("n_hit"),
+            (F.coalesce("n_hit", F.lit(0)).cast("double") / F.lit(5.0)).alias(
+                "recall"
+            ),
+        )
+    )
+
+
+def _q45_oracle_sql() -> str:
+    """Builds the q45 oracle: reads the SAME embeddings parquet through
+    pyarrow (no Spark), trains the quantizer with the SAME pure-numpy
+    function Spark calls (train_ivf_centroids_np — order-invariant, so
+    the two paths are bit-identical), embeds the centroids as SQL
+    literals (quoted-repr doubles — DuckDB bare decimals parse as
+    lossy DECIMAL), and re-implements assignment → probe → re-rank →
+    recall in SQL. The embeddings table is sf-invariant in this
+    testdata, so the default sf0.01 read matches every gate;
+    SPARK_GRAFT_ORACLE_SF_DIR overrides."""
+    import os
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from osm_spark.text.ann import auto_n_lists, train_ivf_centroids_np
+
+    sf_dir = os.environ.get(
+        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
+    )
+    tb = pq.read_table(
+        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
+    )
+    ids = np.asarray(tb["vec_id"].to_pylist(), dtype=np.int64)
+    X = np.asarray(tb["embedding"].to_pylist(), dtype=np.float64)
+    n_lists = auto_n_lists(len(ids))
+    C = train_ivf_centroids_np(ids, X, n_lists, 5)
+    vals = ",\n".join(
+        "(" + ",".join(
+            [str(j)] + [f"CAST('{C[j, d]!r}' AS DOUBLE)" for d in range(C.shape[1])]
+        ) + ")"
+        for j in range(n_lists)
+    )
+    cent_cols = ", ".join(f"c{d}" for d in range(C.shape[1]))
+    cent_list = "list_value(" + ", ".join(
+        f"c{d}" for d in range(C.shape[1])
+    ) + ")"
+    return f"""
+WITH cent_rows({cent_cols.replace('c0', 'j, c0')}) AS (VALUES {vals}),
+cent AS (SELECT j, {cent_list} AS cv FROM cent_rows),
+vn AS (
+  SELECT vec_id, embedding,
+         sqrt(list_reduce(list_transform(range(1, len(embedding) + 1),
+             i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
+             (x, y) -> x + y)) AS nrm
+  FROM embeddings
+),
+cdots AS (
+  SELECT v.vec_id, c.j,
+         list_reduce(list_transform(range(1, len(v.embedding) + 1),
+             i -> CAST(v.embedding[i] AS DOUBLE) / (CASE WHEN v.nrm = 0 THEN 1.0 ELSE v.nrm END) * c.cv[i]),
+             (x, y) -> x + y) AS dot
+  FROM vn v CROSS JOIN cent c
+),
+assigned AS (
+  SELECT vec_id, j AS list_id FROM (
+    SELECT vec_id, j,
+           row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, j) AS r
+    FROM cdots) WHERE r = 1
+),
+qprobes AS (
+  SELECT vec_id AS query_id, j AS list_id FROM (
+    SELECT vec_id, j,
+           row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, j) AS r
+    FROM cdots WHERE vec_id % 50 = 0) WHERE r <= {_Q45_N_PROBE}
+),
+cand AS (
+  SELECT q.query_id, e.vec_id AS neighbor_id
+  FROM qprobes q JOIN assigned e USING (list_id)
+  WHERE q.query_id != e.vec_id
+),
+v AS (SELECT vec_id, embedding AS ev FROM embeddings),
+sims AS (
+  SELECT c.query_id, c.neighbor_id,
+         list_reduce(list_transform(range(1, len(a.ev) + 1),
+             i -> CAST(a.ev[i] AS DOUBLE) * CAST(b.ev[i] AS DOUBLE)), (x, y) -> x + y)
+         / (sqrt(list_reduce(list_transform(range(1, len(a.ev) + 1),
+               i -> CAST(a.ev[i] AS DOUBLE) * CAST(a.ev[i] AS DOUBLE)), (x, y) -> x + y))
+          * sqrt(list_reduce(list_transform(range(1, len(b.ev) + 1),
+               i -> CAST(b.ev[i] AS DOUBLE) * CAST(b.ev[i] AS DOUBLE)), (x, y) -> x + y)))
+         AS sim
+  FROM cand c JOIN v a ON a.vec_id = c.query_id
+              JOIN v b ON b.vec_id = c.neighbor_id
+),
+ranked AS (
+  SELECT query_id, neighbor_id,
+         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS r,
+         count(*) OVER (PARTITION BY query_id) AS n_candidates
+  FROM sims
+),
+a5 AS (SELECT query_id, neighbor_id, n_candidates FROM ranked WHERE r <= 5),
+esims AS (
+  SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
+         list_reduce(list_transform(range(1, len(q.embedding) + 1),
+             i -> CAST(q.embedding[i] AS DOUBLE) * CAST(b.ev[i] AS DOUBLE)), (x, y) -> x + y)
+         / (sqrt(list_reduce(list_transform(range(1, len(q.embedding) + 1),
+               i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE)), (x, y) -> x + y))
+          * sqrt(list_reduce(list_transform(range(1, len(b.ev) + 1),
+               i -> CAST(b.ev[i] AS DOUBLE) * CAST(b.ev[i] AS DOUBLE)), (x, y) -> x + y)))
+         AS sim
+  FROM embeddings q CROSS JOIN v b
+  WHERE q.vec_id % 50 = 0 AND q.vec_id != b.vec_id
+),
+e5 AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT query_id, neighbor_id,
+           row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS r
+    FROM esims) WHERE r <= 5
+)
+SELECT a.query_id,
+       CAST(MAX(a.n_candidates) AS BIGINT) AS n_candidates,
+       md5(string_agg(CAST(a.neighbor_id AS VARCHAR), ','
+                      ORDER BY a.neighbor_id)) AS approx_digest,
+       CAST(COUNT(e.neighbor_id) AS BIGINT) AS n_hit,
+       CAST(COUNT(e.neighbor_id) AS DOUBLE) / 5.0 AS recall
+FROM a5 a LEFT JOIN e5 e USING (query_id, neighbor_id)
+GROUP BY a.query_id
+"""
+
+
+_def("q45_ivf_ann", fn=_q_ivf_ann, duck_sql=_q45_oracle_sql())
+
+
+def _q_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs (exact mode — the
+    correctness baseline the LSH-bucketed scale path is pytest-pinned
+    against; cosine_near_pairs(mode='lsh') is the 10^12-row shape)."""
+    from osm_spark.text.ann import cosine_near_pairs
+
+    _load(spark, sf_dir)
+    emb = spark.table("embeddings")
+    return cosine_near_pairs(emb, threshold=0.3, mode="exact").select(
+        "id_a", "id_b", F.round("sim", 9).alias("sim")
+    )
+
+
+_def(
+    "q42_cosine_near_dup",
+    fn=_q_cosine_near_dup,
+    duck_sql="""
+WITH e AS (SELECT vec_id, embedding AS v FROM embeddings),
+ sims AS (
+   SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+          list_reduce(list_transform(range(1, len(a.v) + 1),
+              i -> CAST(a.v[i] AS DOUBLE) * CAST(b.v[i] AS DOUBLE)), (x, y) -> x + y)
+          / (sqrt(list_reduce(list_transform(range(1, len(a.v) + 1),
+                i -> CAST(a.v[i] AS DOUBLE) * CAST(a.v[i] AS DOUBLE)), (x, y) -> x + y))
+           * sqrt(list_reduce(list_transform(range(1, len(b.v) + 1),
+                i -> CAST(b.v[i] AS DOUBLE) * CAST(b.v[i] AS DOUBLE)), (x, y) -> x + y)))
+          AS sim
+   FROM e a JOIN e b ON a.vec_id < b.vec_id)
+SELECT id_a, id_b, round(sim, 9) AS sim FROM sims WHERE sim >= 0.3
 """,
 )
 
@@ -1601,6 +2262,46 @@ FROM data GROUP BY version
 _def("q59_snapshot_travel", fn=_q_snapshot, duck_sql=_q59_oracle_sql())
 
 
+# ---------------------------------------------------------------------------
+# q60 — deterministic train/val/test split (hash bucketing)
+# ---------------------------------------------------------------------------
+#
+# text/sampling.py: content-hash bucketing (md5-prefix -> int64, the
+# repo's oracle-safe hash family) so sample/split membership is a pure
+# function of the key — reproducible across runs, engines, cluster
+# sizes and checkpoint resumes, unlike seed-based df.sample. The full
+# per-document assignment is hash-checked against DuckDB.
+
+
+def _q_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.sampling import hash_split
+
+    _load(spark, sf_dir)
+    docs = spark.table("documents").select(
+        "doc_id", F.col("doc_id").cast("string").alias("k")
+    )
+    out = hash_split(
+        docs, "k", {"train": 0.9, "val": 0.05, "test": 0.05}, salt="v1:"
+    )
+    return out.select("doc_id", "split")
+
+
+def _q60_oracle_sql() -> str:
+    from osm_spark.text.sampling import bucket_sql
+
+    b = bucket_sql("CAST(doc_id AS VARCHAR)", 10_000, salt="v1:")
+    return f"""
+SELECT doc_id,
+       CASE WHEN {b} < 9000 THEN 'train'
+            WHEN {b} < 9500 THEN 'val'
+            ELSE 'test' END AS split
+FROM documents
+"""
+
+
+_def("q60_hash_split", fn=_q_split, duck_sql=_q60_oracle_sql())
+
+
 # X32 — spatially-clustered storage + partition-pruned region read.
 # Country 0's SW quarter (includes the hot city cluster); at level 4
 # this bbox sits inside one coarse cell, so the read prunes to a single
@@ -1702,6 +2403,268 @@ WHERE lat_u BETWEEN {lo} AND {hi}
 _def("q64_manifest_pruned_read", fn=_q_manifest_pruned_read, duck_sql=_q64_oracle_sql())
 
 
+# X34 — near-duplicate CLUSTERING: LSH pairs → Jaccard ≥ 0.9 verify →
+# distributed connected components (large-star/small-star, Kiveris et
+# al. SoCC'14) → per-doc (component = min doc_id reachable,
+# cluster_size, keep = canonical). The oracle recomputes the SAME
+# pipeline with an independent algorithm: a recursive-CTE transitive
+# closure over the verified pair graph.
+_NEAR_DUP_THRESHOLD = 0.9
+
+
+def _q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.dedup import near_dup_clusters
+
+    _load(spark, sf_dir)
+    return near_dup_clusters(
+        spark.table("documents"), threshold=_NEAR_DUP_THRESHOLD
+    ).select("doc_id", "component", "cluster_size", "keep")
+
+
+def _q65_oracle_sql() -> str:
+    # WITH RECURSIVE admits the non-recursive _PAIRS_DUCK CTEs too.
+    head = _PAIRS_DUCK.replace("WITH toks", "WITH RECURSIVE toks", 1)
+    return (
+        head
+        + f""",
+ dtoks AS (SELECT doc_id, list_distinct({_TOKENS_DUCK}) AS toks FROM documents),
+ jp AS (
+   SELECT id_a, id_b FROM pairs
+   JOIN dtoks a ON id_a = a.doc_id JOIN dtoks b ON id_b = b.doc_id
+   WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
+         / len(list_distinct(list_concat(a.toks, b.toks)))
+         >= {_NEAR_DUP_THRESHOLD}),
+ sym AS (SELECT id_a AS a, id_b AS b FROM jp
+         UNION SELECT id_b, id_a FROM jp),
+ reach(src, dst) AS (
+   SELECT a, b FROM sym
+   UNION
+   SELECT r.src, s.b FROM reach r JOIN sym s ON r.dst = s.a),
+ comp AS (
+   SELECT d.doc_id,
+          least(d.doc_id, coalesce(min(r.dst), d.doc_id)) AS component
+   FROM documents d LEFT JOIN reach r ON r.src = d.doc_id
+   GROUP BY d.doc_id),
+ sizes AS (SELECT component AS c2, count(*) AS cluster_size
+           FROM comp GROUP BY component)
+SELECT doc_id, component, cluster_size,
+       doc_id = component AS keep
+FROM comp JOIN sizes ON component = c2
+"""
+    )
+
+
+_def("q65_near_dup_clusters", fn=_q_near_dup_clusters, duck_sql=_q65_oracle_sql())
+
+
+# X35 — PII detection + redaction (emails / IPv4 / phones), pure
+# Catalyst regex. The testdata documents carry no PII, so the query
+# injects deterministic PII into every 7th document FIRST (same CASE
+# expression on both sides) — the scrub is then verified on known
+# positives and known negatives alike, including the full redacted
+# string, not just the counts.
+_PII_INJECT_SQL = (
+    "CASE WHEN doc_id % 7 = 0 THEN concat(text,"
+    " ' reach user', cast(doc_id AS {s}), '@mail.example.org'"
+    ", ' or 10.2.', cast(doc_id % 256 AS {s}), '.7'"
+    ", ' call +1 555 01', lpad(cast(doc_id % 100 AS {s}), 2, '0'))"
+    " ELSE text END"
+)
+
+
+def _q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.pii import with_pii_scrub
+
+    _load(spark, sf_dir)
+    injected = spark.table("documents").select(
+        "doc_id", F.expr(_PII_INJECT_SQL.format(s="string")).alias("text")
+    )
+    return with_pii_scrub(injected).select(
+        "doc_id", "n_email", "n_ipv4", "n_phone", "clean_text"
+    )
+
+
+def _q66_oracle_sql() -> str:
+    from osm_spark.text.pii import PII_PATTERNS
+
+    counts = ", ".join(
+        f"len(regexp_extract_all(text, '{p}')) AS n_{name}"
+        for name, p, _ in PII_PATTERNS
+    )
+    clean = "text"
+    for _name, p, tag in PII_PATTERNS:
+        clean = f"regexp_replace({clean}, '{p}', '{tag}', 'g')"
+    inject = _PII_INJECT_SQL.format(s="VARCHAR")
+    return f"""
+WITH injected AS (SELECT doc_id, {inject} AS text FROM documents)
+SELECT doc_id, {counts}, {clean} AS clean_text
+FROM injected
+"""
+
+
+_def("q66_pii_scrub", fn=_q_pii_scrub, duck_sql=_q66_oracle_sql())
+
+
+# X36 — Gopher-style repetition quality signals: distinct-token ratio,
+# top-token fraction, top-bigram fraction + keep flag, all via
+# map-side-combinable explode/groupBy aggregations (never O(len^2)
+# per-row array scans).
+def _q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.repetition import with_repetition_stats
+
+    _load(spark, sf_dir)
+    return with_repetition_stats(spark.table("documents")).select(
+        "doc_id",
+        "n_tokens",
+        "distinct_ratio",
+        "top_token_frac",
+        "top_bigram_frac",
+        "keep_repetition",
+    )
+
+
+def _q67_oracle_sql() -> str:
+    from osm_spark.text.repetition import (
+        MAX_TOP_BIGRAM_FRAC,
+        MAX_TOP_TOKEN_FRAC,
+        MIN_DISTINCT_RATIO,
+    )
+
+    return f"""
+WITH base AS (
+  SELECT doc_id, {_TOKENS_DUCK} AS toks FROM documents
+  WHERE len({_TOKENS_DUCK}) > 0),
+ uni AS (SELECT doc_id, unnest(toks) AS gram FROM base),
+ bi AS (SELECT doc_id,
+               unnest(list_transform(range(1, len(toks)),
+                      i -> concat(toks[i], ' ', toks[i+1]))) AS gram
+        FROM base),
+ ug AS (SELECT doc_id, gram, count(*) AS c FROM uni GROUP BY 1, 2),
+ bg AS (SELECT doc_id, gram, count(*) AS c FROM bi GROUP BY 1, 2),
+ u AS (SELECT doc_id, sum(c) AS tok_n, max(c) AS tok_top,
+              count(*) AS n_distinct FROM ug GROUP BY 1),
+ b AS (SELECT doc_id, sum(c) AS bi_n, max(c) AS bi_top FROM bg GROUP BY 1),
+ j AS (SELECT u.doc_id, tok_n, tok_top, n_distinct, bi_n, bi_top
+       FROM u LEFT JOIN b ON u.doc_id = b.doc_id)
+SELECT doc_id, CAST(tok_n AS BIGINT) AS n_tokens,
+       round(CAST(n_distinct AS DOUBLE) / tok_n, 9) AS distinct_ratio,
+       round(CAST(tok_top AS DOUBLE) / tok_n, 9) AS top_token_frac,
+       round(coalesce(CAST(bi_top AS DOUBLE) / bi_n, 0.0), 9) AS top_bigram_frac,
+       (round(CAST(n_distinct AS DOUBLE) / tok_n, 9) >= {MIN_DISTINCT_RATIO}
+        AND round(CAST(tok_top AS DOUBLE) / tok_n, 9) <= {MAX_TOP_TOKEN_FRAC}
+        AND round(coalesce(CAST(bi_top AS DOUBLE) / bi_n, 0.0), 9)
+            <= {MAX_TOP_BIGRAM_FRAC}) AS keep_repetition
+FROM j
+"""
+
+
+_def("q67_repetition_quality", fn=_q_repetition, duck_sql=_q67_oracle_sql())
+
+
+# X37 — URL normalization + host aggregation. The testdata has no URL
+# variety, so the query synthesizes deterministic messy URLs per doc
+# (case, www, default port, utm params, fragments, trailing slash —
+# same CASE expression on both sides), then the engine normalizes with
+# osm_spark.text.urls while the oracle applies an independently
+# written DuckDB regex chain.
+_URL_INJECT_SQL = (
+    "concat("
+    "CASE WHEN doc_id % 3 = 0 THEN 'HTTPS://' ELSE 'https://' END,"
+    " CASE WHEN doc_id % 2 = 0 THEN 'www.' ELSE '' END,"
+    " CASE WHEN doc_id % 5 = 0 THEN 'News.Example' ELSE 'blog.sample' END,"
+    " '.com',"
+    " CASE WHEN doc_id % 4 = 0 THEN ':443' ELSE '' END,"
+    " '/Art/', cast(doc_id AS {s}),"
+    " CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END,"
+    " CASE WHEN doc_id % 3 = 0 THEN concat('?utm_source=x&utm_campaign=',"
+    "   cast(doc_id % 9 AS {s}), '&id=', cast(doc_id AS {s}))"
+    "  WHEN doc_id % 7 = 0 THEN concat('?id=', cast(doc_id AS {s}),"
+    "   '&utm_medium=email')"
+    "  ELSE '' END,"
+    " CASE WHEN doc_id % 6 = 0 THEN '#frag' ELSE '' END)"
+)
+
+
+def _q_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.urls import with_url_parts
+
+    _load(spark, sf_dir)
+    injected = spark.table("documents").select(
+        "doc_id", F.expr(_URL_INJECT_SQL.format(s="string")).alias("url")
+    )
+    return with_url_parts(injected).select(
+        "doc_id", "url", "norm_url", "host", "registered_domain"
+    )
+
+
+_URL_NORM_DUCK = """
+ s1 AS (SELECT doc_id, url, regexp_replace(url, '#.*', '', 'g') AS u FROM u0),
+ s2 AS (SELECT doc_id, url,
+        concat(lower(regexp_extract(u, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/:?#]*')),
+               substr(u, length(regexp_extract(u,
+                 '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/:?#]*')) + 1)) AS u
+        FROM s1),
+ s3 AS (SELECT doc_id, url,
+        regexp_replace(u, '^([a-z][a-z0-9+.-]*://)www\\.', '\\1') AS u
+        FROM s2),
+ s4 AS (SELECT doc_id, url,
+        regexp_replace(u,
+          '^([a-z][a-z0-9+.-]*://[^/:?#]+):(80|443)([/?#].*)?$',
+          '\\1\\3') AS u FROM s3),
+ s5 AS (SELECT doc_id, url,
+        regexp_replace(regexp_replace(regexp_replace(u,
+          '([?&])(utm_[a-z_]+=[^&#]*&)+', '\\1', 'g'),
+          '[?&]utm_[a-z_]+=[^&#]*$', '', 'g'),
+          '\\?$', '', 'g') AS u FROM s4),
+ norm AS (SELECT doc_id, url, regexp_replace(u, '/+$', '', 'g') AS norm_url
+          FROM s5),
+ parts AS (SELECT doc_id, url, norm_url,
+        regexp_extract(norm_url, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS host
+        FROM norm),
+ final AS (SELECT doc_id, url, norm_url, host,
+        regexp_extract(host, '[a-z0-9-]+\\.[a-z]+$') AS registered_domain
+        FROM parts)
+"""
+
+
+def _q68_oracle_sql() -> str:
+    inject = _URL_INJECT_SQL.format(s="VARCHAR")
+    return (
+        f"WITH u0 AS (SELECT doc_id, {inject} AS url FROM documents),"
+        + _URL_NORM_DUCK
+        + "SELECT doc_id, url, norm_url, host, registered_domain FROM final"
+    )
+
+
+_def("q68_url_normalize", fn=_q_url_normalize, duck_sql=_q68_oracle_sql())
+
+
+def _q_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.urls import host_stats
+
+    _load(spark, sf_dir)
+    injected = spark.table("documents").select(
+        "doc_id", F.expr(_URL_INJECT_SQL.format(s="string")).alias("url")
+    )
+    return host_stats(injected)
+
+
+def _q69_oracle_sql() -> str:
+    inject = _URL_INJECT_SQL.format(s="VARCHAR")
+    return (
+        f"WITH u0 AS (SELECT doc_id, {inject} AS url FROM documents),"
+        + _URL_NORM_DUCK
+        + """
+SELECT host, registered_domain, count(*) AS n_pages,
+       count(DISTINCT norm_url) AS n_distinct_urls
+FROM final GROUP BY host, registered_domain
+"""
+    )
+
+
+_def("q69_host_stats", fn=_q_host_stats, duck_sql=_q69_oracle_sql())
+
+
 # X38 — HTML -> text extraction: the north-rule per-row invariant
 # ("byte-identical extracted text per url") as a first-class operator.
 # The engine side is osm_spark.sources.html (pure Catalyst regex chain
@@ -1750,6 +2713,1238 @@ def _q70_oracle_sql() -> str:
 
 
 _def("q70_extract_text", fn=_q_extract_text, duck_sql=_q70_oracle_sql())
+
+
+# X39 — benchmark decontamination (GPT-3 appx. C / Llama hygiene):
+# flag documents sharing any 8-token window with an eval set. The
+# "benchmark" here is deterministic: the full text of every document
+# with doc_id % 101 == 7 plays the leaked eval set, so contamination
+# is guaranteed non-trivial (the sources flag themselves, and any
+# other doc sharing a window flags too — the word-soup corpus makes
+# chance 8-gram collisions possible and both engines must agree on
+# them). The oracle recomputes the whole report in DuckDB, including
+# the pipe-joined sorted matched-gram list per doc.
+
+_DECON_N = 8
+_DECON_MOD = 101
+_DECON_REM = 7
+
+
+def _q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.decontaminate import contamination
+
+    _load(spark, sf_dir)
+    docs = spark.table("documents")
+    bench = docs.where(
+        (F.col("doc_id") % _DECON_MOD) == _DECON_REM
+    ).select("text")
+    return contamination(docs, bench, n=_DECON_N)
+
+
+def _q71_oracle_sql() -> str:
+    n = _DECON_N
+    shingles = (
+        f"list_transform(range(1, greatest(len({_TOKENS_DUCK}) - {n - 1}, 0) + 1), "
+        f"i -> array_to_string(({_TOKENS_DUCK})[i:i+{n - 1}], ' '))"
+    )
+    return f"""
+WITH bgrams AS (
+  SELECT DISTINCT unnest({shingles}) AS gram
+  FROM documents WHERE doc_id % {_DECON_MOD} = {_DECON_REM}),
+ dgrams AS (
+  SELECT doc_id, unnest(list_distinct({shingles})) AS gram FROM documents),
+ hits AS (
+  SELECT doc_id, count(*) AS n,
+         array_to_string(list_sort(list(gram)), '|') AS grams
+  FROM dgrams JOIN bgrams USING (gram) GROUP BY doc_id)
+SELECT d.doc_id,
+       CAST(coalesce(h.n, 0) AS BIGINT) AS n_contaminated_ngrams,
+       coalesce(h.grams, '') AS matched_grams,
+       coalesce(h.n, 0) > 0 AS contaminated
+FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
+"""
+
+
+_def("q71_decontaminate", fn=_q_decontaminate, duck_sql=_q71_oracle_sql())
+
+
+# X40 — sequence packing (concat-and-chunk): per-doc global token
+# offsets + training-sequence span via a TWO-PHASE distributed prefix
+# sum (range partition → per-partition totals → O(partitions) driver
+# prefix → bounded windows). The oracle computes the same assignment
+# with DuckDB's single global window — two radically different plans
+# (one of which would be dead at 10^9 rows), hash-equal output.
+
+_PACK_SEQ_LEN = 128
+
+
+def _q_pack_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.packing import pack_offsets
+
+    _load(spark, sf_dir)
+    return pack_offsets(
+        spark.table("documents"), seq_len=_PACK_SEQ_LEN, num_partitions=8
+    )
+
+
+_PACK_DUCK_BASE = f"""
+WITH toks AS (
+  SELECT doc_id, CAST(len({_TOKENS_DUCK}) AS INTEGER) AS n_tokens
+  FROM documents WHERE len({_TOKENS_DUCK}) > 0),
+ p AS (
+  SELECT doc_id, n_tokens,
+         CAST(coalesce(sum(n_tokens) OVER (ORDER BY doc_id
+              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+              AS BIGINT) AS start_tok
+  FROM toks),
+ pk AS (
+  SELECT doc_id, n_tokens, start_tok,
+         start_tok // {_PACK_SEQ_LEN} AS seq_first,
+         (start_tok + n_tokens - 1) // {_PACK_SEQ_LEN} AS seq_last
+  FROM p)
+"""
+
+
+def _q72_oracle_sql() -> str:
+    return (
+        _PACK_DUCK_BASE
+        + "SELECT doc_id, n_tokens, start_tok, seq_first, seq_last FROM pk"
+    )
+
+
+_def("q72_pack_offsets", fn=_q_pack_offsets, duck_sql=_q72_oracle_sql())
+
+
+def _q_sequence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.packing import pack_offsets, sequence_stats
+
+    _load(spark, sf_dir)
+    pack = pack_offsets(
+        spark.table("documents"), seq_len=_PACK_SEQ_LEN, num_partitions=8
+    )
+    return sequence_stats(pack, seq_len=_PACK_SEQ_LEN)
+
+
+def _q73_oracle_sql() -> str:
+    L = _PACK_SEQ_LEN
+    return (
+        _PACK_DUCK_BASE
+        + f""",
+ spans AS (
+  SELECT unnest(range(seq_first, seq_last + 1)) AS seq_id,
+         start_tok, n_tokens
+  FROM pk)
+SELECT seq_id, count(*) AS n_docs,
+       CAST(sum(least((seq_id + 1) * {L}, start_tok + n_tokens)
+                - greatest(seq_id * {L}, start_tok)) AS BIGINT) AS n_tokens
+FROM spans GROUP BY seq_id
+"""
+    )
+
+
+_def("q73_sequence_stats", fn=_q_sequence_stats, duck_sql=_q73_oracle_sql())
+
+
+# X41 — source-mixing sampler: deterministic per-source subsampling to
+# a token budget at prescribed integer shares (the training-mix step:
+# "6 parts web, 3 parts code, 1 part wiki"). Shares here derive from
+# the source name by a fixed rule ((int suffix % 4) + 1) so both
+# engines build the same mix without a hardcoded source list; the
+# budget is 10k tokens. All rate math is integer (token counts,
+# shares, md5-bucket bounds) — no float can disagree. q74 pins every
+# per-doc verdict; q75 pins the per-source achievement report.
+
+_MIX_BUDGET = 10_000
+_MIX_NB = 10_000
+_MIX_SALT = "mix:"
+
+
+def _mix_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.sampling import mix_sample
+
+    _load(spark, sf_dir)
+    docs = spark.table("documents")
+    srcs = [r["source"] for r in docs.select("source").distinct().collect()]
+    shares = {s: (int(s[3:]) % 4) + 1 for s in srcs}
+    return mix_sample(
+        docs, shares, _MIX_BUDGET, n_buckets=_MIX_NB, salt=_MIX_SALT
+    )
+
+
+def _q_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _mix_df(spark, sf_dir)
+
+
+_MIX_DUCK_BASE = f"""
+WITH toks AS (
+  SELECT doc_id, source, CAST(len({_TOKENS_DUCK}) AS INTEGER) AS n_tokens
+  FROM documents),
+ sh AS (
+  SELECT source, CAST(sum(n_tokens) AS BIGINT) AS avail,
+         (CAST(substr(source, 4) AS INTEGER) % 4) + 1 AS share
+  FROM toks GROUP BY source),
+ bounds AS (
+  SELECT source, avail,
+         least({_MIX_NB},
+               (({_MIX_BUDGET} * share) // (SELECT sum(share) FROM sh))
+               * {_MIX_NB} // avail) AS bound
+  FROM sh),
+ mixed AS (
+  SELECT t.doc_id, t.source, t.n_tokens, CAST(b.bound AS BIGINT) AS bound,
+         ({{bucket}}) < b.bound AS keep
+  FROM toks t JOIN bounds b ON t.source = b.source)
+"""
+
+
+def _mix_duck_base() -> str:
+    from osm_spark.text.sampling import bucket_sql
+
+    return _MIX_DUCK_BASE.format(
+        bucket=bucket_sql("CAST(doc_id AS VARCHAR)", _MIX_NB, salt=_MIX_SALT)
+    )
+
+
+def _q74_oracle_sql() -> str:
+    return (
+        _mix_duck_base()
+        + "SELECT doc_id, source, n_tokens, bound, keep FROM mixed"
+    )
+
+
+_def("q74_mix_sample", fn=_q_mix_sample, duck_sql=_q74_oracle_sql())
+
+
+def _q_mix_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.sampling import mix_summary
+
+    return mix_summary(_mix_df(spark, sf_dir))
+
+
+def _q75_oracle_sql() -> str:
+    return (
+        _mix_duck_base()
+        + """
+SELECT source, count(*) AS n_docs,
+       CAST(sum(n_tokens) AS BIGINT) AS avail_tokens,
+       CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS kept_docs,
+       CAST(sum(CASE WHEN keep THEN n_tokens ELSE 0 END) AS BIGINT)
+         AS kept_tokens,
+       max(bound) AS bound
+FROM mixed GROUP BY source
+"""
+    )
+
+
+_def("q75_mix_summary", fn=_q_mix_summary, duck_sql=_q75_oracle_sql())
+
+
+# X42 — per-host boilerplate line removal (CCNet/C4 hygiene). The
+# testdata has no line structure, so the query injects it
+# deterministically: 7 hosts by doc_id % 7, every page opens with its
+# host's NAV line (100% within-host frequency → stripped at the 60%
+# threshold) and every third page appends a COOKIE line (~33% →
+# kept); the original text is the middle line (unique → kept). The
+# oracle recomputes counting, thresholding (integer percent math) and
+# order-preserving removal with DuckDB list ops, and the hash pins the
+# cleaned TEXT itself, not just counts.
+
+_BP_HOST_SQL = "('h' || CAST(doc_id % 7 AS {s}))"
+_BP_TEXT_SQL = (
+    "('NAV-' || {host} || {nl} || text"
+    " || CASE WHEN doc_id % 3 = 0 THEN {nl} || 'COOKIE NOTICE' ELSE '' END)"
+)
+
+
+def _q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.boilerplate import remove_boilerplate
+
+    _load(spark, sf_dir)
+    host = _BP_HOST_SQL.format(s="STRING")
+    injected = spark.table("documents").select(
+        "doc_id",
+        F.expr(host).alias("host"),
+        F.expr(
+            _BP_TEXT_SQL.format(host=host, nl="char(10)")
+        ).alias("text"),
+    )
+    return remove_boilerplate(injected, min_pct=60, min_docs=3)
+
+
+def _q76_oracle_sql() -> str:
+    host = _BP_HOST_SQL.format(s="VARCHAR")
+    itext = _BP_TEXT_SQL.format(host=host, nl="chr(10)")
+    return f"""
+WITH d AS (
+  SELECT doc_id, {host} AS host, {itext} AS text FROM documents),
+ lines AS (
+  SELECT doc_id, host, unnest(list_distinct(string_split(text, chr(10)))) AS line
+  FROM d),
+ counts AS (
+  SELECT host, line, count(*) AS n FROM lines
+  WHERE line != '' GROUP BY host, line),
+ hd AS (SELECT host, count(*) AS host_docs FROM d GROUP BY host),
+ bp AS (
+  SELECT c.host, list(c.line) AS bp_lines
+  FROM counts c JOIN hd ON c.host = hd.host
+  WHERE hd.host_docs >= 3 AND c.n * 100 >= 60 * hd.host_docs
+  GROUP BY c.host),
+ cleaned AS (
+  SELECT d.doc_id, d.host,
+         CASE WHEN bp.bp_lines IS NULL THEN string_split(d.text, chr(10))
+              ELSE list_filter(string_split(d.text, chr(10)),
+                               x -> NOT list_contains(bp.bp_lines, x)) END AS kept,
+         len(string_split(d.text, chr(10))) AS n_all
+  FROM d LEFT JOIN bp ON d.host = bp.host)
+SELECT doc_id, host, array_to_string(kept, chr(10)) AS cleaned_text,
+       CAST(n_all - len(kept) AS INTEGER) AS n_removed_lines,
+       CAST(len(kept) AS INTEGER) AS n_kept_lines
+FROM cleaned
+"""
+
+
+_def("q76_boilerplate", fn=_q_boilerplate, duck_sql=_q76_oracle_sql())
+
+
+# X43 — incremental cross-snapshot dedup: a new crawl increment is
+# classified against content already committed in a ManifestTable
+# (dup_existing > dup_within > new) and only the new docs append.
+# The Spark side runs the REAL flow — commit base snapshot, pruned
+# hash read, window + left join, atomic append — while the oracle
+# recomputes every verdict and the final table row count in DuckDB
+# from the same deterministic construction (base = even doc_ids;
+# increment A = %3 docs re-keyed +10000; increment B = %9==3 docs
+# re-keyed +20000, duplicating A's text so odd ones become
+# within-increment dups and even ones stay existing-dups).
+
+
+def _q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
+    import tempfile
+
+    from osm_spark.sources.manifest_table import ManifestTable
+    from osm_spark.text.dedup import commit_increment, dedup_increment, table_content_hashes
+
+    _load(spark, sf_dir)
+    docs = spark.table("documents")
+    path = tempfile.mkdtemp(prefix="q77_incdedup_")
+    try:
+        t = ManifestTable(spark, path)
+        base = docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "text")
+        t.write(base, mode="overwrite")
+        inc = (
+            docs.where(F.col("doc_id") % 3 == 0)
+            .select((F.col("doc_id") + 10000).alias("doc_id"), "text")
+            .unionByName(
+                docs.where(F.col("doc_id") % 9 == 3).select(
+                    (F.col("doc_id") + 20000).alias("doc_id"), "text"
+                )
+            )
+        )
+        verdicts = dedup_increment(table_content_hashes(t), inc).persist()
+        stats = commit_increment(t, inc)
+        out = verdicts.withColumn(
+            "final_table_rows",
+            F.lit(int(t.read().count())).cast("long"),
+        ).withColumn("final_version", F.lit(stats["version"]).cast("int"))
+        pdf = out.toPandas()  # materialize before the table dir vanishes
+        verdicts.unpersist()
+        return spark.createDataFrame(
+            pdf,
+            "doc_id long, content_md5 string, status string, "
+            "final_table_rows long, final_version int",
+        )
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def _q77_oracle_sql() -> str:
+    return """
+WITH base AS (
+  SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
+ inc AS (
+  SELECT doc_id + 10000 AS doc_id, text FROM documents WHERE doc_id % 3 = 0
+  UNION ALL
+  SELECT doc_id + 20000 AS doc_id, text FROM documents WHERE doc_id % 9 = 3),
+ ranked AS (
+  SELECT doc_id, md5(text) AS content_md5,
+         row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
+  FROM inc),
+ verdicts AS (
+  SELECT r.doc_id, r.content_md5,
+         CASE WHEN e.content_md5 IS NOT NULL THEN 'dup_existing'
+              WHEN r.rn > 1 THEN 'dup_within'
+              ELSE 'new' END AS status
+  FROM ranked r
+  LEFT JOIN (SELECT DISTINCT md5(text) AS content_md5 FROM base) e
+    ON r.content_md5 = e.content_md5),
+ finals AS (
+  SELECT (SELECT count(*) FROM base)
+         + (SELECT count(*) FROM verdicts WHERE status = 'new')
+           AS final_table_rows)
+SELECT v.doc_id, v.content_md5, v.status,
+       CAST(f.final_table_rows AS BIGINT) AS final_table_rows,
+       2 AS final_version
+FROM verdicts v CROSS JOIN finals f
+"""
+
+
+_def("q77_incremental_dedup", fn=_q_incremental_dedup, duck_sql=_q77_oracle_sql())
+
+
+# X44 — the full curation pipeline as ONE composition: repetition
+# filter → exact dedup → decontamination → source mixing →
+# train/val/test split, every doc accounted for with its final
+# disposition. The point is composability under the hash gate: five
+# operators chained SEQUENTIALLY (each stage's verdict depends on the
+# survivors of the previous — mix rates over the deduped corpus, not
+# the raw one), and the oracle re-derives the entire cascade in one
+# DuckDB CTE chain. Any drift in any stage, or in the chaining order,
+# hash-mismatches here even if each stage's own gate query stays green.
+
+_P78_BUDGET = 8_000
+_P78_SALT = "v1:"
+
+
+def _q_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.pipeline import curate
+
+    _load(spark, sf_dir)
+    docs = spark.table("documents")
+    bench = docs.where(
+        (F.col("doc_id") % _DECON_MOD) == _DECON_REM
+    ).select("text")
+    srcs = [r["source"] for r in docs.select("source").distinct().collect()]
+    shares = {s: (int(s[3:]) % 4) + 1 for s in srcs}
+    return curate(
+        docs,
+        bench,
+        shares,
+        _P78_BUDGET,
+        {"train": 0.9, "val": 0.05, "test": 0.05},
+        ngram_n=_DECON_N,
+        salt=_P78_SALT,
+    )
+
+
+def _q78_oracle_sql() -> str:
+    from osm_spark.text.repetition import (
+        MAX_TOP_BIGRAM_FRAC,
+        MAX_TOP_TOKEN_FRAC,
+        MIN_DISTINCT_RATIO,
+    )
+    from osm_spark.text.sampling import bucket_sql
+
+    n = _DECON_N
+    shingles = (
+        f"list_transform(range(1, greatest(len(tk) - {n - 1}, 0) + 1), "
+        f"i -> array_to_string(tk[i:i+{n - 1}], ' '))"
+    )
+    # curate() calls mix_sample with its default salt ("mix"), not the
+    # q74 query's "mix:" — the oracle must hash with the same salt.
+    mix_bucket = bucket_sql("CAST(doc_id AS VARCHAR)", _MIX_NB, salt="mix")
+    split_bucket = bucket_sql("CAST(doc_id AS VARCHAR)", 10_000, salt=_P78_SALT)
+    return f"""
+WITH t0 AS (
+  SELECT doc_id, source, text, {_TOKENS_DUCK} AS tk FROM documents),
+ uni AS (SELECT doc_id, unnest(tk) AS gram FROM t0 WHERE len(tk) > 0),
+ bi AS (SELECT doc_id,
+               unnest(list_transform(range(1, len(tk)),
+                      i -> concat(tk[i], ' ', tk[i+1]))) AS gram
+        FROM t0 WHERE len(tk) > 0),
+ ug AS (SELECT doc_id, gram, count(*) AS c FROM uni GROUP BY 1, 2),
+ bg AS (SELECT doc_id, gram, count(*) AS c FROM bi GROUP BY 1, 2),
+ u AS (SELECT doc_id, sum(c) AS tok_n, max(c) AS tok_top,
+              count(*) AS n_distinct FROM ug GROUP BY 1),
+ b AS (SELECT doc_id, sum(c) AS bi_n, max(c) AS bi_top FROM bg GROUP BY 1),
+ rep AS (
+  SELECT u.doc_id,
+         (round(CAST(n_distinct AS DOUBLE) / tok_n, 9) >= {MIN_DISTINCT_RATIO}
+          AND round(CAST(tok_top AS DOUBLE) / tok_n, 9) <= {MAX_TOP_TOKEN_FRAC}
+          AND round(coalesce(CAST(bi_top AS DOUBLE) / bi_n, 0.0), 9)
+              <= {MAX_TOP_BIGRAM_FRAC}) AS keep
+  FROM u LEFT JOIN b ON u.doc_id = b.doc_id),
+ tagged AS (
+  SELECT t0.*, coalesce(rep.keep, false) AS keep
+  FROM t0 LEFT JOIN rep ON t0.doc_id = rep.doc_id),
+ drop1 AS (SELECT doc_id, 'drop_repetition' AS disposition
+           FROM tagged WHERE NOT keep),
+ s1 AS (SELECT doc_id, source, text, tk FROM tagged WHERE keep),
+ ranked AS (
+  SELECT *, row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
+  FROM s1),
+ drop2 AS (SELECT doc_id, 'drop_exact_dup' AS disposition
+           FROM ranked WHERE rn > 1),
+ s2 AS (SELECT doc_id, source, text, tk FROM ranked WHERE rn = 1),
+ bgrams AS (
+  SELECT DISTINCT unnest({shingles}) AS gram
+  FROM t0 WHERE doc_id % {_DECON_MOD} = {_DECON_REM}),
+ dgr AS (SELECT doc_id, unnest(list_distinct({shingles})) AS gram FROM s2),
+ cont AS (SELECT DISTINCT doc_id FROM dgr JOIN bgrams USING (gram)),
+ drop3 AS (SELECT doc_id, 'drop_contaminated' AS disposition FROM cont),
+ s3 AS (SELECT s2.* FROM s2 WHERE doc_id NOT IN (SELECT doc_id FROM cont)),
+ sh AS (
+  SELECT source, CAST(sum(len(tk)) AS BIGINT) AS avail,
+         (CAST(substr(source, 4) AS INTEGER) % 4) + 1 AS share
+  FROM s3 GROUP BY source),
+ bounds AS (
+  SELECT source,
+         least({_MIX_NB},
+               (({_P78_BUDGET} * share) // (SELECT sum(share) FROM sh))
+               * {_MIX_NB} // avail) AS bound
+  FROM sh),
+ mixed AS (
+  SELECT s3.doc_id, ({mix_bucket}) < bo.bound AS keep
+  FROM s3 JOIN bounds bo ON s3.source = bo.source),
+ drop4 AS (SELECT doc_id, 'drop_mix' AS disposition
+           FROM mixed WHERE NOT keep),
+ s4 AS (SELECT doc_id FROM mixed WHERE keep),
+ final AS (
+  SELECT doc_id,
+         CASE WHEN {split_bucket} < 9000 THEN 'train'
+              WHEN {split_bucket} < 9500 THEN 'val'
+              ELSE 'test' END AS disposition
+  FROM s4)
+SELECT * FROM drop1
+UNION ALL SELECT * FROM drop2
+UNION ALL SELECT * FROM drop3
+UNION ALL SELECT * FROM drop4
+UNION ALL SELECT * FROM final
+"""
+
+
+_def("q78_curation_pipeline", fn=_q_curate, duck_sql=_q78_oracle_sql())
+
+
+# X45 — global paragraph-level exact dedup (C4): keep only the first
+# global occurrence of every exact paragraph. Injection gives the
+# word-soup docs paragraph structure: every doc_id%4==1 page opens
+# with the SAME syndicated quote block (one global winner — the
+# smallest such doc_id), and every doc_id%10==2 page repeats its own
+# body twice (within-doc dup, earliest position wins). The oracle
+# recomputes winners with an integer (doc_id*1e6+pos) total order —
+# equivalent to the engine's min(struct(key,pos)) for pos < 1e6 —
+# and the hash pins the rebuilt cleaned text.
+
+_PARA_TEXT_SQL = (
+    "(CASE WHEN doc_id % 4 = 1 THEN 'shared syndicated quote block' || {nl} || text"
+    " WHEN doc_id % 10 = 2 THEN text || {nl} || text"
+    " ELSE text END)"
+)
+
+
+def _q_para_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.paragraphs import dedup_paragraphs
+
+    _load(spark, sf_dir)
+    injected = spark.table("documents").select(
+        "doc_id",
+        F.expr(_PARA_TEXT_SQL.format(nl="char(10)")).alias("text"),
+    )
+    return dedup_paragraphs(injected)
+
+
+def _q79_oracle_sql() -> str:
+    itext = _PARA_TEXT_SQL.format(nl="chr(10)")
+    return f"""
+WITH d AS (
+  SELECT doc_id, string_split({itext}, chr(10)) AS parts FROM documents),
+ p AS (
+  SELECT doc_id, CAST(g.i AS INT) AS pos, parts[g.i + 1] AS para
+  FROM d CROSS JOIN generate_series(0, 7) AS g(i)
+  WHERE g.i < len(parts)),
+ w AS (
+  SELECT para, min(doc_id * 1000000 + pos) AS wkey FROM p
+  WHERE para != '' GROUP BY para),
+ tagged AS (
+  SELECT p.doc_id, p.pos, p.para,
+         (p.para = '' OR p.doc_id * 1000000 + p.pos = w.wkey) AS keep
+  FROM p LEFT JOIN w ON p.para = w.para),
+ rebuilt AS (
+  SELECT doc_id,
+         string_agg(CASE WHEN keep THEN para END, chr(10) ORDER BY pos)
+           AS cleaned_text,
+         CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+         CAST(sum(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT) AS n_removed
+  FROM tagged GROUP BY doc_id)
+SELECT doc_id, coalesce(cleaned_text, '') AS cleaned_text,
+       n_kept, n_removed
+FROM rebuilt
+"""
+
+
+_def("q79_paragraph_dedup", fn=_q_para_dedup, duck_sql=_q79_oracle_sql())
+
+
+# X46 — hyperlink extraction / page graph / integer PageRank
+# (q80-q82). The pages table carries d = i % 4 deterministic anchors
+# per page (data/pages.py nav block): absolute, root-relative with a
+# tracking param + fragment, and www+:443 — so extraction exercises
+# resolution AND normalization. The oracle re-extracts with an
+# INDEPENDENTLY written DuckDB chain (unnest(regexp_extract_all) +
+# staged CASE/regexp_replace normalization, different factoring from
+# the engine's Column expressions). PageRank is defined on int64
+# fixed-point arithmetic (text/pagerank.py) precisely so the oracle —
+# an UNROLLED K-round CTE chain, a completely different plan — can
+# match the engine hash-exactly; all DuckDB sums are cast back to
+# BIGINT (DuckDB widens sum(BIGINT) to HUGEINT).
+
+
+def _q_extract_links(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.links import extract_links
+
+    _load(spark, sf_dir)
+    return extract_links(_pages_df(spark))
+
+
+# DuckDB CTE stages: anchors -> resolved -> normalized (src is
+# already canonical by construction of the generator).
+_LINKS_DUCK = """
+ anchors AS (
+  SELECT url AS src,
+         unnest(list_concat(
+           regexp_extract_all(html_str, '<a\\s[^>]*href="([^"]*)"', 1),
+           regexp_extract_all(html_str,
+                '<a\\s[^>]*href=''([^'']*)''', 1))) AS href
+  FROM pages),
+ kepth AS (
+  SELECT src, href FROM anchors
+  WHERE NOT regexp_matches(href, '^(mailto:|javascript:|tel:|#|$)')),
+ l1 AS (
+  SELECT src,
+   CASE WHEN regexp_matches(href, '^[a-zA-Z][a-zA-Z0-9+.-]*://') THEN href
+        WHEN href LIKE '//%' THEN
+          regexp_extract(src, '^([a-zA-Z][a-zA-Z0-9+.-]*):', 1) || ':' || href
+        WHEN href LIKE '/%' THEN
+          regexp_extract(src, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]+)', 1) || href
+        ELSE (CASE
+          WHEN regexp_extract(src, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^?#]*/)', 1) = ''
+          THEN regexp_extract(src, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]+)', 1) || '/'
+          ELSE regexp_extract(src, '^([a-zA-Z][a-zA-Z0-9+.-]*://[^?#]*/)', 1)
+         END) || href
+   END AS u
+  FROM kepth),
+ l2 AS (SELECT src, regexp_replace(u, '#.*', '', 'g') AS u FROM l1),
+ l3 AS (SELECT src,
+        concat(lower(regexp_extract(u, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/:?#]*')),
+               substr(u, length(regexp_extract(u,
+                 '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/:?#]*')) + 1)) AS u
+        FROM l2),
+ l4 AS (SELECT src,
+        regexp_replace(u, '^([a-z][a-z0-9+.-]*://)www\\.', '\\1') AS u
+        FROM l3),
+ l5 AS (SELECT src,
+        regexp_replace(u,
+          '^([a-z][a-z0-9+.-]*://[^/:?#]+):(80|443)([/?#].*)?$',
+          '\\1\\3') AS u FROM l4),
+ l6 AS (SELECT src,
+        regexp_replace(regexp_replace(regexp_replace(u,
+          '([?&])(utm_[a-z_]+=[^&#]*&)+', '\\1', 'g'),
+          '[?&]utm_[a-z_]+=[^&#]*$', '', 'g'),
+          '\\?$', '', 'g') AS u FROM l5),
+ linkrows AS (SELECT src, regexp_replace(u, '/+$', '', 'g') AS dst FROM l6),
+ edges AS (SELECT DISTINCT src, dst FROM linkrows WHERE src <> dst)
+"""
+
+
+def _q80_oracle_sql() -> str:
+    return (
+        _pages_oracle_cte(columns="url, html_str")
+        + ","
+        + _LINKS_DUCK
+        + "SELECT src, dst FROM linkrows"
+    )
+
+
+_def("q80_extract_links", fn=_q_extract_links, duck_sql=_q80_oracle_sql())
+
+
+def _q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.links import page_edges
+    from osm_spark.text.pagerank import pagerank
+
+    _load(spark, sf_dir)
+    pages = _pages_df(spark)
+    return pagerank(
+        pages.select("url"), page_edges(pages), iterations=5
+    )
+
+
+_PR_ITERS = 5
+
+
+def _q81_oracle_sql() -> str:
+    n = _N_PAGES
+    base = 10**12 // n
+    teleport = 15 * base // 100
+    sql = (
+        _pages_oracle_cte(columns="url, html_str")
+        + ","
+        + _LINKS_DUCK
+        + f""",
+ nodes AS (SELECT url FROM pages),
+ outdeg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
+ r0 AS (SELECT url, CAST({base} AS BIGINT) AS rank FROM nodes)"""
+    )
+    for i in range(_PR_ITERS):
+        sql += f""",
+ d{i} AS (SELECT CAST(coalesce(sum(r.rank), 0) AS BIGINT) AS dangle
+          FROM r{i} r LEFT JOIN outdeg o ON r.url = o.src
+          WHERE o.src IS NULL),
+ c{i} AS (SELECT e.dst AS url, CAST(sum(r.rank // o.outdeg) AS BIGINT) AS s
+          FROM r{i} r JOIN outdeg o ON r.url = o.src
+          JOIN edges e ON e.src = r.url
+          GROUP BY e.dst),
+ r{i + 1} AS (SELECT n.url,
+          CAST({teleport} + (85 * (coalesce(c.s, 0)
+            + (SELECT dangle FROM d{i}) // {n})) // 100 AS BIGINT) AS rank
+          FROM nodes n LEFT JOIN c{i} c ON n.url = c.url)"""
+    sql += f"\nSELECT url, rank FROM r{_PR_ITERS}"
+    return sql
+
+
+_def("q81_pagerank", fn=_q_pagerank, duck_sql=_q81_oracle_sql())
+
+
+def _q_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.links import degree_stats, page_edges
+
+    _load(spark, sf_dir)
+    pages = _pages_df(spark)
+    return degree_stats(pages.select("url"), page_edges(pages))
+
+
+def _q82_oracle_sql() -> str:
+    return (
+        _pages_oracle_cte(columns="url, html_str")
+        + ","
+        + _LINKS_DUCK
+        + """
+SELECT p.url,
+       CAST(coalesce(o.outdeg, 0) AS BIGINT) AS outdeg,
+       CAST(coalesce(i.indeg, 0) AS BIGINT) AS indeg
+FROM pages p
+LEFT JOIN (SELECT src, count(*) AS outdeg FROM edges GROUP BY src) o
+  ON p.url = o.src
+LEFT JOIN (SELECT dst, count(*) AS indeg FROM edges GROUP BY dst) i
+  ON p.url = i.dst
+"""
+    )
+
+
+_def("q82_degrees", fn=_q_degrees, duck_sql=_q82_oracle_sql())
+
+
+# X99 — bounded-depth crawl BFS (text/bfs.py): min hop distance from
+# the seed list over the page link graph, depth ≤ 8 (the bound is the
+# CONTRACT — it is also what makes the recursive-CTE oracle terminate
+# on cyclic graphs; within the bound BFS depth = true shortest hop).
+_Q144_SEED_MOD = 97
+_Q144_MAX_DEPTH = 8
+
+
+def _q_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.bfs import bfs_depths
+    from osm_spark.text.links import page_edges
+
+    pages = _pages_df(spark)
+    page_no = F.regexp_extract("url", r"page/(\d+)$", 1).cast("long")
+    seeds = pages.where(page_no % _Q144_SEED_MOD == 0).select("url")
+    return bfs_depths(seeds, page_edges(pages), _Q144_MAX_DEPTH)
+
+
+def _q144_oracle_sql() -> str:
+    return (
+        _pages_oracle_cte(columns="url, html_str")
+        + ","
+        + _LINKS_DUCK
+        + f""",
+ seeds AS (SELECT url FROM pages
+           WHERE CAST(regexp_extract(url, 'page/(\\d+)$', 1) AS BIGINT)
+                 % {_Q144_SEED_MOD} = 0),
+ walk AS (
+   WITH RECURSIVE r(url, d) AS (
+     SELECT url, 0 FROM seeds
+     UNION
+     SELECT e.dst, r.d + 1 FROM r JOIN edges e ON e.src = r.url
+     WHERE r.d < {_Q144_MAX_DEPTH})
+   SELECT * FROM r)
+SELECT url, CAST(min(d) AS BIGINT) AS depth FROM walk GROUP BY url
+"""
+    )
+
+
+_def("q144_crawl_depth", fn=_q_bfs, duck_sql=_q144_oracle_sql())
+
+
+# X100 — exact systematic PPS sampling (text/pps.py): documents drawn
+# ∝ n_chars, m = 50, Σ mult = m exactly. Engine: two-phase prefix sum
+# (range partition + partition-local window); oracle: ONE naive
+# full-table window + the same positive-operand integer count
+# formula (DuckDB // == Spark div on positives).
+_Q145_M = 50
+
+
+def _q_pps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.pps import pps_sample
+
+    _load(spark, sf_dir)
+    docs = spark.table("documents").select("doc_id", "n_chars")
+    return pps_sample(docs, _Q145_M, weight_col="n_chars")
+
+
+def _q145_oracle_sql() -> str:
+    m = _Q145_M
+    cnt = (
+        "CASE WHEN {n} <= 0 THEN 0 "
+        f"ELSE least({m}, ({{n}} + 2 * t.W - 1) // (2 * t.W)) END"
+    )
+    return f"""
+WITH src AS (SELECT doc_id, CAST(n_chars AS BIGINT) AS w FROM documents),
+ t AS (SELECT CAST(sum(w) AS BIGINT) AS W FROM src),
+ pre AS (SELECT doc_id, w,
+           CAST(coalesce(sum(w) OVER (ORDER BY doc_id
+             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+             AS BIGINT) AS c
+         FROM src),
+ calc AS (SELECT p.doc_id, p.w,
+            ({cnt.format(n='(2 * {m} * (p.c + p.w) - t.W)'.format(m=m))})
+          - ({cnt.format(n='(2 * {m} * p.c - t.W)'.format(m=m))}) AS mult
+          FROM pre p CROSS JOIN t)
+SELECT doc_id, w AS weight, CAST(mult AS BIGINT) AS mult
+FROM calc WHERE mult > 0
+"""
+
+
+_def("q145_pps_sample", fn=_q_pps, duck_sql=_q145_oracle_sql())
+
+
+# X48 — weakly-connected components of the page graph (q83): the
+# large-star/small-star contraction (X34) applied to URL-string nodes
+# over the extracted link edges, with the page table as the explicit
+# vertex universe (dangling pages = singleton components). Oracle =
+# recursive-CTE transitive closure (the q65 pattern) — a completely
+# different algorithm, hash-equal output.
+
+
+def _q_page_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.spatial.components import label_components
+    from osm_spark.text.links import page_edges
+
+    _load(spark, sf_dir)
+    pages = _pages_df(spark)
+    return label_components(pages.select("url"), page_edges(pages))
+
+
+def _q83_oracle_sql() -> str:
+    head = _pages_oracle_cte(columns="url, html_str").replace(
+        "WITH pages", "WITH RECURSIVE pages", 1
+    )
+    return (
+        head
+        + ","
+        + _LINKS_DUCK
+        + """,
+ sym AS (SELECT src AS a, dst AS b FROM edges
+         UNION SELECT dst, src FROM edges),
+ reach(src, dst) AS (
+   SELECT a, b FROM sym
+   UNION
+   SELECT r.src, s.b FROM reach r JOIN sym s ON r.dst = s.a),
+ comp AS (
+   SELECT p.url,
+          least(p.url, coalesce(min(r.dst), p.url)) AS component
+   FROM pages p LEFT JOIN reach r ON r.src = p.url
+   GROUP BY p.url),
+ sizes AS (SELECT component AS c2, CAST(count(*) AS BIGINT) AS component_size
+           FROM comp GROUP BY component)
+SELECT url, component, component_size
+FROM comp JOIN sizes ON component = c2
+"""
+    )
+
+
+_def("q83_page_components", fn=_q_page_components, duck_sql=_q83_oracle_sql())
+
+
+# X49 — corpus vocabulary statistics (q84): tf + df per token from one
+# per-(doc, token) pre-count (no count_distinct), deterministic top-k
+# slice on the (tf DESC, token ASC) total order. The oracle recomputes
+# both statistics and the slice with DuckDB list functions over the
+# SAME tokenizer definition the other text oracles pin (q35/q65).
+
+
+def _q_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.vocab import top_k_vocabulary
+
+    _load(spark, sf_dir)
+    # k below the corpus vocabulary size so the deterministic
+    # (tf DESC, token ASC) cut is actually exercised at the boundary
+    return top_k_vocabulary(spark.table("documents"), k=20)
+
+
+def _q84_oracle_sql() -> str:
+    return f"""
+WITH toks AS (
+  SELECT doc_id, unnest({_TOKENS_DUCK}) AS token FROM documents),
+ pd AS (SELECT doc_id, token, count(*) AS c FROM toks
+        GROUP BY doc_id, token),
+ v AS (SELECT token, CAST(sum(c) AS BIGINT) AS tf,
+              CAST(count(*) AS BIGINT) AS df
+       FROM pd GROUP BY token)
+SELECT token, tf, df FROM v ORDER BY tf DESC, token ASC LIMIT 20
+"""
+
+
+_def("q84_vocab_topk", fn=_q_vocab, duck_sql=_q84_oracle_sql())
+
+
+# X50 — inverted index + conjunctive retrieval (q85/q86). max_df=390
+# lands mid-distribution on the testdata (common tokens df≈380-400,
+# 'dup' df≈25) so the skew cut actually drops rows; posting lists are
+# deterministic "doc:tf,..." strings sorted by doc id so both engines
+# hash identically without nested-type repr drift. q86 probes three
+# terms of very different selectivity and requires ALL of them.
+
+
+def _q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.index import inverted_index
+
+    _load(spark, sf_dir)
+    return inverted_index(spark.table("documents"), max_df=390)
+
+
+def _q85_oracle_sql() -> str:
+    return f"""
+WITH toks AS (
+  SELECT doc_id, unnest({_TOKENS_DUCK}) AS token FROM documents),
+ pd AS (SELECT token, doc_id, CAST(count(*) AS BIGINT) AS tf FROM toks
+        GROUP BY token, doc_id),
+ inv AS (SELECT token, CAST(count(*) AS BIGINT) AS df,
+                string_agg(doc_id || ':' || tf, ',' ORDER BY doc_id)
+                  AS postings
+         FROM pd GROUP BY token)
+SELECT token, df, postings FROM inv WHERE df <= 390
+"""
+
+
+_def("q85_inverted_index", fn=_q_inverted_index, duck_sql=_q85_oracle_sql())
+
+
+_SEARCH_TERMS = ("dup", "join", "window")
+
+
+def _q_conjunctive_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.index import conjunctive_search
+
+    _load(spark, sf_dir)
+    return conjunctive_search(
+        spark.table("documents"), list(_SEARCH_TERMS)
+    )
+
+
+def _q86_oracle_sql() -> str:
+    in_list = ", ".join(f"'{t}'" for t in _SEARCH_TERMS)
+    return f"""
+WITH toks AS (
+  SELECT doc_id, unnest({_TOKENS_DUCK}) AS token FROM documents),
+ pd AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf FROM toks
+        GROUP BY doc_id, token)
+SELECT doc_id, CAST(sum(tf) AS BIGINT) AS total_tf
+FROM pd WHERE token IN ({in_list})
+GROUP BY doc_id HAVING count(*) = {len(_SEARCH_TERMS)}
+"""
+
+
+_def("q86_conjunctive_search", fn=_q_conjunctive_search, duck_sql=_q86_oracle_sql())
+
+
+# X51 — BM25-ranked retrieval (q87): disjunctive probe of the same
+# three mixed-selectivity terms, Robertson idf + tf saturation +
+# length normalization, top-12 on (score DESC, doc_id ASC). Both
+# engines round the score to 6 decimals BEFORE it becomes the ordering
+# key (ulp-level ln()/summation-order drift sits ~9 orders below the
+# quantum), and both spell the constants as the same decimal literals
+# combined with the same IEEE ops ((1.2 + 1.0), (1.0 - 0.75)) so the
+# folded doubles are bit-identical. k=12 lands below the matching-doc
+# count so the TakeOrderedAndProject cut is actually exercised.
+
+
+def _q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.index import bm25_search
+
+    _load(spark, sf_dir)
+    return bm25_search(
+        spark.table("documents"), list(_SEARCH_TERMS), k=12
+    )
+
+
+def _q87_oracle_sql() -> str:
+    in_list = ", ".join(f"'{t}'" for t in _SEARCH_TERMS)
+    return f"""
+WITH toks AS (
+  SELECT doc_id, unnest({_TOKENS_DUCK}) AS token FROM documents),
+ pd AS (SELECT doc_id, token, count(*) AS tf FROM toks
+        GROUP BY doc_id, token),
+ dl AS (SELECT doc_id, len({_TOKENS_DUCK}) AS dl FROM documents),
+ stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl),
+ probed AS (SELECT * FROM pd WHERE token IN ({in_list})),
+ dft AS (SELECT token, count(*) AS dft FROM probed GROUP BY token),
+ scored AS (
+   SELECT p.doc_id,
+          ln(1.0 + (s.n_docs - f.dft + 0.5) / (f.dft + 0.5))
+            * (p.tf * (1.2 + 1.0))
+            / (p.tf + 1.2 * ((1.0 - 0.75) + 0.75 * d.dl / s.avgdl)) AS c
+   FROM probed p
+   JOIN dft f USING (token)
+   JOIN dl d USING (doc_id)
+   CROSS JOIN stats s)
+SELECT doc_id, round(sum(c), 6) AS score,
+       CAST(count(*) AS BIGINT) AS n_terms
+FROM scored GROUP BY doc_id
+ORDER BY score DESC, doc_id ASC LIMIT 12
+"""
+
+
+_def("q87_bm25_search", fn=_q_bm25_search, duck_sql=_q87_oracle_sql())
+
+
+# X52 — snapshot-latest / revisit dedup (q88): a multi-capture crawl
+# keeps ONE capture per canonical URL — the newest. Captures are
+# injected over documents (4 URL variants per group that all
+# normalize to the same canonical form: scheme/host case, www., :443,
+# trailing slash; warc_ts = 1700000000 + doc_id so the winner is the
+# group's max doc_id). The oracle re-normalizes with the independent
+# q68 DuckDB chain and picks winners with a window, against the
+# engine's struct-max aggregate — two different formulations of the
+# same total order (ts DESC, url DESC, remaining columns DESC).
+_CAPS_INJECT_SQL = (
+    "concat("
+    "CASE WHEN doc_id % 4 = 0 THEN 'HTTPS://www.' "
+    "WHEN doc_id % 4 = 1 THEN 'https://' "
+    "WHEN doc_id % 4 = 2 THEN 'https://www.' "
+    "ELSE 'HTTPS://' END, "
+    "'site', CAST((doc_id {idiv} 4) % 7 AS {s}), '.example.com', "
+    "CASE WHEN doc_id % 2 = 0 THEN ':443' ELSE '' END, "
+    "'/item/', CAST(doc_id {idiv} 4 AS {s}), "
+    "CASE WHEN doc_id % 3 = 0 THEN '/' ELSE '' END)"
+)
+
+
+def _q_latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.urls import latest_snapshot
+
+    _load(spark, sf_dir)
+    caps = spark.table("documents").select(
+        F.expr(_CAPS_INJECT_SQL.format(s="STRING", idiv="div")).alias(
+            "url"
+        ),
+        (F.lit(1700000000).cast("bigint") + F.col("doc_id")).alias(
+            "warc_ts"
+        ),
+        F.col("text"),
+    )
+    out = latest_snapshot(caps)
+    return out.select(
+        "norm_url",
+        "n_captures",
+        "url",
+        "warc_ts",
+        F.md5("text").alias("text_md5"),
+    )
+
+
+def _q88_oracle_sql() -> str:
+    inject = _CAPS_INJECT_SQL.format(s="VARCHAR", idiv="//")
+    return (
+        f"""
+WITH caps AS (
+  SELECT doc_id, {inject} AS url,
+         CAST(1700000000 + doc_id AS BIGINT) AS warc_ts, text
+  FROM documents),
+ u0 AS (SELECT doc_id, url FROM caps),"""
+        + _URL_NORM_DUCK
+        + """
+, j AS (SELECT f.norm_url, c.url, c.warc_ts, c.text
+        FROM final f JOIN caps c USING (doc_id)),
+ r AS (SELECT *,
+        row_number() OVER (PARTITION BY norm_url
+          ORDER BY warc_ts DESC, url DESC, text DESC) AS rn,
+        CAST(count(*) OVER (PARTITION BY norm_url) AS BIGINT)
+          AS n_captures
+       FROM j)
+SELECT norm_url, n_captures, url, warc_ts, md5(text) AS text_md5
+FROM r WHERE rn = 1
+"""
+    )
+
+
+_def("q88_latest_snapshot", fn=_q_latest_snapshot, duck_sql=_q88_oracle_sql())
+
+
+# X53 — host-level graph aggregation (q89): the page graph collapsed
+# to weighted host→host edges (crawl budgeting / domain spam scoring).
+# Edges are injected over documents with the q88 capture URL generator
+# (7 hosts, 4 case/www/port/slash variants) on BOTH ends — dst id is a
+# fixed integer mix (doc_id*3+1) % 97 so the edge set is corpus-size
+# independent — then canonicalized, self-filtered and deduplicated
+# before the host rollup, exercising normalization inside the graph
+# path. The oracle normalizes src and dst through the SAME independent
+# q68 chain by stacking both ends into one tagged relation (chain CTE
+# names are fixed, so it cannot be instantiated twice).
+
+
+def _host_edge_exprs(s: str, idiv: str) -> tuple[str, str]:
+    src = _CAPS_INJECT_SQL.format(s=s, idiv=idiv)
+    dst = src.replace("doc_id", f"((doc_id * 3 + 1) % 97)")
+    return src, dst
+
+
+def _q_host_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.links import host_graph
+    from osm_spark.text.urls import normalize_url
+
+    _load(spark, sf_dir)
+    src_sql, dst_sql = _host_edge_exprs(s="STRING", idiv="div")
+    pairs = spark.table("documents").select(
+        normalize_url(F.expr(src_sql)).alias("src"),
+        normalize_url(F.expr(dst_sql)).alias("dst"),
+    )
+    edges = pairs.where(F.col("src") != F.col("dst")).distinct()
+    return host_graph(edges)
+
+
+def _q89_oracle_sql() -> str:
+    src_sql, dst_sql = _host_edge_exprs(s="VARCHAR", idiv="//")
+    return (
+        f"""
+WITH caps AS (
+  SELECT doc_id, {src_sql} AS src_raw, {dst_sql} AS dst_raw
+  FROM documents),
+ u0 AS (
+  SELECT doc_id * 2 AS doc_id, src_raw AS url FROM caps
+  UNION ALL
+  SELECT doc_id * 2 + 1 AS doc_id, dst_raw AS url FROM caps),"""
+        + _URL_NORM_DUCK
+        + """
+, e AS (SELECT s.norm_url AS src, d.norm_url AS dst
+        FROM final s JOIN final d ON d.doc_id = s.doc_id + 1
+        WHERE s.doc_id % 2 = 0),
+ edges AS (SELECT DISTINCT src, dst FROM e WHERE src != dst),
+ hosts AS (
+  SELECT regexp_extract(src, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1)
+           AS src_host,
+         regexp_extract(dst, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1)
+           AS dst_host,
+         src
+  FROM edges),
+ links AS (SELECT src_host, dst_host, CAST(count(*) AS BIGINT) AS n_links
+           FROM hosts GROUP BY src_host, dst_host),
+ srcs AS (SELECT src_host, dst_host, CAST(count(*) AS BIGINT)
+            AS n_src_pages
+          FROM (SELECT DISTINCT src_host, dst_host, src FROM hosts)
+          GROUP BY src_host, dst_host)
+SELECT l.src_host, l.dst_host, l.n_links, s.n_src_pages
+FROM links l JOIN srcs s USING (src_host, dst_host)
+"""
+    )
+
+
+_def("q89_host_graph", fn=_q_host_graph, duck_sql=_q89_oracle_sql())
+
+
+# X55 — weighted PageRank over the host graph (q91): crawl-budget
+# ranking where mass flows proportional to inter-host link counts.
+# Same int64 fixed-point contract as q81 plus the ppm weight
+# quantization (wn = w*10^6 div W(src)) that keeps rank*wn in int64
+# for any weight magnitude; the oracle unrolls K rounds of the exact
+# integer recurrence over the q89 host-edge derivation. The 7-host
+# inject covers every host for any corpus >= 28 docs, so n (and the
+# base/teleport literals) are corpus-size independent.
+
+_HOST_PR_ITERS = 3
+_HOST_PR_N = 7  # sites 0-6 — fixed by the (id div 4) % 7 inject
+
+
+def _q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.links import host_graph
+    from osm_spark.text.pagerank import pagerank
+    from osm_spark.text.urls import normalize_url
+
+    _load(spark, sf_dir)
+    src_sql, dst_sql = _host_edge_exprs(s="STRING", idiv="div")
+    pairs = spark.table("documents").select(
+        normalize_url(F.expr(src_sql)).alias("src"),
+        normalize_url(F.expr(dst_sql)).alias("dst"),
+    )
+    edges = pairs.where(F.col("src") != F.col("dst")).distinct()
+    hg = host_graph(edges).where(F.col("src_host") != F.col("dst_host"))
+    he = hg.select(
+        F.col("src_host").alias("src"),
+        F.col("dst_host").alias("dst"),
+        F.col("n_links").alias("w"),
+    )
+    nodes = (
+        he.select(F.col("src").alias("url"))
+        .unionByName(he.select(F.col("dst").alias("url")))
+        .distinct()
+    )
+    ranks = pagerank(
+        nodes, he, iterations=_HOST_PR_ITERS, weight="w"
+    )
+    return ranks.select(F.col("url").alias("host"), "rank")
+
+
+def _q91_oracle_sql() -> str:
+    src_sql, dst_sql = _host_edge_exprs(s="VARCHAR", idiv="//")
+    n = _HOST_PR_N
+    base = 10**12 // n
+    teleport = 15 * base // 100
+    sql = (
+        f"""
+WITH caps AS (
+  SELECT doc_id, {src_sql} AS src_raw, {dst_sql} AS dst_raw
+  FROM documents),
+ u0 AS (
+  SELECT doc_id * 2 AS doc_id, src_raw AS url FROM caps
+  UNION ALL
+  SELECT doc_id * 2 + 1 AS doc_id, dst_raw AS url FROM caps),"""
+        + _URL_NORM_DUCK
+        + f"""
+, e AS (SELECT s.norm_url AS src, d.norm_url AS dst
+        FROM final s JOIN final d ON d.doc_id = s.doc_id + 1
+        WHERE s.doc_id % 2 = 0),
+ edges AS (SELECT DISTINCT src, dst FROM e WHERE src != dst),
+ hostpairs AS (
+  SELECT regexp_extract(src, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1)
+           AS hsrc,
+         regexp_extract(dst, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1)
+           AS hdst
+  FROM edges),
+ he AS (SELECT hsrc AS src, hdst AS dst, CAST(count(*) AS BIGINT) AS w
+        FROM hostpairs WHERE hsrc != hdst GROUP BY hsrc, hdst),
+ nodes AS (SELECT src AS host FROM he UNION SELECT dst FROM he),
+ wsum AS (SELECT src, sum(w) AS ws FROM he GROUP BY src),
+ wn AS (SELECT e.src, e.dst, (e.w * 1000000) // ws AS q
+        FROM he e JOIN wsum USING (src)),
+ pr0 AS (SELECT host, CAST({base} AS BIGINT) AS rank FROM nodes)"""
+    )
+    for i in range(_HOST_PR_ITERS):
+        # pd/ps/pr prefixes: the normalization chain already owns s1-s5
+        sql += f""",
+ pd{i} AS (SELECT COALESCE(SUM(rank), 0) AS dm FROM pr{i}
+          WHERE host NOT IN (SELECT src FROM he)),
+ ps{i} AS (SELECT w.dst AS host, SUM((r.rank * w.q) // 1000000) AS s
+          FROM pr{i} r JOIN wn w ON w.src = r.host GROUP BY w.dst),
+ pr{i + 1} AS (
+  SELECT n.host,
+         CAST({teleport} + (85 * (COALESCE(s.s, 0)
+           + (SELECT dm FROM pd{i}) // {n})) // 100 AS BIGINT) AS rank
+  FROM nodes n LEFT JOIN ps{i} s USING (host))"""
+    sql += f"\nSELECT host, rank FROM pr{_HOST_PR_ITERS}"
+    return sql
+
+
+_def("q91_host_pagerank", fn=_q_host_pagerank, duck_sql=_q91_oracle_sql())
 
 
 # Temporal custom operators (operators/temporal.py) — the three
@@ -1891,6 +4086,171 @@ SELECT 'day', date_trunc('day', ts), event_type,
        CAST(count(*) AS BIGINT), CAST(sum(value) AS DOUBLE),
        CAST(min(event_id) AS BIGINT)
 FROM events GROUP BY 2, 3
+""",
+)
+
+
+# X — SemDeDup: cluster-scoped embedding dedup (text/semdedup.py).
+# The oracle re-derives EVERYTHING: the quantizer (same pure-numpy
+# train on a pyarrow read — the q45 pattern), nearest-centroid
+# assignment, within-cluster cosine pairs (sequential list_reduce,
+# bit-identical to Spark's aggregate(zip_with)), the transitive
+# closure, and the min-id keeper rule.
+_Q95_THRESHOLD = 0.35
+
+
+def _q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.semdedup import semantic_dedup
+
+    _load(spark, sf_dir)
+    return semantic_dedup(
+        spark.table("embeddings"), threshold=_Q95_THRESHOLD
+    ).select(
+        "vec_id",
+        F.col("list_id").cast("int").alias("list_id"),
+        "component",
+        "cluster_size",
+        "keep",
+    )
+
+
+def _q95_oracle_sql() -> str:
+    """Centroids trained by the SAME order-invariant numpy function on
+    a pyarrow read of the same parquet (q45's externally-checkable
+    pattern), embedded as literals; assignment / pairs / closure /
+    keeper all recomputed in SQL."""
+    import os
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from osm_spark.text.ann import auto_n_lists, train_ivf_centroids_np
+
+    sf_dir = os.environ.get(
+        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
+    )
+    tb = pq.read_table(
+        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
+    )
+    ids = np.asarray(tb["vec_id"].to_pylist(), dtype=np.int64)
+    X = np.asarray(tb["embedding"].to_pylist(), dtype=np.float64)
+    n_lists = auto_n_lists(len(ids))
+    C = train_ivf_centroids_np(ids, X, n_lists, 5)
+    vals = ",\n".join(
+        "(" + ",".join(
+            [str(j)] + [f"CAST('{C[j, d]!r}' AS DOUBLE)" for d in range(C.shape[1])]
+        ) + ")"
+        for j in range(n_lists)
+    )
+    cent_cols = ", ".join(f"c{d}" for d in range(C.shape[1]))
+    cent_list = "list_value(" + ", ".join(
+        f"c{d}" for d in range(C.shape[1])
+    ) + ")"
+    return f"""
+WITH RECURSIVE cent_rows({cent_cols.replace('c0', 'j, c0')}) AS (VALUES {vals}),
+cent AS (SELECT j, {cent_list} AS cv FROM cent_rows),
+vn AS (
+  SELECT vec_id, embedding,
+         sqrt(list_reduce(list_transform(range(1, len(embedding) + 1),
+             i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)),
+             (x, y) -> x + y)) AS nrm
+  FROM embeddings
+),
+cdots AS (
+  SELECT v.vec_id, c.j,
+         list_reduce(list_transform(range(1, len(v.embedding) + 1),
+             i -> CAST(v.embedding[i] AS DOUBLE) / (CASE WHEN v.nrm = 0 THEN 1.0 ELSE v.nrm END) * c.cv[i]),
+             (x, y) -> x + y) AS dot
+  FROM vn v CROSS JOIN cent c
+),
+assigned AS (
+  SELECT vec_id, j AS list_id FROM (
+    SELECT vec_id, j,
+           row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, j) AS r
+    FROM cdots) WHERE r = 1
+),
+e AS (SELECT a.vec_id, a.list_id, b.embedding AS v
+      FROM assigned a JOIN embeddings b USING (vec_id)),
+jp AS (
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b
+  FROM e a JOIN e b ON a.list_id = b.list_id AND a.vec_id < b.vec_id
+  WHERE list_reduce(list_transform(range(1, len(a.v) + 1),
+            i -> CAST(a.v[i] AS DOUBLE) * CAST(b.v[i] AS DOUBLE)), (x, y) -> x + y)
+        / (sqrt(list_reduce(list_transform(range(1, len(a.v) + 1),
+              i -> CAST(a.v[i] AS DOUBLE) * CAST(a.v[i] AS DOUBLE)), (x, y) -> x + y))
+         * sqrt(list_reduce(list_transform(range(1, len(b.v) + 1),
+              i -> CAST(b.v[i] AS DOUBLE) * CAST(b.v[i] AS DOUBLE)), (x, y) -> x + y)))
+        >= {_Q95_THRESHOLD}),
+sym AS (SELECT id_a AS a, id_b AS b FROM jp
+        UNION SELECT id_b, id_a FROM jp),
+reach(src, dst) AS (
+  SELECT a, b FROM sym
+  UNION
+  SELECT r.src, s.b FROM reach r JOIN sym s ON r.dst = s.a),
+comp AS (
+  SELECT a.vec_id, a.list_id,
+         least(a.vec_id, coalesce(min(r.dst), a.vec_id)) AS component
+  FROM assigned a LEFT JOIN reach r ON r.src = a.vec_id
+  GROUP BY a.vec_id, a.list_id),
+sizes AS (SELECT component AS c2, CAST(count(*) AS BIGINT) AS cluster_size
+          FROM comp GROUP BY component)
+SELECT vec_id, CAST(list_id AS INT) AS list_id, component, cluster_size,
+       vec_id = component AS keep
+FROM comp JOIN sizes ON component = c2
+"""
+
+
+_def("q95_semdedup", fn=_q_semdedup, duck_sql=_q95_oracle_sql())
+
+
+# X — CCNet-style char-trigram LM quality score (text/lm.py): model
+# trained distributed on the 'en' reference subset (top-2k grams so
+# the truncation and OOV paths are genuinely exercised at sf0.01),
+# every document scored in micro-nats (integer fold — no float-order
+# drift). The oracle retrains and rescores from scratch in SQL.
+_Q96_TOP_V = 2000
+
+
+def _q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.lm import score_docs, train_char_lm
+
+    _load(spark, sf_dir)
+    docs = spark.table("documents")
+    model = train_char_lm(
+        docs.where(F.col("lang") == "en"), order=3, top_v=_Q96_TOP_V
+    )
+    return score_docs(docs, model, order=3)
+
+
+_def(
+    "q96_lm_score",
+    fn=_q_lm_score,
+    duck_sql=f"""
+WITH ref AS (SELECT text FROM documents WHERE lang = 'en'),
+ g AS (SELECT substr(text, CAST(i AS INT), 3) AS gram
+       FROM ref, unnest(range(1, greatest(length(text) - 2, 0) + 1)) t(i)),
+ counts AS (SELECT gram, count(*) AS c FROM g GROUP BY gram),
+ top AS (SELECT gram, c FROM counts ORDER BY c DESC, gram LIMIT {_Q96_TOP_V}),
+ tot AS (SELECT sum(c) AS N, count(*) AS V FROM top),
+ model AS (SELECT gram,
+                  CAST(round(ln(CAST(c + 1 AS DOUBLE) / (N + V + 1)) * 1000000)
+                       AS BIGINT) AS lp
+           FROM top, tot),
+ oov AS (SELECT CAST(round(ln(1.0 / (N + V + 1)) * 1000000) AS BIGINT) AS lp
+         FROM tot),
+ dg AS (SELECT doc_id, substr(text, CAST(i AS INT), 3) AS gram
+        FROM documents, unnest(range(1, greatest(length(text) - 2, 0) + 1)) t(i)),
+ sc AS (SELECT d.doc_id,
+               CAST(count(*) AS BIGINT) AS n_grams,
+               CAST(sum(CASE WHEN m.lp IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+                 AS n_oov,
+               sum(coalesce(m.lp, (SELECT lp FROM oov))) AS s
+        FROM dg d LEFT JOIN model m USING (gram) GROUP BY d.doc_id)
+SELECT doc_id,
+       coalesce(n_grams, 0) AS n_grams,
+       coalesce(n_oov, 0)   AS n_oov,
+       CAST(s AS DOUBLE) / (1000000.0 * n_grams) AS avg_logp
+FROM documents LEFT JOIN sc USING (doc_id)
 """,
 )
 
@@ -2092,6 +4452,126 @@ FROM est, ex
 _def("q100_hll_distinct", fn=_q_hll, duck_sql=_q100_oracle_sql())
 
 
+# X65 — BPE tokenizer training + encoding (text/bpe.py): classic
+# Sennrich semantics (per-position pair counts, (cnt DESC, l, r)
+# argmax, greedy left-to-right non-overlapping merge), trained over
+# the Zipf-compressed word-type table. The oracle RE-TRAINS the whole
+# merge table in DuckDB — an unrolled per-round CTE chain (the
+# q81/q91 pattern) whose merge application is the identical greedy
+# fold via list_reduce with a delimiter-encoded accumulator — and
+# q102 additionally RE-ENCODES every document with it, hash-exact.
+_BPE_K = 20  # raised from 6 in r5 (VERDICT next #7: a larger K point)
+
+
+def _duck_bpe_fold(e: str, l: str, r: str) -> str:
+    """The greedy-merge fold as a DuckDB list_reduce producing the
+    chr(31)-delimited (result, pending) accumulator string."""
+    pend = "split_part(acc, chr(31), 2)"
+    res = "split_part(acc, chr(31), 1)"
+    emit = f"(CASE WHEN {pend} = '' THEN {res} ELSE {res} || ' ' || {pend} END)"
+    step = (
+        f"CASE WHEN {pend} = {l} AND x = {r} "
+        f"THEN {res} || ' ' || {l} || {r} || chr(31) "
+        f"ELSE {emit} || chr(31) || x END"
+    )
+    return f"list_reduce(list_prepend(chr(31), {e}), (acc, x) -> {step})"
+
+
+_BPE_ACC_TO_LIST = (
+    "list_filter(string_split(CASE WHEN split_part(acc, chr(31), 2) = '' "
+    "THEN split_part(acc, chr(31), 1) "
+    "ELSE split_part(acc, chr(31), 1) || ' ' || split_part(acc, chr(31), 2) "
+    "END, ' '), s -> s <> '')"
+)
+
+
+def _bpe_train_ctes(k_rounds: int) -> list[str]:
+    ctes = [
+        f"""w0 AS MATERIALIZED (
+  SELECT word, CAST(count(*) AS BIGINT) AS freq,
+         list_transform(range(length(word)), i -> substr(word, CAST(i+1 AS INT), 1)) AS syms
+  FROM (SELECT unnest({_TOKENS_DUCK}) AS word FROM documents) GROUP BY word)"""
+    ]
+    for k in range(1, k_rounds + 1):
+        ctes.append(
+            f"""pc{k} AS (
+  SELECT pr.l AS l, pr.r AS r, CAST(sum(freq) AS BIGINT) AS cnt
+  FROM (SELECT freq, unnest(list_transform(range(list_count(syms) - 1),
+          j -> {{'l': syms[CAST(j + 1 AS INT)], 'r': syms[CAST(j + 2 AS INT)]}})) AS pr
+        FROM w{k-1} WHERE list_count(syms) >= 2)
+  GROUP BY 1, 2)"""
+        )
+        ctes.append(
+            f"m{k} AS (SELECT l, r, cnt FROM pc{k} WHERE cnt >= 2"
+            " ORDER BY cnt DESC, l, r LIMIT 1)"
+        )
+        ctes.append(
+            f"a{k} AS (SELECT word, freq, "
+            f"{_duck_bpe_fold('syms', f'm{k}.l', f'm{k}.r')} AS acc "
+            f"FROM w{k-1}, m{k})"
+        )
+        ctes.append(
+            f"w{k} AS MATERIALIZED (SELECT word, freq, {_BPE_ACC_TO_LIST} AS syms FROM a{k})"
+        )
+    return ctes
+
+
+def _q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.bpe import bpe_train
+
+    _load(spark, sf_dir)
+    return bpe_train(spark.table("documents"), n_merges=_BPE_K)
+
+
+def _q101_oracle_sql() -> str:
+    union = "\nUNION ALL\n".join(
+        f"SELECT CAST({k} AS INT) AS merge_rank, l AS left_sym,"
+        f" r AS right_sym, cnt AS pair_count FROM m{k}"
+        for k in range(1, _BPE_K + 1)
+    )
+    return (
+        "WITH "
+        + ",\n".join(_bpe_train_ctes(_BPE_K))
+        + f",\nmm AS ({union})\nSELECT * FROM mm ORDER BY merge_rank"
+    )
+
+
+_def("q101_bpe_train", fn=_q_bpe_train, duck_sql=_q101_oracle_sql())
+
+
+def _q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.bpe import bpe_encode, bpe_train
+
+    _load(spark, sf_dir)
+    docs = spark.table("documents")
+    return bpe_encode(docs, bpe_train(docs, n_merges=_BPE_K))
+
+
+def _q102_oracle_sql() -> str:
+    # The fully-merged training word table w{K} IS the encode
+    # dictionary (training applies every merge to every word type) —
+    # same invariant the Spark side's distinct-word dictionary relies
+    # on, derived here through an independent chain.
+    return (
+        "WITH "
+        + ",\n".join(_bpe_train_ctes(_BPE_K))
+        + f""",
+d AS (SELECT doc_id, {_TOKENS_DUCK} AS toks FROM documents),
+e AS (SELECT doc_id, unnest(toks) AS word,
+             unnest(range(list_count(toks))) AS pos FROM d),
+j AS (SELECT e.doc_id, e.pos, w.syms FROM e JOIN w{_BPE_K} w USING (word)),
+g AS (SELECT doc_id, flatten(list(syms ORDER BY pos)) AS pieces
+      FROM j GROUP BY doc_id)
+SELECT d.doc_id, CAST(list_count(d.toks) AS INT) AS n_words,
+       CAST(coalesce(list_count(g.pieces), 0) AS INT) AS n_bpe_tokens,
+       coalesce(array_to_string(g.pieces, ' '), '') AS bpe_text
+FROM d LEFT JOIN g USING (doc_id)"""
+    )
+
+
+_def("q102_bpe_encode", fn=_q_bpe_encode, duck_sql=_q102_oracle_sql())
+
+
 # X66 — Copy-on-write MERGE + net-row CDC on manifest tables
 # (sources/manifest_table.py merge/changes). The flow is real: base
 # snapshot → MERGE (updates to doc_id%6==1, inserts of doc_id%3==0) →
@@ -2282,6 +4762,85 @@ FROM documents
 _def("q105_compact", fn=_q_compact, duck_sql=_q105_oracle_sql())
 
 
+# X67 — exact substring dedup (text/spans.py): remove every duplicated
+# K-token span corpus-wide, keeping the globally-first occurrence
+# (Lee et al. 2021 semantics, shuffle plan instead of a suffix array).
+# Injection guarantees both duplication modes on the word-soup corpus:
+# every doc_id%5==3 page grows the SAME 8-token verbatim tail (one
+# global winner — the smallest such doc_id; every other occurrence is
+# a removal span), and every doc_id%9==4 page repeats its own text
+# (within-doc spans, merged islands). The oracle recomputes winners
+# with the integer (doc_id*1e6+pos) total order and a NOT EXISTS
+# coverage probe per token — a different algorithm (no island merge)
+# — and the hash pins the rebuilt cleaned text byte-for-byte.
+
+_SPAN_K = 6
+_SPAN_TEXT_SQL = (
+    "(CASE WHEN doc_id % 5 = 3 THEN text ||"
+    " ' verbatim shared tail alpha bravo charlie delta echo'"
+    " WHEN doc_id % 9 = 4 THEN text || ' ' || text"
+    " ELSE text END)"
+)
+
+
+def _q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.spans import dedup_substrings
+
+    _load(spark, sf_dir)
+    injected = spark.table("documents").select(
+        "doc_id", F.expr(_SPAN_TEXT_SQL).alias("text")
+    )
+    return dedup_substrings(injected, k=_SPAN_K)
+
+
+def _q106_oracle_sql() -> str:
+    k = _SPAN_K
+    toks = (
+        "list_filter(regexp_split_to_array(lower("
+        + _SPAN_TEXT_SQL
+        + "), '[^a-z0-9]+'), x -> x != '')"
+    )
+    return f"""
+WITH d AS (SELECT doc_id, {toks} AS toks FROM documents),
+ occp AS (
+  SELECT doc_id, toks,
+         unnest(range(0, greatest(len(toks) - {k} + 1, 0))) AS pos
+  FROM d),
+ occ AS (
+  SELECT doc_id, CAST(pos AS INT) AS pos,
+         array_to_string(list_slice(toks, pos + 1, pos + {k}), ' ') AS win
+  FROM occp),
+ w AS (
+  SELECT win, min(doc_id * 1000000 + pos) AS wkey, count(*) AS c
+  FROM occ GROUP BY win),
+ spans AS (
+  SELECT o.doc_id, o.pos FROM occ o JOIN w ON o.win = w.win
+  WHERE w.c > 1 AND o.doc_id * 1000000 + o.pos != w.wkey),
+ tokp AS (
+  SELECT doc_id, toks, unnest(range(0, len(toks))) AS p FROM d),
+ tok AS (
+  SELECT doc_id, CAST(p AS INT) AS p, toks[p + 1] AS tok FROM tokp),
+ kept AS (
+  SELECT t.* FROM tok t
+  WHERE NOT EXISTS (
+    SELECT 1 FROM spans s
+    WHERE s.doc_id = t.doc_id AND s.pos <= t.p AND t.p < s.pos + {k})),
+ rebuilt AS (
+  SELECT doc_id, string_agg(tok, ' ' ORDER BY p) AS cleaned_text,
+         count(*) AS n_kept FROM kept GROUP BY doc_id),
+ nsp AS (SELECT doc_id, count(*) AS n_sp FROM spans GROUP BY doc_id)
+SELECT d.doc_id, coalesce(r.cleaned_text, '') AS cleaned_text,
+       CAST(len(d.toks) AS BIGINT) AS n_tokens,
+       CAST(coalesce(r.n_kept, 0) AS BIGINT) AS n_kept_tokens,
+       CAST(coalesce(nsp.n_sp, 0) AS BIGINT) AS n_dup_windows
+FROM d LEFT JOIN rebuilt r ON d.doc_id = r.doc_id
+LEFT JOIN nsp ON d.doc_id = nsp.doc_id
+"""
+
+
+_def("q106_substring_dedup", fn=_q_substring_dedup, duck_sql=_q106_oracle_sql())
+
+
 # X68 — count-min frequency sketch (operators/sketch.py): the
 # frequency twin of q100's HLL. d=4 × w=512 integer counters on the
 # md5-prefix hash convention; per-key point query = min over the d
@@ -2424,6 +4983,45 @@ FROM tot, surv, tr
 
 
 _def("q108_bloom_prune", fn=_q_bloom_prune, duck_sql=_q108_oracle_sql())
+
+
+# X70 — stratified sampling (text/sampling.py stratified_sample):
+# deterministic per-language caps — each stratum keeps exactly the
+# cap smallest md5(doc_id) hashes, the corpus-balancing move before
+# training. The Spark side runs the scale plan (count → Chernoff-
+# margin hash prefilter → window over ~margin·cap rows per group →
+# under-selection patch); the oracle is the NAIVE full window in
+# DuckDB — different plan, must produce the identical row set, which
+# is the whole point of hash-rank determinism.
+_STRAT_CAPS = {"en": 40, "fr": 25, "de": 25, "es": 25, "zh": 25}
+
+
+def _q_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.sampling import stratified_sample
+
+    _load(spark, sf_dir)
+    docs = spark.table("documents").select("doc_id", "lang", "n_chars")
+    return stratified_sample(docs, "doc_id", "lang", cap=_STRAT_CAPS)
+
+
+def _q109_oracle_sql() -> str:
+    caps = ", ".join(f"('{k}', {v})" for k, v in _STRAT_CAPS.items())
+    return f"""
+WITH caps(lang, cap) AS (VALUES {caps}),
+ h AS (
+  SELECT d.doc_id, d.lang, d.n_chars, c.cap,
+         CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 12))
+              AS BIGINT) AS hv
+  FROM documents d JOIN caps c ON d.lang = c.lang),
+ r AS (
+  SELECT doc_id, lang, n_chars, cap,
+         row_number() OVER (PARTITION BY lang ORDER BY hv, doc_id) AS rk
+  FROM h)
+SELECT lang, doc_id, n_chars FROM r WHERE rk <= cap
+"""
+
+
+_def("q109_stratified_sample", fn=_q_stratified, duck_sql=_q109_oracle_sql())
 
 
 # X71 — grouped HLL (operators/sketch.py hll_distinct_by): distinct
@@ -3409,6 +6007,68 @@ FROM wtd GROUP BY query_url
 _def("q123_idw_interpolate", fn=_q_idw, duck_sql=_q123_oracle_sql())
 
 
+# X81 — integer HITS (hubs & authorities) over the page link graph,
+# the second classic link fixed point next to q81's PageRank. Max-
+# normalization via a divisor-first floor (d = ceil(max/SCALE), score
+# = raw div d) keeps everything in int64 with NO multiplication — the
+# only bound is n·SCALE < 2^63. The oracle is an unrolled K-round CTE
+# chain over the same independently-extracted edge set (the q81
+# pattern) — hash-exact.
+_HITS_ITERS = 3
+
+
+def _q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.hits import hits
+    from osm_spark.text.links import page_edges
+
+    _load(spark, sf_dir)
+    pages = _pages_df(spark)
+    return hits(
+        pages.select("url"), page_edges(pages), iterations=_HITS_ITERS
+    )
+
+
+def _q124_oracle_sql() -> str:
+    from osm_spark.text.hits import SCALE
+
+    sql = (
+        _pages_oracle_cte(columns="url, html_str")
+        + ","
+        + _LINKS_DUCK
+        + f""",
+ nodes AS (SELECT url FROM pages),
+ h0 AS (SELECT url, CAST({SCALE} AS BIGINT) AS hub FROM nodes)"""
+    )
+    for i in range(_HITS_ITERS):
+        sql += f""",
+ ar{i} AS (SELECT e.dst AS url, CAST(sum(h.hub) AS BIGINT) AS s
+           FROM h{i} h JOIN edges e ON e.src = h.url GROUP BY e.dst),
+ ad{i} AS (SELECT greatest(
+             (coalesce(max(s), 0) + {SCALE} - 1) // {SCALE}, 1) AS d
+           FROM ar{i}),
+ a{i + 1} AS (SELECT n.url,
+           CAST(coalesce(ar.s, 0) // (SELECT d FROM ad{i}) AS BIGINT)
+             AS authority
+           FROM nodes n LEFT JOIN ar{i} ar ON n.url = ar.url),
+ hr{i} AS (SELECT e.src AS url, CAST(sum(a.authority) AS BIGINT) AS s
+           FROM a{i + 1} a JOIN edges e ON e.dst = a.url GROUP BY e.src),
+ hd{i} AS (SELECT greatest(
+             (coalesce(max(s), 0) + {SCALE} - 1) // {SCALE}, 1) AS d
+           FROM hr{i}),
+ h{i + 1} AS (SELECT n.url,
+           CAST(coalesce(hr.s, 0) // (SELECT d FROM hd{i}) AS BIGINT)
+             AS hub
+           FROM nodes n LEFT JOIN hr{i} hr ON n.url = hr.url)"""
+    sql += (
+        f"\nSELECT h.url, h.hub, a.authority FROM h{_HITS_ITERS} h "
+        f"JOIN a{_HITS_ITERS} a ON h.url = a.url"
+    )
+    return sql
+
+
+_def("q124_hits", fn=_q_hits, duck_sql=_q124_oracle_sql())
+
+
 # X83 — focal (moving-window) raster statistics over the page density
 # grid: the standard GIS smoothing step (focal sum / max / mean of a
 # heatmap). Cells-scale ×9 fan-out + one map-side-combinable groupBy;
@@ -3542,8 +6202,61 @@ FROM hit
 _def("q131_hist_quantiles", fn=_q_hist_quantiles, duck_sql=_q131_oracle_sql())
 
 
+# X87 composition — dataset card: the per-(split, language) corpus
+# report every training-data pipeline publishes (docs, token/char
+# totals, mean doc length) — X29 hash split × the q35 tokenizer over
+# the documents table, all integer sums + one ratio. The oracle
+# recomposes split assignment (bucket_sql) and token counts
+# independently.
+def _q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.sampling import hash_split
+
+    _load(spark, sf_dir)
+    docs = spark.table("documents").select(
+        "doc_id", "lang", "text", "n_chars",
+        F.col("doc_id").cast("string").alias("k"),
+    )
+    s = hash_split(
+        docs, "k", {"train": 0.9, "val": 0.05, "test": 0.05}, salt="v1:"
+    )
+    t = s.withColumn("n_tokens", F.expr(f"size({_TOKENS_SPARK})"))
+    return t.groupBy("split", "lang").agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.sum("n_tokens").cast("long").alias("total_tokens"),
+        F.sum("n_chars").cast("long").alias("total_chars"),
+        (
+            F.sum("n_tokens").cast("long") / F.count("*").cast("long")
+        ).alias("mean_tokens"),
+    )
+
+
+def _q130_oracle_sql() -> str:
+    from osm_spark.text.sampling import bucket_sql
+
+    b = bucket_sql("CAST(doc_id AS VARCHAR)", 10_000, salt="v1:")
+    return f"""
+WITH t AS (
+  SELECT CASE WHEN {b} < 9000 THEN 'train'
+              WHEN {b} < 9500 THEN 'val'
+              ELSE 'test' END AS split,
+         lang, n_chars,
+         len({_TOKENS_DUCK}) AS n_tokens
+  FROM documents)
+SELECT split, lang,
+       CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
+       CAST(sum(n_chars) AS BIGINT) AS total_chars,
+       CAST(CAST(sum(n_tokens) AS BIGINT) AS DOUBLE)
+         / CAST(count(*) AS BIGINT) AS mean_tokens
+FROM t GROUP BY split, lang
+"""
+
+
+_def("q130_dataset_card", fn=_q_dataset_card, duck_sql=_q130_oracle_sql())
+
+
 # X89 — incremental PIP enrichment, driven through the REAL commit
-# flow: pages land as TWO ManifestTable commits
+# flow (the q77 pattern): pages land as TWO ManifestTable commits
 # (initial + append), pip_increment runs after each — reading only
 # the appended files the second time — and the final assignment table
 # is hash-checked against the SAME independent membership SQL as
@@ -3832,6 +6545,98 @@ FROM j GROUP BY url
 )
 
 
+# X90 — full-corpus Lloyd k-means over embeddings (text/kmeans.py):
+# unlike the driver-sample-trained IVF quantizer (q45), every row
+# participates in every round. Exact-integer contract: micro-unit
+# quantization, int64 distances/sums, truncating-division centroid
+# update — so the oracle can re-run the ENTIRE fit (seeding, 3 Lloyd
+# rounds, final census) from scratch in SQL and match bit-for-bit,
+# including the fitted model itself via centroid_digest.
+_KM_K = 8
+_KM_ITERS = 3
+_KM_DIM = 64
+
+
+def _q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.kmeans import kmeans_fit, kmeans_summary
+
+    _load(spark, sf_dir)
+    emb = spark.table("embeddings")
+    cents = kmeans_fit(emb, k=_KM_K, n_iters=_KM_ITERS)
+    return kmeans_summary(emb, cents)
+
+
+def _kmeans_fit_cte(where: str = "") -> str:
+    """WITH-body re-deriving the ENTIRE q134 fit in SQL — seeding,
+    _KM_ITERS unrolled Lloyd rounds, final assignment `fin`(vec_id,
+    cid, d2) and final centroids c{_KM_ITERS}(cid, c). Shared by the
+    q134 census oracle, the q138 cluster-balanced-sampling oracle and
+    the q142 incremental-maintenance oracle so every composition is
+    checked against the same from-scratch fit. ``where`` restricts the
+    fitted source rows (q142 fits on the first commit only)."""
+    k, iters, dim = _KM_K, _KM_ITERS, _KM_DIM
+
+    def d2(q: str, c: str) -> str:
+        return (
+            f"list_reduce(list_transform(range(1, {dim + 1}), "
+            f"i -> ({q}[i] - {c}[i]) * ({q}[i] - {c}[i])), (x, y) -> x + y)"
+        )
+
+    sum_cols = ", ".join(
+        f"CAST(sum(q[{d + 1}]) AS BIGINT) AS s{d}" for d in range(dim)
+    )
+    upd = ", ".join(
+        f"CASE WHEN s.s{d} >= 0 THEN s.s{d} // s.n "
+        f"ELSE -((-s.s{d}) // s.n) END"
+        for d in range(dim)
+    )
+    sql = f"""
+WITH qv AS (
+  SELECT vec_id,
+         list_transform(embedding,
+           x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS q
+  FROM embeddings {where}),
+ c0 AS (SELECT CAST(rn - 1 AS INT) AS cid, q AS c FROM (
+   SELECT q, row_number() OVER (
+     ORDER BY md5('km-' || CAST(vec_id AS VARCHAR)), vec_id) AS rn
+   FROM qv) WHERE rn <= {k})"""
+    for i in range(iters):
+        sql += f""",
+ d{i} AS (SELECT v.vec_id, v.q, c.cid, {d2('v.q', 'c.c')} AS d2
+          FROM qv v CROSS JOIN c{i} c),
+ a{i} AS (SELECT vec_id, q, cid FROM (
+   SELECT vec_id, q, cid,
+          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
+   FROM d{i}) WHERE rn = 1),
+ s{i} AS (SELECT cid, CAST(count(*) AS BIGINT) AS n, {sum_cols}
+          FROM a{i} GROUP BY cid),
+ c{i + 1} AS (SELECT p.cid,
+   CASE WHEN s.cid IS NULL THEN p.c ELSE list_value({upd}) END AS c
+   FROM c{i} p LEFT JOIN s{i} s USING (cid))"""
+    sql += f""",
+ dfin AS (SELECT v.vec_id, c.cid, {d2('v.q', 'c.c')} AS d2
+          FROM qv v CROSS JOIN c{iters} c),
+ fin AS (SELECT vec_id, cid, d2 FROM (
+   SELECT vec_id, cid, d2,
+          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
+   FROM dfin) WHERE rn = 1)"""
+    return sql
+
+
+def _q134_oracle_sql() -> str:
+    return _kmeans_fit_cte() + f"""
+SELECT f.cid AS cluster_id, CAST(count(*) AS BIGINT) AS n_points,
+       CAST(sum(f.d2) AS BIGINT) AS inertia,
+       md5(list_aggregate(list_transform(c.c,
+             x -> CAST(x AS VARCHAR)), 'string_agg', ',')) AS centroid_digest
+FROM fin f JOIN c{_KM_ITERS} c ON f.cid = c.cid
+GROUP BY f.cid, c.c
+"""
+
+
+_def("q134_kmeans", fn=_q_kmeans, duck_sql=_q134_oracle_sql())
+
+
 # X91 — per-group convex hull (spatial/hull.py): the extremal corpus
 # footprint per language — strict hull, CCW from the lexicographic min
 # vertex, exact integer cross products throughout. The oracle derives
@@ -3928,6 +6733,44 @@ FROM agg a JOIN dig d USING (lang)
 
 
 _def("q135_convex_hull", fn=_q_hull, duck_sql=_q135_oracle_sql())
+
+
+# X94 — cluster-balanced sampling (the graft composition: X90 k-means
+# × X68 stratified sampler): fit on the full corpus, assign every
+# vector, keep the cap smallest md5(vec_id) per cluster — the
+# data-mixing move that rebalances a skewed embedding corpus. The
+# oracle recomputes the ENTIRE composition: the k-means fit from
+# scratch (shared _kmeans_fit_cte) + the naive full-window hash rank.
+_Q138_CAP = 20
+
+
+def _q_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.kmeans import kmeans_assign, kmeans_fit
+    from osm_spark.text.sampling import stratified_sample
+
+    _load(spark, sf_dir)
+    emb = spark.table("embeddings")
+    cents = kmeans_fit(emb, k=_KM_K, n_iters=_KM_ITERS)
+    assigned = kmeans_assign(emb, cents).select("vec_id", "cluster_id")
+    return stratified_sample(
+        assigned, "vec_id", "cluster_id", cap=_Q138_CAP
+    ).select("cluster_id", "vec_id")
+
+
+def _q138_oracle_sql() -> str:
+    return _kmeans_fit_cte() + f""",
+ h AS (SELECT vec_id, cid,
+              CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 12))
+                   AS BIGINT) AS hv
+       FROM fin),
+ r AS (SELECT vec_id, cid,
+              row_number() OVER (PARTITION BY cid ORDER BY hv, vec_id) AS rk
+       FROM h)
+SELECT CAST(cid AS INT) AS cluster_id, vec_id FROM r WHERE rk <= {_Q138_CAP}
+"""
+
+
+_def("q138_cluster_sample", fn=_q_cluster_sample, duck_sql=_q138_oracle_sql())
 
 
 # X95 — zonal statistics (spatial/zonal.py): the raster→polygon
@@ -4084,6 +6927,104 @@ WHERE f.ka < f.kb AND greatest(f.dd, r.dd) <= {d_u * d_u}
 
 
 _def("q136_hausdorff_join", fn=_q_hausdorff, duck_sql=_q136_oracle_sql())
+
+
+# X97 — incremental k-means maintenance (the X89 pattern on the ML
+# path): embeddings land as TWO ManifestTable commits (even vec_ids,
+# then odd appended); the model table follows via a manifest
+# file-diff + zero-shuffle assignment + exact int64 state fold. The
+# oracle replays the ENTIRE flow in SQL: the shared from-scratch fit
+# on the first commit, the final-assignment census, the second
+# commit's assignment against the post-init centroids, and the merged
+# trunc-div state — hash-exact including the model digest.
+def _q_kmeans_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import tempfile
+
+    from osm_spark.sources.manifest_table import ManifestTable
+    from osm_spark.text.kmeans_incremental import kmeans_increment
+
+    _load(spark, sf_dir)
+    emb = spark.table("embeddings")
+    root = tempfile.mkdtemp(prefix="km_inc_")
+    src = ManifestTable(spark, f"{root}/emb")
+    src.write(emb.where(F.col("vec_id") % 2 == 0), mode="overwrite")
+    kmeans_increment(spark, src, f"{root}/model", k=_KM_K,
+                     n_iters=_KM_ITERS)
+    src.write(emb.where(F.col("vec_id") % 2 == 1), mode="append")
+    kmeans_increment(spark, src, f"{root}/model", k=_KM_K,
+                     n_iters=_KM_ITERS)
+    model = ManifestTable(spark, f"{root}/model")
+    digest = F.md5(
+        F.concat_ws(",", F.transform("centroid", lambda x: x.cast("string")))
+    )
+    return (
+        model.read()
+        .select(
+            F.col("cid").cast("int").alias("cluster_id"),
+            F.col("n").alias("n_points"),
+            digest.alias("centroid_digest"),
+        )
+        .localCheckpoint(eager=True)
+    )
+
+
+def _q142_oracle_sql() -> str:
+    dim, iters = _KM_DIM, _KM_ITERS
+    zeros = "list_value(" + ",".join(["0"] * dim) + ")"
+    sum_list = "list_value(" + ", ".join(
+        f"CAST(sum(q[{d + 1}]) AS BIGINT)" for d in range(dim)
+    ) + ")"
+
+    def tdiv(ss: str, n: str) -> str:
+        return (
+            f"list_transform({ss}, v -> CASE WHEN v >= 0 THEN v // {n} "
+            f"ELSE -((-v) // {n}) END)"
+        )
+
+    def d2(q: str, c: str) -> str:
+        return (
+            f"list_reduce(list_transform(range(1, {dim + 1}), "
+            f"i -> ({q}[i] - {c}[i]) * ({q}[i] - {c}[i])), (x, y) -> x + y)"
+        )
+
+    return _kmeans_fit_cte(where="WHERE vec_id % 2 = 0") + f""",
+ st0 AS (SELECT cid, CAST(count(*) AS BIGINT) AS n0, {sum_list} AS ss
+        FROM fin JOIN qv USING (vec_id) GROUP BY cid),
+ cst0 AS (SELECT p.cid,
+   coalesce(s.n0, 0) AS n0,
+   CASE WHEN s.cid IS NULL THEN {zeros} ELSE s.ss END AS ss,
+   CASE WHEN s.cid IS NULL OR s.n0 = 0 THEN p.c
+        ELSE {tdiv('s.ss', 's.n0')} END AS c
+   FROM c{iters} p LEFT JOIN st0 s USING (cid)),
+ qodd AS (SELECT vec_id,
+          list_transform(embedding,
+            x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS q
+          FROM embeddings WHERE vec_id % 2 = 1),
+ dodd AS (SELECT v.vec_id, v.q, c.cid, {d2('v.q', 'c.c')} AS d2
+          FROM qodd v CROSS JOIN cst0 c),
+ aodd AS (SELECT vec_id, q, cid FROM (
+   SELECT vec_id, q, cid,
+          row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
+   FROM dodd) WHERE rn = 1),
+ st1 AS (SELECT cid, CAST(count(*) AS BIGINT) AS n1, {sum_list} AS ss1
+        FROM aodd GROUP BY cid),
+ merged AS (SELECT a.cid,
+   a.n0 + coalesce(b.n1, 0) AS n,
+   CASE WHEN b.cid IS NULL THEN a.ss
+        ELSE list_transform(range(1, {dim + 1}),
+                            i -> a.ss[i] + b.ss1[i]) END AS ss
+   FROM cst0 a LEFT JOIN st1 b USING (cid)),
+ final_state AS (SELECT m.cid, m.n,
+   CASE WHEN m.n = 0 THEN c.c ELSE {tdiv('m.ss', 'm.n')} END AS centroid
+   FROM merged m JOIN cst0 c USING (cid))
+SELECT CAST(cid AS INT) AS cluster_id, CAST(n AS BIGINT) AS n_points,
+       md5(list_aggregate(list_transform(centroid,
+             x -> CAST(x AS VARCHAR)), 'string_agg', ',')) AS centroid_digest
+FROM final_state
+"""
+
+
+_def("q142_kmeans_increment", fn=_q_kmeans_inc, duck_sql=_q142_oracle_sql())
 
 
 # X98 — space-time cube (X73 pyramid × time grain): every tile at
@@ -4347,6 +7288,463 @@ LIMIT 10
 )
 
 
+# X114 — bounded-round weighted SSSP (text/sssp.py): the weighted
+# companion of X99's BFS — Bellman-Ford rounds over the co-citation
+# graph with w = max(1, 6 − n_common) (strong co-citation = cheap
+# hop), seeds = the 2 lexicographically-smallest nodes, R = 6. d_R =
+# exact cheapest cost over ≤ R-edge paths (the depth-bound contract).
+# Oracle: bounded walk enumeration (UNION-dedup'd) + min — a
+# different evaluation strategy entirely, equal by the path-cost
+# identity d_R(v) = min over ≤R-edge paths.
+_Q159_ROUNDS = 6
+
+
+def _q_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.links import cocitation_edges
+    from osm_spark.text.sssp import sssp
+    from osm_spark.text.urls import normalize_url
+
+    _load(spark, sf_dir)
+    src_sql, dst_sql = _host_edge_exprs(s="STRING", idiv="div")
+    pairs = spark.table("documents").select(
+        normalize_url(F.expr(src_sql)).alias("src"),
+        normalize_url(F.expr(dst_sql)).alias("dst"),
+    )
+    base = pairs.where(F.col("src") != F.col("dst")).distinct()
+    co = cocitation_edges(base, "cocitation", max_degree=50)
+    w = F.greatest(F.lit(1), F.lit(6) - F.col("n_common")).cast("long")
+    cw = co.select("src", "dst", w.alias("w")).unionByName(
+        co.select(
+            F.col("dst").alias("src"), F.col("src").alias("dst"), w.alias("w")
+        )
+    )
+    seeds = (
+        cw.select(F.col("src").alias("node"))
+        .distinct()
+        .orderBy("node")
+        .limit(2)
+    )
+    return sssp(cw, seeds, rounds=_Q159_ROUNDS)
+
+
+def _q159_oracle_sql() -> str:
+    src_sql, dst_sql = _host_edge_exprs(s="VARCHAR", idiv="//")
+    return (
+        f"""
+WITH RECURSIVE caps AS (
+  SELECT doc_id, {src_sql} AS src_raw, {dst_sql} AS dst_raw
+  FROM documents),
+ u0 AS (
+  SELECT doc_id * 2 AS doc_id, src_raw AS url FROM caps
+  UNION ALL
+  SELECT doc_id * 2 + 1 AS doc_id, dst_raw AS url FROM caps),"""
+        + _URL_NORM_DUCK
+        + f"""
+, e AS (SELECT s.norm_url AS src, d.norm_url AS dst
+        FROM final s JOIN final d ON d.doc_id = s.doc_id + 1
+        WHERE s.doc_id % 2 = 0),
+ edges AS (SELECT DISTINCT src, dst FROM e WHERE src != dst),
+ wtab AS (SELECT DISTINCT src AS w, dst AS u FROM edges),
+ keepw AS (SELECT w FROM wtab GROUP BY w HAVING count(*) <= 50),
+ wk AS (SELECT t.w, t.u FROM wtab t JOIN keepw USING (w)),
+ co AS (SELECT least(x.u, y.u) AS a, greatest(x.u, y.u) AS b,
+               count(*) AS n_common
+        FROM wk x JOIN wk y ON x.w = y.w AND x.u < y.u
+        GROUP BY 1, 2),
+ cw AS (SELECT a AS src, b AS dst,
+               greatest(1, 6 - n_common) AS wgt FROM co
+        UNION ALL
+        SELECT b, a, greatest(1, 6 - n_common) FROM co),
+ seeds AS (SELECT node FROM (SELECT DISTINCT src AS node FROM cw)
+           ORDER BY node LIMIT 2),
+ r(node, c, d) AS (
+   SELECT node, CAST(0 AS BIGINT), 0 FROM seeds
+   UNION
+   SELECT e2.dst, r.c + e2.wgt, r.d + 1
+   FROM r JOIN cw e2 ON e2.src = r.node
+   WHERE r.d < {_Q159_ROUNDS})
+SELECT node, CAST(min(c) AS BIGINT) AS dist FROM r GROUP BY node
+"""
+    )
+
+
+_def("q159_weighted_sssp", fn=_q_sssp, duck_sql=_q159_oracle_sql())
+
+
+# X113 — k-core extraction (text/kcore.py): the graph-cohesion peel
+# (unique order-independent fixpoint) — driver-round loop (X99
+# contract): one combinable degree groupBy + two broadcast anti-joins
+# per round over the shrinking edge set. q158 peels the co-citation
+# graph (X109) to its 3-core; oracle replays the peel as a recursive
+# CTE over an edge-list state with per-iteration list_filter degrees.
+def _q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.kcore import k_core_nodes
+    from osm_spark.text.links import cocitation_edges
+    from osm_spark.text.urls import normalize_url
+
+    _load(spark, sf_dir)
+    src_sql, dst_sql = _host_edge_exprs(s="STRING", idiv="div")
+    pairs = spark.table("documents").select(
+        normalize_url(F.expr(src_sql)).alias("src"),
+        normalize_url(F.expr(dst_sql)).alias("dst"),
+    )
+    edges = pairs.where(F.col("src") != F.col("dst")).distinct()
+    cocite = cocitation_edges(edges, "cocitation", max_degree=50).select(
+        "src", "dst"
+    )
+    return k_core_nodes(cocite, 3)
+
+
+def _q158_oracle_sql() -> str:
+    src_sql, dst_sql = _host_edge_exprs(s="VARCHAR", idiv="//")
+    deg = (
+        "len(list_filter(p.es, f -> f.a = {x} OR f.b = {x}))"
+    )
+    return (
+        f"""
+WITH RECURSIVE caps AS (
+  SELECT doc_id, {src_sql} AS src_raw, {dst_sql} AS dst_raw
+  FROM documents),
+ u0 AS (
+  SELECT doc_id * 2 AS doc_id, src_raw AS url FROM caps
+  UNION ALL
+  SELECT doc_id * 2 + 1 AS doc_id, dst_raw AS url FROM caps),"""
+        + _URL_NORM_DUCK
+        + f"""
+, e AS (SELECT s.norm_url AS src, d.norm_url AS dst
+        FROM final s JOIN final d ON d.doc_id = s.doc_id + 1
+        WHERE s.doc_id % 2 = 0),
+ edges AS (SELECT DISTINCT src, dst FROM e WHERE src != dst),
+ w AS (SELECT DISTINCT src AS w, dst AS u FROM edges),
+ keepw AS (SELECT w FROM w GROUP BY w HAVING count(*) <= 50),
+ wk AS (SELECT w.w, w.u FROM w JOIN keepw USING (w)),
+ co AS (SELECT DISTINCT least(x.u, y.u) AS a, greatest(x.u, y.u) AS b
+        FROM wk x JOIN wk y ON x.w = y.w AND x.u < y.u),
+ e0 AS (SELECT list(struct_pack(a := a, b := b)) AS es FROM co),
+ peel(it, es) AS (
+   SELECT 0, es FROM e0
+   UNION ALL
+   SELECT p.it + 1,
+          list_filter(p.es, e ->
+            {deg.format(x='e.a')} >= 3 AND {deg.format(x='e.b')} >= 3)
+   FROM peel p
+   WHERE len(list_filter(p.es, e ->
+            {deg.format(x='e.a')} >= 3 AND {deg.format(x='e.b')} >= 3))
+         < len(p.es)),
+ fix AS (SELECT es FROM peel ORDER BY it DESC LIMIT 1),
+ core_nodes AS (
+   SELECT node FROM (
+     SELECT unnest(list_transform(es, e -> e.a)) AS node FROM fix
+     UNION ALL
+     SELECT unnest(list_transform(es, e -> e.b)) AS node FROM fix))
+SELECT node, CAST(count(*) AS BIGINT) AS core_deg
+FROM core_nodes GROUP BY node
+"""
+    )
+
+
+_def("q158_kcore", fn=_q_kcore, duck_sql=_q158_oracle_sql())
+
+
+# X112 — DSIR-style contrastive importance weights (composition of
+# the X63 micro-nat LM, q96): weight = logP_target(doc) −
+# logP_general(doc) over the SAME gram multiset — both sums exact
+# int64 micro-nats, so the difference and the (w desc, id) selection
+# rank are engine-bit-exact. Target = the 'en' slice, general = the
+# whole corpus (the DSIR recipe with hashed-ngram LMs; Xie et al.
+# 2023). Oracle: the q96 model CTE twice + integer difference +
+# window rank.
+_Q157_TOP = 100
+
+
+def _q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.lm import score_docs, train_char_lm
+
+    _load(spark, sf_dir)
+    docs = spark.table("documents")
+    m_t = train_char_lm(
+        docs.where(F.col("lang") == "en"), order=3, top_v=_Q96_TOP_V
+    )
+    m_s = train_char_lm(docs, order=3, top_v=_Q96_TOP_V)
+    st = score_docs(docs, m_t, order=3, include_sum=True).select(
+        "doc_id", "n_grams", F.col("sum_micro").alias("s_t")
+    )
+    ss = score_docs(docs, m_s, order=3, include_sum=True).select(
+        "doc_id", F.col("sum_micro").alias("s_s")
+    )
+    from pyspark.sql import Window
+
+    w = Window.orderBy(F.col("w_unat").desc(), F.col("doc_id").asc())
+    return (
+        st.join(ss, "doc_id")
+        .select(
+            "doc_id",
+            "n_grams",
+            (F.col("s_t") - F.col("s_s")).alias("w_unat"),
+        )
+        .withColumn("rk", F.row_number().over(w))
+        .select(
+            "doc_id",
+            "n_grams",
+            "w_unat",
+            (F.col("rk") <= _Q157_TOP).alias("selected"),
+        )
+    )
+
+
+def _q157_model_cte(tag: str, where: str) -> str:
+    v = _Q96_TOP_V
+    return f"""
+ ref_{tag} AS (SELECT text FROM documents {where}),
+ g_{tag} AS (SELECT substr(text, CAST(i AS INT), 3) AS gram
+       FROM ref_{tag},
+            unnest(range(1, greatest(length(text) - 2, 0) + 1)) t(i)),
+ counts_{tag} AS (SELECT gram, count(*) AS c FROM g_{tag} GROUP BY gram),
+ top_{tag} AS (SELECT gram, c FROM counts_{tag}
+               ORDER BY c DESC, gram LIMIT {v}),
+ tot_{tag} AS (SELECT sum(c) AS N, count(*) AS V FROM top_{tag}),
+ model_{tag} AS (SELECT gram,
+     CAST(round(ln(CAST(c + 1 AS DOUBLE) / (N + V + 1)) * 1000000)
+          AS BIGINT) AS lp
+     FROM top_{tag}, tot_{tag}),
+ oov_{tag} AS (SELECT CAST(round(ln(1.0 / (N + V + 1)) * 1000000)
+                     AS BIGINT) AS lp FROM tot_{tag}),
+ sc_{tag} AS (SELECT d.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
+                     sum(coalesce(m.lp, (SELECT lp FROM oov_{tag}))) AS s
+        FROM (SELECT doc_id, substr(text, CAST(i AS INT), 3) AS gram
+              FROM documents,
+                   unnest(range(1, greatest(length(text) - 2, 0) + 1)) t(i))
+             d
+        LEFT JOIN model_{tag} m USING (gram) GROUP BY d.doc_id)"""
+
+
+def _q157_oracle_sql() -> str:
+    return (
+        "WITH"
+        + _q157_model_cte("t", "WHERE lang = 'en'")
+        + ","
+        + _q157_model_cte("s", "")
+        + f""",
+ j AS (SELECT d.doc_id,
+              coalesce(t.n_grams, 0) AS n_grams,
+              coalesce(t.s, 0) - coalesce(s.s, 0) AS w_unat
+       FROM documents d
+       LEFT JOIN sc_t t USING (doc_id)
+       LEFT JOIN sc_s s USING (doc_id))
+SELECT doc_id, n_grams, CAST(w_unat AS BIGINT) AS w_unat,
+       row_number() OVER (ORDER BY w_unat DESC, doc_id)
+         <= {_Q157_TOP} AS selected
+FROM j
+"""
+    )
+
+
+_def("q157_dsir_weights", fn=_q_dsir, duck_sql=_q157_oracle_sql())
+
+
+# X110 — greedy max-coverage selection (text/cover.py): the
+# submodular data-selection primitive — k documents maximizing joint
+# vocabulary coverage, (1−1/e)-optimal greedy, ties to lowest id.
+# Engine: driver-coordinated rounds (X99 pattern), per round one
+# anti-join vs the covered TOKEN set + one combinable groupBy +
+# TakeOrdered(1); only winner ids reach the driver. Oracle: the same
+# greedy replayed as a recursive CTE carrying (picked, covered) list
+# state with a deterministic struct-max argmax.
+_Q156_K = 8
+
+
+def _q_max_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.cover import greedy_max_coverage
+    from osm_spark.text.dedup import ngram_shingles_sql
+
+    _load(spark, sf_dir)
+    # 3-gram shingles (the q39 convention) over a doc_id % 4 slice:
+    # unigram vocabulary saturates in ONE pick (44 tokens); the 16k-
+    # shingle space makes the greedy run real multi-round trade-offs.
+    docs = (
+        spark.table("documents")
+        .where(F.col("doc_id") % 4 == 0)
+        .select(
+            "doc_id", F.expr(ngram_shingles_sql("text", 3)).alias("tokens")
+        )
+    )
+    picks = greedy_max_coverage(docs, _Q156_K)
+    return spark.createDataFrame(
+        [
+            (i + 1, int(d), int(g), int(tot))
+            for i, (d, g, tot) in enumerate(picks)
+        ],
+        "round int, doc_id long, gain long, covered_total long",
+    )
+
+
+def _q156_oracle_sql() -> str:
+    return f"""
+WITH RECURSIVE toks AS (
+  SELECT doc_id, list_distinct({_SHINGLES_DUCK}) AS t FROM documents
+  WHERE doc_id % 4 = 0),
+ sel(r, picked, covered, id, gain, total) AS (
+  SELECT 0, CAST([] AS BIGINT[]), CAST([] AS VARCHAR[]),
+         CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), CAST(0 AS BIGINT)
+  UNION ALL
+  SELECT w.r + 1,
+         list_append(w.picked, w.bid),
+         list_sort(list_distinct(w.covered || tb.t)),
+         w.bid, w.bg, w.total + w.bg
+  FROM (
+    SELECT g2.r, g2.picked, g2.covered, g2.total,
+           g2.m.g AS bg, -g2.m.ni AS bid
+    FROM (
+      SELECT s.r, s.picked, s.covered, s.total,
+             max(struct_pack(
+               g := CAST(len(list_filter(t2.t,
+                      x -> NOT list_contains(s.covered, x))) AS BIGINT),
+               ni := -t2.doc_id)) AS m
+      FROM sel s JOIN toks t2
+        ON NOT list_contains(s.picked, t2.doc_id)
+      WHERE s.r < {_Q156_K}
+      GROUP BY s.r, s.picked, s.covered, s.total
+    ) g2
+  ) w
+  JOIN toks tb ON tb.doc_id = w.bid
+  WHERE w.bg > 0)
+SELECT CAST(r AS INT) AS round, id AS doc_id, gain,
+       total AS covered_total
+FROM sel WHERE r >= 1
+"""
+
+
+_def("q156_max_coverage", fn=_q_max_coverage, duck_sql=_q156_oracle_sql())
+
+
+# X109 — co-citation / bibliographic coupling (text/links.py): the
+# classic IR similarity edges over the link graph — pages cited by a
+# common page (co-citation) with shared-witness weights, mega-witness
+# cap applied BEFORE the join (the max_df-style signal/volume cut).
+def _q_cocitation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.links import cocitation_edges
+    from osm_spark.text.urls import normalize_url
+
+    _load(spark, sf_dir)
+    src_sql, dst_sql = _host_edge_exprs(s="STRING", idiv="div")
+    pairs = spark.table("documents").select(
+        normalize_url(F.expr(src_sql)).alias("src"),
+        normalize_url(F.expr(dst_sql)).alias("dst"),
+    )
+    edges = pairs.where(F.col("src") != F.col("dst")).distinct()
+    return cocitation_edges(edges, "cocitation", max_degree=50)
+
+
+def _q155_oracle_sql() -> str:
+    src_sql, dst_sql = _host_edge_exprs(s="VARCHAR", idiv="//")
+    return (
+        f"""
+WITH caps AS (
+  SELECT doc_id, {src_sql} AS src_raw, {dst_sql} AS dst_raw
+  FROM documents),
+ u0 AS (
+  SELECT doc_id * 2 AS doc_id, src_raw AS url FROM caps
+  UNION ALL
+  SELECT doc_id * 2 + 1 AS doc_id, dst_raw AS url FROM caps),"""
+        + _URL_NORM_DUCK
+        + """
+, e AS (SELECT s.norm_url AS src, d.norm_url AS dst
+        FROM final s JOIN final d ON d.doc_id = s.doc_id + 1
+        WHERE s.doc_id % 2 = 0),
+ edges AS (SELECT DISTINCT src, dst FROM e WHERE src != dst),
+ w AS (SELECT DISTINCT src AS w, dst AS u FROM edges),
+ keepw AS (SELECT w FROM w GROUP BY w HAVING count(*) <= 50),
+ wk AS (SELECT w.w, w.u FROM w JOIN keepw USING (w))
+SELECT x.u AS src, y.u AS dst, CAST(count(*) AS BIGINT) AS n_common
+FROM wk x JOIN wk y ON x.w = y.w AND x.u < y.u
+GROUP BY x.u, y.u
+"""
+    )
+
+
+_def("q155_cocitation", fn=_q_cocitation, duck_sql=_q155_oracle_sql())
+
+
+# X108 — exact Jaccard set-similarity join (text/setjoin.py): the
+# EXACT layer under the minhash/LSH stack — every pair ≥ t, nothing
+# else. Engine: rarest-first global order, prefix filter (lossless),
+# rational-threshold int64 cross-multiplies (no float). Oracle: the
+# literal brute-force definition with list_intersect.
+def _q_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.setjoin import jaccard_join
+
+    _load(spark, sf_dir)
+    docs = spark.table("documents").select(
+        "doc_id", F.expr(_TOKENS_SPARK).alias("tokens")
+    )
+    return jaccard_join(docs, 19, 20)
+
+
+def _q154_oracle_sql() -> str:
+    return f"""
+WITH toks AS (
+  SELECT doc_id, list_distinct({_TOKENS_DUCK}) AS t
+  FROM documents WHERE len({_TOKENS_DUCK}) > 0)
+SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       CAST(len(a.t) AS BIGINT) AS n_a,
+       CAST(len(b.t) AS BIGINT) AS n_b,
+       CAST(len(list_intersect(a.t, b.t)) AS BIGINT) AS n_inter
+FROM toks a JOIN toks b ON a.doc_id < b.doc_id
+WHERE len(list_intersect(a.t, b.t)) * 20
+      >= 19 * (len(a.t) + len(b.t) - len(list_intersect(a.t, b.t)))
+"""
+
+
+_def("q154_jaccard_join", fn=_q_jaccard_join, duck_sql=_q154_oracle_sql())
+
+
+# X107 — sparse random projection (text/rproj.py): Achlioptas ±1/0
+# JL projection, exact int64 (no float anywhere), matrix = md5
+# convention baked into the plan as literal ± sums. Oracle re-derives
+# the matrix from the same hashes and replays the projection
+# relationally — every coordinate hash-checked.
+_Q153_OUT = 16
+
+
+def _q_rproj(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.rproj import random_project
+
+    _load(spark, sf_dir)
+    return random_project(spark.table("embeddings"), out_dim=_Q153_OUT)
+
+
+def _q153_oracle_sql() -> str:
+    pivot = ",\n       ".join(
+        f"CAST(coalesce(max(CASE WHEN j = {j} THEN p END), 0) AS BIGINT)"
+        f" AS p{j}"
+        for j in range(_Q153_OUT)
+    )
+    return f"""
+WITH qv AS (
+  SELECT vec_id,
+         list_transform(embedding,
+           x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS q
+  FROM embeddings),
+ dims AS (SELECT unnest(range(0, {_Q153_OUT})) AS j),
+ ind AS (SELECT unnest(range(0, 64)) AS d),
+ co AS (SELECT j, d,
+          CASE (CAST(('0x' || substr(md5('rp-' || CAST(j AS VARCHAR)
+                 || '-' || CAST(d AS VARCHAR)), 1, 12)) AS BIGINT) % 6)
+            WHEN 0 THEN 1 WHEN 1 THEN -1 ELSE 0 END AS c
+        FROM dims CROSS JOIN ind),
+ pr AS (SELECT v.vec_id, co.j, sum(co.c * v.q[co.d + 1]) AS p
+        FROM qv v CROSS JOIN co
+        WHERE co.c != 0
+        GROUP BY v.vec_id, co.j)
+SELECT vec_id,
+       {pivot}
+FROM pr GROUP BY vec_id
+"""
+
+
+_def("q153_random_projection", fn=_q_rproj, duck_sql=_q153_oracle_sql())
+
+
 # X106 — skyline / Pareto front (operators/skyline.py): the multi-
 # criteria curation cut a scalar score can't express — documents no
 # other document beats on ALL of (token count MAX, char count MIN,
@@ -4583,6 +7981,74 @@ FROM agg
 _def("q150_kmv_intersect", fn=_q_kmv_pairs, duck_sql=_q150_oracle_sql())
 
 
+# X103 — triangle counting (text/triangles.py): link-farm detection
+# primitive over the host graph. Engine: degree-oriented wedge join
+# (min-rank apex ⇒ each triangle once; hubs emit zero wedges — the
+# O(√m) out-degree cap). Oracle: the same orientation re-derived
+# relationally with explicit (deg, id) tie booleans.
+def _q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from osm_spark.text.triangles import triangle_counts
+    from osm_spark.text.urls import normalize_url
+
+    _load(spark, sf_dir)
+    src_sql, dst_sql = _host_edge_exprs(s="STRING", idiv="div")
+    pairs = spark.table("documents").select(
+        normalize_url(F.expr(src_sql)).alias("src"),
+        normalize_url(F.expr(dst_sql)).alias("dst"),
+    )
+    host = r"^[a-z][a-z0-9+.-]*://([^/:?#]+)"
+    hedges = pairs.select(
+        F.regexp_extract("src", host, 1).alias("src"),
+        F.regexp_extract("dst", host, 1).alias("dst"),
+    )
+    return triangle_counts(hedges).withColumnRenamed("node", "host")
+
+
+def _q148_oracle_sql() -> str:
+    src_sql, dst_sql = _host_edge_exprs(s="VARCHAR", idiv="//")
+    lt_ab = "(da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b))"
+    lt_xy = "(o1.degv < o2.degv OR (o1.degv = o2.degv AND o1.v < o2.v))"
+    return (
+        f"""
+WITH caps AS (
+  SELECT doc_id, {src_sql} AS src_raw, {dst_sql} AS dst_raw
+  FROM documents),
+ u0 AS (
+  SELECT doc_id * 2 AS doc_id, src_raw AS url FROM caps
+  UNION ALL
+  SELECT doc_id * 2 + 1 AS doc_id, dst_raw AS url FROM caps),"""
+        + _URL_NORM_DUCK
+        + f"""
+, e AS (SELECT s.norm_url AS src, d.norm_url AS dst
+        FROM final s JOIN final d ON d.doc_id = s.doc_id + 1
+        WHERE s.doc_id % 2 = 0),
+ hosts AS (
+  SELECT regexp_extract(src, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS sh,
+         regexp_extract(dst, '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS dh
+  FROM e),
+ und AS (SELECT DISTINCT least(sh, dh) AS a, greatest(sh, dh) AS b
+         FROM hosts WHERE sh != dh),
+ deg AS (SELECT node, count(*) AS deg FROM (
+   SELECT a AS node FROM und UNION ALL SELECT b FROM und) GROUP BY node),
+ o AS (SELECT CASE WHEN {lt_ab} THEN u.a ELSE u.b END AS u,
+              CASE WHEN {lt_ab} THEN u.b ELSE u.a END AS v,
+              CASE WHEN {lt_ab} THEN db.deg ELSE da.deg END AS degv
+       FROM und u JOIN deg da ON da.node = u.a
+                  JOIN deg db ON db.node = u.b),
+ w AS (SELECT o1.u, o1.v AS x, o2.v AS y
+       FROM o o1 JOIN o o2 ON o1.u = o2.u AND {lt_xy}),
+ tri AS (SELECT w.u AS z, w.x, w.y
+         FROM w JOIN o ON o.u = w.x AND o.v = w.y)
+SELECT node AS host, CAST(count(*) AS BIGINT) AS n_tri FROM (
+  SELECT x AS node FROM tri UNION ALL SELECT y FROM tri
+  UNION ALL SELECT z FROM tri) GROUP BY node
+"""
+    )
+
+
+_def("q148_host_triangles", fn=_q_triangles, duck_sql=_q148_oracle_sql())
+
+
 # X102 — marching-squares isolines (spatial/isolines.py): threshold
 # contours of the page-density raster, midpoint vertices in half-unit
 # int64 coordinates (exact end to end), center-low saddle rule, multi
@@ -4631,6 +8097,302 @@ JOIN edges c2 ON c2.e = s.e2
 
 
 _def("q147_isolines", fn=_q_isolines, duck_sql=_q147_oracle_sql())
+
+
+# X101 — IVF-PQ ANN (text/pq.py): memory-compressed vector search —
+# codes are 4 B/row vs 256 B of floats, ADC ranks candidates without
+# touching vector bytes, exact-integer refine re-ranks the short head.
+# Engine: driver-trained integer codebooks (np twin pinned
+# bit-identical to the q134-oracle-pinned kmeans_fit by test_pq) →
+# zero-shuffle encode → list_id equi-join → ADC zip_with → refine.
+# Oracle: codebooks embedded as int VALUES; assignment, codes, probes,
+# LUT, ADC ranking, refine and recall ALL recomputed relationally in
+# SQL — exact int64 arithmetic end to end, so every row hash-matches.
+_Q146_M_SUB, _Q146_KSUB, _Q146_N_PROBE, _Q146_REFINE = 4, 16, 4, 25
+
+
+def _q_pq_ann(
+    spark: SparkSession, sf_dir: str, by_residual: bool = False
+) -> DataFrame:
+    from osm_spark.text.pq import exact_int_topk, pq_adc_topk, pq_encode, pq_fit
+
+    _load(spark, sf_dir)
+    emb = spark.table("embeddings")
+    model = pq_fit(
+        emb,
+        m_sub=_Q146_M_SUB,
+        ksub=_Q146_KSUB,
+        n_iters=3,
+        by_residual=by_residual,
+    )
+    queries = emb.where(F.col("vec_id") % 50 == 0)
+    encoded = pq_encode(emb, model)
+    adc5 = pq_adc_topk(
+        emb, queries, model, k=5, n_probe=_Q146_N_PROBE, encoded=encoded
+    )
+    ref5 = pq_adc_topk(
+        emb,
+        queries,
+        model,
+        k=5,
+        n_probe=_Q146_N_PROBE,
+        refine=_Q146_REFINE,
+        encoded=encoded,
+    )
+    exact5 = exact_int_topk(emb, queries, k=5).select(
+        "query_id", "neighbor_id"
+    )
+
+    def digest_hits(df: DataFrame, tag: str) -> DataFrame:
+        hits = df.join(exact5, ["query_id", "neighbor_id"], "left_semi")
+        return (
+            df.groupBy("query_id")
+            .agg(
+                F.max("n_candidates").cast("long").alias("n_candidates"),
+                F.md5(
+                    F.concat_ws(
+                        ",",
+                        F.transform(
+                            F.sort_array(F.collect_list("neighbor_id")),
+                            lambda x: x.cast("string"),
+                        ),
+                    )
+                ).alias(f"{tag}_digest"),
+            )
+            .join(
+                hits.groupBy("query_id").agg(
+                    F.count("*").alias(f"n_hit_{tag}")
+                ),
+                "query_id",
+                "left",
+            )
+            .withColumn(
+                f"n_hit_{tag}",
+                F.coalesce(f"n_hit_{tag}", F.lit(0)).cast("long"),
+            )
+        )
+
+    a = digest_hits(adc5, "adc")
+    r = digest_hits(ref5, "refined").drop("n_candidates")
+    return a.join(r, "query_id").select(
+        "query_id",
+        "n_candidates",
+        "adc_digest",
+        "refined_digest",
+        "n_hit_adc",
+        "n_hit_refined",
+        (F.col("n_hit_adc").cast("double") / F.lit(5.0)).alias("recall_adc"),
+        (F.col("n_hit_refined").cast("double") / F.lit(5.0)).alias(
+            "recall_refined"
+        ),
+    )
+
+
+def _q146_oracle_sql(by_residual: bool = False) -> str:
+    """Recomputes the ENTIRE IVF-PQ search relationally: the only
+    imported artifacts are the integer codebooks (VALUES), whose
+    trainer is itself pinned to the q134-SQL-replayed kmeans_fit by
+    test_pq — everything Spark executes at corpus scale (assignment,
+    codes, probes, LUT, ADC ranking, refine, recall) is re-derived
+    here from the parquet by independent SQL. ``by_residual`` (q162)
+    re-derives the FAISS-default residual pipeline: codes come from
+    each vector's residual against its assigned coarse centroid, and
+    the LUT is per (query, probe-list) from q − c_list."""
+    import os
+
+    import numpy as np
+    import pyarrow.parquet as pqt
+
+    from osm_spark.text.ann import auto_n_lists
+    from osm_spark.text.pq import assign_np, quantize_np, train_pq_q
+
+    sf_dir = os.environ.get(
+        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
+    )
+    tb = pqt.read_table(
+        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
+    )
+    ids = np.asarray(tb["vec_id"].to_pylist(), dtype=np.int64)
+    X = np.asarray(tb["embedding"].to_pylist(), dtype=np.float64)
+    n_lists = auto_n_lists(len(ids))
+    Q = quantize_np(X)
+    coarse = train_pq_q(ids, Q, 1, n_lists, 3)[0]
+    if by_residual:
+        R = Q - coarse[assign_np(Q, coarse)]
+        books = train_pq_q(ids, R, _Q146_M_SUB, _Q146_KSUB, 3)
+    else:
+        books = train_pq_q(ids, Q, _Q146_M_SUB, _Q146_KSUB, 3)
+    dim = coarse.shape[1]
+    dsub = dim // _Q146_M_SUB
+
+    coarse_vals = ",\n".join(
+        "(" + ",".join([str(j)] + [str(int(v)) for v in coarse[j]]) + ")"
+        for j in range(n_lists)
+    )
+    cb_vals = ",\n".join(
+        "("
+        + ",".join([str(s), str(c)] + [str(int(v)) for v in books[s, c]])
+        + ")"
+        for s in range(_Q146_M_SUB)
+        for c in range(_Q146_KSUB)
+    )
+    ccols = ", ".join(f"c{d}" for d in range(dim))
+    bcols = ", ".join(f"d{d}" for d in range(dsub))
+    clist = "list_value(" + ", ".join(f"c{d}" for d in range(dim)) + ")"
+    blist = "list_value(" + ", ".join(f"d{d}" for d in range(dsub)) + ")"
+
+    def d2full(a: str, b: str) -> str:
+        return (
+            f"list_reduce(list_transform(range(1, {dim + 1}), "
+            f"i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])), (x, y) -> x + y)"
+        )
+
+    sub_d2 = (
+        f"list_reduce(list_transform(range(1, {dsub + 1}), "
+        f"i -> (v.q[b.s * {dsub} + i] - b.bv[i])"
+        f" * (v.q[b.s * {dsub} + i] - b.bv[i])), (x, y) -> x + y)"
+    )
+    sub_d2_r = sub_d2.replace("v.q[", "v.r[")
+    resid_list = (
+        f"list_transform(range(1, {dim + 1}), i -> v.q[i] - c.cv[i])"
+    )
+    if by_residual:
+        # codes from each vector's residual vs its OWN list; LUT per
+        # (query, probe list) from the query's residual vs THAT list —
+        # ||q − (c_l + code)||² = ||(q − c_l) − code||², all int64.
+        mid = f"""
+resid AS (SELECT a.vec_id, a.list_id, {resid_list} AS r
+          FROM assigned a JOIN qv v USING (vec_id)
+          JOIN coarse c ON c.j = a.list_id),
+sd AS (SELECT v.vec_id, b.s, b.code, {sub_d2_r} AS d2
+       FROM resid v CROSS JOIN cb b),
+codes AS (SELECT vec_id, s, code FROM (
+  SELECT vec_id, s, code,
+         row_number() OVER (PARTITION BY vec_id, s ORDER BY d2, code) r
+  FROM sd) WHERE r = 1),
+probes AS (SELECT query_id, j AS list_id FROM (
+  SELECT vec_id AS query_id, j,
+         row_number() OVER (PARTITION BY vec_id ORDER BY d2, j) r
+  FROM cd WHERE vec_id % 50 = 0) WHERE r <= {_Q146_N_PROBE}),
+qres AS (SELECT p.query_id, p.list_id, {resid_list} AS r
+         FROM probes p JOIN qv v ON v.vec_id = p.query_id
+         JOIN coarse c ON c.j = p.list_id),
+lut AS (SELECT v.query_id, v.list_id, b.s, b.code, {sub_d2_r} AS d2
+        FROM qres v CROSS JOIN cb b),
+cand AS (SELECT p.query_id, p.list_id, a.vec_id AS neighbor_id
+         FROM probes p JOIN assigned a USING (list_id)
+         WHERE a.vec_id != p.query_id),
+adc AS (SELECT c.query_id, c.neighbor_id, sum(l.d2) AS adc_d2
+        FROM cand c
+        JOIN codes k ON k.vec_id = c.neighbor_id
+        JOIN lut l ON l.query_id = c.query_id AND l.list_id = c.list_id
+                  AND l.s = k.s AND l.code = k.code
+        GROUP BY c.query_id, c.neighbor_id),"""
+    else:
+        mid = f"""
+sd AS (SELECT v.vec_id, b.s, b.code, {sub_d2} AS d2
+       FROM qv v CROSS JOIN cb b),
+codes AS (SELECT vec_id, s, code FROM (
+  SELECT vec_id, s, code,
+         row_number() OVER (PARTITION BY vec_id, s ORDER BY d2, code) r
+  FROM sd) WHERE r = 1),
+probes AS (SELECT query_id, j AS list_id FROM (
+  SELECT vec_id AS query_id, j,
+         row_number() OVER (PARTITION BY vec_id ORDER BY d2, j) r
+  FROM cd WHERE vec_id % 50 = 0) WHERE r <= {_Q146_N_PROBE}),
+lut AS (SELECT vec_id AS query_id, s, code, d2 FROM sd
+        WHERE vec_id % 50 = 0),
+cand AS (SELECT p.query_id, a.vec_id AS neighbor_id
+         FROM probes p JOIN assigned a USING (list_id)
+         WHERE a.vec_id != p.query_id),
+adc AS (SELECT c.query_id, c.neighbor_id, sum(l.d2) AS adc_d2
+        FROM cand c
+        JOIN codes k ON k.vec_id = c.neighbor_id
+        JOIN lut l ON l.query_id = c.query_id
+                  AND l.s = k.s AND l.code = k.code
+        GROUP BY c.query_id, c.neighbor_id),"""
+    return f"""
+WITH qv AS (
+  SELECT vec_id,
+         list_transform(embedding,
+           x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS q
+  FROM embeddings),
+coarse_rows(j, {ccols}) AS (VALUES {coarse_vals}),
+coarse AS (SELECT j, {clist} AS cv FROM coarse_rows),
+cb_rows(s, code, {bcols}) AS (VALUES {cb_vals}),
+cb AS (SELECT s, code, {blist} AS bv FROM cb_rows),
+cd AS (SELECT v.vec_id, c.j, {d2full('v.q', 'c.cv')} AS d2
+       FROM qv v CROSS JOIN coarse c),
+assigned AS (SELECT vec_id, j AS list_id FROM (
+  SELECT vec_id, j, row_number() OVER (PARTITION BY vec_id ORDER BY d2, j) r
+  FROM cd) WHERE r = 1),{mid}
+rankedadc AS (SELECT query_id, neighbor_id, adc_d2,
+    row_number() OVER (PARTITION BY query_id
+                       ORDER BY adc_d2, neighbor_id) AS r,
+    count(*) OVER (PARTITION BY query_id) AS n_candidates
+  FROM adc),
+a5 AS (SELECT query_id, neighbor_id, n_candidates
+       FROM rankedadc WHERE r <= 5),
+head AS (SELECT query_id, neighbor_id FROM rankedadc
+         WHERE r <= {_Q146_REFINE}),
+refd AS (SELECT h.query_id, h.neighbor_id,
+                {d2full('a.q', 'n.q')} AS d2
+         FROM head h
+         JOIN qv a ON a.vec_id = h.query_id
+         JOIN qv n ON n.vec_id = h.neighbor_id),
+r5 AS (SELECT query_id, neighbor_id FROM (
+  SELECT query_id, neighbor_id,
+         row_number() OVER (PARTITION BY query_id
+                            ORDER BY d2, neighbor_id) rr
+  FROM refd) WHERE rr <= 5),
+ed AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+              {d2full('a.q', 'b.q')} AS d2
+       FROM qv a JOIN qv b ON b.vec_id != a.vec_id
+       WHERE a.vec_id % 50 = 0),
+e5 AS (SELECT query_id, neighbor_id FROM (
+  SELECT query_id, neighbor_id,
+         row_number() OVER (PARTITION BY query_id
+                            ORDER BY d2, neighbor_id) r
+  FROM ed) WHERE r <= 5),
+agg_a AS (SELECT a.query_id,
+    CAST(MAX(a.n_candidates) AS BIGINT) AS n_candidates,
+    md5(string_agg(CAST(a.neighbor_id AS VARCHAR), ','
+                   ORDER BY a.neighbor_id)) AS adc_digest,
+    CAST(COUNT(e.neighbor_id) AS BIGINT) AS n_hit_adc
+  FROM a5 a LEFT JOIN e5 e USING (query_id, neighbor_id)
+  GROUP BY a.query_id),
+agg_r AS (SELECT r.query_id,
+    md5(string_agg(CAST(r.neighbor_id AS VARCHAR), ','
+                   ORDER BY r.neighbor_id)) AS refined_digest,
+    CAST(COUNT(e.neighbor_id) AS BIGINT) AS n_hit_refined
+  FROM r5 r LEFT JOIN e5 e USING (query_id, neighbor_id)
+  GROUP BY r.query_id)
+SELECT a.query_id, a.n_candidates, a.adc_digest, r.refined_digest,
+       a.n_hit_adc, r.n_hit_refined,
+       CAST(a.n_hit_adc AS DOUBLE) / 5.0 AS recall_adc,
+       CAST(r.n_hit_refined AS DOUBLE) / 5.0 AS recall_refined
+FROM agg_a a JOIN agg_r r USING (query_id)
+"""
+
+
+_def("q146_pq_ann", fn=_q_pq_ann, duck_sql=_q146_oracle_sql())
+
+
+# X101b — residual-encoded IVF-PQ (FAISS by_residual=true, VERDICT r4
+# #3): identical search pipeline, but codes quantize each vector's
+# residual against its coarse centroid and the ADC LUT is rebuilt per
+# (query, probe-list) pair from q − c_list. Same exact-int contract;
+# the oracle re-derives residual training, encoding, per-list LUTs,
+# ADC and refine relationally.
+def _q_pq_ann_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _q_pq_ann(spark, sf_dir, by_residual=True)
+
+
+_def(
+    "q162_pq_residual",
+    fn=_q_pq_ann_residual,
+    duck_sql=_q146_oracle_sql(by_residual=True),
+)
 
 
 # ---------------------------------------------------------------------------

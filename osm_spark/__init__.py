@@ -6,8 +6,8 @@ reconstruction, centroids, GeoJSON emission) as distributed DataFrame
 operators, and extends it into a web-scale spatial engine: hierarchical
 cell covering (S2-style Morton index), skew-aware point-in-polygon joins
 over Common-Crawl-style page tables, kNN nearest-boundary, raster density
-grids and tiles. The pages' text passes through byte-identical; the
-engine only extracts and checks it (``sources.html``).
+grids, plus training-data-pipeline operators (dedup, similarity search,
+text analysis).
 
 Architecture: DataFrame/SQL plans optimized by Catalyst; geometry kernels
 are pure-numpy and run inside Arrow-batched grouped-map pandas UDFs

@@ -7,7 +7,8 @@ through ONE). At 10^12 rows neither is acceptable for an exact answer.
 
 This operator computes exact discrete quantiles (DuckDB
 ``quantile_disc`` semantics: the element at 1-based rank
-``max(1, ceil(q·N))``) with a two-phase prefix sum:
+``max(1, ceil(q·N))``) with the two-phase prefix-sum pattern the
+sequence packer already uses (text/packing.py):
 
 1. **Range partition** on the value column (one shuffle — Spark
    samples split points; correctness never depends on where the

@@ -4,7 +4,7 @@ Spark's ``approx_count_distinct`` and DuckDB's ``approx_count_distinct``
 are both HLL but with different hashes and internals, so they can never
 cross-check each other. This operator implements HLL (Flajolet et al.
 2007) from first principles on the repo's oracle hash convention
-(md5-prefix → int64), with one extra
+(md5-prefix → int64, the text/sampling.py scheme), with one extra
 twist that makes the estimate BIT-IDENTICAL across engines: the
 harmonic denominator Σ 2^(-M_j) is accumulated as the exact integer
 Σ 2^(37 - M_j) (ranks are ≤ 37 by construction, so every term and the

@@ -3,7 +3,9 @@
 The production loop a Common-Crawl-scale pipeline actually runs: the
 pages table grows by snapshot appends (a new crawl lands as one
 ManifestTable ``append`` commit), and the PIP assignment table must
-follow WITHOUT re-scanning the 10^12 rows already assigned:
+follow WITHOUT re-scanning the 10^12 rows already assigned. This
+module is the spatial counterpart of text/dedup.dedup_increment
+(X43's incremental cross-snapshot dedup):
 
     new rows = pages.changes(last_applied, current)   — a manifest
         FILE-diff first, so only the appended files are ever read;

@@ -542,8 +542,8 @@ class ManifestTable:
         deletes, so only then are the net changes probed for one, with
         a Spark job; a delete means the table was rewritten under its
         consumer, and a ``ValueError`` asks to rebuild ``rebuild`` (the
-        consumer's derived table, e.g. ``pip_increment``'s assignment
-        table)."""
+        consumer's derived table: ``pip_increment``'s assignment table,
+        ``kmeans_increment``'s model)."""
         added, removed, schema = self._diff(from_version, to_version)
         if not removed:
             return self._scan(schema, added)

@@ -3,7 +3,9 @@
 ``hotspots.clusters_from_cells`` labels dense grid cells with the
 component of their 8-adjacency graph; the cluster id is the
 component's minimum node id, so labels are deterministic and
-parallelism-independent.
+parallelism-independent. The text operators reuse it for near-dup
+clusters (``text.dedup.near_dup_clusters``, ``text.semdedup``) and
+page-graph components.
 
 Algorithm: alternating large-star / small-star (Kiveris, Lattanzi,
 Mirrokni, Rastogi, Vassilvitskii — "Connected Components in MapReduce

@@ -462,11 +462,15 @@ def stream_dedup_pages(
     """Streaming exact dedup of a continuous crawl: content-hash
     ``dropDuplicates`` inside the streaming plan.
 
-    This is the ingest-time dedup for a readStream crawl feed. State
-    is the set of content hashes seen within the watermark horizon, so
-    state size is bounded by the horizon's traffic, not the corpus —
-    the standard trade at 10^12 docs: a re-crawl OUTSIDE the horizon
-    is not caught here.
+    The batch twin is dedup.py's ``dedup_increment`` (cross-snapshot,
+    manifest-versioned); this is the ingest-time variant for a
+    readStream crawl feed. State is the set of content hashes seen
+    within the watermark horizon, so state size is bounded by the
+    horizon's traffic, not the corpus — the standard trade at
+    10^12 docs: a re-crawl OUTSIDE the horizon is not caught here and
+    falls through to the batch cross-snapshot dedup at commit time
+    (the two operators compose: stream bounds the state, the manifest
+    anti-join is exact over all history).
 
     Keeps the FIRST arrival of each content hash per Spark's streaming
     dropDuplicates semantics (exactly-once under checkpointed sinks).

@@ -13,6 +13,8 @@ Scale shapes:
   equi-join on a low-cardinality-per-key column — skew comes from
   degenerate bands (all-identical docs) and is bounded by banding.
 - verify: unigram Jaccard on candidates only (never all-pairs).
+- clusters: verified pairs → connected components
+  (spatial/components.py); one canonical doc per component.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osm_spark.spatial.components import connected_components
 from osm_spark.text.analysis import MD5_LONG_SQL, TOKENS_SQL
 
 # MinHash parameters: K hashes, universal-hash family over M (prime).
@@ -357,3 +360,42 @@ def commit_increment(
         "n_dup_existing": int(counts.get("dup_existing", 0)),
         "n_dup_within": int(counts.get("dup_within", 0)),
     }
+
+
+def near_dup_clusters(
+    docs: DataFrame,
+    text: str = "text",
+    key: str = "doc_id",
+    threshold: float = 0.8,
+) -> DataFrame:
+    """End-to-end near-duplicate clustering over a documents table:
+    MinHash signatures → LSH candidate pairs → exact-Jaccard
+    verification at ``threshold`` → connected components → one row per
+    document: (doc_id, component, cluster_size, keep).
+
+    ``keep`` marks the canonical document (minimum doc_id) of each
+    cluster — the row a dedup filter retains. Singleton documents are
+    their own component with cluster_size 1 and keep=true, so
+    ``where(keep)`` IS the deduplicated corpus.
+    """
+    pairs = lsh_candidate_pairs(minhash_signatures(docs, text=text, key=key))
+    verified = unigram_jaccard_pairs(
+        docs, pairs, text=text, key=key, threshold=threshold
+    ).select("id_a", "id_b")
+    comp = connected_components(verified, src="id_a", dst="id_b")
+    ids = docs.select(F.col(key))
+    labeled = ids.join(
+        comp.withColumnRenamed("node", key), key, "left"
+    ).select(
+        F.col(key),
+        F.coalesce("component", F.col(key)).alias("component"),
+    )
+    sizes = labeled.groupBy("component").agg(
+        F.count("*").alias("cluster_size")
+    )
+    return labeled.join(sizes, "component").select(
+        F.col(key),
+        "component",
+        "cluster_size",
+        (F.col(key) == F.col("component")).alias("keep"),
+    )

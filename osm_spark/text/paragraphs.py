@@ -11,7 +11,7 @@ Semantics (pinned in tests):
 
 - paragraphs are ``\\n``-separated spans, compared exactly (byte
   equality — normalization is the caller's job, e.g. via
-  text/html.py extraction first);
+  sources/html.py extraction first);
 - the winner of a paragraph is the occurrence with the smallest
   (key, position) pair — a pure function of the data, so the output
   is identical across runs, partitionings and cluster sizes;

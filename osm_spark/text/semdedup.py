@@ -31,7 +31,7 @@ Scale shape, stage by stage:
    ~10^9, beyond that raise n_lists toward n/10^4).
 3. **Components** — duplicate pairs form groups via the same
    large-star/small-star components used for MinHash near-dup
-   clustering (text/components.py); keep = minimum id per component
+   clustering (spatial/components.py); keep = minimum id per component
    (deterministic keeper; the paper keeps the most-atypical item —
    swap the keeper rule downstream if desired, the component labels
    are the hard part).
@@ -52,7 +52,7 @@ from osm_spark.text.ann import (
     _ivf_probes_col,
     train_ivf_centroids,
 )
-from osm_spark.text.components import connected_components
+from osm_spark.spatial.components import connected_components
 
 
 def assign_clusters(

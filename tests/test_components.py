@@ -1,10 +1,11 @@
-"""Connected components (large-star/small-star) and per-node labels."""
+"""Connected components (large-star/small-star) + near-dup clustering."""
 
 import random
 
 import pytest
 
-from osm_spark.spatial.components import connected_components, label_components
+from osm_spark.spatial.components import connected_components
+from osm_spark.text.dedup import near_dup_clusters
 
 
 @pytest.fixture(scope="module")
@@ -109,16 +110,26 @@ def test_empty_edges(spark):
     assert connected_components(df).count() == 0
 
 
-def test_label_components_isolated_nodes(spark):
-    nodes = spark.createDataFrame([("a",), ("b",), ("c",), ("d",)], ["url"])
-    edges = spark.createDataFrame([("c", "b"), ("b", "a")], ["src", "dst"])
-    got = {
-        r["url"]: (r["component"], r["component_size"])
-        for r in label_components(nodes, edges).collect()
-    }
-    assert got == {
-        "a": ("a", 3),
-        "b": ("a", 3),
-        "c": ("a", 3),
-        "d": ("d", 1),
-    }
+def test_near_dup_clusters_contract(spark):
+    """Every doc labeled exactly once; component = min id of cluster;
+    keep marks exactly one doc per component; where(keep) is the dedup
+    result; exact duplicates always cluster."""
+    rows = [
+        (1, "spark shuffle join agg window sort merge batch"),
+        (2, "spark shuffle join agg window sort merge batch"),  # dup of 1
+        (3, "spark shuffle join agg window sort merge batch"),  # dup of 1
+        (10, "completely different words entirely unrelated text here"),
+        (11, "another unique document with its own vocabulary set"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    out = near_dup_clusters(docs, threshold=0.9).collect()
+    by_id = {r.doc_id: r for r in out}
+    assert len(out) == 5
+    assert by_id[1].component == by_id[2].component == by_id[3].component == 1
+    assert by_id[1].cluster_size == 3
+    assert by_id[1].keep and not by_id[2].keep and not by_id[3].keep
+    assert by_id[10].component == 10 and by_id[10].cluster_size == 1
+    assert by_id[10].keep and by_id[11].keep
+    # one keeper per component
+    keeps = [r for r in out if r.keep]
+    assert len({r.component for r in out}) == len(keeps)

@@ -1,8 +1,9 @@
-"""The package surface stops at the paper: boundaries, PIP, tiles and
-the operators around them. Every module under ``osm_spark`` imports,
-the training-data text package is gone, and no program file still
-names it (a lazy import inside a query body only fails when that query
-runs, so the source text is checked, not just the import)."""
+"""The package surface: every module under ``osm_spark`` imports, the
+multimodal media codecs are gone, and the two pieces the spatial path
+and the north rule use live outside ``text/``. No program file still
+names a deleted module (a lazy import inside a query body only fails
+when that query runs, so the source text is checked, not just the
+import)."""
 
 import importlib
 import pkgutil
@@ -14,6 +15,11 @@ import osm_spark
 
 REPO = Path(__file__).resolve().parents[1]
 
+DELETED = [
+    f"osm_spark.text.{m}"
+    for m in ("apng", "gif", "jpeg", "multimodal", "png", "wav", "components", "html")
+]
+
 
 def test_every_module_imports():
     names = [
@@ -24,15 +30,20 @@ def test_every_module_imports():
     assert {"osm_spark.spatial.components", "osm_spark.sources.html"} <= set(names)
 
 
-def test_text_package_is_gone_and_unnamed():
+def test_spatial_path_does_not_import_text():
+    for name in ("osm_spark.spatial.hotspots", "osm_spark.sources.html"):
+        src = Path(importlib.import_module(name).__file__).read_text()
+        assert "osm_spark.text" not in src, name
+
+
+@pytest.mark.parametrize("name", DELETED)
+def test_deleted_module_is_gone_and_unnamed(name):
     with pytest.raises(ModuleNotFoundError):
-        importlib.import_module("osm_spark.text")
+        importlib.import_module(name)
     files = [
         *(REPO / "osm_spark").rglob("*.py"),
         *(REPO / "tools").rglob("*.py"),
         REPO / "__spark_entry__.py",
     ]
-    named = [
-        str(p.relative_to(REPO)) for p in files if "osm_spark.text" in p.read_text()
-    ]
+    named = [str(p.relative_to(REPO)) for p in files if name in p.read_text()]
     assert named == []

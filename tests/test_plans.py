@@ -20,7 +20,15 @@ def test_plan_properties(spark):
         "q04_member_resolution",
         "q13_composite_filter",
         "q36_langid",
+        "q80_extract_links",
+        "q84_vocab_topk",
+        "q86_conjunctive_search",
+        "q87_bm25_search",
+        "q88_latest_snapshot",
         "q147_isolines",
+        "q148_host_triangles",
+        "q153_random_projection",
+        "q154_jaccard_join",
         "q150_kmv_intersect",
     ):
         must, must_not, min_cg = CHECKS[name]
@@ -43,18 +51,19 @@ def test_plan_properties(spark):
 def test_no_codegen_fallback(spark):
     """Janino rejects generated methods > 64 KB; Spark then silently
     drops the stage to interpreted eval (an ERROR log line, no failure).
-    One expression tree that inlines a long regex chain many times over
-    is how a stage loses codegen. With fallback disabled, an oversized
-    method fails the query instead, so this pins the expression-heavy
-    families as codegen-compilable."""
+    That is exactly how the pre-fix link extraction lost codegen: one
+    expression tree inlining the URL-normalization chain ~12x. With
+    fallback disabled, an oversized method fails the query instead, so
+    this pins the expression-heavy families as codegen-compilable."""
     import __spark_entry__ as E
 
     qs = E.queries()
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try:
         for name in (
+            "q80_extract_links",  # explode + resolve + normalize chain
             "q70_extract_text",  # HTML→text regex chain
-            "q20_geoparse",  # mention regex + fixed-point casts
+            "q68_url_normalize",  # normalization + parts extraction
         ):
             assert qs[name](spark, SF_DIR).count() >= 0, name
     finally:
@@ -101,3 +110,26 @@ def test_pip_index_plan_is_single_python_pass(spark, world):
     for forbidden in ("Exchange", "Join", "Generate"):
         assert forbidden not in plan, forbidden
 
+
+def test_bpe_encode_plan_broadcasts_dictionary(spark):
+    """bpe_encode's corpus path: the word→pieces dictionary must come
+    in as a broadcast hash join (never a shuffled sort-merge join of
+    the exploded corpus), and the merge folds must stay Catalyst
+    expressions (no Python eval in the plan)."""
+    from explain_audit import formatted_plan
+
+    from osm_spark.text.bpe import bpe_encode
+
+    docs = spark.createDataFrame(
+        [(1, "the lower the newer"), (2, "lower and lowest")],
+        "doc_id: int, text: string",
+    )
+    plan = formatted_plan(
+        bpe_encode(docs, [("t", "h"), ("e", "r")], mode="dict")
+    )
+    assert "BroadcastHashJoin" in plan
+    # The per-document regroup join (LeftOuter on the doc key) is a
+    # legitimate shuffle; only the word-dictionary join falling out of
+    # broadcast (an INNER sort-merge join) would be a plan regression.
+    assert "SortMergeJoin Inner" not in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan

@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from osm_spark.text.components import label_components
+from osm_spark.spatial.components import label_components
 from osm_spark.text.vocab import top_k_vocabulary, vocabulary
 
 

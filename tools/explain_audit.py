@@ -50,8 +50,20 @@ CHECKS = {
     "q04_member_resolution": (["BroadcastHashJoin"], ["EvalPython"], 1),
     "q13_composite_filter": (["PushedFilters"], ["EvalPython"], 1),
     "q30_dedup_exact": ([], ["EvalPython"], 1),
+    "q31_minhash": ([], ["EvalPython"], 1),
     "q36_langid": ([], ["EvalPython"], 1),
     "q22_tile_assign": (["BroadcastHashJoin"], [], 0),
+    # r4 page-graph / text-index family: pure Catalyst end to end
+    "q80_extract_links": ([], ["EvalPython"], 1),
+    "q82_degrees": ([], ["EvalPython"], 1),
+    "q84_vocab_topk": (["TakeOrderedAndProject"], ["EvalPython"], 1),
+    "q85_inverted_index": ([], ["EvalPython"], 1),
+    "q86_conjunctive_search": ([], ["EvalPython"], 1),
+    "q87_bm25_search": (["TakeOrderedAndProject"], ["EvalPython"], 1),
+    # struct-max picks SortAggregate (struct agg buffer) — still
+    # partial-aggregated map-side; the pin is no-Python + codegen scan
+    "q88_latest_snapshot": ([], ["EvalPython"], 1),
+    "q89_host_graph": ([], ["EvalPython"], 1),
     # r4 temporal family: pure Catalyst — as-of is window-over-union
     # (no BroadcastNestedLoopJoin: the inequality-join plan it exists
     # to avoid), range join is an equi-join after the bucket rewrite
@@ -60,6 +72,8 @@ CHECKS = {
     "q93_range_join": ([], ["EvalPython", "BroadcastNestedLoopJoin",
                             "CartesianProduct"], 1),
     "q94_time_rollup": (["Expand"], ["EvalPython"], 1),
+    # r4 LM scoring: broadcast model, no Python
+    "q96_lm_score": (["BroadcastHashJoin"], ["EvalPython"], 1),
     # r4 hotspot clustering: per-point labeling is the 100-TB path —
     # point-scale morton projection + ONE broadcast join of the
     # cells-scale cluster map (computed behind a localCheckpoint);
@@ -83,6 +97,11 @@ CHECKS = {
     "q126_focal_stats": ([], ["EvalPython"], 1),
     # geohash bucketing: pure-Catalyst bit interleave + base32 concat
     "q127_geohash_buckets": ([], ["EvalPython"], 1),
+    # full-corpus k-means census: Catalyst assignment folds + ONE
+    # map-side-combinable groupBy(cid); no Python, no cross join
+    "q134_kmeans": (["HashAggregate"],
+                    ["EvalPython", "CartesianProduct",
+                     "BroadcastNestedLoopJoin"], 1),
     # spatio-temporal join: one grid radius join, struct passthrough,
     # no Python, no join-back against the event table
     "q140_st_cooccur": ([], ["EvalPython", "CartesianProduct",
@@ -91,6 +110,17 @@ CHECKS = {
     # groupBy + literal segment table — pure Catalyst, zero joins
     "q147_isolines": (["HashAggregate"],
                       ["EvalPython", "CartesianProduct", "Join"], 1),
+    # r4s2 triangle counting: degree groupBy + two equi-joins, no
+    # Python, no nested-loop join
+    "q148_host_triangles": ([], ["EvalPython", "CartesianProduct",
+                                 "BroadcastNestedLoopJoin"], 1),
+    # r4s2 random projection: plan-literal ± sums, zero shuffle on
+    # the vector side, no Python
+    "q153_random_projection": ([], ["EvalPython", "Exchange"], 1),
+    # r4s2 exact Jaccard join: prefix-token equi-joins only — no
+    # Python, no cross product (the brute form it replaces)
+    "q154_jaccard_join": ([], ["EvalPython", "CartesianProduct",
+                               "BroadcastNestedLoopJoin"], 1),
     # r4s2 KMV distinct (window kernel in q149 is relational; the
     # pin: no cross join, single-pass aggregation after distinct)
     "q150_kmv_intersect": ([], ["EvalPython"], 1),
