@@ -681,13 +681,7 @@ _def(
 
 
 def _q_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sp = _spatial(spark)
-    out = _world(spark)
-    from osm_spark.spatial.tiles import tile_assignments
-
-    admin_levels = out["kept"].select(F.col("id").alias("rel_id"), "admin_level")
-    t = tile_assignments(sp["pip"], sp["points"], admin_levels, tile_level=7)
-    return t.select("url", "admin_level", "rel_id", "tile")
+    return _spatial(spark)["tiles"].select("url", "admin_level", "rel_id", "tile")
 
 
 def _tile_expr_duck(lon: str, lat: str, level: int) -> str:
@@ -1746,13 +1740,9 @@ def _q_mvt(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature count and tile ids are — and the golden-bytes pytest pins
     the encoder itself."""
     from osm_spark.spatial.mvt import mvt_tiles
-    from osm_spark.spatial.tiles import tile_assignments
 
     sp = _spatial(spark)
-    out = _world(spark)
-    admin_levels = out["kept"].select(F.col("id").alias("rel_id"), "admin_level")
-    t = tile_assignments(sp["pip"], sp["points"], admin_levels, tile_level=7)
-    m = mvt_tiles(t, sp["points"])
+    m = mvt_tiles(sp["tiles"], sp["points"])
     return m.select(
         "tile",
         F.col("admin_level").cast("int").alias("admin_level"),

@@ -9,8 +9,9 @@ module is the spatial counterpart of text/dedup.dedup_increment
 
     new rows = pages.changes(last_applied, current)   — a manifest
         FILE-diff first, so only the appended files are ever read;
-    assignments = geoparse → broadcast-index PIP (the X3 zero-shuffle
-        path) over just those rows;
+    assignments = spatial_pipeline.locate_pages (geoparse →
+        broadcast-index PIP, the X3 zero-shuffle path) over just those
+        rows;
     commit = ONE ManifestTable append of the assignments with snapshot
         summary property applied_source_version = current — atomic via
         the VERSION swap, so the version and its rows commit together
@@ -50,9 +51,8 @@ def pip_increment(
     rows after the call, from the snapshot summary); a no-op re-run
     leaves the table untouched (applied_from == applied_to).
     """
+    from osm_spark.plans.spatial_pipeline import locate_pages
     from osm_spark.sources.manifest_table import ManifestTable
-    from osm_spark.spatial.geoparse import geoparse_pages
-    from osm_spark.spatial.pip_index import pip_join_index
 
     cur = pages_table.current_version()
     if cur is None:
@@ -71,12 +71,9 @@ def pip_increment(
     else:
         fresh = pages_table.inserts(applied, cur, "the assignment table")
 
-    pts = geoparse_pages(fresh).withColumn(
-        "point_id", F.xxhash64("url")
+    assigns = locate_pages(fresh, index_bc, keep=("url",)).select(
+        "url", F.col("rel_id").cast("long")
     )
-    assigns = pip_join_index(
-        pts.select("point_id", "lon", "lat", "url"), index_bc, keep=("url",)
-    ).select("url", F.col("rel_id").cast("long"))
     out.write(
         assigns,
         mode="append" if out.exists() else "overwrite",

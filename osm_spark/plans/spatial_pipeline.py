@@ -1,65 +1,80 @@
 """Extension pipeline: pages × admin polygons (the north rule).
 
-    boundaries (from run_boundaries_pipeline)
-      -> polygon covering (interior/boundary cells)
-    pages -> geoparse -> (url, lon, lat)
-      -> skew-aware cell join + exact PIP refinement (J8)
-      -> per-admin-level tile assignments
-      -> density rasters, kNN nearest-boundary
+    boundaries -> prepare_polygons: covering, geometry, admin levels,
+                  PIP mode, broadcast index (index mode)
+    pages -> assign_pages: geoparse -> point_id -> tile -> exact PIP (J8)
+          -> (point_id, admin_level, rel_id, tile, url)
 
-Everything here is shaped for 10^12 pages: the page side is touched by
-pure Catalyst expressions + one equi-join; geometry only ever meets the
-(small) boundary-cell candidate subset.
+Every page-side caller (this pipeline, the streaming sinks,
+``pip_increment``) goes through ``assign_pages`` or ``locate_pages``.
+Shaped for 10^12 pages: in index mode the page side is Catalyst
+expressions, ONE mapInPandas carrying ``url`` and ``tile`` through the
+PIP batch, and one broadcast join with the admin levels — no shuffle,
+no join back to the pages, no cache.
 """
 
 from __future__ import annotations
 
 import logging
+from dataclasses import dataclass
 
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_log = logging.getLogger("osm_spark.spatial")
-
+from osm_spark.spatial.cells_sql import cell_expr
 from osm_spark.spatial.covering import build_polygon_cells, polygon_geometry
 from osm_spark.spatial.geoparse import geoparse_pages
+from osm_spark.spatial.pip_index import (
+    INDEX_MAX_BYTES, estimate_index_bytes, pip_join_index,
+)
 from osm_spark.spatial.pip_join import pip_join
 from osm_spark.spatial.tiles import tile_assignments
 
+_log = logging.getLogger("osm_spark.spatial")
 
-def run_spatial_pipeline(
+
+@dataclass(frozen=True)
+class Polygons:
+    """The prepared polygon side: the persisted covering, the exact
+    geometry, (rel_id, admin_level) (None without ``kept``: PIP pairs
+    only) and the broadcast PipIndex (None in catalyst mode)."""
+
+    cells: DataFrame
+    geometry: DataFrame
+    admin_levels: DataFrame | None
+    index: Broadcast | None
+
+
+def prepare_polygons(
     spark: SparkSession,
-    pages: DataFrame,
     locations: DataFrame,
-    kept: DataFrame,
+    kept: DataFrame | None,
     min_level: int = 4,
     max_level: int = 12,
-    tile_level: int = 7,
     mode: str = "auto",
     index_max_bytes: int | None = None,
     simplify_tol: float | None = None,
-) -> dict[str, DataFrame]:
-    """``mode="index"``: the page side streams through ONE mapInPandas
-    pass against a broadcast covering+geometry index — no explode, no
-    join, no shuffle on the 10^12-row side (see pip_index.py).
-    ``mode="catalyst"``: anchor-pruned cell equi-join whose boundary
-    matches carry their cell's edge slice and are refined row-locally
-    by the index's own refine (see pip_join.py) — the path for polygon
-    sides too large to broadcast as one index; nothing polygon-sized is
-    broadcast, and AQE's skew-join split is its hot-cell guard (logged,
-    with a warning when it is off). ``mode="auto"`` (default) measures the covering +
-    ring sizes (two tiny aggregates over the SMALL side, nothing
-    collected) and picks: index when the estimated broadcast fits
-    ``index_max_bytes`` (default pip_index.INDEX_MAX_BYTES), catalyst
-    otherwise; the decision is logged. Both modes produce identical
-    rows (pinned by tests, the q21/q54 oracles and
-    ``perfbench/pin.py --check``).
+) -> Polygons:
+    """Build the polygon side once.
 
-    ``simplify_tol`` (degrees): when set, admin rings are
-    Douglas-Peucker-simplified at that tolerance BEFORE covering and
-    geometry extraction — the SCALE.md mitigation that keeps index
-    mode under the broadcast budget at planet fidelity.  Assignment
-    then differs only for points within ``tol`` of a boundary.
+    ``mode="index"``: pages stream through ONE mapInPandas against a
+    broadcast covering+geometry index — no explode, join or shuffle on
+    the 10^12-row side (pip_index.py). ``mode="catalyst"``: the
+    anchor-pruned cell equi-join, boundary matches refined row-locally
+    on their cells' edge slices (pip_join.py) — for polygon sides too
+    large to broadcast; AQE's skew-join split is its hot-cell guard
+    (logged, with a warning when off). ``mode="auto"`` (default) sizes
+    the index from two tiny aggregates over the SMALL side (nothing
+    collected) and picks index when it fits ``index_max_bytes``
+    (default pip_index.INDEX_MAX_BYTES), else catalyst; the decision
+    is logged. Both modes give identical rows (tests, the q21/q54
+    oracles, ``perfbench/pin.py --check``).
+
+    ``simplify_tol`` (degrees): Douglas-Peucker-simplify the admin
+    rings BEFORE covering — the SCALE.md lever that keeps index mode
+    under the broadcast budget at planet fidelity; assignment then
+    differs only for points within ``tol`` of a boundary.
     """
     if mode not in ("auto", "index", "catalyst"):
         raise ValueError(f"unknown PIP mode {mode!r}")
@@ -67,22 +82,10 @@ def run_spatial_pipeline(
         from osm_spark.spatial.simplify import simplify_shapes
 
         locations = simplify_shapes(locations, simplify_tol)
-    geo = geoparse_pages(pages).withColumn(
-        "point_id", F.xxhash64("url")
-    )
-    # points feed both the PIP join and the tile assignment — persist so
-    # geoparse runs once.
-    points = geo.select("point_id", "url", "lon", "lat").persist()
-
     pcells = build_polygon_cells(locations, min_level, max_level).persist()
     pgeom = polygon_geometry(locations)
 
     if mode == "auto":
-        from osm_spark.spatial.pip_index import (
-            INDEX_MAX_BYTES,
-            estimate_index_bytes,
-        )
-
         limit = INDEX_MAX_BYTES if index_max_bytes is None else index_max_bytes
         n_cells = pcells.count()
         geom_stats = pgeom.select(
@@ -103,22 +106,13 @@ def run_spatial_pipeline(
             mode, est / 1e6, limit / 1e6, n_cells, int(geom_stats["pts"]),
         )
 
-    # No distinct: pip output is unique per (point, rel) by
-    # construction (disjoint multipolygon parts / disjoint quadtree
-    # cells) — dropping the dedup saves a full shuffle of the largest
-    # intermediate. tests assert exact set equality with the oracle.
     if mode == "index":
-        from osm_spark.spatial.pip_index import build_pip_index, pip_join_index
+        # looked up per call, so a test can refuse it via the module
+        from osm_spark.spatial.pip_index import build_pip_index
 
-        index_bc = spark.sparkContext.broadcast(build_pip_index(pcells, pgeom))
-        pip = pip_join_index(
-            points.select("point_id", "lon", "lat"), index_bc
-        ).select("point_id", "rel_id")
+        index = spark.sparkContext.broadcast(build_pip_index(pcells, pgeom))
     else:
-        # pip_join reads the probe levels + boundary flags from pcells
-        # itself (one tiny aggregate over the persisted small side) and
-        # probes max_level with NO page-side explode; interior levels
-        # explode only (point_id, cell) after the anchor prune.
+        index = None
         aqe = spark.conf.get("spark.sql.adaptive.enabled", "true").lower()
         skew = spark.conf.get("spark.sql.adaptive.skewJoin.enabled", "true").lower()
         # AQE's skew split is the only hot-cell guard on the cell join.
@@ -128,19 +122,101 @@ def run_spatial_pipeline(
             " spark.sql.adaptive.enabled=%s",
             skew, aqe,
         )
-        pip = pip_join(
-            points.select("point_id", "lon", "lat"), pcells
-        ).select("point_id", "rel_id")
-
-    admin_levels = kept.select(
+    admin_levels = None if kept is None else kept.select(
         F.col("id").alias("rel_id"), "admin_level"
     )
-    tiles = tile_assignments(pip, points, admin_levels, tile_level)
+    return Polygons(pcells, pgeom, admin_levels, index)
 
+
+def page_points(pages: DataFrame) -> DataFrame:
+    """geoparse → (point_id, url, lon, lat); ``point_id`` is
+    ``xxhash64(url)``, the page key every PIP output carries."""
+    return geoparse_pages(pages).select(
+        F.xxhash64("url").alias("point_id"), "url", "lon", "lat"
+    )
+
+
+def locate_pages(
+    pages: DataFrame,
+    index_bc: Broadcast,
+    keep: tuple = (),
+    tile_level: int | None = None,
+) -> DataFrame:
+    """The index-mode page pass: ``page_points`` (→ ``tile`` at
+    ``tile_level``) → ONE broadcast-index mapInPandas →
+    (point_id, rel_id, poly_idx[, keep...][, tile]). ``keep`` columns
+    (``url``) ride through the batch, so no caller joins back to the
+    pages — which a stream could not do anyway (a stream-stream
+    self-join is illegal in append mode)."""
+    points = page_points(pages)
+    if tile_level is not None:
+        points = points.withColumn(
+            "tile", cell_expr(F.col("lon"), F.col("lat"), tile_level)
+        )
+        keep = (*keep, "tile")
+    return pip_join_index(points, index_bc, keep=keep)
+
+
+def _pip(pages: DataFrame, polygons: Polygons) -> DataFrame:
+    """(point_id, rel_id) containment pairs in the prepared mode. No
+    distinct: they are unique by construction (disjoint multipolygon
+    parts / disjoint quadtree cells)."""
+    if polygons.index is not None:
+        pairs = locate_pages(pages, polygons.index)
+    else:
+        pairs = pip_join(
+            page_points(pages).select("point_id", "lon", "lat"), polygons.cells
+        )
+    return pairs.select("point_id", "rel_id")
+
+
+def assign_pages(
+    pages: DataFrame, polygons: Polygons, tile_level: int = 7
+) -> DataFrame:
+    """(point_id, admin_level, rel_id, tile, url): every page's
+    containing admin relations, with their level and the page's tile
+    (Morton cell at ``tile_level``).
+
+    Index mode: ``locate_pages`` carries ``url`` and ``tile`` through
+    the PIP batch, then one broadcast join adds the admin level.
+    Catalyst mode joins back to the points (``tile_assignments``): its
+    probe explodes points per covering level, and carrying ``url``
+    through it would copy it once per level."""
+    if polygons.index is None:
+        return tile_assignments(
+            _pip(pages, polygons), page_points(pages),
+            polygons.admin_levels, tile_level,
+        )
+    return (
+        locate_pages(pages, polygons.index, keep=("url",), tile_level=tile_level)
+        .join(F.broadcast(polygons.admin_levels), "rel_id")
+        .select("point_id", "admin_level", "rel_id", "tile", "url")
+    )
+
+
+def run_spatial_pipeline(
+    spark: SparkSession,
+    pages: DataFrame,
+    locations: DataFrame,
+    kept: DataFrame,
+    min_level: int = 4,
+    max_level: int = 12,
+    tile_level: int = 7,
+    mode: str = "auto",
+    index_max_bytes: int | None = None,
+    simplify_tol: float | None = None,
+) -> dict[str, DataFrame]:
+    """``prepare_polygons`` then ``assign_pages`` (``tiles``), plus the
+    ``points`` (point_id, url, lon, lat), ``pip`` (point_id, rel_id)
+    and polygon frames. Nothing on the page side is cached."""
+    polygons = prepare_polygons(
+        spark, locations, kept, min_level, max_level, mode,
+        index_max_bytes, simplify_tol,
+    )
     return {
-        "points": points,
-        "polygon_cells": pcells,
-        "polygon_geometry": pgeom,
-        "pip": pip,
-        "tiles": tiles,
+        "points": page_points(pages),
+        "polygon_cells": polygons.cells,
+        "polygon_geometry": polygons.geometry,
+        "pip": _pip(pages, polygons),
+        "tiles": assign_pages(pages, polygons, tile_level),
     }

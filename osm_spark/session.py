@@ -18,6 +18,15 @@ from pyspark.sql import SparkSession
 _blas_limiter = None
 
 
+def _task_slots(master: str, cpus: int) -> int:
+    """Concurrent tasks of a local master: N for ``local[N]``, N×C for
+    ``local-cluster[N,C,M]``, ``cpus`` for ``local[*]`` and any other."""
+    args = master[master.find("[") + 1 : master.find("]")].split(",")
+    if master.startswith("local-cluster["):
+        return int(args[0]) * int(args[1])
+    return int(args[0]) if "[" in master and args[0] != "*" else cpus
+
+
 def get_spark(
     app_name: str = "osm-spark",
     master: str | None = None,
@@ -75,8 +84,7 @@ def get_spark(
     if shuffle_partitions is None:
         # Match parallelism locally; a real cluster would set this to
         # 2-3x total cores and let AQE coalesce.
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
-        shuffle_partitions = cpus if not n or n == "*" else int(n)
+        shuffle_partitions = _task_slots(master, cpus)
 
     b = (
         SparkSession.builder.appName(app_name)

@@ -29,7 +29,7 @@ UDFs (no per-row Python) throughout" — every step above is a whole-
 batch numpy operation.
 
 When the index would exceed the broadcast budget,
-``run_spatial_pipeline(mode="auto")`` falls back to ``pip_join``
+``prepare_polygons(mode="auto")`` falls back to ``pip_join``
 (catalyst mode: cell equi-join, nothing polygon-sized broadcast). Both
 paths refine with the same two functions here: ``edge_slices`` builds
 the per-cell slices (for the index lazily per process; for catalyst in
@@ -484,7 +484,7 @@ def build_pip_index(
     ``max_bytes``: guard against an unexpectedly large polygon side
     OOMing the driver/executors via broadcast — a warning is emitted
     above the limit (callers that must not broadcast at that size
-    should use ``run_spatial_pipeline(mode="auto")``, which sizes the
+    should use ``prepare_polygons(mode="auto")``, which sizes the
     index BEFORE collecting and falls back to the catalyst join).
     """
     if polygon_cells is None:
@@ -506,7 +506,7 @@ def build_pip_index(
         warnings.warn(
             f"PipIndex estimated at {est / 1e6:.0f} MB exceeds the "
             f"{max_bytes / 1e6:.0f} MB broadcast budget; prefer "
-            'run_spatial_pipeline(mode="auto") which pre-sizes the index '
+            'prepare_polygons(mode="auto") which pre-sizes the index '
             "and falls back to the catalyst join path",
             ResourceWarning,
             stacklevel=2,

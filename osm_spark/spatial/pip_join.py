@@ -1,6 +1,6 @@
 """J8 — distributed point-in-polygon join (catalyst mode).
 
-The over-budget PIP path: ``run_spatial_pipeline(mode="auto")`` falls
+The over-budget PIP path: ``prepare_polygons(mode="auto")`` falls
 back here when the broadcast ``PipIndex`` (pip_index.py) would exceed
 its budget, so nothing polygon-sized is broadcast:
 

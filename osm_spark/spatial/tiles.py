@@ -3,9 +3,10 @@
 Tile = Morton cell at ``tile_level``. Each geoparsed page is assigned,
 per admin level, the admin relation whose polygon contains it (from the
 PIP join) and the tile its coordinate falls in. Tiles aggregate to
-GeoJSON FeatureCollections (to_json, JVM-side); MVT encoding is an
-explicit stub — the binary protobuf writer is format plumbing, while
-the tile partitioning/aggregation here is the distributed work.
+GeoJSON FeatureCollections (to_json, JVM-side); the binary MVT twin is
+spatial/mvt.py. ``tile_assignments`` is the join-based reference: the
+pipeline's own page side (spatial_pipeline.assign_pages) carries the
+tile through the PIP batch in index mode instead.
 """
 
 from __future__ import annotations
@@ -132,11 +133,3 @@ def boundary_tiles(
         .cogroup(locations.select("rel_id", "shape").groupBy("rel_id"))
         .applyInPandas(clip_group, BOUNDARY_TILE_SCHEMA)
     )
-
-
-def mvt_tiles(assignments: DataFrame, points: DataFrame) -> DataFrame:
-    """Binary Mapbox-Vector-Tile emission (r2: stub replaced by the
-    pure-python protobuf wire writer in osm_spark.spatial.mvt)."""
-    from osm_spark.spatial.mvt import mvt_tiles as _mvt
-
-    return _mvt(assignments, points)

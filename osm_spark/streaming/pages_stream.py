@@ -1,20 +1,19 @@
 """Structured Streaming ingest: pages stream → tile assignments.
 
 The reference has no streaming (its o5m "stream" is a batch file scan,
-SURVEY.md §2.7); this is the extension's continuous-ingest slice. Two
-shapes, per the engine's design note (SURVEY §2.7):
+SURVEY.md §2.7); this is the extension's continuous-ingest slice. The
+PIP sinks prepare the polygon side once per query and run the batch
+pipeline's own page side (plans/spatial_pipeline.py) on the stream:
 
-- ``stream_pip_enrich`` (r2, preferred): the fused broadcast-index PIP
-  (pip_index.py) is a STATELESS mapInPandas transform, so spatial
-  enrichment runs natively inside the streaming plan — no foreachBatch
-  required: readStream → geoparse (Catalyst) → index PIP → append sink.
-- ``stream_tile_assignments`` (native since r3, VERDICT r2 #7): the
-  full tile-assignment chain — geoparse, tile cell, index PIP,
-  stream-static admin-level broadcast join — inside the streaming
-  plan, exactly-once via the stream checkpoint.
-- ``stream_tile_assignments_batched``: the foreachBatch shape, kept
-  for sinks needing multi-output batch semantics (tiles + metrics
-  together) or a batch_id column.
+- ``stream_pip_enrich``: ``locate_pages`` (geoparse, point_id, the
+  broadcast-index PIP carrying url) is a STATELESS mapInPandas, so it
+  runs natively inside the streaming plan — no foreachBatch.
+- ``stream_tile_assignments``: ``assign_pages`` in index mode (that
+  pass plus tile and a stream-static admin-level broadcast join),
+  natively, exactly-once via the stream checkpoint.
+- ``stream_tile_assignments_batched``: ``assign_pages`` per
+  micro-batch (foreachBatch), for sinks needing multi-output batch
+  semantics (tiles + metrics together) or a batch_id column.
 - ``windowed_page_counts``: a native streaming aggregation (watermark +
   tumbling window over warc_ts) for freshness metrics — late data
   handled by the watermark.
@@ -32,6 +31,40 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 # Snapshot summary property of the SUM/KMV-merged sinks: the last
 # micro-batch id applied, committed by the same VERSION swap as the rows.
 _APPLIED_BATCH = "applied_batch_id"
+
+_PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
+
+
+def _page_stream(spark: SparkSession, source_dir: str, max_files_per_trigger: int):
+    """The page files landing in ``source_dir`` as a stream."""
+    return (
+        spark.readStream.schema(_PAGES_SCHEMA)
+        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .parquet(source_dir)
+    )
+
+
+def _start(writer, checkpoint_dir: str, available_now: bool):
+    writer = writer.option("checkpointLocation", checkpoint_dir)
+    return (writer.trigger(availableNow=True) if available_now else writer).start()
+
+
+def _append(df: DataFrame, sink_dir: str, checkpoint_dir: str, available_now: bool):
+    """Start ``df`` into a parquet append sink."""
+    writer = df.writeStream.format("parquet").option("path", sink_dir)
+    return _start(writer.outputMode("append"), checkpoint_dir, available_now)
+
+
+def _run_batches(
+    spark: SparkSession, source_dir: str, max_files_per_trigger: int,
+    process_batch, checkpoint_dir: str, available_now: bool,
+):
+    """Start ``process_batch`` on each micro-batch of the page stream."""
+    stream = _page_stream(spark, source_dir, max_files_per_trigger)
+    return _start(
+        stream.writeStream.foreachBatch(process_batch), checkpoint_dir,
+        available_now,
+    )
 
 
 def stream_pip_enrich(
@@ -51,38 +84,16 @@ def stream_pip_enrich(
     hash, broadcast-index PIP — is stateless, so it runs inside the
     streaming plan itself (restart-safe via the stream checkpoint, no
     foreachBatch)."""
-    from osm_spark.spatial.covering import build_polygon_cells, polygon_geometry
-    from osm_spark.spatial.geoparse import geoparse_pages
-    from osm_spark.spatial.pip_index import build_pip_index, pip_join_index
+    from osm_spark.plans.spatial_pipeline import locate_pages, prepare_polygons
 
-    index_bc = spark.sparkContext.broadcast(
-        build_pip_index(
-            build_polygon_cells(locations, min_level, max_level),
-            polygon_geometry(locations),
-        )
+    polygons = prepare_polygons(
+        spark, locations, None, min_level, max_level, mode="index"
     )
-    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
+    stream = _page_stream(spark, source_dir, max_files_per_trigger)
+    enriched = locate_pages(stream, polygons.index, keep=("url",))
+    return _append(
+        enriched.select("url", "rel_id"), sink_dir, checkpoint_dir, available_now
     )
-    geo = geoparse_pages(stream).withColumn("point_id", F.xxhash64("url"))
-    # url rides through the index pass itself — a post-hoc join back to
-    # the stream would be a stream-stream self-join (illegal in append
-    # mode without watermarks).
-    enriched = pip_join_index(
-        geo.select("point_id", "lon", "lat", "url"), index_bc, keep=("url",)
-    ).select("url", "rel_id")
-    writer = (
-        enriched.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_tile_assignments(
@@ -98,56 +109,24 @@ def stream_tile_assignments(
     max_files_per_trigger: int = 4,
     available_now: bool = True,
 ):
-    """Start a streaming query appending (url, admin_level, rel_id,
-    tile) for every page file landing in ``source_dir``.
+    """Start a streaming query appending (point_id, admin_level, rel_id,
+    tile, url) for every page file landing in ``source_dir``.
 
-    Fully NATIVE streaming plan (VERDICT r2 #7 — was foreachBatch):
-    readStream → geoparse + tile cell (Catalyst) → broadcast-index PIP
-    with url/tile carried via ``keep`` → stream-static broadcast join
-    on the kept relations' admin levels → append sink. Exactly-once
-    via the stream checkpoint; restart-safe because every stage is
-    stateless."""
-    from osm_spark.spatial.cells_sql import cell_expr
-    from osm_spark.spatial.covering import build_polygon_cells, polygon_geometry
-    from osm_spark.spatial.geoparse import geoparse_pages
-    from osm_spark.spatial.pip_index import build_pip_index, pip_join_index
+    Fully native streaming plan: ``assign_pages`` in index mode — one
+    broadcast-index PIP pass carrying url and tile, then a
+    stream-static broadcast join on the kept relations' admin levels —
+    into an append sink. Exactly-once via the stream checkpoint;
+    restart-safe because every stage is stateless."""
+    from osm_spark.plans.spatial_pipeline import assign_pages, prepare_polygons
 
-    index_bc = spark.sparkContext.broadcast(
-        build_pip_index(
-            build_polygon_cells(locations, min_level, max_level),
-            polygon_geometry(locations),
-        )
+    polygons = prepare_polygons(
+        spark, locations, kept, min_level, max_level, mode="index"
     )
-    admin_levels = kept.select(F.col("id").alias("rel_id"), "admin_level")
-    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
+    stream = _page_stream(spark, source_dir, max_files_per_trigger)
+    return _append(
+        assign_pages(stream, polygons, tile_level), sink_dir, checkpoint_dir,
+        available_now,
     )
-    geo = (
-        geoparse_pages(stream)
-        .withColumn("point_id", F.xxhash64("url"))
-        .withColumn("tile", cell_expr(F.col("lon"), F.col("lat"), tile_level))
-    )
-    tiles = (
-        pip_join_index(
-            geo.select("point_id", "lon", "lat", "url", "tile"),
-            index_bc,
-            keep=("url", "tile"),
-        )
-        .join(F.broadcast(admin_levels), "rel_id")
-        .select("point_id", "admin_level", "rel_id", "tile", "url")
-    )
-    writer = (
-        tiles.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_tile_assignments_batched(
@@ -163,33 +142,25 @@ def stream_tile_assignments_batched(
 ):
     """foreachBatch variant of ``stream_tile_assignments`` — the shape
     for sinks needing multi-output batch semantics (tiles + metrics in
-    one transaction) or a per-batch id column."""
-    from osm_spark.plans.spatial_pipeline import run_spatial_pipeline
+    one transaction) or a per-batch id column. The polygon side is
+    prepared once, before the first batch; each batch runs only
+    ``assign_pages``."""
+    from osm_spark.plans.spatial_pipeline import assign_pages, prepare_polygons
 
-    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
+    polygons = prepare_polygons(spark, locations, kept)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sp = run_spatial_pipeline(spark, batch_df, locations, kept,
-                                  tile_level=tile_level)
         (
-            sp["tiles"]
+            assign_pages(batch_df, polygons, tile_level)
             .withColumn("batch_id", F.lit(batch_id))
             .write.mode("append")
             .parquet(sink_dir)
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _run_batches(
+        spark, source_dir, max_files_per_trigger, process_batch,
+        checkpoint_dir, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_hll_maintenance(
@@ -218,13 +189,6 @@ def stream_hll_maintenance(
     from osm_spark.operators.sketch import hll_sketch
     from osm_spark.sources.manifest_table import ManifestTable
 
-    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         t = ManifestTable(spark, table_path)
         sk = hll_sketch(batch_df, key, p)
@@ -237,13 +201,10 @@ def stream_hll_maintenance(
             )
         t.write(sk, mode="overwrite")
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _run_batches(
+        spark, source_dir, max_files_per_trigger, process_batch,
+        checkpoint_dir, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_hotspot_maintenance(
@@ -277,13 +238,6 @@ def stream_hotspot_maintenance(
     from osm_spark.spatial.geoparse import geoparse_pages
     from osm_spark.spatial.hotspots import cell_counts
 
-    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         t = ManifestTable(spark, table_path)
         applied = t.summary_prop(_APPLIED_BATCH)
@@ -308,13 +262,10 @@ def stream_hotspot_maintenance(
             props={_APPLIED_BATCH: batch_id},
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _run_batches(
+        spark, source_dir, max_files_per_trigger, process_batch,
+        checkpoint_dir, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_hist_maintenance(
@@ -343,13 +294,6 @@ def stream_hist_maintenance(
     from osm_spark.operators.sketch import hist_sketch
     from osm_spark.sources.manifest_table import ManifestTable
 
-    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         t = ManifestTable(spark, table_path)
         applied = t.summary_prop(_APPLIED_BATCH)
@@ -372,13 +316,10 @@ def stream_hist_maintenance(
             props={_APPLIED_BATCH: batch_id},
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _run_batches(
+        spark, source_dir, max_files_per_trigger, process_batch,
+        checkpoint_dir, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_page_counts(
@@ -513,13 +454,6 @@ def stream_kmv_maintenance(
     from osm_spark.operators.sketch import _kmv_combine, kmv_sketch
     from osm_spark.sources.manifest_table import ManifestTable
 
-    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         t = ManifestTable(spark, table_path)
         applied = t.summary_prop(_APPLIED_BATCH)
@@ -546,13 +480,10 @@ def stream_kmv_maintenance(
             props={_APPLIED_BATCH: batch_id},
         )
 
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _run_batches(
+        spark, source_dir, max_files_per_trigger, process_batch,
+        checkpoint_dir, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 def citation_latency_join(
     pages_stream: DataFrame,

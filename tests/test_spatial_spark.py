@@ -628,6 +628,53 @@ def test_geojson_tiles_deterministic(spark, world, spatial):
     assert fc["features"][0]["geometry"]["type"] == "Point"
 
 
+@pytest.mark.parametrize("mode", ["index", "catalyst"])
+def test_assign_pages_equals_tile_assignments(spark, world, spatial, pages, mode):
+    """The page-side call's rows equal the join-based reference
+    (tile_assignments over the pipeline's pip and points) in both PIP
+    modes."""
+    from osm_spark.plans.spatial_pipeline import assign_pages, prepare_polygons
+    from osm_spark.spatial.tiles import tile_assignments
+
+    polygons = prepare_polygons(
+        spark, world["locations"], world["kept"], max_level=11, mode=mode
+    )
+    assert (polygons.index is None) == (mode == "catalyst")
+    admin = world["kept"].select(F.col("id").alias("rel_id"), "admin_level")
+    ref = tile_assignments(spatial["pip"], spatial["points"], admin, tile_level=6)
+    got = assign_pages(pages, polygons, tile_level=6)
+    assert got.columns == ref.columns
+    ref_rows = sorted(tuple(r) for r in ref.collect())
+    assert ref_rows and sorted(tuple(r) for r in got.collect()) == ref_rows
+    polygons.cells.unpersist()
+
+
+def test_assign_pages_index_plan_joins_only_admin_levels(spark, world):
+    """Index mode's executed page side, read after an action: one
+    MapInPandas, no shuffle Exchange, no sort-merge or shuffled hash
+    join, no cached relation; its only join is the admin-level
+    BroadcastHashJoin (no join back to the pages). Pages and kept are
+    fresh, uncached frames, so any cache in the plan would be
+    assign_pages' own."""
+    from osm_spark.data.pages import PagesSpec, pages_df
+    from osm_spark.plans.spatial_pipeline import assign_pages, prepare_polygons
+
+    levels = world["kept"].select("id", "admin_level")
+    kept = spark.createDataFrame(levels.collect(), levels.schema)
+    polygons = prepare_polygons(
+        spark, world["locations"], kept, max_level=11, mode="index"
+    )
+    tiles = assign_pages(pages_df(spark, PagesSpec(n_pages=500, n_countries=1)), polygons)
+    assert len(tiles.collect()) > 0
+    names = [n.nodeName() for n in _plan_nodes(tiles)]
+    assert names.count("MapInPandas") == 1, names
+    assert [n for n in names if "Join" in n] == ["BroadcastHashJoin"], names
+    for forbidden in ("Exchange", "ShuffleExchange", "SortMergeJoin", "ShuffledHashJoin"):
+        assert forbidden not in names, (forbidden, names)
+    assert not [n for n in names if "InMemory" in n], names
+    polygons.cells.unpersist()
+
+
 def test_boundary_tiles_area_conserved(spark, world, spatial):
     """Clipped per-tile geometry partitions each relation's area."""
     from osm_spark.kernels.clip import multipolygon_area

@@ -59,6 +59,35 @@ def test_streamed_tiles_batched_variant(spark, world, tmp_path):
     assert out.count() > 0
 
 
+def test_streamed_tiles_batched_prepares_polygons_once(
+    spark, world, tmp_path, monkeypatch
+):
+    """The foreachBatch sink builds the polygon side (covering, index)
+    once per query, not once per micro-batch."""
+    from osm_spark.data.pages import PagesSpec, pages_df
+    from osm_spark.plans import spatial_pipeline
+    from osm_spark.streaming.pages_stream import stream_tile_assignments_batched
+
+    calls = []
+    real = spatial_pipeline.build_polygon_cells
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(spatial_pipeline, "build_polygon_cells", counted)
+    src = str(tmp_path / "src")
+    pages_df(spark, PagesSpec(n_pages=300, n_countries=1)).repartition(3).write.parquet(src)
+    sink = str(tmp_path / "sink")
+    q = stream_tile_assignments_batched(
+        spark, src, world["locations"], world["kept"], sink,
+        str(tmp_path / "ck"), max_files_per_trigger=1,
+    )
+    q.awaitTermination(300)
+    assert spark.read.parquet(sink).select("batch_id").distinct().count() >= 2
+    assert len(calls) == 1
+
+
 def test_streamed_tiles_resume(spark, world, tmp_path):
     """New files after a restart are processed exactly once."""
     from osm_spark.data.pages import PagesSpec, pages_df

@@ -12,10 +12,11 @@ correctness artifact (VERDICT r4 next #1: CORRECTNESS_full_r5.json).
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def norm_cell(v):
@@ -35,7 +36,6 @@ def rows_key(cols, rows):
 
 def main() -> int:
     import json
-    import os
 
     import duckdb
 
