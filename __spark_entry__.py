@@ -19,6 +19,7 @@ reference's exact test vectors.
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,10 +37,18 @@ _N_COUNTRIES = 1
 
 _WORLD_CACHE: dict = {}
 
+# The data dir whose TABLES each live session has registered as views.
+_LOADED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
 
 def _load(spark: SparkSession, sf_dir: str) -> None:
+    """Register TABLES as temp views once per session and data dir (each
+    registration reads a parquet footer; no query replaces these views)."""
+    if _LOADED.get(spark) == sf_dir:
+        return
     for t in TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
+    _LOADED[spark] = sf_dir
 
 
 def _sql(q: str) -> Callable[[SparkSession, str], DataFrame]:

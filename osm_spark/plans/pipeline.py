@@ -8,7 +8,8 @@ already checkpointed are skipped.
 
 Every stage commits as a ``ManifestTable`` (sources/manifest_table.py):
 an overwrite, or for the J6 resume of ``locations`` an append that
-never rewrites the files the resume anti-join is reading. A commit is
+never rewrites the files the resume anti-join is reading. An overwrite
+then vacuums the snapshots and files it superseded. A commit is
 atomic (one VERSION swap), so a run that dies mid-stage leaves the
 previous snapshot readable. Every stage appends rows to the metrics
 table, itself a ``ManifestTable``: one whole-table row (stage, rows,
@@ -70,7 +71,9 @@ class Checkpointer:
 
         ``mode="append"`` is the incremental-checkpoint path (resume):
         only new rows are written, never rewriting files a concurrent
-        plan may still read (Iceberg-style append semantics).
+        plan may still read (Iceberg-style append semantics). An
+        overwrite vacuums the snapshots and files it superseded, so a
+        stage's ``data/`` holds only its current snapshot's files.
 
         Without a checkpoint root the stage is persisted lazily —
         multi-consumer stages (locations feeds centroids AND boundary
@@ -80,6 +83,10 @@ class Checkpointer:
             return df.persist()
         t = self._table(name)
         t.write(df, mode=mode)
+        if mode == "overwrite":
+            # Nothing reads a superseded stage snapshot; an append keeps
+            # them, as the J6 resume reads locations while appending.
+            t.vacuum(keep_last=1)
         entries = t.lineage()
         now = time.time()
         self.metrics.append({

@@ -6,7 +6,19 @@ setting is the one you would ship to a 1000-executor cluster:
 - Arrow on (all geometry kernels run as vectorized pandas UDFs),
 - shuffle partitions sized to cores locally; on a real cluster leave
   ``spark.sql.shuffle.partitions`` to AQE's coalescing with a high
-  initial value.
+  initial value,
+- in-memory columnar caches (every ``persist()``) built uncompressed.
+  The compressed builder gathers statistics for every compression
+  scheme over every value of each cached batch before it encodes, and
+  the page side's frames gain little from it. Measured on the
+  benchmark's seed-21 window (4-core VM), cached size compressed →
+  uncompressed: pages 139.4 → 140.2 MB (unique url/text/html), points
+  12.0 → 12.0 MB, tiles 17.0 → 49.0 MB (each url repeats once per
+  admin level). Reading the 764,692 tile rows from parquet, persisting
+  and scanning them took 0.50 s compressed, 0.25 s uncompressed and
+  0.11 s without a persist (medians of 5).
+  Where cached frames with repeated keys must fit executor memory,
+  turn compression back on through ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -99,6 +111,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Trade cache memory for the compression pass on every persist
+        # (tiles 17 → 49 MB; persist + scan 0.50 → 0.25 s; see above).
+        .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
         .config("spark.python.daemon.module", "osm_spark.pyworker")
         # Make the package importable on executor python workers even
         # when the driver is launched from another cwd.

@@ -233,6 +233,26 @@ def test_resume_checkpoint(world, spark, tmp_path):
     assert sums and all(r.prows == r.trows for r in sums)
 
 
+def test_resume_leaves_only_current_snapshot_files(world, spark, tmp_path):
+    """An overwrite commit vacuums what it superseded: after a run and a
+    resume into one checkpoint dir, each stage's ``data/`` (and the
+    metrics table's) holds exactly the files of its current snapshot."""
+    from osm_spark.plans.pipeline import run_boundaries_pipeline
+
+    ck = str(tmp_path / "ck")
+    args = (spark, world["nodes"], world["ways"], world["relations"], world["cfg"])
+    for resume in (False, True):
+        run_boundaries_pipeline(*args, checkpoint_dir=ck, resume=resume)
+    for stage in STAGES + ("metrics",):
+        on_disk = {
+            os.path.join(d, f)
+            for d, _, fs in os.walk(os.path.join(ck, stage, "data"))
+            for f in fs
+        }
+        listed = {e["path"] for e in _table(spark, ck, stage).lineage()}
+        assert listed and on_disk == listed, stage
+
+
 def test_resume_after_crash_in_locations_append(world, spark, tmp_path, monkeypatch):
     """A resume run killed before the VERSION swap of its locations
     append leaves the checkpoint at its prior snapshot. The orphan
